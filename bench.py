@@ -153,9 +153,11 @@ COMPOSITES = (
 # value; the pandas-UDF round-trip baseline was measured r15 when the
 # probe was added (verdict item 2: the JVM probe provably misses
 # Python-worker degradation) — steady-state 0.45-0.60 s over 8
-# calibration calls on a JVM-healthy window (probe 0.13-0.19).
+# calibration calls on a JVM-healthy window (probe 0.13-0.19).  The
+# baseline is that range's upper bound, so the whole healthy range sits
+# below the 15%-slack cutoff (0.69 s).
 _JVM_HEALTHY = 0.2
-_PY_HEALTHY = 0.50
+_PY_HEALTHY = 0.60
 
 
 def fold_attempts(timings: dict, sf, attempts_dir: str,
@@ -429,14 +431,14 @@ def main() -> None:
     )
     if degraded:
         waited = 0.0
-        p = probes["after"]
-        while p > _healthy and waited < 90:
+        p, py = probes["after"], probes["py_after"]
+        while (p > _healthy or py > _py_h) and waited < 90:
             time.sleep(15)
             waited += 15
-            p = host_probe()
+            p, py = host_probe(), py_probe()
         probes["resample_probe"] = p
-        probes["py_resample_probe"] = py_probe()
-        if p <= _healthy:
+        probes["py_resample_probe"] = py
+        if p <= _healthy and py <= _py_h:
             for name in HEADLINE:
                 fn = QUERIES.get(name)
                 if fn is None or timings.get(name, -1.0) < 0:

@@ -65,6 +65,9 @@ from .curation import (  # noqa: F401
     filter_cascade,
     QualityClassifier,
     decontaminate,
+    dsir_fit_score,
+    dsir_resample,
+    dsir_resample_tokens,
     train_dsir,
     pack_sequences,
     redact_pii,

@@ -909,6 +909,176 @@ def _dsir_bucket(feat: Column, buckets: int) -> Column:
     ).cast("int")
 
 
+def _dsir_hist(
+    df: DataFrame,
+    flag: Column,
+    text_col: str,
+    buckets: int,
+    id_col: str | None = None,
+) -> DataFrame:
+    """THE DSIR Python kernel — one Arrow pass that tokenizes each
+    document and md5-buckets its features.  It emits
+
+    * per document (only when ``id_col`` is given): the sparse bucket
+      HISTOGRAM ``(id, __t, __p=false, __bk, __ct)``, ≤ min(n_feats,
+      buckets) pairs — the lightweight proxy :func:`_dsir_score`
+      explodes;
+    * per task: TWO profile marker rows (``__p=true``), the task's summed
+      ``flag`` / non-``flag`` histograms — exact integers that
+      :func:`_dsir_profile` aggregates, so training never re-explodes
+      the documents.
+
+    Tokenization is pinned to :func:`_dsir_features` (the native
+    reference, parity-gated on tab/newline/NBSP text): trim = ASCII
+    space only (Spark ``trim``), lowercase, split on ASCII ``\\s+`` (Java
+    regex ``\\s`` is ASCII-only), unigrams then bigrams; the bucket is
+    :func:`_dsir_bucket`'s md5 prefix.  ``flag`` is evaluated in the JVM
+    and coalesced to false (filter semantics: a NULL predicate counts
+    toward raw only).  Documents with NULL text or no tokens emit
+    nothing."""
+    B = int(buckets)
+    id_cols = [id_col] if id_col else []
+    schema = "__t boolean, __p boolean, __bk array<int>, __ct array<long>"
+    if id_col:
+        id_type = df.schema[id_col].dataType.simpleString()
+        schema = f"{id_col} {id_type}, {schema}"
+
+    def hist(batches):
+        import hashlib
+        import itertools
+        import re as _re
+        from collections import Counter
+
+        import numpy as np
+        import pandas as pd
+
+        split = _re.compile(r"\s+", _re.ASCII).split
+        # feature→bucket memo: natural-language corpora are Zipfian, so
+        # a task's working vocabulary is far smaller than its feature
+        # stream (md5 per occurrence was 70% of kernel CPU at sf0.1 —
+        # guide §4.5, amortize per-task state); bounded so a
+        # pathological corpus cannot grow it without limit
+        memo: dict = {}
+        _MEMO_MAX = 1 << 20
+        # per-task profile accumulators (emitted as marker rows below)
+        r_acc = np.zeros(B, dtype=np.int64)
+        t_acc = np.zeros(B, dtype=np.int64)
+        for pdf in batches:
+            ids, ts, bks, cts = [], [], [], []
+            for did, is_t, text in zip(
+                pdf[id_col] if id_col else itertools.repeat(None),
+                pdf["__t"],
+                pdf[text_col],
+            ):
+                if text is None:
+                    continue
+                toks = [w for w in split(text.strip(" ").lower()) if w]
+                feats = toks + [
+                    a + " " + b for a, b in zip(toks, toks[1:])
+                ]
+                if not feats:
+                    continue
+                acc: dict = {}
+                # md5 once per DISTINCT feature per doc (Counter), not
+                # per occurrence
+                for f, c in Counter(feats).items():
+                    b = memo.get(f)
+                    if b is None:
+                        b = (
+                            int(
+                                hashlib.md5(
+                                    f.encode("utf-8")
+                                ).hexdigest()[:8],
+                                16,
+                            )
+                            % B
+                        )
+                        if len(memo) < _MEMO_MAX:
+                            memo[f] = b
+                    acc[b] = acc.get(b, 0) + c
+                    r_acc[b] += c
+                    if is_t:
+                        t_acc[b] += c
+                if id_col:
+                    ids.append(did)
+                    ts.append(bool(is_t))
+                    bks.append(list(acc.keys()))
+                    cts.append(list(acc.values()))
+            if ids:  # an empty batch's list columns confuse Arrow
+                yield pd.DataFrame(
+                    {
+                        id_col: ids,
+                        "__t": ts,
+                        "__p": [False] * len(ids),
+                        "__bk": bks,
+                        "__ct": cts,
+                    }
+                )
+        marker = []
+        for flag_, arr in ((True, t_acc), (False, r_acc - t_acc)):
+            nz = np.nonzero(arr)[0]
+            if len(nz):
+                marker.append(
+                    [None] * len(id_cols)
+                    + [flag_, True, [int(b) for b in nz],
+                       [int(c) for c in arr[nz]]]
+                )
+        if marker:
+            yield pd.DataFrame(
+                marker, columns=id_cols + ["__t", "__p", "__bk", "__ct"]
+            )
+
+    return df.select(
+        *id_cols,
+        F.coalesce(flag, F.lit(False)).alias("__t"),
+        F.col(text_col),
+    ).mapInPandas(hist, schema)
+
+
+def _dsir_profile(hist: DataFrame) -> tuple[dict, dict]:
+    """``(flagged, all)`` per-bucket feature counts from the kernel's
+    marker rows: one ≤``buckets``-group aggregate over ≤ 2·buckets tiny
+    rows per task, then a bounded collect."""
+    rows = (
+        hist.filter(F.col("__p"))
+        .select("__t", F.explode(F.arrays_zip("__bk", "__ct")).alias("z"))
+        .groupBy(F.col("z.__bk").alias("bucket"))
+        .agg(
+            F.sum("z.__ct").alias("__r"),
+            F.sum(
+                F.when(F.col("__t"), F.col("z.__ct")).otherwise(F.lit(0))
+            ).alias("__tc"),
+        )
+        .collect()
+    )
+    return (
+        {r["bucket"]: r["__tc"] for r in rows if r["__tc"]},
+        {r["bucket"]: r["__r"] for r in rows},
+    )
+
+
+def _dsir_score(
+    hist: DataFrame, lam: DataFrame, id_col: str, out_col: str
+) -> DataFrame:
+    """The DSIR scoring plan: explode each document's histogram →
+    broadcast-join the λ table → ``sum(count × λ)`` per document.  All
+    JVM codegen; partial aggregation collapses each document's rows
+    before the one id-keyed exchange."""
+    return (
+        hist.filter(~F.col("__p"))
+        .select(id_col, F.explode(F.arrays_zip("__bk", "__ct")).alias("z"))
+        .join(F.broadcast(lam), F.col("z.__bk") == F.col("bucket"))
+        .groupBy(id_col)
+        .agg(
+            F.sum(F.col("z.__ct").cast("double") * F.col("lam")).alias(
+                out_col
+            ),
+            F.sum("z.__ct").alias("n_feats"),
+        )
+        .withColumn("keep", F.col(out_col) > 0.0)
+    )
+
+
 class DsirModel:
     """Data Selection via Importance Resampling (Xie et al. 2023):
     documents are scored by how much more likely their hashed-n-gram
@@ -919,25 +1089,16 @@ class DsirModel:
 
     The model is ONE dense table of ``buckets`` rows (bucket → λ =
     the per-bucket log ratio), a few KB at any corpus size, broadcast
-    at scoring time; scoring is the CharLM plan shape — explode,
-    one broadcast join, one map-side-combined groupBy — no Python,
-    so a 100 TB corpus scores in a single pass.  ``keep`` at λ-sum > 0
-    selects documents more target-like than raw-like; for a fixed
-    token budget, rank on the weight instead (the resampling step —
-    Gumbel-top-k on ``dsir_logw`` reproduces the paper's sampling).
+    at scoring time.  ``keep`` at λ-sum > 0 selects documents more
+    target-like than raw-like; for a fixed token budget, rank on the
+    weight instead (the resampling step — Gumbel-top-k on
+    ``dsir_logw`` reproduces the paper's sampling).
     """
 
     def __init__(self, lam: DataFrame, buckets: int, alpha: float):
         self.lam = lam          # DataFrame (bucket int, lam double)
         self.buckets = int(buckets)
         self.alpha = float(alpha)
-        # dense λ copy when the model was fit driver-side this session
-        # (train_dsir sets it): the scoring kernel then skips the
-        # lam.collect() round-trip — a whole Spark job whose only work
-        # is re-reading 512 rows the driver just created (r14, guide
-        # §1.2: don't compute things you already have).  save()/load()
-        # paths leave it None and collect as before.
-        self._lam_np = None
 
     def log_weights(
         self,
@@ -945,124 +1106,20 @@ class DsirModel:
         id_col: str = "doc_id",
         text_col: str = "text",
         out_col: str = "dsir_logw",
-        vectorized: bool = True,
     ) -> DataFrame:
         """(id, dsir_logw, n_feats, keep) per document with ≥1 feature
         (documents whose text yields no tokens have no evidence and are
         absent, matching CharLM's NULL-semantics).
 
-        Two physically different, semantically identical plans:
-
-        * ``vectorized=True`` (default): ONE Arrow kernel per batch —
-          the 512-double λ table rides the closure, each document
-          scores in-process (tokenize → md5-bucket → λ gather-sum), no
-          explode, no join, NO SHUFFLE AT ALL.  The expression path's
-          per-token array HOFs are CodegenFallback (interpreted per
-          element — the measured 24× family of slowdowns); the kernel
-          is ~10× at corpus scale.  Per-doc float sums can differ from
-          the expression path by ulp-order summation noise only.
-        * ``vectorized=False``: the pure-native explode → broadcast
-          join → map-side-combined groupBy plan (no Python anywhere) —
-          the oracle-shaped reference implementation and the parity
-          gate for the kernel.
+        One histogram-kernel pass over ``df`` (:func:`_dsir_hist`, no
+        target flag), then the scoring plan :func:`dsir_fit_score` runs:
+        the histograms explode against the broadcast λ table and sum
+        ``count × λ`` per document.  Per-doc sums equal the occurrence-
+        order sum up to float64 summation-order noise; ``n_feats`` is
+        exact.
         """
-        if vectorized:
-            return self._log_weights_kernel(df, id_col, text_col, out_col)
-        ex = df.select(
-            F.col(id_col),
-            F.explode(_dsir_features(F.col(text_col))).alias("__feat"),
-        ).select(
-            id_col, _dsir_bucket(F.col("__feat"), self.buckets).alias("bucket")
-        )
-        return (
-            ex.join(F.broadcast(self.lam), "bucket")
-            .groupBy(id_col)
-            .agg(
-                F.sum("lam").alias(out_col),
-                F.count(F.lit(1)).alias("n_feats"),
-            )
-            .withColumn("keep", F.col(out_col) > 0.0)
-        )
-
-    def _log_weights_kernel(
-        self, df: DataFrame, id_col: str, text_col: str, out_col: str
-    ) -> DataFrame:
-        """Arrow-batched scoring: λ as a closure numpy array, zero
-        shuffle.  Tokenization is pinned to the expression path's
-        semantics: trim = ASCII space only (Spark ``trim``), split on
-        ASCII ``\\s+`` (Java regex ``\\s`` is ASCII-only), lowercase
-        before split — parity-gated on tab/newline/NBSP text."""
-        import numpy as np
-
-        if self._lam_np is not None:
-            lam_np = self._lam_np
-        else:
-            lam_np = np.zeros(self.buckets, dtype=np.float64)
-            for r in self.lam.collect():  # bounded: exactly `buckets` rows
-                lam_np[r["bucket"]] = r["lam"]
-        B = self.buckets
-        id_field = df.schema[id_col].dataType.simpleString()
-
-        def score(batches):
-            import hashlib
-            import re as _re
-
-            import pandas as pd
-
-            split = _re.compile(r"\s+", _re.ASCII).split
-            # feature→λ memo: natural-language corpora are Zipfian, so
-            # the task's working vocabulary is far smaller than its
-            # feature stream (r14 measured 962 distinct features across
-            # 450k occurrences at sf0.1; the md5 per occurrence was 70%
-            # of kernel CPU — guide §4.5, amortize per-task state).
-            # Bounded so a pathological corpus cannot grow it without
-            # limit; λ values go through the SAME np.float64 array and
-            # the per-doc sum stays np's pairwise reduction over the
-            # same sequence, so scores are bit-identical.
-            memo: dict = {}
-            _MEMO_MAX = 1 << 20
-            for pdf in batches:
-                ids, ws, ns = [], [], []
-                for did, text in zip(pdf[id_col], pdf[text_col]):
-                    if text is None:
-                        continue
-                    toks = [w for w in split(text.strip(" ").lower()) if w]
-                    feats = toks + [
-                        a + " " + b for a, b in zip(toks, toks[1:])
-                    ]
-                    if not feats:
-                        continue
-                    vals = np.empty(len(feats), dtype=np.float64)
-                    for j, f in enumerate(feats):
-                        v = memo.get(f)
-                        if v is None:
-                            v = lam_np[
-                                int(
-                                    hashlib.md5(
-                                        f.encode("utf-8")
-                                    ).hexdigest()[:8],
-                                    16,
-                                )
-                                % B
-                            ]
-                            if len(memo) < _MEMO_MAX:
-                                memo[f] = v
-                        vals[j] = v
-                    ids.append(did)
-                    ws.append(float(vals.sum()))
-                    ns.append(len(feats))
-                yield pd.DataFrame(
-                    {id_col: ids, out_col: ws, "n_feats": ns}
-                )
-
-        out_schema = (
-            f"{id_col} {id_field}, {out_col} double, n_feats long"
-        )
-        return (
-            df.select(id_col, text_col)
-            .mapInPandas(score, out_schema)
-            .withColumn("keep", F.col(out_col) > 0.0)
-        )
+        hist = _dsir_hist(df, F.lit(False), text_col, self.buckets, id_col)
+        return _dsir_score(hist, self.lam, id_col, out_col)
 
     def save(self, path: str) -> None:
         import json
@@ -1082,75 +1139,6 @@ class DsirModel:
         return cls(spark.read.parquet(f"{path}/lam"), p["buckets"], p["alpha"])
 
 
-def _dsir_profile_kernel(
-    raw: DataFrame, target_pred: Column, text_col: str, B: int
-) -> list:
-    """One Arrow pass → per-task partial (bucket, raw-count,
-    target-count) profiles → one ≤``B``-group aggregate → collect.
-
-    Tokenization and the md5-prefix bucket are the scorer kernel's
-    exact semantics (ASCII-space trim, ASCII ``\\s+`` split, lower
-    before split, unigrams+bigrams), which are parity-gated against
-    the expression path; counts are integers, so the profiles equal
-    the explode path's exactly.  The predicate is evaluated in the
-    JVM (coalesced to false — ``count_if`` never counts NULL) so the
-    kernel sees a plain boolean column.  Per-task state: two ``B``-long
-    int64 arrays plus the Zipfian feature→bucket memo (bounded)."""
-
-    def profile(batches):
-        import hashlib
-        import re as _re
-
-        import numpy as np
-        import pandas as pd
-
-        split = _re.compile(r"\s+", _re.ASCII).split
-        r_acc = np.zeros(B, dtype=np.int64)
-        t_acc = np.zeros(B, dtype=np.int64)
-        memo: dict = {}
-        _MEMO_MAX = 1 << 20
-        for pdf in batches:
-            for is_t, text in zip(pdf["__t"], pdf[text_col]):
-                if text is None:
-                    continue
-                toks = [w for w in split(text.strip(" ").lower()) if w]
-                feats = toks + [
-                    a + " " + b for a, b in zip(toks, toks[1:])
-                ]
-                for f in feats:
-                    b = memo.get(f)
-                    if b is None:
-                        b = (
-                            int(
-                                hashlib.md5(
-                                    f.encode("utf-8")
-                                ).hexdigest()[:8],
-                                16,
-                            )
-                            % B
-                        )
-                        if len(memo) < _MEMO_MAX:
-                            memo[f] = b
-                    r_acc[b] += 1
-                    if is_t:
-                        t_acc[b] += 1
-        nz = np.nonzero(r_acc)[0]
-        yield pd.DataFrame(
-            {"bucket": nz, "__r": r_acc[nz], "__tc": t_acc[nz]}
-        )
-
-    return (
-        raw.select(
-            F.coalesce(target_pred, F.lit(False)).alias("__t"),
-            F.col(text_col),
-        )
-        .mapInPandas(profile, "bucket int, __r long, __tc long")
-        .groupBy("bucket")
-        .agg(F.sum("__r").alias("__r"), F.sum("__tc").alias("__tc"))
-        .collect()
-    )
-
-
 def train_dsir(
     target: DataFrame,
     raw: DataFrame,
@@ -1158,94 +1146,54 @@ def train_dsir(
     buckets: int = 4096,
     alpha: float = 1.0,
     target_pred: Column | None = None,
-    vectorized: bool = True,
 ) -> DsirModel:
     """Fit the DSIR log-ratio table from a target (in-domain) corpus
     sample and the raw corpus (or a sample — only bucket FREQUENCIES
-    matter).  Two word-count-profile jobs (explode → groupBy(bucket)
-    with map-side combine over an int key, ≤ ``buckets`` groups), then
-    the λ table materializes driver-side (bounded at ``buckets`` rows
-    by construction) so scoring never re-runs training.
+    matter).  One histogram-kernel pass; training aggregates only its
+    per-task profile marker rows (≤ ``buckets`` groups), then the λ
+    table materializes driver-side (bounded at ``buckets`` rows by
+    construction) so scoring never re-runs training.
 
     λ_b = log( (cnt_target(b)+α) / (N_target+αB) )
         − log( (cnt_raw(b)+α)    / (N_raw+αB) )
 
-    ``target_pred``: when the target IS a slice of ``raw``
-    (``target ≡ raw.filter(target_pred)`` — the caller asserts this),
-    pass the predicate and training collapses to ONE pass over ``raw``:
-    the feature stream is exploded once and both profiles come out of
-    the same ≤``buckets``-group aggregate (count(*) and a conditional
-    count), halving the scan/tokenize work (guide §2.3: aggregate in
-    one pass instead of two).  Counts are identical by construction —
-    the target profile is the conditional count over exactly the rows
-    the filter would have kept.  ``target`` is ignored in this mode
-    (pass it anyway for call-site readability, or ``None``).
+    Two modes, both one pass:
 
-    ``vectorized`` (pred mode only): count the bucket profiles in the
-    same Arrow kernel shape the scorer uses — tokenize → md5-bucket →
-    two int accumulators per task, ≤``buckets`` partial rows per task
-    into one map-side-combined groupBy — instead of the native
-    explode → md5 expression chain, whose array HOFs are
-    CodegenFallback (interpreted per element, the measured 24×-family
-    slowdown the scoring kernel already avoids; r14, guide §4.2).
-    Counts are exact integers from the identical tokenization and the
-    identical md5-prefix bucket arithmetic, so the λ table is
-    bit-identical to the expression path (parity-pinned in
-    tests/test_round14_opt.py); the explode's feature-occurrence rows
-    never exist, and the shuffle carries ≤``buckets`` rows per task.
+    * two corpora: ``target`` and ``raw`` are unioned under a constant
+      target flag, so the kernel's flagged profile is the target's and
+      the unflagged one is the raw corpus's.
+    * ``target_pred``: when the target IS a slice of ``raw``
+      (``target ≡ raw.filter(target_pred)`` — the caller asserts this),
+      the predicate is the flag and the pass reads ``raw`` alone.
+      Counts are identical by construction — the target profile is the
+      conditional count over exactly the rows the filter would have
+      kept — so both modes give a bit-identical λ table.  ``target`` is
+      ignored in this mode (pass it anyway for call-site readability,
+      or ``None``).
     """
-    spark = raw.sparkSession
     B = int(buckets)
-
-    def side_counts(df) -> tuple[dict, int]:
-        rows = (
-            df.select(
-                F.explode(_dsir_features(F.col(text_col))).alias("__feat")
-            )
-            .select(_dsir_bucket(F.col("__feat"), B).alias("bucket"))
-            .groupBy("bucket")
-            .count()
-            .collect()
-        )
-        cnt = {r["bucket"]: r["count"] for r in rows}
-        return cnt, sum(cnt.values())
-
     if target_pred is not None:
-        if vectorized:
-            rows = _dsir_profile_kernel(raw, target_pred, text_col, B)
-        else:
-            rows = (
-                raw.select(
-                    target_pred.alias("__t"),
-                    F.explode(
-                        _dsir_features(F.col(text_col))
-                    ).alias("__feat"),
-                )
-                .select(
-                    "__t", _dsir_bucket(F.col("__feat"), B).alias("bucket")
-                )
-                .groupBy("bucket")
-                .agg(
-                    F.count("*").alias("__r"),
-                    F.count_if(F.col("__t")).alias("__tc"),
-                )
-                .collect()
-            )
-        r_cnt = {r["bucket"]: r["__r"] for r in rows}
-        t_cnt = {r["bucket"]: r["__tc"] for r in rows if r["__tc"]}
+        t_cnt, r_cnt = _dsir_profile(
+            _dsir_hist(raw, target_pred, text_col, B)
+        )
     else:
-        t_cnt, _ = side_counts(target)
-        r_cnt, _ = side_counts(raw)
-    return _model_from_counts(spark, t_cnt, r_cnt, B, alpha)
+        both = target.select(
+            F.lit(True).alias("__t"), F.col(text_col)
+        ).unionByName(raw.select(F.lit(False).alias("__t"), F.col(text_col)))
+        t_cnt, all_cnt = _dsir_profile(
+            _dsir_hist(both, F.col("__t"), text_col, B)
+        )
+        r_cnt = {b: n - t_cnt.get(b, 0) for b, n in all_cnt.items()}
+    return _model_from_counts(raw.sparkSession, t_cnt, r_cnt, B, alpha)
 
 
 def _model_from_counts(
     spark, t_cnt: dict, r_cnt: dict, B: int, alpha: float
 ) -> DsirModel:
     """λ table + model from integer bucket-count profiles — the ONE
-    smoothing arithmetic (shared by :func:`train_dsir` and
-    :func:`dsir_fit_score` so the two paths cannot drift; counts are
-    exact ints, so identical profiles give a bit-identical table)."""
+    smoothing arithmetic (shared by every trainer and the native
+    reference so they cannot drift; counts are exact ints, so identical
+    profiles give a bit-identical table)."""
     import math
 
     t_n, r_n = sum(t_cnt.values()), sum(r_cnt.values())
@@ -1258,16 +1206,7 @@ def _model_from_counts(
         for b in range(B)
     ]
     lam = spark.createDataFrame(lam_rows, "bucket int, lam double")
-    model = DsirModel(lam, B, alpha)
-    # the λ values already live driver-side — hand the scorer its dense
-    # copy so it never runs the lam.collect() job
-    import numpy as _np
-
-    dense = _np.zeros(B, dtype=_np.float64)
-    for b, v in lam_rows:
-        dense[b] = v
-    model._lam_np = dense
-    return model
+    return DsirModel(lam, B, alpha)
 
 
 def dsir_fit_score(
@@ -1280,26 +1219,18 @@ def dsir_fit_score(
     out_col: str = "dsir_logw",
 ) -> tuple[DsirModel, DataFrame]:
     """Train DSIR *and* score the same corpus from ONE tokenize pass
-    (r15, guide §8: decide with small rows, move heavy work once).
+    (guide §8: decide with small rows, move heavy work once).
 
-    ``train_dsir(target_pred=...)`` + ``log_weights`` tokenizes and
-    md5-buckets the corpus TWICE — once for the count profiles, once
-    for scoring — paying the Python boundary two full corpus passes.
-    Here a single Arrow kernel pass emits each document's sparse bucket
-    HISTOGRAM (≤ min(n_feats, buckets) (int, long) pairs per doc — the
-    lightweight proxy), which is persisted and serves both halves
+    The histogram kernel (:func:`_dsir_hist`, flag = ``target_pred``)
+    runs once and its output is persisted; both halves read it
     natively:
 
-    * training: the kernel also emits TWO per-task marker rows (the
-      task's summed target / non-target histograms, ``__p=true``), so
-      the profile aggregate reads ≤ 2·min(task rows, buckets) tiny rows
-      per task — never re-explodes the documents.  Counts are the same
-      exact integers as the explode/profile-kernel paths, so the λ
-      table is BIT-IDENTICAL (pinned in tests/test_round15_opt.py).
-    * scoring: explode the histograms → broadcast-join the λ table →
-      ``sum(count × λ)`` per doc.  All JVM codegen — no second Python
-      pass, no re-tokenization; partial aggregation collapses each
-      doc's rows before the one id-keyed exchange.
+    * training aggregates the kernel's per-task profile marker rows
+      (exactly what :func:`train_dsir` does), so the λ table is
+      bit-identical to ``train_dsir(target_pred=...)``;
+    * scoring explodes the per-document histograms against the
+      broadcast λ table (exactly :meth:`DsirModel.log_weights`) — no
+      second Python pass, no re-tokenization.
 
     Per-doc scores are ``Σ_b count_b·λ_b`` instead of the occurrence-
     order ``Σ_i λ_{b_i}`` — equal up to float64 summation-order noise
@@ -1308,140 +1239,59 @@ def dsir_fit_score(
     Gumbel top-k boundary both sit ≥9 orders above it (re-measured
     per run in tests).  ``n_feats`` stays an exact integer.
 
-    At 100 TB this halves the corpus passes and the Python-boundary
-    work; the persisted proxy is bounded per doc and spills to disk
-    under the default storage level.  Returns ``(model, scored)`` with
-    the same scored schema as :meth:`DsirModel.log_weights`.
+    Returns ``(model, scored)``; ``scored`` has the schema of
+    :meth:`DsirModel.log_weights`.  The persisted histogram OUTLIVES
+    this call: the lazy ``scored`` reads it, so it stays cached until
+    the caller unpersists it or clears the cache (the proxy is bounded
+    per doc and spills to disk under the default storage level).
     """
-    spark = raw.sparkSession
     B = int(buckets)
-    id_field = raw.schema[id_col].dataType.simpleString()
+    hist = _dsir_hist(raw, target_pred, text_col, B, id_col).persist()
+    t_cnt, r_cnt = _dsir_profile(hist)
+    model = _model_from_counts(raw.sparkSession, t_cnt, r_cnt, B, alpha)
+    return model, _dsir_score(hist, model.lam, id_col, out_col)
 
-    def hist(batches):
-        import hashlib
-        import re as _re
-        from collections import Counter
 
-        import numpy as np
-        import pandas as pd
-
-        split = _re.compile(r"\s+", _re.ASCII).split
-        # feature→bucket memo, same bound + Zipfian rationale as the
-        # profile/scoring kernels (guide §4.5)
-        memo: dict = {}
-        _MEMO_MAX = 1 << 20
-        # per-task profile accumulators (emitted as marker rows below)
-        r_acc = np.zeros(B, dtype=np.int64)
-        t_acc = np.zeros(B, dtype=np.int64)
-        for pdf in batches:
-            ids, ts, bks, cts = [], [], [], []
-            for did, is_t, text in zip(
-                pdf[id_col], pdf["__t"], pdf[text_col]
-            ):
-                if text is None:
-                    continue
-                toks = [w for w in split(text.strip(" ").lower()) if w]
-                feats = toks + [
-                    a + " " + b for a, b in zip(toks, toks[1:])
-                ]
-                if not feats:
-                    continue
-                acc: dict = {}
-                # md5 once per DISTINCT feature per doc (Counter), not
-                # per occurrence — strictly less hashing than the
-                # per-occurrence kernels
-                for f, c in Counter(feats).items():
-                    b = memo.get(f)
-                    if b is None:
-                        b = (
-                            int(
-                                hashlib.md5(
-                                    f.encode("utf-8")
-                                ).hexdigest()[:8],
-                                16,
-                            )
-                            % B
-                        )
-                        if len(memo) < _MEMO_MAX:
-                            memo[f] = b
-                    acc[b] = acc.get(b, 0) + c
-                    r_acc[b] += c
-                    if is_t:
-                        t_acc[b] += c
-                ids.append(did)
-                ts.append(bool(is_t))
-                bks.append(list(acc.keys()))
-                cts.append(list(acc.values()))
-            if ids:  # an empty batch's list columns confuse Arrow
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "__t": ts,
-                        "__p": [False] * len(ids),
-                        "__bk": bks,
-                        "__ct": cts,
-                    }
-                )
-        # per-task PROFILE marker rows (__p=true): the task's summed
-        # target / non-target bucket histograms.  Training then
-        # aggregates ≤ 2·min(rows, buckets) tiny rows per task instead
-        # of re-exploding every document's histogram (r15 profile: the
-        # explode-everything training agg was the largest post-kernel
-        # stage).  Exact integers — the per-task sums ARE the profile.
-        marker = []
-        for flag, arr in ((True, t_acc), (False, r_acc - t_acc)):
-            nz = np.nonzero(arr)[0]
-            if len(nz):
-                marker.append(
-                    (None, flag, True, [int(b) for b in nz],
-                     [int(c) for c in arr[nz]])
-                )
-        if marker:
-            yield pd.DataFrame(
-                marker, columns=[id_col, "__t", "__p", "__bk", "__ct"]
-            )
-
-    hist_df = (
-        raw.select(
-            F.col(id_col),
-            F.coalesce(target_pred, F.lit(False)).alias("__t"),
-            F.col(text_col),
-        )
-        .mapInPandas(
-            hist,
-            f"{id_col} {id_field}, __t boolean, __p boolean, "
-            "__bk array<int>, __ct array<long>",
-        )
-        .persist()
-    )
-
-    z = F.explode(F.arrays_zip("__bk", "__ct")).alias("z")
+def _dsir_reference(
+    raw: DataFrame,
+    target_pred: Column,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    buckets: int = 4096,
+    alpha: float = 1.0,
+    out_col: str = "dsir_logw",
+) -> tuple[DsirModel, DataFrame]:
+    """:func:`dsir_fit_score` as ONE native explode plan, no Python —
+    the parity reference for the histogram kernel, shaped like the
+    x45/x47 DuckDB oracle: feature-bucket rows → both count profiles →
+    λ → per-doc broadcast join and sum (occurrence order)."""
+    B = int(buckets)
+    fb = raw.select(
+        F.col(id_col),
+        F.coalesce(target_pred, F.lit(False)).alias("__t"),
+        F.explode(_dsir_features(F.col(text_col))).alias("__feat"),
+    ).select(id_col, "__t", _dsir_bucket(F.col("__feat"), B).alias("bucket"))
     rows = (
-        hist_df.filter(F.col("__p"))
-        .select("__t", z)
-        .groupBy(F.col("z.__bk").alias("bucket"))
+        fb.groupBy("bucket")
         .agg(
-            F.sum("z.__ct").alias("__r"),
-            F.sum(
-                F.when(F.col("__t"), F.col("z.__ct")).otherwise(F.lit(0))
-            ).alias("__tc"),
+            F.count("*").alias("__r"),
+            F.count_if(F.col("__t")).alias("__tc"),
         )
         .collect()
     )
-    r_cnt = {r["bucket"]: r["__r"] for r in rows}
-    t_cnt = {r["bucket"]: r["__tc"] for r in rows if r["__tc"]}
-    model = _model_from_counts(spark, t_cnt, r_cnt, B, alpha)
-
+    model = _model_from_counts(
+        raw.sparkSession,
+        {r["bucket"]: r["__tc"] for r in rows if r["__tc"]},
+        {r["bucket"]: r["__r"] for r in rows},
+        B,
+        alpha,
+    )
     scored = (
-        hist_df.filter(~F.col("__p"))
-        .select(id_col, z)
-        .join(F.broadcast(model.lam), F.col("z.__bk") == F.col("bucket"))
+        fb.join(F.broadcast(model.lam), "bucket")
         .groupBy(id_col)
         .agg(
-            F.sum(F.col("z.__ct").cast("double") * F.col("lam")).alias(
-                out_col
-            ),
-            F.sum("z.__ct").alias("n_feats"),
+            F.sum("lam").alias(out_col),
+            F.count(F.lit(1)).alias("n_feats"),
         )
         .withColumn("keep", F.col(out_col) > 0.0)
     )
@@ -1471,22 +1321,34 @@ _SELECTION_REGIME_MAX = 10_000_000
 _SELECTION_FAST_PATH_MAX = 200_000
 
 
+def _gumbel_key(id_col: str, out_col: str, salt: str) -> Column:
+    """``dsir_logw − log(−log u)`` with the uniform u derived from THE
+    bucket convention (md5_bucket, 2^32 buckets = the full 8-hex-digit
+    range), same (b + 0.5)/M pattern as pareto_filter — one spelling,
+    one SQL-oracle translation."""
+    u = (
+        md5_bucket(
+            F.concat(F.col(id_col).cast("string"), F.lit("|" + salt)),
+            1 << 32,
+        ).cast("double")
+        + F.lit(0.5)
+    ) / F.lit(float(1 << 32))
+    return (F.col(out_col) - F.log(-F.log(u))).cast("double")
+
+
 def dsir_resample(
-    df: DataFrame,
-    model: DsirModel,
+    scored: DataFrame,
     n: int,
     id_col: str = "doc_id",
-    text_col: str = "text",
     out_col: str = "dsir_logw",
     salt: str = "gumbel",
-    vectorized: bool = True,
     max_candidates: int = _SELECTION_FAST_PATH_MAX,
-    scored: DataFrame | None = None,
 ) -> DataFrame:
     """The RESAMPLING half of DSIR (Xie et al. 2023 §2.3): draw ``n``
     documents with probability proportional to their importance weight
-    ``exp(dsir_logw)`` — completing the score → sample-to-budget
-    pipeline in one call.
+    ``exp(dsir_logw)``, from a scoring frame ``scored`` —
+    :func:`dsir_fit_score`'s or :meth:`DsirModel.log_weights`'s
+    (id, ``out_col``, n_feats, ...).
 
     Sampling uses the Gumbel-top-k equivalence (sampling without
     replacement ∝ w_i  ≡  top-k of log w_i + Gumbel noise), with the
@@ -1497,9 +1359,7 @@ def dsir_resample(
     no-RNG-state convention as :func:`sample_deterministic`.  A
     different ``salt`` is a fresh independent draw.
 
-    Scale shape: scoring is the model's single corpus pass (Arrow
-    kernel by default, ``vectorized=False`` for the oracle-shaped
-    native plan); the key is one narrow projection; top-k is
+    Scale shape: the key is one narrow projection; top-k is
     ``orderBy(...).limit(n)`` — Spark's TakeOrderedAndProject keeps a
     per-partition heap of n and merges, never a global sort, so the
     plan holds at any corpus size.  Ties: the key is continuous, and
@@ -1514,23 +1374,7 @@ def dsir_resample(
     bisection is faster AND keeps driver state bounded, so the big
     driver collect is opt-in, never the default.
     """
-    # ``scored``: a pre-computed scoring frame (e.g. from
-    # :func:`dsir_fit_score`, which shares one tokenize pass between
-    # training and scoring) — skips the model's own scoring pass
-    if scored is None:
-        scored = model.log_weights(df, id_col, text_col, out_col, vectorized)
-    # uniforms via THE bucket convention (md5_bucket, 2^32 buckets =
-    # the full 8-hex-digit range), same (b + 0.5)/M pattern as
-    # pareto_filter — one spelling, one SQL-oracle translation
-    u = (
-        md5_bucket(
-            F.concat(F.col(id_col).cast("string"), F.lit("|" + salt)),
-            1 << 32,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(float(1 << 32))
-    key = F.col(out_col) - F.log(-F.log(u))
-    keyed = scored.withColumn("gumbel_key", key.cast("double"))
+    keyed = scored.withColumn("gumbel_key", _gumbel_key(id_col, out_col, salt))
     max_candidates = min(int(max_candidates), _SELECTION_REGIME_MAX)
     if int(n) > int(max_candidates):
         sel = _token_prefix_by_threshold(
@@ -1704,7 +1548,6 @@ def dsir_resample_tokens(
     text_col: str = "text",
     out_col: str = "dsir_logw",
     salt: str = "gumbel",
-    vectorized: bool = True,
     token_col: str | None = None,
     max_candidates: int = _SELECTION_FAST_PATH_MAX,
     threshold_bins: int = 4096,
@@ -1746,7 +1589,7 @@ def dsir_resample_tokens(
     ``(gumbel_key DESC, id ASC)`` total order as :func:`dsir_resample`,
     deterministic end to end.
     """
-    scored = model.log_weights(df, id_col, text_col, out_col, vectorized)
+    scored = model.log_weights(df, id_col, text_col, out_col)
     if token_col is None:
         toks = df.select(
             F.col(id_col),
@@ -1759,17 +1602,8 @@ def dsir_resample_tokens(
         )
     else:
         toks = df.select(F.col(id_col), F.col(token_col).cast("long").alias("__ntok"))
-    u = (
-        md5_bucket(
-            F.concat(F.col(id_col).cast("string"), F.lit("|" + salt)),
-            1 << 32,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(float(1 << 32))
     keyed = (
-        scored.withColumn(
-            "gumbel_key", (F.col(out_col) - F.log(-F.log(u))).cast("double")
-        )
+        scored.withColumn("gumbel_key", _gumbel_key(id_col, out_col, salt))
         .join(toks, id_col)
         .select(id_col, out_col, "n_feats", "__ntok", "gumbel_key")
     )

@@ -436,47 +436,6 @@ def minhash_signature_vectorized(
     return kernel.asNondeterministic()
 
 
-def minhash_prep_vectorized(
-    k: int = 192, shingle_n: int = 5, seed: int = 42
-) -> Column:
-    """Fused Arrow kernel: ONE pass over each text producing both the
-    MinHash signature (for banding) and the distinct 64-bit shingle-hash
-    set (for exact-Jaccard verification).
-
-    Returns struct{sig: array<bigint>, hs: array<bigint>}.  The 64-bit
-    shingle hash is the verification identity — collision odds per
-    candidate pair ~|A||B|/2^64, so Jaccard over the hash sets equals
-    Jaccard over the string shingle sets; the interpreted-HOF version of
-    the gram table alone cost ~4.5 ms/doc.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    coeffs = _perm_coeffs(k, seed)
-
-    @pandas_udf("sig: array<bigint>, hs: array<bigint>")
-    def kernel(texts: pd.Series) -> pd.DataFrame:
-        A = np.array([a for a, _ in coeffs], dtype=np.uint64)[:, None]
-        B = np.array([b for _, b in coeffs], dtype=np.uint64)[:, None]
-        sigs, hsets = [], []
-        for t in texts:
-            if t is None:
-                sigs.append(None)
-                hsets.append(None)
-                continue
-            hs = _np_shingle_hashes(t, shingle_n)
-            sigs.append(_np_minhash_sig(hs, A, B).view(np.int64))
-            hsets.append(hs.view(np.int64))
-        return pd.DataFrame({"sig": sigs, "hs": hsets})
-
-    # non-deterministic: stops the optimizer duplicating the kernel below
-    # a repartition to evaluate a pushed-down null filter (guide §4.4 —
-    # r14 caught the twin ArrowEvalPython running the whole kernel
-    # single-task on the exchange's map side; the kernel is pure, only
-    # the optimizer's licence to copy/reorder it changes)
-    return kernel.asNondeterministic()
-
-
 def minhash_banded_vectorized(
     k: int = 192,
     num_bands: int = 64,

@@ -4171,14 +4171,15 @@ def x45(spark, sf_dir):
     text.  The oracle replays the ENTIRE method — feature stream,
     hashing, both count profiles, smoothing, λ table, per-doc sums —
     so training and scoring are both gated, the x42-CharLM standard.
-    Scale shape (r15, guide §8): ONE Arrow pass emits per-doc sparse
-    bucket histograms (the lightweight proxy — the corpus text is
-    tokenized exactly once); training aggregates the histograms to the
-    ≤512-group integer profile, scoring explodes them against the
-    broadcast λ table natively — no second Python pass, no
-    re-tokenization.  The final sort sits above the scoring
-    aggregate's exchange, so the range sampler re-reads the
-    materialized shuffle, never the kernel (r14 lesson)."""
+    Scale shape (``dsir_fit_score``, guide §8): ONE Arrow pass emits
+    per-doc sparse bucket histograms (the lightweight proxy — the
+    corpus text is tokenized exactly once) plus per-task profile rows;
+    training aggregates the profile rows to the ≤512-group integer
+    profile, scoring explodes the histograms against the broadcast λ
+    table natively — no second Python pass, no re-tokenization.  The
+    final sort sits above the scoring aggregate's exchange, so the
+    range sampler re-reads the materialized shuffle, never the kernel
+    (r14 lesson)."""
     d = _tw(spark, sf_dir, "documents")
     _, scored = CU.dsir_fit_score(
         d, F.col("lang") == "en", buckets=512, alpha=1.0,
@@ -4310,31 +4311,26 @@ def x47(spark, sf_dir):
     """DSIR step 2 — importance RESAMPLING to a fixed budget (Xie et
     al. 2023 §2.3): draw 100 documents ∝ exp(dsir_logw) via
     Gumbel-top-k with md5-derived uniforms, so the full paper pipeline
-    (train → score → sample) is train_dsir + dsir_resample.  The
+    (train → score → sample) is dsir_fit_score + dsir_resample.  The
     oracle replays everything end-to-end: feature hashing, both count
     profiles, the λ table, per-doc sums, the exact Gumbel keys
     ((md5-bucket + 0.5)/2^32 uniforms), and the top-k cutoff.  Scale
-    shape: scoring is one corpus pass; the top-k is
-    TakeOrderedAndProject (per-partition heap of n, then merge) — no
-    global sort, no single-partition funnel.  Arrow-kernel scoring
-    (r14; was vectorized=False): per-doc λ sums can differ from the
-    expression path only by ulp-order summation noise, and the
+    shape: training and scoring share ONE tokenize pass (per-doc
+    bucket histograms as the proxy, scored natively against the
+    broadcast λ table, as in x45); the top-k is TakeOrderedAndProject
+    (per-partition heap of n, then merge) — no global sort, no
+    single-partition funnel.  Per-doc λ sums differ from the oracle's
+    occurrence-order sums by float64 summation noise only, and the
     rank-100 Gumbel boundary gap is ~1e-2 absolute (min adjacent gap
     in the top-101 ~4e-5, measured at sf0.01 AND sf0.1 — 11 orders
-    above ulp; pinned in tests/test_round14_opt.py), so the selected
-    set and its order cannot differ from the native plan's.  The
-    explode → broadcast-join → groupBy scoring shuffle this drops was
-    the single largest job in the query (interpreted HOF explode of
-    every unigram+bigram occurrence).  r15: training and scoring now
-    share ONE tokenize pass (``dsir_fit_score`` — per-doc bucket
-    histograms as the proxy, scored natively against the broadcast λ
-    table); per-doc sums reorder by ≤ float64 noise, 9+ orders below
-    the re-measured rank-100 boundary gap."""
+    above ulp; re-measured against the native reference in
+    tests/test_dsir.py), so the selected set and its order cannot
+    differ from the native plan's."""
     d = _tw(spark, sf_dir, "documents")
-    model, scored = CU.dsir_fit_score(
+    _, scored = CU.dsir_fit_score(
         d, F.col("lang") == "en", buckets=512, alpha=1.0,
     )
-    return CU.dsir_resample(d, model, 100, scored=scored)
+    return CU.dsir_resample(scored, 100)
 
 
 # ---------------------------------------------------------------------------

@@ -4,18 +4,18 @@ RESULT-IDENTICAL — the bench got faster, the oracles must not move.
 
 Covered rewrites (OPTIMIZATION_r14.md has the measurements):
 * ``_np_minhash_sig`` — Mersenne fold replaces ``%`` (bit-identical).
-* ``train_dsir(target_pred=...)`` — one-pass conditional-aggregate
-  training equals the two-pass profile when target ≡ raw.filter(pred).
 * x03's token gate — ``RLIKE '\\S+\\s+\\S+\\s+\\S+'`` equals
   ``size(tokenize(text)) >= 3`` on hostile whitespace.
 * x18's survivor anti-join — measured-broadcast drop list leaves the
   checkpointed corpus partitioning intact (no AQE 1-partition collapse).
+
+The ``train_dsir(target_pred=...)`` one-pass training gates live in
+tests/test_dsir.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -55,48 +55,6 @@ class TestMinhashFastMod:
                 A, np.array([[b]], dtype=np.uint64),
             )
             assert int(got[0]) == want % M, (target, want, int(got[0]))
-
-
-class TestDsirOnePassTraining:
-    def test_lambda_table_identical_to_two_pass(self, spark):
-        from bertrand_spark.pipeline.curation import train_dsir
-
-        rows = [
-            (0, "en", "the cat sat on the mat"),
-            (1, "en", "a dog  and\ta cat"),
-            (2, "de", "der hund und die katze"),
-            (3, "fr", "le chat est la"),
-            (4, "en", ""),
-            (5, None, "stray null lang row"),
-            (6, "en", "the the the repeated the"),
-        ]
-        d = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-        two = train_dsir(
-            d.filter(F.col("lang") == "en"), d, buckets=64, alpha=1.0
-        )
-        one = train_dsir(
-            d.filter(F.col("lang") == "en"), d, buckets=64, alpha=1.0,
-            target_pred=F.col("lang") == "en",
-        )
-        lam_two = {r["bucket"]: r["lam"] for r in two.lam.collect()}
-        lam_one = {r["bucket"]: r["lam"] for r in one.lam.collect()}
-        assert lam_two.keys() == lam_one.keys()
-        for b in lam_two:
-            assert lam_two[b] == pytest.approx(lam_one[b], abs=0.0), b
-
-    def test_null_predicate_rows_count_raw_only(self, spark):
-        """A NULL predicate (lang IS NULL) must count toward raw and
-        never toward target — filter semantics, not three-valued sum."""
-        from bertrand_spark.pipeline.curation import train_dsir
-
-        d = spark.createDataFrame(
-            [(0, "en", "alpha beta"), (1, None, "alpha beta")],
-            "doc_id long, lang string, text string",
-        )
-        two = train_dsir(d.filter(F.col("lang") == "en"), d, buckets=16)
-        one = train_dsir(None, d, buckets=16,
-                         target_pred=F.col("lang") == "en")
-        assert sorted(two.lam.collect()) == sorted(one.lam.collect())
 
 
 class TestX03TokenGate:
@@ -161,138 +119,3 @@ class TestX18SurvivorPartitioning:
         assert [f.name for f in out.schema.fields] == [
             "n_docs", "total_tokens", "n_bins"
         ]
-
-
-class TestDsirKernelTraining:
-    """r14: the pred-mode training profile moved to an Arrow kernel
-    (same tokenization/bucket semantics as the scoring kernel); the
-    λ table must equal the native explode path EXACTLY (integer
-    counts → identical float arithmetic)."""
-
-    ROWS = [
-        (0, "en", "the cat sat on the mat"),
-        (1, "en", "a dog  and\ta cat"),
-        (2, "de", "der hund und die katze"),
-        (3, "fr", "le chat est la"),
-        (4, "en", ""),
-        (5, None, "stray null lang row"),
-        (6, "en", "the the the repeated the"),
-        (7, "en", "tab\tand\nnewline  runs"),
-        (8, "de", None),
-    ]
-
-    def test_kernel_profile_equals_native_explode(self, spark):
-        from bertrand_spark.pipeline.curation import train_dsir
-
-        d = spark.createDataFrame(
-            self.ROWS, "doc_id long, lang string, text string"
-        )
-        pred = F.col("lang") == "en"
-        nat = train_dsir(None, d, buckets=64, target_pred=pred,
-                         vectorized=False)
-        ker = train_dsir(None, d, buckets=64, target_pred=pred,
-                         vectorized=True)
-        lam_n = {r["bucket"]: r["lam"] for r in nat.lam.collect()}
-        lam_k = {r["bucket"]: r["lam"] for r in ker.lam.collect()}
-        assert lam_n == lam_k  # exact float equality, no tolerance
-
-    def test_dense_lam_matches_table(self, spark):
-        """train_dsir's driver-side dense λ (the scorer's no-collect
-        path) must equal the lam DataFrame row-for-row."""
-        import numpy as np
-
-        from bertrand_spark.pipeline.curation import train_dsir
-
-        d = spark.createDataFrame(
-            self.ROWS, "doc_id long, lang string, text string"
-        )
-        m = train_dsir(None, d, buckets=32,
-                       target_pred=F.col("lang") == "en")
-        assert m._lam_np is not None and len(m._lam_np) == 32
-        table = np.zeros(32)
-        for r in m.lam.collect():
-            table[r["bucket"]] = r["lam"]
-        assert (table == m._lam_np).all()
-
-    def test_scores_identical_with_and_without_dense_lam(self, spark):
-        from bertrand_spark.pipeline.curation import train_dsir
-
-        d = spark.createDataFrame(
-            self.ROWS, "doc_id long, lang string, text string"
-        )
-        m = train_dsir(None, d, buckets=64,
-                       target_pred=F.col("lang") == "en")
-        with_dense = {
-            r["doc_id"]: r["dsir_logw"] for r in m.log_weights(d).collect()
-        }
-        m._lam_np = None  # force the collect path (save/load shape)
-        via_collect = {
-            r["doc_id"]: r["dsir_logw"] for r in m.log_weights(d).collect()
-        }
-        assert with_dense == via_collect
-
-
-class TestX47GumbelBoundaryGap:
-    """x47 moved to Arrow-kernel scoring (r14): per-doc λ sums may
-    differ from the expression path by ulp-order noise only, so the
-    top-100 selection is unchanged IFF the Gumbel-key gaps at and
-    inside the boundary dwarf ulp scale.  Re-measure the gap on every
-    run (the x16/x05 spectral-gap standard) instead of trusting the
-    one-off measurement."""
-
-    def test_boundary_and_adjacent_gaps_dwarf_ulp(self, spark, sf_dir):
-        from bertrand_spark.pipeline.curation import dsir_resample, train_dsir
-        from bertrand_spark.plans.queries import _tw  # same read as x47
-
-        d = _tw(spark, sf_dir, "documents")
-        model = train_dsir(
-            None, d, buckets=512, alpha=1.0,
-            target_pred=F.col("lang") == "en",
-        )
-        # pull EVERY doc's key (small at test SF), native expression
-        # path, and measure the boundary the way the query's LIMIT does
-        scored = dsir_resample(
-            d, model, 10**6, vectorized=False
-        ).collect()
-        keys = sorted(
-            (r["gumbel_key"] for r in scored), reverse=True
-        )
-        n = min(100, len(keys) - 1)
-        boundary = keys[n - 1] - keys[n]
-        min_adj = min(
-            keys[i] - keys[i + 1] for i in range(n)
-        )
-        scale = max(abs(keys[0]), 1.0)
-        # ulp noise on a float64 sum is ~1e-15 relative; demand the
-        # measured gaps sit ≥ 1e6 ulps above it
-        assert boundary > 1e-9 * scale, (boundary, scale)
-        assert min_adj > 1e-9 * scale, (min_adj, scale)
-
-
-class TestX45SortSamplesCacheNotKernel:
-    """r14 found x45's final orderBy(doc_id) re-running its narrow
-    Arrow chain via the range exchange's sampling pass; r15 replaced
-    the whole scoring path with ``dsir_fit_score`` — ONE histogram
-    kernel (persisted) + native scoring whose groupBy(doc_id) exchange
-    sits between the kernel and the sort.  Pin the r15 shape: the
-    kernel lives under an InMemoryRelation (histogram cache), exactly
-    one MapInPandas in the plan (training and scoring share the pass),
-    and the output order is kept."""
-
-    def test_plan_kernel_under_cache_and_order_kept(self, spark, sf_dir):
-        from bertrand_spark.plans.queries import QUERIES
-
-        df = QUERIES["x45_dsir_weights"](spark, sf_dir)
-        try:
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            assert "InMemoryTableScan" in plan, plan[:2000]
-            # the cached relation wraps the histogram kernel: every
-            # MapInPandas print sits BELOW the first InMemoryTableScan
-            first_scan = plan.index("InMemoryTableScan")
-            first_kernel = plan.index("MapInPandas")
-            assert first_scan < first_kernel, plan[:2000]
-            rows = df.collect()
-            ids = [r["doc_id"] for r in rows]
-            assert len(ids) > 0 and ids == sorted(ids)
-        finally:
-            spark.catalog.clearCache()

@@ -1,131 +1,16 @@
-"""Round-15 optimization parity gates.
+"""Round-15 optimization gates: the shared session recipe.
 
-* ``dsir_fit_score`` — ONE histogram-kernel pass shared by training and
-  scoring (x45/x47): λ table bit-identical to ``train_dsir``; per-doc
-  scores equal the kernel/native scorer up to float64 summation-order
-  noise; ``n_feats``/doc-set/``keep`` exact; the keep-sign boundary is
-  re-measured every run and must dwarf that noise.
+The ``dsir_fit_score`` parity gates live in tests/test_dsir.py.
 """
 
 from __future__ import annotations
 
-import math
-
 import pytest
-from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
 def sf_dir():
     return "/root/testdata/sf0.001"
-
-
-class TestDsirFitScoreParity:
-    def _docs(self, spark):
-        rows = [
-            (1, "en", "the cat sat on the mat"),
-            (2, "de", "der Hund lief  über\tdie Straße"),
-            (3, "en", "a b a b a b a b"),
-            (4, "en", None),
-            (5, "fr", ""),
-            (6, "en", "  leading and trailing  "),
-            (7, "xx", "tok"),
-        ]
-        return spark.createDataFrame(
-            rows, "doc_id long, lang string, text string"
-        )
-
-    def test_lambda_bit_identical_to_train_dsir(self, spark):
-        from bertrand_spark.pipeline.curation import (
-            dsir_fit_score, train_dsir,
-        )
-
-        d = self._docs(spark)
-        pred = F.col("lang") == "en"
-        ref = train_dsir(None, d, buckets=64, target_pred=pred,
-                         vectorized=False)
-        model, _ = dsir_fit_score(d, pred, buckets=64)
-        try:
-            a = {r["bucket"]: r["lam"] for r in ref.lam.collect()}
-            b = {r["bucket"]: r["lam"] for r in model.lam.collect()}
-            assert a == b  # exact float equality: same ints, same math
-        finally:
-            spark.catalog.clearCache()
-
-    def test_scores_match_log_weights(self, spark):
-        from bertrand_spark.pipeline.curation import (
-            dsir_fit_score, train_dsir,
-        )
-
-        d = self._docs(spark)
-        pred = F.col("lang") == "en"
-        ref_model = train_dsir(None, d, buckets=64, target_pred=pred)
-        ref = {
-            r["doc_id"]: r
-            for r in ref_model.log_weights(d, vectorized=False).collect()
-        }
-        _, scored = dsir_fit_score(d, pred, buckets=64)
-        try:
-            got = {r["doc_id"]: r for r in scored.collect()}
-            assert set(got) == set(ref)  # same doc set (feats > 0 only)
-            for did, r in got.items():
-                e = ref[did]
-                assert r["n_feats"] == e["n_feats"]  # exact int
-                assert math.isclose(
-                    r["dsir_logw"], e["dsir_logw"],
-                    rel_tol=1e-12, abs_tol=1e-12,
-                ), (did, r["dsir_logw"], e["dsir_logw"])
-                assert r["keep"] == e["keep"]
-        finally:
-            spark.catalog.clearCache()
-
-    def test_keep_boundary_dwarfs_summation_noise(self, spark, sf_dir):
-        """``keep`` = (Σ count·λ > 0): the reordered sum differs from
-        the per-occurrence sum by ~1e-15 relative, so the sign can only
-        flip if some document's |logw| sits at that scale.  Re-measure
-        the minimum |logw| on every run (the x16/x47 spectral-gap
-        standard) instead of trusting a one-off check."""
-        from bertrand_spark.pipeline.curation import dsir_fit_score
-        from bertrand_spark.plans.queries import _tw
-
-        d = _tw(spark, sf_dir, "documents")
-        _, scored = dsir_fit_score(
-            d, F.col("lang") == "en", buckets=512, alpha=1.0
-        )
-        try:
-            rows = scored.select("dsir_logw", "n_feats").collect()
-            assert rows
-            min_abs = min(abs(r["dsir_logw"]) for r in rows)
-            scale = max(
-                abs(r["dsir_logw"]) * 1e-12 + r["n_feats"] * 1e-13
-                for r in rows
-            )
-            assert min_abs > 100 * scale, (min_abs, scale)
-        finally:
-            spark.catalog.clearCache()
-
-    def test_x45_x47_single_kernel_pass(self, spark, sf_dir):
-        """The fused path's whole point: exactly ONE Python-boundary
-        node in each query's plan (training and scoring share it via
-        the histogram cache)."""
-        from bertrand_spark.plans.queries import QUERIES
-
-        for name in ("x45_dsir_weights", "x47_dsir_resample"):
-            df = QUERIES[name](spark, sf_dir)
-            try:
-                plan = df._jdf.queryExecution().executedPlan().toString()
-                n = len(
-                    {
-                        ln.strip(" :+-*")
-                        for ln in plan.splitlines()
-                        if "MapInPandas" in ln
-                        or "ArrowEvalPython" in ln
-                        or "BatchEvalPython" in ln
-                    }
-                )
-                assert n == 1, f"{name}: {n} Python nodes\n{plan[:2000]}"
-            finally:
-                spark.catalog.clearCache()
 
 
 class TestSessionRecipe:

@@ -1347,58 +1347,6 @@ class TestLateRoundTpchShapes:
         assert len({r["total_revenue"] for r in out}) == 1
 
 
-class TestDsir:
-    """DSIR importance resampling — the full method is oracle-gated by
-    x45; these pin the model-object contracts the oracle can't see."""
-
-    @pytest.fixture(scope="class")
-    def model_and_docs(self, spark, sf_dir):
-        from bertrand_spark.pipeline.curation import train_dsir
-
-        d = read_table(spark, sf_dir, "documents")
-        m = train_dsir(
-            d.filter(F.col("lang") == "en"), d, buckets=512, alpha=1.0
-        )
-        return m, d
-
-    def test_target_slice_separates(self, spark, model_and_docs):
-        m, d = model_and_docs
-        w = m.log_weights(d).join(d.select("doc_id", "lang"), "doc_id")
-        rows = w.select("lang", "dsir_logw").collect()
-        import statistics
-
-        en = [r["dsir_logw"] for r in rows if r["lang"] == "en"]
-        other = [r["dsir_logw"] for r in rows if r["lang"] != "en"]
-        assert statistics.median(en) > 0 > statistics.median(other)
-        # the keep rule is exactly the sign
-        kept = {r["doc_id"] for r in m.log_weights(d).filter("keep").collect()}
-        pos = {
-            r["doc_id"]
-            for r in m.log_weights(d).filter(F.col("dsir_logw") > 0).collect()
-        }
-        assert kept == pos
-
-    def test_feature_count_is_2n_minus_1(self, spark, model_and_docs):
-        m, _ = model_and_docs
-        df = spark.createDataFrame(
-            [(1, "alpha beta gamma delta"), (2, "solo")],
-            "doc_id long, text string",
-        )
-        got = {r["doc_id"]: r["n_feats"] for r in m.log_weights(df).collect()}
-        assert got == {1: 7, 2: 1}  # 4 unigrams + 3 bigrams; 1 + 0
-
-    def test_save_load_scores_identical(self, spark, model_and_docs, tmp_path):
-        from bertrand_spark.pipeline.curation import DsirModel
-
-        m, d = model_and_docs
-        p = str(tmp_path / "dsir")
-        m.save(p)
-        m2 = DsirModel.load(spark, p)
-        a = {r["doc_id"]: r["dsir_logw"] for r in m.log_weights(d).collect()}
-        b = {r["doc_id"]: r["dsir_logw"] for r in m2.log_weights(d).collect()}
-        assert a == b  # bit-identical: same λ rows, same plan
-
-
 class TestFilterCascade:
     def test_first_fail_attribution_order(self, spark):
         from bertrand_spark.pipeline.curation import filter_cascade

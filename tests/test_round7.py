@@ -179,70 +179,6 @@ class TestDerivedPartsupp:
         assert plan.count("LeftSemi") >= 2, plan[:2000]
 
 
-class TestDsirResample:
-    def _model_and_docs(self, spark, sf_dir):
-        from bertrand_spark.pipeline import curation as CU
-        from bertrand_spark.sources import read_table
-
-        d = read_table(spark, sf_dir, "documents")
-        model = CU.train_dsir(
-            d.filter(F.col("lang") == "en"), d, buckets=512, alpha=1.0
-        )
-        return model, d
-
-    def test_repartition_stable(self, spark, sf_dir):
-        """The Gumbel draw is md5-derived — the selected set must not
-        depend on physical partitioning."""
-        from bertrand_spark.pipeline import curation as CU
-
-        model, d = self._model_and_docs(spark, sf_dir)
-        a = CU.dsir_resample(d, model, 50)
-        b = CU.dsir_resample(d.repartition(17), model, 50)
-        assert sorted(r["doc_id"] for r in a.collect()) == sorted(
-            r["doc_id"] for r in b.collect()
-        )
-
-    def test_kernel_matches_native(self, spark, sf_dir):
-        """vectorized=True (Arrow kernel) and vectorized=False (native
-        explode/join plan) select the identical top-k."""
-        from bertrand_spark.pipeline import curation as CU
-
-        model, d = self._model_and_docs(spark, sf_dir)
-        k = CU.dsir_resample(d, model, 40, vectorized=True).collect()
-        n = CU.dsir_resample(d, model, 40, vectorized=False).collect()
-        assert sorted(r["doc_id"] for r in k) == sorted(r["doc_id"] for r in n)
-        kw = {r["doc_id"]: r["gumbel_key"] for r in k}
-        nw = {r["doc_id"]: r["gumbel_key"] for r in n}
-        for did in kw:
-            assert abs(kw[did] - nw[did]) < 1e-9 * max(1.0, abs(nw[did]))
-
-    def test_salt_gives_fresh_draw(self, spark, sf_dir):
-        """A different salt is an independent sample: overlap exists
-        (high-weight docs dominate any draw) but the sets differ."""
-        from bertrand_spark.pipeline import curation as CU
-
-        model, d = self._model_and_docs(spark, sf_dir)
-        a = {r["doc_id"] for r in CU.dsir_resample(d, model, 50).collect()}
-        b = {
-            r["doc_id"]
-            for r in CU.dsir_resample(d, model, 50, salt="run2").collect()
-        }
-        assert a != b
-
-    def test_weight_bias(self, spark, sf_dir):
-        """Sampling ∝ exp(logw): the selected set's mean log-weight
-        must exceed the corpus mean (the whole point of DSIR)."""
-        from bertrand_spark.pipeline import curation as CU
-
-        model, d = self._model_and_docs(spark, sf_dir)
-        sel = CU.dsir_resample(d, model, 50)
-        sel_mean = sel.agg(F.avg("dsir_logw")).collect()[0][0]
-        all_mean = (
-            model.log_weights(d).agg(F.avg("dsir_logw")).collect()[0][0]
-        )
-        assert sel_mean > all_mean
-
-
 class TestAdviceR6Fixes:
     """Round-6 ADVICE items, each with the failure it guards against."""
 
@@ -843,7 +779,6 @@ class TestIvfDriftReport:
         assert after == before
 
 
-
 class TestGifDecode:
     """Round-7c: stdlib GIF first-frame decode (LZW, palettes,
     interlace, frame-offset canvas composition).  The test encoder
@@ -1249,66 +1184,3 @@ class TestStreamDecodeMedia:
         landed = spark.read.parquet(f"{out}/ingest_batch=*")
         assert landed.count() == 4
         assert landed.filter(F.col("pixels").isNotNull()).count() == 3
-
-
-class TestDsirResampleTokens:
-    """dsir_resample_tokens: the paper's sample-to-TOKEN-budget mode —
-    maximal Gumbel-key prefix whose token sum fits the budget."""
-
-    def _setup(self, spark, sf_dir):
-        from bertrand_spark.pipeline import curation as CU
-        from bertrand_spark.sources import read_table
-
-        d = read_table(spark, sf_dir, "documents").limit(300)
-        model = CU.train_dsir(
-            d.filter(F.col("lang") == "en"), d, buckets=512, alpha=1.0
-        )
-        return CU, d, model
-
-    def test_maximal_prefix_property(self, spark, sf_dir):
-        """The selection is exactly the prefix of the full Gumbel order
-        that fits: total <= budget, and adding the FIRST excluded doc
-        would overflow."""
-        CU, d, model = self._setup(spark, sf_dir)
-        budget = 5000
-        sel = CU.dsir_resample_tokens(d, model, budget).collect()
-        total = sum(r["n_tokens"] for r in sel)
-        assert total <= budget
-        # reconstruct the full ordering driver-side and check the prefix
-        full = CU.dsir_resample(d, model, d.count()).collect()
-        sel_ids = [r["doc_id"] for r in sel]
-        full_ids = [r["doc_id"] for r in full]
-        assert full_ids[: len(sel_ids)] == sel_ids  # same order, a prefix
-        # first excluded doc overflows
-        if len(full) > len(sel):
-            ntok = {r["doc_id"]: r["n_tokens"] for r in sel}
-            nxt = full[len(sel)]["doc_id"]
-            nxt_tokens = (
-                d.filter(F.col("doc_id") == nxt)
-                .select(
-                    F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-                ).collect()[0][0]
-            )
-            assert total + nxt_tokens > budget
-
-    def test_repartition_stable(self, spark, sf_dir):
-        CU, d, model = self._setup(spark, sf_dir)
-        a = CU.dsir_resample_tokens(d, model, 3000).collect()
-        b = CU.dsir_resample_tokens(d.repartition(17), model, 3000).collect()
-        assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
-
-    def test_tiny_budget_and_zero_budget(self, spark, sf_dir):
-        CU, d, model = self._setup(spark, sf_dir)
-        tiny = CU.dsir_resample_tokens(d, model, 30).collect()
-        assert sum(r["n_tokens"] for r in tiny) <= 30
-        assert CU.dsir_resample_tokens(d, model, 0).count() == 0
-
-    def test_precomputed_token_col(self, spark, sf_dir):
-        """token_col plugs in a learned count (here: a constant, so the
-        budget maps exactly to a document count)."""
-        CU, d, model = self._setup(spark, sf_dir)
-        d2 = d.withColumn("toks", F.lit(10).cast("long"))
-        sel = CU.dsir_resample_tokens(
-            d2, model, 95, token_col="toks"
-        ).collect()
-        assert len(sel) == 9 and all(r["n_tokens"] == 10 for r in sel)

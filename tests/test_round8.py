@@ -243,93 +243,6 @@ class TestVp8lCodec:
         assert rep["unknown"]["n_null_no_decoder"] == 1
 
 
-class TestTokenPrefixByThreshold:
-    """The distributed key-threshold path of dsir_resample_tokens
-    (round-7 VERDICT item 4: the >10M-candidate regime is now a real
-    selection path, not a ValueError) must produce the IDENTICAL
-    selection to the TakeOrdered fast path."""
-
-    def _setup(self, spark, sf_dir):
-        from bertrand_spark.pipeline import curation as CU
-        from bertrand_spark.sources import read_table
-
-        d = read_table(spark, sf_dir, "documents").limit(300)
-        model = CU.train_dsir(
-            d.filter(F.col("lang") == "en"), d, buckets=512, alpha=1.0
-        )
-        return CU, d, model
-
-    def test_threshold_path_equals_takeordered_path(self, spark, sf_dir):
-        """Forced-small regime (max_candidates=0 routes every call to
-        the threshold path; tiny collect_max + 8 bins force several
-        real histogram-bisection rounds): identical ids, order, and
-        token counts across budgets spanning empty → near-complete."""
-        CU, d, model = self._setup(spark, sf_dir)
-        for budget in (0, 30, 3_000, 30_000):
-            fast = CU.dsir_resample_tokens(d, model, budget).collect()
-            slow = CU.dsir_resample_tokens(
-                d,
-                model,
-                budget,
-                max_candidates=0,
-                threshold_bins=8,
-                threshold_collect_max=16,
-            ).collect()
-            assert [(r["doc_id"], r["n_tokens"]) for r in slow] == [
-                (r["doc_id"], r["n_tokens"]) for r in fast
-            ], f"budget={budget}"
-
-    def test_threshold_path_everything_fits(self, spark, sf_dir):
-        """A budget above the corpus total selects the whole corpus —
-        the no-cutoff branch."""
-        CU, d, model = self._setup(spark, sf_dir)
-        sel = CU.dsir_resample_tokens(
-            d, model, 10**9, max_candidates=0, threshold_bins=8
-        )
-        assert sel.count() == d.count()
-
-    def test_retry_doubling_rechecks_regime(self, spark, sf_dir):
-        """Round-7 ADVICE: the undershoot-doubling loop must re-check
-        the regime bound instead of collecting an ever-larger pull.
-        With max_candidates=20 and a budget needing ~all 300 docs, the
-        initial estimate passes but a doubling crosses the bound — the
-        call must still succeed (via the threshold path), never collect
-        more than max_candidates rows through TakeOrdered."""
-        CU, d, model = self._setup(spark, sf_dir)
-        # avg tokens ~ O(100); budget of 1500 estimates ~20 candidates,
-        # token skew can force doublings past max_candidates=20
-        sel = CU.dsir_resample_tokens(
-            d, model, 100_000, max_candidates=20, threshold_bins=8
-        ).collect()
-        ref = CU.dsir_resample_tokens(d, model, 100_000).collect()
-        assert [r["doc_id"] for r in sel] == [r["doc_id"] for r in ref]
-
-    def test_doc_count_variant_routes_to_threshold(self, spark, sf_dir):
-        """dsir_resample (document-COUNT budget) beyond its regime
-        bound routes to the same cutoff search (unit weights) instead
-        of the pre-round-8 ValueError — identical selection to the
-        TakeOrdered path on a forced-small regime."""
-        CU, d, model = self._setup(spark, sf_dir)
-        for n in (1, 17, 299, 10_000):
-            fast = CU.dsir_resample(d, model, n).collect()
-            slow = CU.dsir_resample(d, model, n, max_candidates=0).collect()
-            assert [r["doc_id"] for r in slow] == [
-                r["doc_id"] for r in fast
-            ], n
-            assert slow[0].asDict().keys() == fast[0].asDict().keys()
-
-    def test_threshold_path_repartition_stable(self, spark, sf_dir):
-        CU, d, model = self._setup(spark, sf_dir)
-        a = CU.dsir_resample_tokens(
-            d, model, 3000, max_candidates=0, threshold_bins=8
-        ).collect()
-        b = CU.dsir_resample_tokens(
-            d.repartition(17), model, 3000, max_candidates=0,
-            threshold_bins=8,
-        ).collect()
-        assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
-
-
 class TestStdlibAudio:
     """Round 8 gives the audio lane the image treatment: a real stdlib
     WAV decode path (PCM u8/s16/s24 + float32, extensible wrapper,

@@ -20,6 +20,10 @@ import os
 import sys
 import time
 
+# module level, not inside main(): under postponed annotations pandas_udf
+# resolves the ``pd.Series`` hints against this module's globals
+import pandas as pd
+
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
@@ -43,7 +47,6 @@ def main() -> int:
         print(__doc__)
         return 2
 
-    import pandas as pd
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
