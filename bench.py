@@ -388,25 +388,29 @@ def main() -> None:
             spark.sparkContext._jvm.System.gc()
         except Exception:
             pass
+
+    def rerun(names) -> None:
+        """One more timed sample of each named query that has a timing,
+        min'd into it; a failing re-run keeps the earlier timing."""
+        for name in names:
+            fn = QUERIES.get(name)
+            if fn is None or timings.get(name, -1.0) < 0:
+                continue
+            try:
+                t0 = time.time()
+                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+                timings[name] = min(timings[name], round(time.time() - t0, 3))
+                n_samples[name] = n_samples.get(name, 0) + 1
+            except Exception:
+                pass
+            spark.catalog.clearCache()
+
     # composites get one more timed sample at the END of the run:
     # min-of-3 CONSECUTIVE runs cannot see past a multi-minute degraded
     # host phase (measured: x02 3.3s vs 4.8-4.9s across whole runs whose
     # endpoint probes all read healthy); a sample minutes apart usually
     # lands in a different phase.
-    for name in HEADLINE:
-        fn = QUERIES.get(name)
-        if fn is None or name not in timings or timings[name] < 0:
-            continue
-        if name not in COMPOSITES:
-            continue
-        try:
-            t0 = time.time()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            timings[name] = min(timings[name], round(time.time() - t0, 3))
-            n_samples[name] = n_samples.get(name, 0) + 1
-        except Exception:
-            pass
-        spark.catalog.clearCache()
+    rerun([n for n in HEADLINE if n in COMPOSITES])
     probes["after"] = host_probe()
     probes["py_after"] = py_probe()
     # mid-run degradation handling, two independent signals (round-7,
@@ -439,22 +443,7 @@ def main() -> None:
         probes["resample_probe"] = p
         probes["py_resample_probe"] = py
         if p <= _healthy and py <= _py_h:
-            for name in HEADLINE:
-                fn = QUERIES.get(name)
-                if fn is None or timings.get(name, -1.0) < 0:
-                    continue
-                try:
-                    t0 = time.time()
-                    fn(spark, sf_dir).write.mode("overwrite").format(
-                        "noop"
-                    ).save()
-                    timings[name] = min(
-                        timings[name], round(time.time() - t0, 3)
-                    )
-                    n_samples[name] = n_samples.get(name, 0) + 1
-                except Exception:
-                    pass
-                spark.catalog.clearCache()
+            rerun(HEADLINE)
             probes["after_resample"] = host_probe()
             probes["py_after_resample"] = py_probe()
             degraded = (
@@ -520,22 +509,7 @@ def main() -> None:
     if envelope_median is not None and envelope_median >= 1.25:
         probes["envelope_median"] = round(envelope_median, 3)
         if not degraded:  # probe path already re-ran everything
-            for name in HEADLINE:
-                fn = QUERIES.get(name)
-                if fn is None or timings.get(name, -1.0) < 0:
-                    continue
-                try:
-                    t0 = time.time()
-                    fn(spark, sf_dir).write.mode("overwrite").format(
-                        "noop"
-                    ).save()
-                    timings[name] = min(
-                        timings[name], round(time.time() - t0, 3)
-                    )
-                    n_samples[name] = n_samples.get(name, 0) + 1
-                except Exception:
-                    pass
-                spark.catalog.clearCache()
+            rerun(HEADLINE)
         envelope_median, _ = _median_vs_prior()
         probes["envelope_median_after"] = (
             round(envelope_median, 3) if envelope_median is not None else None

@@ -9,15 +9,20 @@ Scale design notes (the whole point of these ops):
 
 * Exact dedup: hash-groupBy on a 64-bit fingerprint — one shuffle on a
   uniformly-distributed key; no skew by construction.
-* MinHash: signatures are computed *per row* with native array expressions
-  (``transform`` + ``array_min`` over xxhash64) — no explode, no shuffle, no
-  Python.  LSH banding then shuffles only (band_id, band_hash) pairs —
-  ``num_bands × n_rows`` small tuples, not the documents themselves.
+* MinHash: one Arrow kernel (``minhash_banded_vectorized``) per document
+  emits the band keys and the 64-bit shingle-hash set in one numpy pass —
+  no explode, no shuffle.  LSH banding then shuffles only (band, bucket)
+  pairs — ``num_bands × n_rows`` small tuples, not the documents
+  themselves.
 * Candidate pairs come from an equi-join on band buckets (hash join on a
-  high-cardinality key).  Verification (exact Jaccard on shingle sets) runs
-  only on candidates — the classic LSH cost profile.
-* SimHash: explode-tokens → 64 per-bit partial sums → map-side combinable
-  groupBy; near-dup = Hamming distance via ``bit_count(xor)``, native.
+  high-cardinality key).  Verification (exact Jaccard on the hash sets)
+  runs only on candidates — the classic LSH cost profile.
+* SimHash: one Arrow kernel (``simhash64_vectorized``) votes the 64 bits
+  per document — a narrow projection, no shuffle; near-dup = pigeonhole
+  block join, then Hamming distance via ``bit_count(xor)``, native.
+* n-gram Jaccard: one Arrow kernel (``word_gram_hashes_vectorized``)
+  hashes each document's distinct word n-grams; the posting self-join
+  counts intersections.
 """
 
 from __future__ import annotations
@@ -27,15 +32,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.reader import spread as _spread
-from .text import char_ngrams, fingerprint, tokenize, word_ngrams
+from .text import fingerprint
 
 __all__ = [
     "exact_dedup", "exact_dedup_incremental", "exact_dup_groups",
     "write_fingerprint_store", "exact_dedup_incremental_store",
     "compact_fingerprint_store",
-    "minhash_signature", "minhash_bands", "lsh_candidate_pairs",
-    "min_band_matches", "jaccard_shingles", "near_dup_pairs_minhash",
-    "simhash64", "simhash64_vectorized", "near_dup_pairs_simhash",
+    "minhash_banded_vectorized", "min_band_matches", "near_dup_pairs_minhash",
+    "simhash64_vectorized", "near_dup_pairs_simhash",
     "ngram_jaccard_pairs", "word_gram_hashes_vectorized", "cosine_near_dup_pairs",
     "fuzzy_join_minhash", "fuzzy_join_band_store", "near_dup",
     "near_dup_plan", "semantic_dedup",
@@ -62,7 +66,7 @@ def _np_shingle_hashes(t: str, shingle_n: int):
 
     import numpy as np
 
-    # ASCII-pinned whitespace: Java's \s (expression path) and RE2's \s
+    # ASCII-pinned whitespace: Java's \s (text.char_ngrams) and RE2's \s
     # (DuckDB oracles) are ASCII-only; Python's \s also matches NBSP,
     # U+0085, ... and would silently diverge on non-ASCII-whitespace text.
     s = re.sub(r"[ \t\n\x0b\f\r]+", " ", t.lower())
@@ -164,8 +168,9 @@ def _perm_coeffs(k: int, seed: int = 42) -> list[tuple[int, int]]:
         x ^= (x << 13) & 0xFFFFFFFFFFFFFFFF
         x ^= x >> 7
         x ^= (x << 17) & 0xFFFFFFFFFFFFFFFF
-        # a < 2^31 and hash values reduced mod 2^31 keep a*h + b < 2^63
-        # (Spark runs ANSI arithmetic — silent wraparound would throw)
+        # a < 2^31, b < 2^61 and the 32-bit-reduced hashes h < 2^32 keep
+        # a*h + b < 2^63 + 2^61 — inside uint64, so _np_minhash_sig's
+        # multiply-add never wraps before its Mersenne fold
         a = (x % ((1 << 31) - 1)) + 1
         x ^= (x << 13) & 0xFFFFFFFFFFFFFFFF
         x ^= x >> 7
@@ -340,116 +345,24 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # --- MinHash + LSH ---------------------------------------------------------
-def shingle_hashes(text: Column, shingle_n: int = 5) -> Column:
-    """Distinct 31-bit shingle hashes for a text column (array<bigint>)."""
-    grams = char_ngrams(text, shingle_n)
-    return F.array_distinct(
-        F.transform(grams, lambda g: F.pmod(F.xxhash64(g), F.lit((1 << 31) - 1)))
-    )
-
-
-def minhash_from_hashes(hashes: Column, k: int = 32, seed: int = 42) -> Column:
-    """k-permutation MinHash signature over a pre-computed hash array.
-
-    Each permutation j: ``min over shingles of (a_j * h + b_j) mod p`` with
-    p = 2^61-1 (Broder's scheme).  Implemented as ONE streaming
-    ``aggregate`` over the hash array with a k-wide running-minimum
-    accumulator (``zip_with(acc, perms(h), least)``): the hash array — and
-    therefore the whole shingle pipeline feeding it — is evaluated exactly
-    once per row no matter what Catalyst inlines, and the expression tree
-    is O(1) in k.  The round-1 version emitted k independent
-    ``array_min(transform(<whole shingle pipeline>))`` copies, which blew
-    codegen into interpreted fallback (~9 min for 500 docs).
-    """
-    coeffs = _perm_coeffs(k, seed)
-    A = F.array(*[F.lit(a) for a, _ in coeffs])
-    B = F.array(*[F.lit(b) for _, b in coeffs])
-    init = F.array_repeat(F.lit(_MERSENNE), k)
-    idx = F.sequence(F.lit(1), F.lit(k))
-
-    def merge(acc: Column, h: Column) -> Column:
-        perms = F.transform(
-            idx,
-            lambda j: F.pmod(
-                h * F.element_at(A, j.cast("int")) + F.element_at(B, j.cast("int")),
-                F.lit(_MERSENNE),
-            ),
-        )
-        return F.zip_with(acc, perms, lambda x, y: F.least(x, y))
-
-    return F.aggregate(hashes, init, merge)
-
-
-def minhash_signature(
-    text: Column, k: int = 32, shingle_n: int = 5, seed: int = 42
-) -> Column:
-    """k-permutation MinHash signature (array<bigint>), fully native.
-
-    Column-level convenience; DataFrame-level callers should materialize
-    ``shingle_hashes`` in a separate projection first (see
-    ``lsh_candidate_pairs``) so Catalyst's CollapseProject cost guard keeps
-    the shingle pipeline evaluated once.
-    """
-    return minhash_from_hashes(shingle_hashes(text, shingle_n), k, seed)
-
-
-def minhash_signature_vectorized(
-    k: int = 192, shingle_n: int = 5, seed: int = 42
-) -> Column:
-    """Arrow-batched numpy MinHash signature kernel (the scale path).
-
-    Spark's higher-order functions (``transform``/``aggregate``) are
-    CodegenFallback — evaluated interpreted, row at a time — which makes
-    the native signature ~2.4 ms/doc.  This kernel moves the per-document
-    loop to numpy: one (k × |shingles|) uint64 broadcast multiply-mod per
-    document, ~100× the HOF throughput, with only the text crossing the
-    Arrow boundary.  The hash inside (crc32) need not match the JVM-side
-    verification hash: the LSH recall guarantee only requires the
-    signature to be a true MinHash over the SAME shingle sets, and the
-    shingle normalization below mirrors ``text.char_ngrams`` exactly.
-
-    Returns a Column factory: call with the text column.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    coeffs = _perm_coeffs(k, seed)
-
-    @pandas_udf("array<bigint>")
-    def kernel(texts: pd.Series) -> pd.Series:
-        A = np.array([a for a, _ in coeffs], dtype=np.uint64)[:, None]
-        B = np.array([b for _, b in coeffs], dtype=np.uint64)[:, None]
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            sig = _np_minhash_sig(_np_shingle_hashes(t, shingle_n), A, B)
-            out.append(sig.view(np.int64))
-        return pd.Series(out)
-
-    # non-deterministic: stops the optimizer duplicating the kernel below
-    # a repartition to evaluate a pushed-down null filter (guide §4.4 —
-    # r14 caught the twin ArrowEvalPython running the whole kernel
-    # single-task on the exchange's map side; the kernel is pure, only
-    # the optimizer's licence to copy/reorder it changes)
-    return kernel.asNondeterministic()
-
-
 def minhash_banded_vectorized(
     k: int = 192,
     num_bands: int = 64,
     shingle_n: int = 5,
     seed: int = 42,
 ) -> Column:
-    """Fused kernel variant emitting BAND BUCKETS directly:
-    struct{bk: array<bigint>, hs: array<bigint>} where ``bk[i]`` hashes
-    the i-th row-group of the signature.
+    """The MinHash signature kernel — the only one; every MinHash
+    operator (self-join, fuzzy join, band store) bands through it.
 
-    The native banding expression (num_bands structs × concat_ws ×
-    element_at over the signature array) compiles into a very large
-    codegen unit — hashing the band slices inside the numpy kernel keeps
-    the JVM side down to a posexplode.
+    One Arrow pass per document: the distinct 64-bit shingle hashes
+    (``_np_shingle_hashes``), their k-permutation Broder signature
+    (``_np_minhash_sig``) and one key per band of ``k // num_bands``
+    signature rows (``_np_band_keys``).  Returns a Column factory that
+    yields struct{bk: array<bigint>, hs: array<bigint>}: ``bk[i]`` is
+    band i's bucket key, ``hs`` the shingle-hash set that exact-Jaccard
+    verification intersects.  The per-document loop runs in numpy
+    because Spark's higher-order functions are interpreted row at a time
+    (CodegenFallback); the JVM side is left with a posexplode.
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -479,95 +392,6 @@ def minhash_banded_vectorized(
     # single-task on the exchange's map side; the kernel is pure, only
     # the optimizer's licence to copy/reorder it changes)
     return kernel.asNondeterministic()
-
-
-def minhash_bands(sig: Column, num_bands: int, rows_per_band: int) -> Column:
-    """Banding: array of (band_id, band_hash) structs."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(sig, i * rows_per_band + r + 1).cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bucket"),
-            )
-            for i in range(num_bands)
-        ]
-    )
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 32,
-    num_bands: int = 8,
-    shingle_n: int = 5,
-    seed: int = 42,
-    vectorized: bool = True,
-    persist_bands: bool = True,
-) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) from LSH banding.
-
-    Only (id, band, bucket) tuples are shuffled; the self-join is an
-    equi-join on (band, bucket).  Pairs sharing multiple bands are deduped.
-
-    ``vectorized``: numpy Arrow kernel for signatures (default — the HOF
-    expression path is interpreted row-at-a-time); ``persist_bands``:
-    cache the (n_docs × num_bands)-row band table so the self-join reads
-    it once instead of recomputing every signature on both sides.  At a
-    scale where the band table no longer fits the cluster's storage
-    memory, write it to a bucketed table on (band, bucket) instead and
-    the self-join becomes shuffle-free.
-    """
-    rows_per_band = k // num_bands
-    df = _spread(df)
-    if vectorized:
-        sig_kernel = minhash_signature_vectorized(k, shingle_n, seed)
-        signed = df.select(
-            F.col(id_col), sig_kernel(F.col(text_col)).alias("__sig")
-        )
-    else:
-        hashed = df.select(
-            F.col(id_col), shingle_hashes(F.col(text_col), shingle_n).alias("__mh")
-        )
-        signed = hashed.select(
-            F.col(id_col), minhash_from_hashes(F.col("__mh"), k, seed).alias("__sig")
-        )
-    bands = (
-        signed.select(
-            F.col(id_col),
-            F.explode(
-                minhash_bands(F.col("__sig"), num_bands, rows_per_band)
-            ).alias("bb"),
-        )
-        .select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    )
-    if persist_bands:
-        bands = bands.persist()
-    a = bands.withColumnRenamed(id_col, "id_a")
-    bn = bands.withColumnRenamed(id_col, "id_b")
-    return (
-        a.join(bn, ["band", "bucket"], "inner")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def jaccard_shingles(text_a: Column, text_b: Column, shingle_n: int = 5) -> Column:
-    """Exact shingle-set Jaccard between two text columns (verification)."""
-    sa = F.array_distinct(char_ngrams(text_a, shingle_n))
-    sb = F.array_distinct(char_ngrams(text_b, shingle_n))
-    inter = F.size(F.array_intersect(sa, sb)).cast("double")
-    uni = F.size(F.array_union(sa, sb)).cast("double")
-    return F.when(uni > 0, inter / uni).otherwise(F.lit(0.0))
 
 
 # A prep table whose hash-set payload measures below this broadcasts
@@ -961,41 +785,13 @@ def fuzzy_join_band_store(
 
 
 # --- SimHash ---------------------------------------------------------------
-def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document (Charikar 2002), fully native.
-
-    explode(tokens) → per-bit ±1 partial sums → groupBy(id).  The 64 sums
-    are map-side combinable, so the shuffle carries 64 longs per document
-    regardless of document length.
-    """
-    toks = _spread(df).select(
-        F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("tok")
-    )
-    h = F.xxhash64(F.col("tok"))
-    sums = [
-        F.sum(
-            F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{b}")
-        for b in range(64)
-    ]
-    agg = toks.groupBy(id_col).agg(*sums)
-    sim = None
-    for b in range(64):
-        bit = F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, b)
-        sim = term if sim is None else sim.bitwiseOR(term)
-    return agg.select(F.col(id_col), sim.alias("simhash"))
-
-
 def simhash64_vectorized(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """64-bit SimHash per document via one Arrow kernel — NO shuffle.
-
-    The native version shuffles 64 longs per document; this one is a pure
-    narrow projection (the per-bit vote runs inside numpy per document),
-    which is the better plan at any scale — the whole sketch phase is one
-    map pass over the corpus.
+    """64-bit SimHash per document (Charikar 2002) via one Arrow kernel —
+    the only SimHash sketch, and NO shuffle: a pure narrow projection
+    (the per-bit vote runs inside numpy per document), so the whole
+    sketch phase is one map pass over the corpus.
 
     Token hash = first 16 hex chars of md5 (portable: DuckDB's
     ``CAST('0x'||substr(md5(t),1,16) AS UBIGINT)`` reproduces it exactly,
@@ -1018,8 +814,8 @@ def simhash64_vectorized(
             if t is None:
                 out.append(None)
                 continue
-            # ASCII-pinned: match the expression path (Java \s) and the
-            # DuckDB oracle (RE2 \s), both ASCII-only — not Python's \s.
+            # ASCII-pinned: match text.tokenize (Java \s) and the DuckDB
+            # oracle (RE2 \s), both ASCII-only — not Python's \s.
             toks = [
                 w
                 for w in re.split(
@@ -1069,7 +865,6 @@ def near_dup_pairs_simhash(
     text_col: str = "text",
     max_hamming: int = 3,
     num_blocks: int = 4,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
 
@@ -1079,8 +874,11 @@ def near_dup_pairs_simhash(
 
     Recall is EXACT only while ``max_hamming < num_blocks`` (a pair can
     differ in at most ``max_hamming`` blocks, so some block matches
-    exactly); beyond that blocking is a heuristic.
+    exactly); beyond that blocking is a heuristic.  ``num_blocks`` must
+    lie in 1..64: a block narrower than one bit does not exist.
     """
+    if not 1 <= num_blocks <= 64:
+        raise ValueError(f"num_blocks must be in 1..64, got {num_blocks}")
     if max_hamming >= num_blocks:
         import warnings
 
@@ -1089,24 +887,22 @@ def near_dup_pairs_simhash(
             "pigeonhole recall is no longer exact",
             stacklevel=2,
         )
-    sh = (
-        simhash64_vectorized(df, id_col, text_col)
-        if vectorized
-        else simhash64(df, id_col, text_col)
-    )
+    sh = simhash64_vectorized(df, id_col, text_col)
     width = 64 // num_blocks
+
+    def block_key(i: int) -> Column:
+        key = F.shiftright(F.col("simhash"), i * width)
+        # one 64-bit block is the whole sketch; its mask 2^64 - 1 would
+        # not fit a long literal
+        return key if width == 64 else key.bitwiseAND(F.lit((1 << width) - 1))
+
     blocks = sh.select(
         F.col(id_col),
         F.col("simhash"),
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        F.shiftright(F.col("simhash"), i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("key"),
-                    )
+                    F.struct(F.lit(i).alias("blk"), block_key(i).alias("key"))
                     for i in range(num_blocks)
                 ]
             )
@@ -1135,15 +931,15 @@ def near_dup_pairs_simhash(
 def word_gram_hashes_vectorized(n: int = 3):
     """Arrow kernel: distinct 64-bit word-n-gram hashes per document.
 
-    The expression path (``word_ngrams``: transform/slice/concat_ws
-    HOFs) is CodegenFallback — interpreted per element; this kernel
+    ``text.word_ngrams`` (transform/slice/concat_ws higher-order
+    functions) is CodegenFallback — interpreted per element; this kernel
     tokenizes and hashes each batch in Python with a fixed 64-bit
     blake2b gram identity (stable across processes, unlike ``hash()``).
     Token/gram semantics mirror ``text.tokenize``/``word_ngrams``
     exactly: lowercase, trim, split on whitespace, drop empties; texts
     with fewer than n tokens contribute their whole token string as the
     single gram.  "Whitespace" is pinned to the ASCII class
-    ``[ \\t\\n\\x0b\\f\\r]`` — Java's ``\\s`` (the expression path) and
+    ``[ \\t\\n\\x0b\\f\\r]`` — Java's ``\\s`` (``text.tokenize``) and
     RE2's ``\\s`` (the DuckDB oracles) are ASCII-only, while Python's
     ``\\s``/``str.strip()`` also match NBSP, U+0085, etc.; without the
     pin, Unicode-whitespace text silently diverges from both the oracle
@@ -1201,7 +997,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = None,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Word n-gram Jaccard near-dup via inverted-index join.
 
@@ -1225,23 +1020,10 @@ def ngram_jaccard_pairs(
     # posting self-join, the dominant stage.  Collision odds per pair
     # ~|A||B|/2^64 (same argument as the MinHash verification sets), so
     # intersection counts — and the reported Jaccard — are unchanged.
-    if vectorized:
-        gram_kernel = word_gram_hashes_vectorized(n)
-        base = _spread(df).select(
-            F.col(id_col), gram_kernel(F.col(text_col)).alias("__ga")
-        )
-        hash_after_explode = False
-    else:
-        # keep the GRAM STRINGS in the array and hash AFTER the explode:
-        # xxhash64 over exploded rows runs in whole-stage codegen,
-        # whereas hashing inside an F.transform lambda is interpreted
-        # per element (the measured ~24x HOF tax this repo's perf notes
-        # document)
-        base = _spread(df).select(
-            F.col(id_col),
-            F.array_distinct(word_ngrams(F.col(text_col), n)).alias("__ga"),
-        )
-        hash_after_explode = True
+    gram_kernel = word_gram_hashes_vectorized(n)
+    base = _spread(df).select(
+        F.col(id_col), gram_kernel(F.col(text_col)).alias("__ga")
+    )
     # materialize at the ARRAY level, once: the gram pipeline is the
     # expensive part and feeds three consumers — |A| sizes (narrow:
     # F.size over the array, NO groupBy shuffle over the posting list),
@@ -1250,8 +1032,6 @@ def ngram_jaccard_pairs(
     base.count()
     sizes = base.select(F.col(id_col), F.size("__ga").alias("sz"))
     grams = base.select(F.col(id_col), F.explode("__ga").alias("gram"))
-    if hash_after_explode:
-        grams = grams.select(id_col, F.xxhash64("gram").alias("gram"))
     joinable = grams
     if max_df is not None:
         rare = (
@@ -1381,7 +1161,8 @@ def near_dup_plan(metric: str, threshold: float) -> tuple[str, dict]:
         ~96% of all pairs at t=0.45) and loses to BLAS tiles.
     hamming (text → 64-bit SimHash):
       * ``threshold`` is the max Hamming distance; pigeonhole blocking
-        needs ``num_blocks > max_hamming`` for exact recall.
+        needs ``num_blocks > max_hamming`` for exact recall, so
+        ``num_blocks = max_hamming + 1``, capped at 64 one-bit blocks.
     """
     m = metric.lower()
     if m == "jaccard":
@@ -1398,7 +1179,9 @@ def near_dup_plan(metric: str, threshold: float) -> tuple[str, dict]:
         return "blocked_gemm", dict(num_blocks=8)
     if m == "hamming":
         max_h = int(threshold)
-        return "simhash", dict(max_hamming=max_h, num_blocks=max_h + 1)
+        # 64 one-bit blocks are the finest split; past 63 bits recall
+        # is no longer exact (near_dup_pairs_simhash warns)
+        return "simhash", dict(max_hamming=max_h, num_blocks=min(max_h + 1, 64))
     raise ValueError(
         f"unknown near-dup metric {metric!r}; expected jaccard|cosine|hamming"
     )

@@ -11,8 +11,9 @@ North-star extension: ANN over ``array<float>`` embeddings.
   Spark ML), each vector assigned to its nearest centroid once (narrow
   projection persisted alongside the data); queries probe ``nprobe``
   partitions → candidate set shrinks by ~ncells/nprobe.
-* LSH path: random-hyperplane signatures (shared with dedup) for
-  bucketed joins.
+* LSH path: random-hyperplane signatures
+  (``hyperplane_signatures_vectorized``, shared with dedup) for bucketed
+  joins.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "dot", "l2_norm", "cosine_sim",
-    "random_hyperplane_signature", "hyperplane_signatures_vectorized",
+    "hyperplane_signatures_vectorized",
     "cosine_all_pairs_blocked", "knn_graph", "ann_recall",
     "brute_force_topk", "ivf_build", "ivf_assign", "ivf_append",
     "ivf_topk", "ivf_write", "ivf_read",
@@ -59,7 +60,7 @@ def cosine_sim(a: Column, b: Column) -> Column:
 
 def _seeded_planes(dim: int, num_planes: int, seed: int) -> list[list[float]]:
     """Deterministic pseudo-gaussian hyperplanes (Box-Muller on an xorshift
-    stream) — driver-side constants, broadcast as literals."""
+    stream) — the same planes on every process for a given seed."""
     x = seed | 1
     def rnd():
         nonlocal x
@@ -82,14 +83,15 @@ def hyperplane_signatures_vectorized(
 ):
     """Arrow kernel: ALL hyperplane-table signatures in one matrix multiply.
 
-    The expression path evaluates ``num_tables × num_planes`` dot
-    products per vector as higher-order functions — CodegenFallback,
-    interpreted row-at-a-time.  Here the whole batch stacks into one
-    (batch × dim) float64 matrix and a single ``@ planes.T`` yields every
-    sign bit at once; per-table bit-packing is a vectorized fold.  Plane
-    coefficients reproduce ``_seeded_planes`` exactly (same xorshift +
-    Box–Muller stream), so the bucketing — and therefore the candidate
-    set — is identical to the expression path's.
+    ``num_tables × num_planes`` dot products per vector as higher-order
+    functions would be CodegenFallback, interpreted row at a time.  Here
+    the whole batch stacks into one (batch × dim) float64 matrix and a
+    single ``@ planes.T`` yields every sign bit at once; per-table
+    bit-packing is a vectorized fold.  Table ``t`` uses the planes
+    ``_seeded_planes(dim, num_planes, seed + 7919 * t)`` and bit ``i`` of
+    its signature is ``v · plane_i >= 0``, so the bucketing — and
+    therefore the candidate set — is fixed by ``_seeded_planes`` alone.
+    NULL vectors get a NULL signature.
 
     Returns a pandas_udf: ``array<bigint>`` of ``num_tables`` packed
     signatures for an ``array<double>`` input column.
@@ -418,30 +420,6 @@ def ann_recall(
         F.avg("recall").cast("double").alias("mean_recall"),
         (F.sum("n_hit") / F.sum("n_exact")).cast("double").alias("micro_recall"),
     )
-
-
-def random_hyperplane_signature(
-    df: DataFrame, vec_col: str, num_planes: int = 8, seed: int = 42
-) -> DataFrame:
-    """Append ``__sig``: bit-packed signs of ⟨v, plane_i⟩ (angle LSH).
-
-    Note the eager ``first()`` probe for the dimension: empty inputs (or
-    a null first vector) get a null signature column instead of a
-    plan-build crash."""
-    probe = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-    if probe is None:
-        return df.withColumn("__sig", F.lit(None).cast("long"))
-    dim = len(probe[0])
-    planes = _seeded_planes(dim, num_planes, seed)
-    sig = None
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(c)) for c in p])
-        bit = F.when(dot(F.col(vec_col), plane) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, i)
-        sig = term if sig is None else sig.bitwiseOR(term)
-    return df.withColumn("__sig", sig)
 
 
 def brute_force_topk(

@@ -181,13 +181,6 @@ class TestShortBenchmarkTexts:
 
 
 class TestEmptyInputs:
-    def test_hyperplane_signature_empty_frame(self, spark):
-        from bertrand_spark.pipeline.similarity import random_hyperplane_signature
-
-        empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-        out = random_hyperplane_signature(empty, "embedding", 4)
-        assert out.count() == 0 and "__sig" in out.columns
-
     def test_ivf_topk_empty_queries(self, spark, sf_dir):
         from bertrand_spark.pipeline.similarity import ivf_build, ivf_topk
         from bertrand_spark.sources.reader import read_table

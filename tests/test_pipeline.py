@@ -1,16 +1,11 @@
-"""LLM-pipeline extensions: dedup, similarity, text analysis, multimodal."""
+"""LLM-pipeline extensions: similarity, text analysis, multimodal, cosine
+pairs and the dedup report (near-dup sketches: ``test_dedup.py``)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from bertrand_spark.pipeline import dedup as D
 from bertrand_spark.pipeline import similarity as S
 from bertrand_spark.pipeline import text as T
-
-
-@pytest.fixture(scope="module")
-def docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 @pytest.fixture(scope="module")
@@ -69,82 +64,6 @@ class TestText:
         assert len(got) == 5 and got == sorted(got)
 
 
-class TestDedup:
-    def test_exact_dedup(self, spark):
-        df = spark.createDataFrame(
-            [(1, "same text"), (2, "same  TEXT"), (3, "different")],
-            ["doc_id", "text"],
-        )
-        out = D.exact_dedup(df, "text", keep_by="doc_id")
-        assert sorted(r["doc_id"] for r in out.collect()) == [1, 3]
-        groups = D.exact_dup_groups(df, "text").collect()
-        assert len(groups) == 1 and groups[0]["n"] == 2
-
-    def test_minhash_signature_shape(self, spark):
-        df = spark.createDataFrame([("the quick brown fox jumps",)], ["text"])
-        sig = df.select(D.minhash_signature(F.col("text"), 16).alias("s")).collect()[0]["s"]
-        assert len(sig) == 16 and all(isinstance(x, int) for x in sig)
-
-    def test_minhash_near_dup(self, spark):
-        base = "the quick brown fox jumps over the lazy dog again and again ok"
-        df = spark.createDataFrame(
-            [(1, base), (2, base + " yes"), (3, "completely unrelated content about spark engines")],
-            ["doc_id", "text"],
-        )
-        pairs = D.near_dup_pairs_minhash(df, threshold=0.5, k=32, num_bands=16).collect()
-        ids = {(r["id_a"], r["id_b"]) for r in pairs}
-        assert (1, 2) in ids
-        assert all(3 not in p for p in ids)
-
-    def test_simhash(self, spark):
-        base = "spark makes big data processing simple and fast for everyone today"
-        df = spark.createDataFrame(
-            [(1, base), (2, base.replace("fast", "quick")), (3, "zebra llama giraffe")],
-            ["doc_id", "text"],
-        )
-        sh = D.simhash64(df).collect()
-        assert len(sh) == 3
-        pairs = D.near_dup_pairs_simhash(df, max_hamming=16, num_blocks=4).collect()
-        ids = {(r["id_a"], r["id_b"]) for r in pairs}
-        assert (1, 2) in ids
-
-    def test_ngram_jaccard(self, spark):
-        df = spark.createDataFrame(
-            [(1, "a b c d e f g h"), (2, "a b c d e f g z"), (3, "q w e r t y u i")],
-            ["doc_id", "text"],
-        )
-        pairs = D.ngram_jaccard_pairs(df, n=2, threshold=0.3).collect()
-        ids = {(r["id_a"], r["id_b"]) for r in pairs}
-        assert (1, 2) in ids and (1, 3) not in ids
-
-    def test_ngram_jaccard_stop_gram_cap(self, spark):
-        # "a b" appears in all 3 docs; max_df=2 drops it from the join.
-        # Pair (1,2) still shares rarer grams; jaccard becomes a lower
-        # bound (pairs may be missed, never invented).
-        df = spark.createDataFrame(
-            [(1, "a b c d e f"), (2, "a b c d e z"), (3, "a b x y w v")],
-            ["doc_id", "text"],
-        )
-        exact = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in D.ngram_jaccard_pairs(df, n=2, threshold=0.1).collect()
-        }
-        capped = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in D.ngram_jaccard_pairs(
-                df, n=2, threshold=0.1, max_df=2
-            ).collect()
-        }
-        assert set(capped) <= set(exact)
-        for k, v in capped.items():
-            assert v <= exact[k] + 1e-9
-        assert (1, 3) in exact and (1, 3) not in capped  # only shared "a b"
-
-    def test_on_real_documents(self, docs):
-        # sanity: runs on the driver-provided table without error
-        assert D.exact_dedup(docs, "text", keep_by="doc_id").count() == docs.count()
-
-
 class TestSimilarity:
     def test_dot_cosine(self, spark):
         df = spark.createDataFrame(
@@ -183,12 +102,6 @@ class TestSimilarity:
             for r in S.ivf_topk(assigned, cents, queries, k=5, nprobe=2).collect()
         }
         assert len(exact & approx) >= 3  # recall ≥ 0.6 at nprobe=2/4 cells
-
-    def test_hyperplane_signature(self, embs):
-        out = S.random_hyperplane_signature(embs, "embedding", num_planes=8)
-        sigs = out.select("__sig").distinct().count()
-        assert sigs > 1  # vectors spread across buckets
-
 
 class TestMultimodal:
     def test_decode_and_resize(self, spark):

@@ -1,7 +1,6 @@
 """Round-3 additions: half_odd rounding (M5 completion), shorten_list (E3),
 stream-stream join / foreachBatch sink batch parity, shard-expr id-type
-guard, NULL-stratum sampling semantics, _FLOAT_RE tightening, ASCII
-whitespace pinning in the word-gram kernel."""
+guard, NULL-stratum sampling semantics, _FLOAT_RE tightening."""
 
 import datetime as dt
 
@@ -202,102 +201,6 @@ class TestFloatRegexTightened:
         assert got[".5"] == "float"
         assert got["2."] == "float"
         assert got["7"] == "int"
-
-
-# --- ASCII whitespace pin in word-gram kernel --------------------------------
-class TestAsciiWhitespacePin:
-    def test_nbsp_not_a_separator(self, spark):
-        from bertrand_spark.pipeline.dedup import word_gram_hashes_vectorized
-
-        kernel = word_gram_hashes_vectorized(n=2)
-        # NBSP joins "b c" into ONE token under ASCII-\s semantics
-        df = spark.createDataFrame(
-            [("a b c d",), ("a b c d",)], ["text"]
-        )
-        rows = df.select(
-            "text", F.size(kernel(F.col("text"))).alias("n")
-        ).collect()
-        got = {r["text"]: r["n"] for r in rows}
-        # "a", "b c", "d" → 2 bigrams; "a b c d" → 3 bigrams
-        assert got["a b c d"] == 2
-        assert got["a b c d"] == 3
-
-    def test_matches_java_regex_tokenization(self, spark):
-        from bertrand_spark.pipeline.dedup import word_gram_hashes_vectorized
-
-        kernel = word_gram_hashes_vectorized(n=2)
-        texts = [("x y z w v",), ("plain ascii words here",)]
-        df = spark.createDataFrame(texts, ["text"])
-        # Java \s is ASCII-only: split there too and compare gram COUNTS
-        java_side = df.select(
-            "text",
-            F.size(
-                F.filter(
-                    F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                    lambda w: w != "",
-                )
-            ).alias("n_tok"),
-            F.size(kernel(F.col("text"))).alias("n_grams"),
-        ).collect()
-        for r in java_side:
-            assert r["n_grams"] == max(1, r["n_tok"] - 1), r
-
-
-# --- near-dup auto-regime selector ------------------------------------------
-class TestNearDupSelector:
-    def test_plan_picks_documented_regimes(self):
-        from bertrand_spark.pipeline.dedup import near_dup_plan
-
-        assert near_dup_plan("jaccard", 0.9)[0] == "minhash"
-        assert near_dup_plan("jaccard", 0.9)[1]["num_bands"] == 96   # r=8
-        assert near_dup_plan("jaccard", 0.6)[1]["num_bands"] == 154  # r=5
-        assert near_dup_plan("jaccard", 0.3)[0] == "ngram_jaccard"
-        assert near_dup_plan("cosine", 0.95)[0] == "hyperplane_lsh"
-        assert near_dup_plan("cosine", 0.45)[0] == "blocked_gemm"
-        algo, p = near_dup_plan("hamming", 3)
-        assert algo == "simhash" and p["num_blocks"] > p["max_hamming"]
-        with pytest.raises(ValueError, match="unknown near-dup metric"):
-            near_dup_plan("euclid", 0.5)
-
-    def test_selector_matches_primitive_cosine(self, spark, sf_dir):
-        from bertrand_spark.pipeline.dedup import near_dup
-        from bertrand_spark.pipeline.similarity import (
-            cosine_all_pairs_blocked,
-        )
-
-        e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        via_selector = sorted(
-            (r["id_a"], r["id_b"])
-            for r in near_dup(
-                e, "vec_id", "embedding", metric="cosine", threshold=0.45
-            ).collect()
-        )
-        direct = sorted(
-            (r["id_a"], r["id_b"])
-            for r in cosine_all_pairs_blocked(
-                e, "vec_id", "embedding", threshold=0.45
-            ).collect()
-        )
-        assert via_selector == direct
-
-    def test_selector_matches_primitive_jaccard(self, spark, sf_dir):
-        from bertrand_spark.pipeline.dedup import near_dup, near_dup_pairs_minhash
-
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        via_selector = sorted(
-            (r["id_a"], r["id_b"])
-            for r in near_dup(
-                d, "doc_id", "text", metric="jaccard", threshold=0.6
-            ).collect()
-        )
-        direct = sorted(
-            (r["id_a"], r["id_b"])
-            for r in near_dup_pairs_minhash(
-                d, "doc_id", "text", threshold=0.6,
-                k=770, num_bands=154, shingle_n=5,
-            ).collect()
-        )
-        assert via_selector == direct
 
 
 # --- multimodal: optional real-codec path + vectorized resize ---------------

@@ -1,157 +1,11 @@
-"""Round-4 regression tests.
-
-1. Unicode-whitespace parity: the three Python text kernels
-   (``_np_shingle_hashes``, the SimHash Arrow kernel,
-   ``word_gram_hashes_vectorized``) must treat ONLY ASCII whitespace as
-   whitespace — matching the Java expression path (``\\s`` is ASCII in
-   Java regex) and the DuckDB oracles (RE2 ``\\s`` is ASCII) — so text
-   containing NBSP (U+00A0) or NEL (U+0085) produces identical token /
-   gram / sketch results on every path.
+"""Round-4 regression tests.  The Unicode-whitespace parity tests of the
+near-dup sketch kernels live in ``test_dedup.py``.
 """
 
 from __future__ import annotations
 
-import duckdb
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-# NBSP and NEL joined words must stay single tokens on every path;
-# ASCII whitespace must split.
-NBSP_TEXTS = [
-    "Hello World foo",          # NBSP inside a "word"
-    "line oneline two",        # NEL inside a "word"
-    "plain ascii words here",
-    "tabs\tand\nnewlines\x0c end",
-]
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.createDataFrame(
-        [(i, t) for i, t in enumerate(NBSP_TEXTS)], "doc_id long, text string"
-    )
-
-
-class TestUnicodeWhitespaceParity:
-    def test_simhash_kernel_matches_duckdb_oracle(self, spark, docs):
-        """The Arrow SimHash kernel == the x04 DuckDB oracle's sketch,
-        on text with non-ASCII whitespace."""
-        from bertrand_spark.pipeline.dedup import simhash64_vectorized
-
-        got = {
-            r["doc_id"]: r["simhash"]
-            for r in simhash64_vectorized(docs, "doc_id", "text").collect()
-        }
-        pdf = pd.DataFrame({"doc_id": range(len(NBSP_TEXTS)), "text": NBSP_TEXTS})
-        con = duckdb.connect()
-        con.register("documents", pdf)
-        oracle = con.execute(
-            """
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(list_filter(
-                       string_split_regex(lower(trim(text)), '\\s+'),
-                       w -> w <> '')) AS tok
-              FROM documents
-            ), th AS (
-              SELECT doc_id,
-                     CAST(('0x' || substr(md5(tok), 1, 16)) AS UBIGINT) AS h
-              FROM toks
-            ), votes AS (
-              SELECT doc_id, b.b AS b,
-                     SUM(CASE WHEN (h >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-              FROM th, (SELECT unnest(range(64)) AS b) b
-              GROUP BY 1, 2
-            )
-            , sk AS (
-              SELECT doc_id,
-                     SUM(CASE WHEN v > 0 THEN CAST(1 AS UBIGINT) << b
-                         ELSE 0 END)::HUGEINT AS u
-              FROM votes GROUP BY 1
-            )
-            SELECT doc_id,
-                   CAST(u - CASE WHEN u >= 9223372036854775808::HUGEINT
-                            THEN 18446744073709551616::HUGEINT
-                            ELSE 0::HUGEINT END AS BIGINT) AS s
-            FROM sk
-            """
-        ).fetchall()
-        want = dict(oracle)
-        assert got == want
-
-    def test_simhash_expression_and_kernel_token_parity(self, spark, docs):
-        """Expression-path tokens (Java \\s) == kernel tokens: NBSP/NEL
-        text yields the same token COUNT per doc on both paths (hashes
-        differ by design: xxhash64 vs md5)."""
-        from bertrand_spark.pipeline.text import tokenize
-
-        expr = {
-            r["doc_id"]: r["n"]
-            for r in docs.select(
-                "doc_id", F.size(tokenize(F.col("text"))).alias("n")
-            ).collect()
-        }
-        # kernel side: count distinct-preserving tokens via the pinned split
-        import re
-
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-        for i, t in enumerate(NBSP_TEXTS):
-            toks = [w for w in ws.split(t.lower().strip(" \t\n\x0b\f\r")) if w]
-            assert expr[i] == len(toks), f"doc {i}: {expr[i]} vs {len(toks)}"
-        # NBSP and NEL texts keep their joined words as single tokens
-        assert expr[0] == 2  # ["hello world", "foo"]
-        assert expr[1] == 3  # ["line", "oneline", "two"]
-
-    def test_shingle_normalization_matches_expression_path(self, spark, docs):
-        """_np_shingle_hashes's whitespace collapse == the Spark
-        char_ngrams normalization (lower + ASCII-\\s collapse), and the
-        distinct-hash count equals the distinct n-gram count of that
-        normalized string."""
-        import re
-
-        from bertrand_spark.pipeline.dedup import _np_shingle_hashes
-
-        n = 4
-        spark_norm = {
-            r["doc_id"]: r["s"]
-            for r in docs.select(
-                "doc_id",
-                F.lower(F.regexp_replace("text", r"\s+", " ")).alias("s"),
-            ).collect()
-        }
-        for i, t in enumerate(NBSP_TEXTS):
-            py_norm = re.sub(r"[ \t\n\x0b\f\r]+", " ", t.lower())
-            assert py_norm == spark_norm[i], f"doc {i} normalization diverged"
-            grams = (
-                {py_norm}
-                if len(py_norm) < n
-                else {py_norm[j : j + n] for j in range(len(py_norm) - n + 1)}
-            )
-            assert len(_np_shingle_hashes(t, n)) == len(grams)
-
-    def test_word_gram_kernel_nbsp_parity(self, spark, docs):
-        """word_gram_hashes_vectorized gram COUNT == expression-path
-        word_ngrams gram count on NBSP/NEL text."""
-        from bertrand_spark.pipeline.dedup import word_gram_hashes_vectorized
-        from bertrand_spark.pipeline.text import word_ngrams
-
-        kernel = word_gram_hashes_vectorized(n=2)
-        got = {
-            r["doc_id"]: r["n"]
-            for r in docs.select(
-                "doc_id", F.size(kernel(F.col("text"))).alias("n")
-            ).collect()
-        }
-        want = {
-            r["doc_id"]: r["n"]
-            for r in docs.select(
-                "doc_id",
-                F.size(F.array_distinct(word_ngrams(F.col("text"), 2))).alias("n"),
-            ).collect()
-        }
-        assert got == want
-        assert got[0] == 1  # ["hello world foo"] → one 2-gram
 
 
 class TestFloat80Complex160:
@@ -693,88 +547,6 @@ class TestKeepBestCanonical:
             for r in dedup_keep_canonical(df, pairs, "doc_id").collect()
         )
         assert kept_min == [1, 4]
-
-
-class TestKernelParityProperties:
-    """Randomized cross-engine parity: random Unicode text (exotic
-    whitespace inside words, CJK, emoji, empties) through the SimHash
-    Arrow kernel must match the DuckDB x04-oracle sketch -- the
-    generalization of the fixed NBSP/NEL cases above."""
-
-    @staticmethod
-    def _oracle_simhash(texts):
-        import duckdb
-        import pandas as pd
-
-        con = duckdb.connect()
-        con.register(
-            "documents",
-            pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-        )
-        return dict(
-            con.execute(
-                """
-                WITH toks AS (
-                  SELECT doc_id,
-                         unnest(list_filter(
-                           string_split_regex(lower(trim(text)), '\\s+'),
-                           w -> w <> '')) AS tok
-                  FROM documents
-                ), th AS (
-                  SELECT doc_id,
-                         CAST(('0x' || substr(md5(tok), 1, 16)) AS UBIGINT) AS h
-                  FROM toks
-                ), votes AS (
-                  SELECT doc_id, b.b AS b,
-                         SUM(CASE WHEN (h >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-                  FROM th, (SELECT unnest(range(64)) AS b) b GROUP BY 1, 2
-                )
-                , sk AS (
-                  SELECT doc_id,
-                         SUM(CASE WHEN v > 0 THEN CAST(1 AS UBIGINT) << b
-                             ELSE 0 END)::HUGEINT AS u
-                  FROM votes GROUP BY 1
-                )
-                SELECT doc_id,
-                       CAST(u - CASE WHEN u >= 9223372036854775808::HUGEINT
-                                THEN 18446744073709551616::HUGEINT
-                                ELSE 0::HUGEINT END AS BIGINT) AS s
-                FROM sk
-                """
-            ).fetchall()
-        )
-
-    def test_simhash_parity_random_unicode(self, spark):
-        import random
-
-        rng = random.Random(1234)
-        # word alphabet: latin, accents, CJK, emoji, digits, and words
-        # with NBSP (\xa0) / NEL (\x85) INSIDE them (must NOT split);
-        # separator alphabet: the ASCII class both engines split on
-        words = ["h\xe9llo", "w\xf6rld", "\u6570\u636e", "\U0001f680x",
-                 "a", "Bb", "c3", "nb\xa0sp", "ne\x85l", "\ufb01ne"]
-        seps = [" ", "\t", "\n", "\x0c", "  ", " \t "]
-        texts = []
-        for _ in range(40):
-            n = rng.randint(0, 6)
-            texts.append(
-                "".join(
-                    rng.choice(words) + rng.choice(seps) for _ in range(n)
-                ).strip()
-                or rng.choice(["", " ", "\t\t"])
-            )
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-        from bertrand_spark.pipeline.dedup import simhash64_vectorized
-
-        got = {
-            r["doc_id"]: r["simhash"]
-            for r in simhash64_vectorized(df, "doc_id", "text").collect()
-            if r["simhash"] is not None
-        }
-        want = self._oracle_simhash(texts)
-        assert got == want
 
 
 class TestCodecFuzz:
