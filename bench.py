@@ -195,32 +195,9 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    from pyspark.sql import SparkSession
+    from bertrand_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 4, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        # 20 queries x many codegen units blow through the default 100-entry
-        # generated-class LRU; evictions force Janino recompiles mid-bench
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        # reclaim driver-side RDD/broadcast refs promptly so the context
-        # cleaner drops prior queries' shuffle files during the run
-        .config("spark.cleaner.periodicGC.interval", "30s")
-        .appName("bertrand_spark_bench")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # the engine's recommended runtime confs (cached-plan AQE
-    # coalescing, …) come from the ONE shared recipe the declared
-    # queries also apply — bertrand_spark/session.py (r15; the conf
-    # lived inline here in r14, which made it harness-only)
-    from bertrand_spark.session import tune_session
-
-    tune_session(spark)
+    spark = build_session(cpus, "bertrand_spark_bench")
 
     from bertrand_spark.plans.queries import QUERIES
 

@@ -1240,10 +1240,10 @@ def dsir_fit_score(
     per run in tests).  ``n_feats`` stays an exact integer.
 
     Returns ``(model, scored)``; ``scored`` has the schema of
-    :meth:`DsirModel.log_weights`.  The persisted histogram OUTLIVES
-    this call: the lazy ``scored`` reads it, so it stays cached until
-    the caller unpersists it or clears the cache (the proxy is bounded
-    per doc and spills to disk under the default storage level).
+    :meth:`DsirModel.log_weights`.  The lazy ``scored`` reads the
+    persisted histogram; release it after materializing ``scored`` with
+    :func:`bertrand_spark.session.persistent_rdd_ids` /
+    :func:`bertrand_spark.session.unpersist_rdds`.
     """
     B = int(buckets)
     hist = _dsir_hist(raw, target_pred, text_col, B, id_col).persist()

@@ -400,39 +400,41 @@ def minhash_banded_vectorized(
 _DIRECT_BROADCAST_BYTES = 100 << 20
 
 
-def _minhash_prep(
-    df: DataFrame, id_col: str, text_col: str, kernel, out_id: str,
-    persist: bool,
-):
-    """Fused signature+shingle-set pass → (out_id, __bk, __g)
-    [+ (count, hash-set payload bytes) when persisted]."""
-    p = _spread(df).select(
+def _minhash_sketch(
+    df: DataFrame, id_col: str, text_col: str, kernel, out_id: str
+) -> DataFrame:
+    """Fused signature+shingle-set pass → (out_id, __bk, __g)."""
+    return _spread(df).select(
         F.col(id_col).alias(out_id), kernel(F.col(text_col)).alias("__p")
     ).select(
         out_id, F.col("__p.bk").alias("__bk"), F.col("__p.hs").alias("__g")
     )
-    n = g_bytes = None
-    if persist:
-        # materialize BEFORE fanning out: concurrent jobs racing an
-        # unpopulated cache each recompute the kernel.  The same job
-        # MEASURES the hash-set payload (rows + 16 B/hash incl. array
-        # overhead) — the evidence the verify step's broadcast-vs-
-        # semi-join decision needs.
-        p = p.persist()
-        row = p.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.size("__g")), F.lit(0)).alias("h"),
-            # the id column rides along in the broadcast: measure it too
-            # (wide string ids — URLs — can dwarf short docs' hash sets)
-            F.coalesce(
-                F.sum(F.length(F.col(out_id).cast("string"))), F.lit(0)
-            ).alias("idb"),
-        ).first()
-        # 16 B per hash (value + array overhead); ids at measured string
-        # length + 24 B per-row object/offset overhead
-        n = row["n"]
-        g_bytes = row["h"] * 16 + row["idb"] + 24 * n
-    return p, n, g_bytes
+
+
+def _minhash_prep(
+    df: DataFrame, id_col: str, text_col: str, kernel, out_id: str
+):
+    """:func:`_minhash_sketch`, persisted and measured →
+    (prep, count, hash-set payload bytes)."""
+    # materialize BEFORE fanning out: concurrent jobs racing an
+    # unpopulated cache each recompute the kernel.  The same job
+    # MEASURES the hash-set payload (rows + 16 B/hash incl. array
+    # overhead) — the evidence the verify step's broadcast-vs-
+    # semi-join decision needs.
+    p = _minhash_sketch(df, id_col, text_col, kernel, out_id).persist()
+    row = p.agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.sum(F.size("__g")), F.lit(0)).alias("h"),
+        # the id column rides along in the broadcast: measure it too
+        # (wide string ids — URLs — can dwarf short docs' hash sets)
+        F.coalesce(
+            F.sum(F.length(F.col(out_id).cast("string"))), F.lit(0)
+        ).alias("idb"),
+    ).first()
+    # 16 B per hash (value + array overhead); ids at measured string
+    # length + 24 B per-row object/offset overhead
+    n = row["n"]
+    return p, n, row["h"] * 16 + row["idb"] + 24 * n
 
 
 def _verify_candidates(
@@ -508,7 +510,6 @@ def near_dup_pairs_minhash(
     k: int = 32,
     num_bands: int = 8,
     shingle_n: int = 5,
-    persist: bool = True,
     miss_tolerance: float = 1e-4,
     max_bucket: int | None = None,
 ) -> DataFrame:
@@ -527,10 +528,12 @@ def near_dup_pairs_minhash(
     that misses an exactly-at-threshold pair with probability ≤
     ``miss_tolerance`` and cuts ~96% of the verification workload.
 
-    ``persist``: cache the per-doc prep table for the run; the cache
-    entry lives until the caller unpersists or ``spark.catalog
-    .clearCache()`` — pass ``persist=False`` in long-lived sessions that
-    call this repeatedly on large corpora.
+    The per-doc prep table (and, above the broadcast budget, the
+    candidate table) stays persisted while the lazy result reads it.
+    Long-lived sessions that call this repeatedly release them after
+    materializing the result: snapshot
+    :func:`bertrand_spark.session.persistent_rdd_ids` before the call
+    and pass the new ids to :func:`bertrand_spark.session.unpersist_rdds`.
 
     ``max_bucket``: skip (band, bucket) groups with more than this many
     members before the self-join.  A bucket of d docs emits d²/2 pair
@@ -548,9 +551,7 @@ def near_dup_pairs_minhash(
     # odds per candidate pair ~|A||B|/2^64 ≈ 5e-15, so Jaccard over the
     # hash sets equals Jaccard over the string shingle sets.
     kernel = minhash_banded_vectorized(k, num_bands, shingle_n)
-    prep, n_docs, g_bytes = _minhash_prep(
-        df, id_col, text_col, kernel, id_col, persist
-    )
+    prep, n_docs, g_bytes = _minhash_prep(df, id_col, text_col, kernel, id_col)
 
     bands = prep.select(
         F.col(id_col), F.posexplode(F.col("__bk")).alias("band", "bucket")
@@ -572,7 +573,7 @@ def near_dup_pairs_minhash(
     # num_bands × 24 B tuples) is broadcast-sized — skips AQE's
     # materialize-both-sides shuffle stage; at corpus scale the hint is
     # withheld and the self-join shuffles on (band, bucket) as usual
-    if n_docs is not None and n_docs * num_bands * 24 < 100 << 20:
+    if n_docs * num_bands * 24 < 100 << 20:
         bn = F.broadcast(bn)
     cand = (
         a.join(bn, ["band", "bucket"], "inner")
@@ -602,8 +603,8 @@ def near_dup_pairs_minhash(
     # submitted concurrently on the broadcast thread pool) — materialize
     # BEFORE fan-out or each build races the unpopulated cache and
     # recomputes the band self-join.
-    direct = g_bytes is not None and 2 * g_bytes < _DIRECT_BROADCAST_BYTES
-    if persist and not direct:
+    direct = 2 * g_bytes < _DIRECT_BROADCAST_BYTES
+    if not direct:
         cand = cand.persist()
         cand.count()
     return _verify_candidates(
@@ -626,7 +627,6 @@ def fuzzy_join_minhash(
     k: int = 770,
     num_bands: int = 154,
     shingle_n: int = 5,
-    persist: bool = True,
     miss_tolerance: float = 1e-4,
 ) -> DataFrame:
     """Fuzzy JOIN between two corpora: pairs (left, right) with exact
@@ -646,6 +646,10 @@ def fuzzy_join_minhash(
     the candidate ids' hash sets (small by construction).  If one side is
     a compact benchmark/probe set, pass it as ``right`` — its band table
     gets the broadcast hint when it is provably broadcast-sized.
+
+    Both prep tables (and, above the broadcast budget, the candidate
+    table) stay persisted while the lazy result reads them; release
+    them as :func:`near_dup_pairs_minhash` describes.
     """
     kernel = minhash_banded_vectorized(k, num_bands, shingle_n)
     # the two prep materializations are independent jobs — submit them
@@ -657,10 +661,10 @@ def fuzzy_join_minhash(
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         fut_l = pool.submit(
-            _minhash_prep, left, left_id, left_text, kernel, "id_l", persist
+            _minhash_prep, left, left_id, left_text, kernel, "id_l"
         )
         fut_r = pool.submit(
-            _minhash_prep, right, right_id, right_text, kernel, "id_r", persist
+            _minhash_prep, right, right_id, right_text, kernel, "id_r"
         )
         prep_l, _, gb_l = fut_l.result()
         prep_r, n_r, gb_r = fut_r.result()
@@ -671,7 +675,7 @@ def fuzzy_join_minhash(
     bands_r = prep_r.select(
         "id_r", F.posexplode("__bk").alias("band", "bucket")
     )
-    if n_r is not None and n_r * num_bands * 24 < 100 << 20:
+    if n_r * num_bands * 24 < 100 << 20:
         bands_r = F.broadcast(bands_r)
     consensus = min_band_matches(
         threshold, k // num_bands, num_bands, miss_tolerance
@@ -691,12 +695,8 @@ def fuzzy_join_minhash(
     # measured-direct regime (see near_dup_pairs_minhash): both hash-set
     # tables under the broadcast budget -> one pipelined job; otherwise
     # persist cand before the 3-consumer fan-out
-    direct = (
-        gb_l is not None
-        and gb_r is not None
-        and 2 * (gb_l + gb_r) < _DIRECT_BROADCAST_BYTES
-    )
-    if persist and not direct:
+    direct = 2 * (gb_l + gb_r) < _DIRECT_BROADCAST_BYTES
+    if not direct:
         cand = cand.persist()
         cand.count()
     return _verify_candidates(
@@ -716,7 +716,6 @@ def fuzzy_join_band_store(
     *,
     max_bucket: int | None = None,
     miss_tolerance: float = 1e-4,
-    persist: bool = True,
 ) -> DataFrame:
     """:func:`fuzzy_join_minhash` with the RIGHT side read from a
     persisted bucketed band table (:func:`write_band_table`) instead of
@@ -734,14 +733,18 @@ def fuzzy_join_band_store(
     ``store_corpus`` is probed ONLY for candidate ids (semi join before
     the text re-hash), so verification cost is O(candidates), never
     O(store).  Returns ``(id_l, id_r, jaccard)`` like the inline path.
+
+    The batch-side prep table and the candidate table stay persisted
+    while the lazy result reads them; release them as
+    :func:`near_dup_pairs_minhash` describes.
     """
     spark = batch.sparkSession
     prow = spark.table(f"{band_table}__params").first()
     k, num_bands, shingle_n = prow["k"], prow["num_bands"], prow["shingle_n"]
     kernel = minhash_banded_vectorized(k, num_bands, shingle_n)
 
-    prep_l, _, gb_l = _minhash_prep(
-        batch, batch_id_col, batch_text_col, kernel, "id_l", persist
+    prep_l, _, _ = _minhash_prep(
+        batch, batch_id_col, batch_text_col, kernel, "id_l"
     )
     bands_l = prep_l.select(
         "id_l", F.posexplode("__bk").alias("band", "bucket")
@@ -766,19 +769,16 @@ def fuzzy_join_band_store(
         .select("id_l", "id_r")
         .repartition(spark.sparkContext.defaultParallelism, "id_l")
     )
-    if persist:
-        # cand feeds three consumers in the verify (ga ids, gb ids, the
-        # pair join) — materialize once
-        cand = cand.persist()
-        cand.count()
+    # cand feeds three consumers in the verify (ga ids, gb ids, the pair
+    # join) — materialize once
+    cand = cand.persist()
+    cand.count()
     # hash sets for ONLY the candidate store rows: candidate ids are
     # small by construction (consensus-filtered), the store is not
     store_sub = store_corpus.withColumnRenamed(store_id_col, "id_r").join(
         F.broadcast(cand.select("id_r").distinct()), "id_r", "left_semi"
     )
-    prep_r, _, _ = _minhash_prep(
-        store_sub, "id_r", store_text_col, kernel, "id_r", False
-    )
+    prep_r = _minhash_sketch(store_sub, "id_r", store_text_col, kernel, "id_r")
     return _verify_candidates(
         cand, prep_l, prep_r, "id_l", "id_r", threshold, direct=False
     )

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import persistent_rdd_ids, unpersist_rdds
+
 __all__ = ["connected_components", "cluster_labels", "dedup_keep_canonical"]
 
 
@@ -84,7 +86,6 @@ def connected_components(
     sits in executor storage until driver GC, which on a big edge set
     multiplies storage by the round count.
     """
-    sc = edges.sparkSession.sparkContext
     spark = edges.sparkSession
 
     def _local_finish(canon_df: DataFrame, pdf=None) -> DataFrame:
@@ -127,23 +128,6 @@ def connected_components(
             [(n, find(n)) for n in sorted(nodes)], schema
         )
 
-    def _persisted_ids():
-        jmap = sc._jsc.getPersistentRDDs()
-        out = set()
-        it = jmap.keySet().iterator()
-        while it.hasNext():
-            out.add(it.next())
-        return out
-
-    def _free(ids):
-        for i in ids:
-            try:
-                rdd = sc._jsc.getPersistentRDDs().get(i)
-                if rdd is not None:
-                    rdd.unpersist()
-            except Exception:
-                pass  # best-effort: leaked blocks only cost memory
-
     def _ckpt(df, prev_ids, track=True):
         """localCheckpoint df; free the superseded round's blocks (safe:
         nothing references them once the new checkpoint is materialized).
@@ -155,12 +139,12 @@ def connected_components(
         persisted something, the diff is ambiguous and we free nothing
         (a bounded leak beats unpersisting someone else's blocks).
         """
-        before = _persisted_ids() if track else set()
+        before = persistent_rdd_ids(spark) if track else set()
         out = df.localCheckpoint()
-        mine = list(_persisted_ids() - before) if track else []
+        mine = list(persistent_rdd_ids(spark) - before) if track else []
         if len(mine) != 1:
             mine = []
-        _free(prev_ids)
+        unpersist_rdds(spark, prev_ids)
         return out, mine
 
     # round 0 is the first action on the input lineage: upstream caches
@@ -196,7 +180,7 @@ def connected_components(
         )
         if len(probe) <= local_threshold:
             out = _local_finish(canon, pdf=probe)
-            _free(ckpt_ids)
+            unpersist_rdds(spark, ckpt_ids)
             return out
         del probe
 
@@ -209,7 +193,7 @@ def connected_components(
             # each per-micro-batch call (e.g. cluster_labels) leaks one
             # checkpointed edge set into executor storage until GC.
             out = _local_finish(canon)
-            _free(ckpt_ids)
+            unpersist_rdds(spark, ckpt_ids)
             return out
         # large-star: every canonical edge (hi, lo), seen from its smaller
         # endpoint lo, re-attaches hi to m(lo) = min(Γ(lo) ∪ {lo}).

@@ -34,6 +34,7 @@ from ..pipeline import curation as CU
 from ..pipeline import dedup as D
 from ..pipeline import similarity as S
 from ..pipeline import text as T
+from ..session import persistent_rdd_ids, tune_session, unpersist_rdds
 from ..types.core import registry
 from ..types.detect import type_tag_column
 from ..types.resolve import resolve
@@ -53,8 +54,6 @@ def query(name: str, sql: str | None = None):
         # guide §9 — one recipe, not a harness-only speedup).
         @functools.wraps(fn)
         def wrapped(spark, sf_dir, **kwargs):
-            from ..session import tune_session
-
             tune_session(spark)
             return fn(spark, sf_dir, **kwargs)
 
@@ -1629,6 +1628,11 @@ def x18(spark, sf_dir, checkpoint_dir=None):
         checkpoint_dir=checkpoint_dir,
     )
 
+    # the near-dup prep cache and the drop list are read only until
+    # `kept` is materialized; its checkpoint cuts their lineage, so the
+    # RDDs persisted from here through the drop-list count are released
+    # right after it
+    before = persistent_rdd_ids(spark)
     pairs = D.near_dup_pairs_minhash(
         exact, "doc_id", "text", threshold=0.6, k=770, num_bands=154, shingle_n=5
     )
@@ -1643,6 +1647,7 @@ def x18(spark, sf_dir, checkpoint_dir=None):
     # corpus-scale fallback.
     dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct().persist()
     n_dropped = dropped.count()
+    mine = persistent_rdd_ids(spark) - before
     kept = CU.materialize_stage(
         exact.join(
             F.broadcast(dropped) if n_dropped < 5_000_000 else dropped,
@@ -1650,6 +1655,7 @@ def x18(spark, sf_dir, checkpoint_dir=None):
         ),
         checkpoint_dir=checkpoint_dir,
     )
+    unpersist_rdds(spark, mine)
 
     # separate read: keeps the corpus spread single-consumer; the
     # bench slice is 1/97th of the corpus and its gram kernel feeds a

@@ -1,17 +1,25 @@
-"""Recommended Spark session configuration — ONE shared recipe.
+"""The engine's session lifecycle — ONE builder and ONE cache-release helper.
 
-The bench harness, the measurement tools and the driver-facing entry
-point all need the same small set of engine-recommended session confs
-(guide §9: publish a session recipe).  Round 14 left the cached-plan
-AQE conf in bench.py only, so library users and ``__spark_entry__``
-sessions ran without it — the engine was faster only under the
-harness's session recipe (r14 verdict, "What's wrong" item 5).  This
-module is the single source of truth; ``bench.py`` and the declared
-query wrappers both route through it.
+Session recipe: :func:`build_session` is the single way this repo's
+bench, tests and tools build a Spark session, so the plans the audit
+tools print are the plans the bench times.  Its confs are the bench's
+(``local[cpus]``, ``max(4·cpus, 8)`` shuffle partitions, UTC, 16g
+driver); a caller overrides a conf only where it needs a different
+value.  :data:`RECOMMENDED_RUNTIME_CONF` holds the runtime-settable SQL
+confs; :func:`tune_session` applies them to any existing session, and
+every declared query calls it on the session it is handed, so driver
+and library sessions run the same engine as the bench.
 
-Only RUNTIME-SETTABLE SQL confs belong here (applied onto an existing
-session); builder-time-only settings (master, memory) stay with the
-session owner.
+Cache release: library operators persist intermediate tables that
+their lazy results still read (MinHash prep and candidate tables,
+connected-components checkpoints).  :func:`persistent_rdd_ids`
+snapshots the SparkContext's persistent RDD ids and
+:func:`unpersist_rdds` frees a given set of them; a long-lived session
+that calls such operators repeatedly takes a snapshot before the call
+and releases ``persistent_rdd_ids(spark) - before`` once the result has
+been written or materialized.  The diff claims every RDD persisted in
+between, so it assumes nothing else persists in the SparkContext
+concurrently.
 """
 
 from __future__ import annotations
@@ -36,4 +44,57 @@ def tune_session(spark) -> None:
         try:
             spark.conf.set(k, v)
         except Exception:
+            pass
+
+
+def build_session(cpus: int | str, app: str, **conf: str):
+    """Build (or get) the engine's local session: ``local[cpus]`` with
+    the bench's confs, then :func:`tune_session` and log level ERROR.
+
+    ``conf`` maps Spark conf keys to values that replace or extend the
+    recipe's, e.g. ``**{"spark.driver.memory": "4g"}``.
+    """
+    from pyspark.sql import SparkSession
+
+    cpus = int(cpus)
+    recipe = {
+        "spark.sql.shuffle.partitions": str(max(cpus * 4, 8)),
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": "16g",
+        # many queries x many codegen units blow through the default
+        # 100-entry generated-class LRU; evictions force Janino
+        # recompiles mid-run
+        "spark.sql.codegen.cache.maxEntries": "5000",
+        # reclaim driver-side RDD/broadcast refs promptly so the context
+        # cleaner drops prior queries' shuffle files during the run
+        "spark.cleaner.periodicGC.interval": "30s",
+    }
+    recipe.update(conf)
+    b = SparkSession.builder.master(f"local[{cpus}]").appName(app)
+    for k, v in recipe.items():
+        b = b.config(k, v)
+    spark = b.getOrCreate()
+    tune_session(spark)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs currently persisted in ``spark``'s SparkContext."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def unpersist_rdds(spark, ids) -> None:
+    """Unpersist the persisted RDDs among ``ids`` (best-effort: an id
+    that is already gone is skipped, and leaked blocks only cost
+    memory)."""
+    from py4j.protocol import Py4JError
+
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for i in ids:
+        try:
+            rdd = jmap.get(i)
+            if rdd is not None:
+                rdd.unpersist()
+        except Py4JError:
             pass

@@ -437,7 +437,6 @@ def stream_fuzzy_dedup(
     k: int = 770,
     num_bands: int = 154,
     shingle_n: int = 5,
-    unpersist_caches: bool = True,
     band_table: str | None = None,
 ):
     """Streaming NEAR-duplicate dedup against a historical corpus: a
@@ -446,16 +445,13 @@ def stream_fuzzy_dedup(
     Jaccard verified), drops batch rows with a match ≥ ``threshold``,
     and lands the kept rows in the idempotent per-epoch parquet sink.
 
-    ``unpersist_caches`` (default on): after each epoch's write, free
-    every RDD persisted DURING the epoch — the fuzzy join's prep/cand
-    caches are epoch-scoped and would otherwise grow executor storage
-    without bound on a long-running stream.  The diff-based ownership
-    assumes this stream is the only thing persisting in the
-    SparkContext while an epoch runs; if OTHER queries/threads share
-    the session and persist concurrently, pass ``unpersist_caches=
-    False`` (their caches must not be freed from under them — the same
-    ambiguity rule ``graph.py``'s checkpoint cleanup follows) and
-    recycle the session periodically instead.
+    After each epoch's write, every RDD persisted DURING the epoch is
+    released through :func:`bertrand_spark.session.unpersist_rdds` —
+    the fuzzy join's prep/cand caches are epoch-scoped and would
+    otherwise grow executor storage without bound on a long-running
+    stream.  The snapshot diff claims every RDD persisted while the
+    epoch runs, so run the stream in a SparkContext where nothing else
+    persists concurrently.
 
     The fuzzy sibling of :func:`stream_dedup_against_store` (which is
     exact-fingerprint only): a re-crawled page with a new timestamp or
@@ -477,22 +473,18 @@ def stream_fuzzy_dedup(
     kernel can never drift from the store's banding.
     """
     from ..pipeline.dedup import fuzzy_join_band_store, fuzzy_join_minhash
+    from ..session import persistent_rdd_ids, unpersist_rdds
 
     sink = foreach_batch_parquet_sink(out_dir)
 
     def dedup(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        sc = batch_df.sparkSession.sparkContext
-        # fuzzy_join_minhash persists its prep/cand tables (load-bearing
-        # for the multi-consumer fan-out) — epoch-scoped caches freed
-        # after the write (see unpersist_caches docstring for the
-        # single-writer ownership assumption)
-        before = (
-            set(sc._jsc.getPersistentRDDs().keySet().toArray())
-            if unpersist_caches
-            else None
-        )
+        spark = batch_df.sparkSession
+        # the fuzzy join persists its prep/cand tables (load-bearing for
+        # the multi-consumer fan-out) — epoch-scoped caches freed after
+        # the write
+        before = persistent_rdd_ids(spark)
         try:
             if band_table is not None:
                 pairs = fuzzy_join_band_store(
@@ -522,12 +514,7 @@ def stream_fuzzy_dedup(
             kept = batch_df.join(hits, id_col, "left_anti")
             sink(kept, batch_id)
         finally:
-            if before is not None:
-                jmap = sc._jsc.getPersistentRDDs()
-                for rid in set(jmap.keySet().toArray()) - before:
-                    rdd = jmap.get(rid)
-                    if rdd is not None:
-                        rdd.unpersist()
+            unpersist_rdds(spark, persistent_rdd_ids(spark) - before)
 
     return dedup
 

@@ -1,22 +1,24 @@
 import os
 
 import pytest
-from pyspark.sql import SparkSession
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("bertrand-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
+    from bertrand_spark.session import build_session
+
+    # 4 cores, 8 shuffle partitions and 4g keep the suite's task counts
+    # and footprint small; no test reads the UI
+    s = build_session(
+        4,
+        "bertrand-spark-tests",
+        **{
+            "spark.sql.shuffle.partitions": "8",
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "4g",
+        },
     )
     yield s
     s.stop()

@@ -33,6 +33,12 @@ def run_stream(stream_df, mode="append"):
 
 def _walk_jplan(node):
     yield node
+    if node.nodeName() == "InMemoryTableScan":
+        # a persisted frame's plan hangs off the scan, not below it
+        cached = node.relation().cachedPlan()
+        if cached.nodeName() == "AdaptiveSparkPlan":
+            cached = cached.initialPlan()
+        yield from _walk_jplan(cached)
     cs = node.children()
     for i in range(cs.size()):
         yield from _walk_jplan(cs.apply(i))
@@ -324,7 +330,7 @@ class TestFuzzyJoinBandStore:
         try:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
             out = fuzzy_join_band_store(
-                batch, "t_band_r6", store, threshold=0.6, persist=False
+                batch, "t_band_r6", store, threshold=0.6
             )
             jplan = out._jdf.queryExecution().executedPlan()
             if jplan.nodeName() == "AdaptiveSparkPlan":

@@ -59,17 +59,9 @@ def main() -> int:
     patterns = sys.argv[1:]
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
-    from pyspark.sql import SparkSession
+    from bertrand_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .appName("check_correctness")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(8, "check_correctness")
 
     con = duckdb.connect()
     for t in TABLES:

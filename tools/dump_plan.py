@@ -24,18 +24,9 @@ def main() -> int:
     outdir, suffix, *names = sys.argv[1:]
     os.makedirs(outdir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from bertrand_spark.session import build_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 4, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("dump_plan")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(os.environ.get("SPARK_GRAFT_CPUS", "8"), "dump_plan")
 
     from bertrand_spark.plans.queries import QUERIES
 

@@ -29,16 +29,9 @@ def main() -> int:
         print(__doc__)
         return 2
 
-    from pyspark.sql import SparkSession
+    from bertrand_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("explain")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(8, "explain")
 
     from bertrand_spark.plans.queries import QUERIES
 

@@ -29,16 +29,9 @@ from bertrand_spark.plans.audit import (  # noqa: E402,F401 — CLI + CI import 
 def main() -> int:
     patterns = sys.argv[1:]
     sys.path.insert(0, "/root/repo")
-    from pyspark.sql import SparkSession
+    from bertrand_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("plan_audit")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(8, "plan_audit")
 
     from bertrand_spark.plans.queries import QUERIES
 

@@ -33,25 +33,15 @@ def main() -> int:
         runs = int(argv[argv.index("--runs") + 1])
         names.remove(str(runs))
 
-    from pyspark.sql import SparkSession
+    from bertrand_spark.session import build_session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 4, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.retainedJobs", "10000")
-        .config("spark.ui.retainedStages", "10000")
-        .appName("profile_query")
-        .getOrCreate()
+    # the job/stage listing below reads the UI REST API: keep every job
+    spark = build_session(
+        cpus,
+        "profile_query",
+        **{"spark.ui.retainedJobs": "10000", "spark.ui.retainedStages": "10000"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from bertrand_spark.plans.queries import QUERIES
 

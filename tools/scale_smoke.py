@@ -32,18 +32,12 @@ def main() -> None:
     # there is deliberately no run-everything mode.
     section = sys.argv[2] if len(sys.argv) > 2 else "core"
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "128")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .appName("scale_smoke")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from bertrand_spark.session import build_session
+
+    # 10-60x the sf0.1 rows held in memory
+    spark = build_session(32, "scale_smoke", **{"spark.driver.memory": "24g"})
 
     from bertrand_spark.convert.cast import cast
     from bertrand_spark.operators import rows as R

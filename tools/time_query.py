@@ -47,26 +47,12 @@ def main() -> int:
         print(__doc__)
         return 2
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from bertrand_spark.session import build_session
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 4, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.cleaner.periodicGC.interval", "30s")
-        .appName("time_query")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(cpus, "time_query")
 
     from bertrand_spark.plans.queries import QUERIES
 
