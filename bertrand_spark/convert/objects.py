@@ -26,31 +26,13 @@ from typing import Any, Callable
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
+from ..functions.kernel import row_udf
 from .cast import CastArgs, _rule, cast_col
 
 __all__ = ["apply_with_errors", "pickle_column", "unpickle_to"]
 
 _FATAL = (KeyboardInterrupt, MemoryError, SystemError, SystemExit)
-
-
-def _batch_apply(s: pd.Series, call: Callable, errors: str) -> pd.Series:
-    out: list[Any] = []
-    for v in s:
-        if v is None:
-            out.append(None)
-            continue
-        try:
-            out.append(call(v))
-        except _FATAL:
-            raise
-        except Exception:
-            if errors == "coerce":
-                out.append(None)
-            else:
-                raise
-    return pd.Series(out, dtype=object)
 
 
 def apply_with_errors(
@@ -70,16 +52,21 @@ def apply_with_errors(
     if errors not in ("raise", "ignore", "coerce"):
         raise ValueError(f"errors must be raise|ignore|coerce, got {errors!r}")
 
-    def full(v: Any) -> Any:
-        x = pickle.loads(bytes(v)) if unpickle else v
-        r = call(x)
-        return pickle.dumps(r) if pickle_result else r
+    def apply_one(v: Any) -> Any:
+        if v is None:
+            return None
+        try:
+            x = pickle.loads(bytes(v)) if unpickle else v
+            r = call(x)
+            return pickle.dumps(r) if pickle_result else r
+        except _FATAL:
+            raise
+        except Exception:
+            if errors == "coerce":
+                return None
+            raise
 
-    @pandas_udf(return_type)
-    def kernel(s: pd.Series) -> pd.Series:
-        return _batch_apply(s, full, errors)
-
-    return kernel(col)
+    return row_udf(return_type, apply_one)(col)
 
 
 def pickle_column(col: Column, errors: str = "raise") -> Column:

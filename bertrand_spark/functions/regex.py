@@ -39,10 +39,10 @@ from __future__ import annotations
 
 import re as _pyre
 
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .kernel import row_udf
 
 __all__ = [
     "RegexDialectError", "translate_pattern", "translate_replacement",
@@ -233,29 +233,21 @@ def finditer_udf(pattern: str):
 
     Positions of every match have no native Spark expression (only the
     first via ``instr``-style tricks), so this is the documented Python
-    fallback — the PATTERN compiles once per worker, batches stream via
-    Arrow (SURVEY.md §2.7: findall/finditer semantics).
+    fallback — the pattern compiles once on the driver, batches stream
+    via Arrow (SURVEY.md §2.7: findall/finditer semantics).
     """
-    from pyspark.sql.functions import pandas_udf
-
     # validate the dialect driver-side before shipping
     translate_pattern(pattern)
-    norm = _pyre.sub(r"\(\?<(\w+)>", r"(?P<\1>", pattern)
+    rx = _pyre.compile(_pyre.sub(r"\(\?<(\w+)>", r"(?P<\1>", pattern))
 
-    @pandas_udf("array<struct<match: string, start: int, end: int>>")
-    def kernel(texts: pd.Series) -> pd.Series:
-        rx = _pyre.compile(norm)
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            out.append(
-                [
-                    {"match": m.group(0), "start": m.start(), "end": m.end()}
-                    for m in rx.finditer(t)
-                ]
-            )
-        return pd.Series(out)
+    def finditer_one(t):
+        if t is None:
+            return None
+        return [
+            {"match": m.group(0), "start": m.start(), "end": m.end()}
+            for m in rx.finditer(t)
+        ]
 
-    return kernel
+    return row_udf(
+        "array<struct<match: string, start: int, end: int>>", finditer_one
+    )

@@ -14,9 +14,10 @@ from __future__ import annotations
 
 import datetime as _dt
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .kernel import row_udf
 
 __all__ = [
     "AS_NS", "EPOCHS", "epoch_ns", "convert_unit", "ns_per_unit",
@@ -254,28 +255,21 @@ def fuzzy_parse_datetime(
     not the bulk.  Unparseable → NULL (coerce semantics; the cast layer
     handles raise).
     """
-    from pyspark.sql.functions import pandas_udf
+    from dateutil import parser as du
 
-    @pandas_udf("timestamp")
-    def kernel(s: pd.Series) -> pd.Series:
-        from dateutil import parser as du
+    info = du.parserinfo(dayfirst=day_first, yearfirst=year_first)
+    # default pins missing fields (ref: parse is anchored, not "now")
+    anchor = _dt.datetime(1970, 1, 1)
 
-        info = du.parserinfo(dayfirst=day_first, yearfirst=year_first)
-        # default pins missing fields (ref: parse is anchored, not "now")
-        import datetime as dt
-        anchor = dt.datetime(1970, 1, 1)
+    def fuzzy_one(v):
+        if v is None:
+            return None
+        try:
+            return du.parse(str(v), fuzzy=True, parserinfo=info, default=anchor)
+        except (du.ParserError, OverflowError, ValueError):
+            return None
 
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return du.parse(str(v), fuzzy=True, parserinfo=info, default=anchor)
-            except (du.ParserError, OverflowError, ValueError):
-                return None
-
-        return s.map(one)
-
-    return kernel(col)
+    return row_udf("timestamp", fuzzy_one)(col)
 
 
 def td_ns_to_string(ns: Column) -> Column:

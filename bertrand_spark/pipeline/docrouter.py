@@ -57,10 +57,10 @@ import io
 import re
 import zipfile
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..functions.kernel import row_udf
 from .docxtext import (_CFB_MAGIC, _classify_cfb, _extract_docx_one,
                        _extract_odt_one, _extract_pptx_one,
                        _extract_xlsx_one)
@@ -236,17 +236,11 @@ def extract_document_text(
     :func:`~bertrand_spark.sources.warc.read_warc`) →
     ``struct<text: string, status: string, format: string>`` via
     magic-sniff dispatch over every extractor the engine ships.  One
-    Arrow-batched map pass — no shuffle; NULL in → NULL out; one
-    hostile document can never kill the task."""
+    Arrow-batched map pass — no shuffle; a NULL payload gives a
+    non-NULL struct whose fields are all NULL; one hostile document
+    can never kill the task."""
     mime = F.lit(None).cast("string") if mime is None else mime
     charset = (F.lit(None).cast("string") if charset is None
                else charset)
-
-    @F.pandas_udf("struct<text: string, status: string, format: string>")
-    def kernel(payloads: pd.Series, mimes: pd.Series,
-               charsets: pd.Series) -> pd.DataFrame:
-        rows = [_route_one(b, m, c)
-                for b, m, c in zip(payloads, mimes, charsets)]
-        return pd.DataFrame(rows, columns=["text", "status", "format"])
-
-    return kernel(payload, mime, charset)
+    return row_udf("struct<text: string, status: string, format: string>",
+                   _route_one)(payload, mime, charset)

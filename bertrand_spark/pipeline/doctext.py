@@ -55,9 +55,9 @@ from __future__ import annotations
 import io
 import struct
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from ..functions.kernel import row_udf
 
 __all__ = ["extract_doc_text", "doc_write", "cfb_write"]
 
@@ -324,16 +324,12 @@ def _extract_doc_one(b):
 
 def extract_doc_text(payload: Column) -> Column:
     """Binary legacy .doc payload → ``struct<text, status, n_chars>``
-    (see the module docstring for the ladder).  One Arrow-batched
-    ``pandas_udf`` map pass — no shuffle; NULL in → NULL out; one
-    hostile document can never kill the task."""
-
-    @F.pandas_udf("struct<text: string, status: string, n_chars: int>")
-    def kernel(payloads: pd.Series) -> pd.DataFrame:
-        rows = [_extract_doc_one(p) for p in payloads]
-        return pd.DataFrame(rows, columns=["text", "status", "n_chars"])
-
-    return kernel(payload)
+    (see the module docstring for the ladder).  One Arrow-batched map
+    pass — no shuffle; a NULL payload gives a non-NULL struct whose
+    fields are all NULL; one hostile document can never kill the
+    task."""
+    return row_udf("struct<text: string, status: string, n_chars: int>",
+                   _extract_doc_one)(payload)
 
 
 # --- in-repo writers (test/gating twins) -------------------------------------

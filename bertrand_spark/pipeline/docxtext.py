@@ -78,9 +78,10 @@ import zlib
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape as _xml_escape
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.kernel import row_udf
 
 __all__ = ["extract_docx_text", "docx_metadata", "docx_format_report",
            "docx_write", "ole_write",
@@ -307,18 +308,11 @@ def extract_docx_text(payload: Column) -> Column:
     """Binary DOCX payload → ``struct<text, status, n_paragraphs>``
     (see the module docstring for the status classes).  Paragraphs
     join with newlines; tabs/breaks decode to TAB/newline.  One
-    Arrow-batched ``pandas_udf`` map pass — no shuffle, scale-free;
-    NULL in → NULL out; one hostile document can never kill the
-    task."""
-
-    @F.pandas_udf(
-        "struct<text: string, status: string, n_paragraphs: int>")
-    def kernel(payloads: pd.Series) -> pd.DataFrame:
-        rows = [_extract_docx_one(p) for p in payloads]
-        return pd.DataFrame(
-            rows, columns=["text", "status", "n_paragraphs"])
-
-    return kernel(payload)
+    Arrow-batched map pass — no shuffle, scale-free; a NULL payload
+    gives a non-NULL struct whose fields are all NULL; one hostile
+    document can never kill the task."""
+    return row_udf("struct<text: string, status: string, n_paragraphs: int>",
+                   _extract_docx_one)(payload)
 
 
 # core-properties (docProps/core.xml, Dublin Core) fields surfaced by
@@ -372,15 +366,8 @@ def docx_metadata(payload: Column) -> Column:
     part — the DOCX twin of :func:`~.pdftext.pdf_metadata`:
     structure-only, Arrow-batched, never raises.  Encrypted/legacy
     CFB containers surface their class with all-NULL fields."""
-
-    @F.pandas_udf("struct<%s, status: string>" % ", ".join(
-        "%s: string" % f for f in _CORE_FIELDS))
-    def kernel(payloads: pd.Series) -> pd.DataFrame:
-        rows = [_docx_meta_one(p) for p in payloads]
-        return pd.DataFrame(rows, columns=list(_CORE_FIELDS)
-                            + ["status"])
-
-    return kernel(payload)
+    return row_udf("struct<%s, status: string>" % ", ".join(
+        "%s: string" % f for f in _CORE_FIELDS), _docx_meta_one)(payload)
 
 
 def docx_format_report(extracted: DataFrame, col: str = "docx") -> DataFrame:
@@ -680,13 +667,8 @@ def extract_pptx_text(payload: Column) -> Column:
     as :func:`extract_docx_text` (``not-pptx`` for wrong magic;
     legacy binary PowerPoint classes as ``legacy-ppt``).  One
     Arrow-batched map pass, no shuffle."""
-
-    @F.pandas_udf("struct<text: string, status: string, n_slides: int>")
-    def kernel(payloads: pd.Series) -> pd.DataFrame:
-        rows = [_extract_pptx_one(p) for p in payloads]
-        return pd.DataFrame(rows, columns=["text", "status", "n_slides"])
-
-    return kernel(payload)
+    return row_udf("struct<text: string, status: string, n_slides: int>",
+                   _extract_pptx_one)(payload)
 
 
 def _si_text(si) -> str:
@@ -824,13 +806,8 @@ def extract_xlsx_text(payload: Column) -> Column:
     contract as :func:`extract_docx_text` (``not-xlsx`` for wrong
     magic; legacy binary Excel classes as ``legacy-xls``).  One
     Arrow-batched map pass, no shuffle."""
-
-    @F.pandas_udf("struct<text: string, status: string, n_cells: int>")
-    def kernel(payloads: pd.Series) -> pd.DataFrame:
-        rows = [_extract_xlsx_one(p) for p in payloads]
-        return pd.DataFrame(rows, columns=["text", "status", "n_cells"])
-
-    return kernel(payload)
+    return row_udf("struct<text: string, status: string, n_cells: int>",
+                   _extract_xlsx_one)(payload)
 
 
 # --- PPTX / XLSX in-repo writers (test/gating twins) -------------------------
@@ -1083,15 +1060,8 @@ def extract_odt_text(payload: Column) -> Column:
     mixed-content inline walk (spans, tabs, line breaks, run-length
     spaces).  Encrypted packages (manifest encryption-data) class as
     ``encrypted``; same never-raise contract as the whole seam."""
-
-    @F.pandas_udf(
-        "struct<text: string, status: string, n_paragraphs: int>")
-    def kernel(payloads: pd.Series) -> pd.DataFrame:
-        rows = [_extract_odt_one(p) for p in payloads]
-        return pd.DataFrame(
-            rows, columns=["text", "status", "n_paragraphs"])
-
-    return kernel(payload)
+    return row_udf("struct<text: string, status: string, n_paragraphs: int>",
+                   _extract_odt_one)(payload)
 
 
 _ODT_TEXT_NS = "urn:oasis:names:tc:opendocument:xmlns:text:1.0"

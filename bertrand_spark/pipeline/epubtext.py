@@ -48,10 +48,9 @@ from urllib.parse import unquote
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape as _xml_escape
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
+from ..functions.kernel import row_udf
 from .docxtext import _local, _MAX_XML
 from .htmltext import _extract_one
 
@@ -188,16 +187,11 @@ def extract_epub_text(payload: Column) -> Column:
     main-content kernel (block segmentation, entity unescape,
     boilerplate link-density rules — identical semantics to
     :func:`~.htmltext.extract_html_text`), chapter texts joined with
-    newlines.  One Arrow-batched map pass; NULL in → NULL out; one
-    hostile book can never kill the task."""
-
-    @F.pandas_udf("struct<text: string, status: string, n_chapters: int>")
-    def kernel(payloads: pd.Series) -> pd.DataFrame:
-        rows = [_extract_epub_one(p) for p in payloads]
-        return pd.DataFrame(rows, columns=["text", "status",
-                                           "n_chapters"])
-
-    return kernel(payload)
+    newlines.  One Arrow-batched map pass; a NULL payload gives a
+    non-NULL struct whose fields are all NULL; one hostile book can
+    never kill the task."""
+    return row_udf("struct<text: string, status: string, n_chapters: int>",
+                   _extract_epub_one)(payload)
 
 
 # Dublin-Core fields surfaced from the OPF <metadata> block
@@ -250,15 +244,9 @@ def epub_metadata(payload: Column) -> Column:
     identifier, publisher, date, description, status>`` from the
     OPF's Dublin-Core metadata block — structure-only (no chapter is
     decoded), Arrow-batched, never raises."""
-
-    @F.pandas_udf("struct<%s, status: string>" % ", ".join(
-        "%s: string" % f for f in _EPUB_META_FIELDS))
-    def kernel(payloads: pd.Series) -> pd.DataFrame:
-        rows = [_epub_meta_one(p) for p in payloads]
-        return pd.DataFrame(rows, columns=list(_EPUB_META_FIELDS)
-                            + ["status"])
-
-    return kernel(payload)
+    return row_udf("struct<%s, status: string>" % ", ".join(
+        "%s: string" % f for f in _EPUB_META_FIELDS),
+        _epub_meta_one)(payload)
 
 
 def epub_write(

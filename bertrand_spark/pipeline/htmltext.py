@@ -38,9 +38,10 @@ from __future__ import annotations
 import re
 from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..functions.kernel import row_udf
 
 __all__ = ["extract_html_text", "extract_html_metadata",
            "decode_html_bytes", "fix_mojibake",
@@ -198,15 +199,8 @@ def extract_html_text(
     """
     mw, mld, hld = int(min_words), float(max_link_density), float(
         hard_link_density)
-
-    @F.pandas_udf("string")
-    def kernel(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_extract_one(t, mw, mld, hld) for t in texts],
-            dtype=object,
-        )
-
-    return kernel(html)
+    return row_udf(
+        "string", lambda t: _extract_one(t, mw, mld, hld))(html)
 
 
 # --- page metadata ----------------------------------------------------------
@@ -296,14 +290,8 @@ def extract_html_metadata(html: Column) -> Column:
     stops at <body>/</head>, so a huge page costs only its head.
     Arrow-batched; per-row degrade (a parser error keeps whatever was
     collected)."""
-
-    @F.pandas_udf("struct<%s>" % ", ".join(
-        "%s: string" % f for f in _META_FIELDS))
-    def kernel(texts: pd.Series) -> pd.DataFrame:
-        rows = [_page_meta_one(t) for t in texts]
-        return pd.DataFrame(rows, columns=list(_META_FIELDS))
-
-    return kernel(html)
+    return row_udf("struct<%s>" % ", ".join(
+        "%s: string" % f for f in _META_FIELDS), _page_meta_one)(html)
 
 
 # --- charset-aware payload decode ------------------------------------------
@@ -372,17 +360,9 @@ def decode_html_bytes(payload: Column, charset: Column = None) -> Column:
 
     Completes the crawl seam: ``read_warc`` → ``decode_html_bytes``
     → ``extract_html_text`` → ``fix_mojibake``.  Arrow-batched."""
-
-    @F.pandas_udf("string")
-    def kernel(payloads: pd.Series, decls: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_decode_html_one(b, d)
-             for b, d in zip(payloads, decls)],
-            dtype=object,
-        )
-
-    return kernel(payload, charset if charset is not None
-                  else F.lit(None).cast("string"))
+    return row_udf("string", _decode_html_one)(
+        payload, charset if charset is not None
+        else F.lit(None).cast("string"))
 
 
 # --- URL hygiene (fully native: regexp + parse_url, no Python) -------------
@@ -544,14 +524,4 @@ def fix_mojibake(text: Column) -> Column:
 
     Arrow-batched kernel — one narrow map pass, no driver work.
     """
-
-    @F.pandas_udf("struct<text: string, status: string>")
-    def kernel(texts: pd.Series) -> pd.DataFrame:
-        fixed, status = [], []
-        for t in texts:
-            f, st = _fix_one(t)
-            fixed.append(f)
-            status.append(st)
-        return pd.DataFrame({"text": fixed, "status": status})
-
-    return kernel(text)
+    return row_udf("struct<text: string, status: string>", _fix_one)(text)

@@ -67,9 +67,10 @@ import hashlib
 import re
 import zlib
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.kernel import row_udf
 
 __all__ = ["extract_pdf_text", "pdf_format_report", "pdf_metadata",
            "pdf_write"]
@@ -1313,15 +1314,8 @@ def pdf_metadata(payload: Column) -> Column:
     them as latin-1 mojibake) with ``n_pages`` still counted from the
     plaintext page-tree dicts, status ``encrypted``.  Arrow-batched,
     never raises."""
-
-    @F.pandas_udf("struct<%s, n_pages: int, status: string>" % ", ".join(
-        "%s: string" % f for f in _INFO_FIELDS))
-    def kernel(payloads: pd.Series) -> pd.DataFrame:
-        rows = [_pdf_meta_one(p) for p in payloads]
-        return pd.DataFrame(
-            rows, columns=list(_INFO_FIELDS) + ["n_pages", "status"])
-
-    return kernel(payload)
+    return row_udf("struct<%s, n_pages: int, status: string>" % ", ".join(
+        "%s: string" % f for f in _INFO_FIELDS), _pdf_meta_one)(payload)
 
 
 def _try_extract(doc: _Doc):
@@ -1422,18 +1416,13 @@ def _extract_pdf_one(b):
 
 def extract_pdf_text(payload: Column) -> Column:
     """Binary PDF payload → ``struct<text, status, n_pages>`` (see the
-    module docstring for the status classes).  One Arrow-batched
-    ``pandas_udf`` map pass — no shuffle, scale-free; NULL in → NULL
-    out; one hostile document can never kill the task.  Feeds the
-    text stack exactly like
+    module docstring for the status classes).  One Arrow-batched map
+    pass — no shuffle, scale-free; a NULL payload gives a non-NULL
+    struct whose fields are all NULL; one hostile document can never
+    kill the task.  Feeds the text stack exactly like
     :func:`~bertrand_spark.pipeline.htmltext.extract_html_text`."""
-
-    @F.pandas_udf("struct<text: string, status: string, n_pages: int>")
-    def kernel(payloads: pd.Series) -> pd.DataFrame:
-        rows = [_extract_pdf_one(p) for p in payloads]
-        return pd.DataFrame(rows, columns=["text", "status", "n_pages"])
-
-    return kernel(payload)
+    return row_udf("struct<text: string, status: string, n_pages: int>",
+                   _extract_pdf_one)(payload)
 
 
 def pdf_format_report(extracted: DataFrame) -> DataFrame:

@@ -36,10 +36,9 @@ from __future__ import annotations
 
 import struct
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
+from ..functions.kernel import row_udf
 from .doctext import _CfbError, _cfb_streams, cfb_write
 
 __all__ = ["extract_ppt_text", "ppt_write"]
@@ -138,15 +137,11 @@ def _extract_ppt_one(b):
 
 def extract_ppt_text(payload: Column) -> Column:
     """Binary legacy .ppt payload → ``struct<text, status, n_atoms>``
-    (see the module docstring for the ladder).  One Arrow-batched
-    ``pandas_udf`` map pass — no shuffle; NULL in → NULL out."""
-
-    @F.pandas_udf("struct<text: string, status: string, n_atoms: int>")
-    def kernel(payloads: pd.Series) -> pd.DataFrame:
-        rows = [_extract_ppt_one(p) for p in payloads]
-        return pd.DataFrame(rows, columns=["text", "status", "n_atoms"])
-
-    return kernel(payload)
+    (see the module docstring for the ladder).  One Arrow-batched map
+    pass — no shuffle; a NULL payload gives a non-NULL struct whose
+    fields are all NULL."""
+    return row_udf("struct<text: string, status: string, n_atoms: int>",
+                   _extract_ppt_one)(payload)
 
 
 # --- in-repo writer (test/gating twin) ---------------------------------------

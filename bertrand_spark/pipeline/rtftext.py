@@ -43,9 +43,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from ..functions.kernel import row_udf
 
 __all__ = ["extract_rtf_text", "rtf_write"]
 
@@ -244,16 +244,11 @@ def _extract_rtf_one(b):
 
 def extract_rtf_text(payload: Column) -> Column:
     """Binary RTF payload → ``struct<text, status, n_chars>`` (see the
-    module docstring for the ladder).  One Arrow-batched
-    ``pandas_udf`` map pass — no shuffle; NULL in → NULL out; one
-    hostile document can never kill the task."""
-
-    @F.pandas_udf("struct<text: string, status: string, n_chars: int>")
-    def kernel(payloads: pd.Series) -> pd.DataFrame:
-        rows = [_extract_rtf_one(p) for p in payloads]
-        return pd.DataFrame(rows, columns=["text", "status", "n_chars"])
-
-    return kernel(payload)
+    module docstring for the ladder).  One Arrow-batched map pass — no
+    shuffle; a NULL payload gives a non-NULL struct whose fields are
+    all NULL; one hostile document can never kill the task."""
+    return row_udf("struct<text: string, status: string, n_chars: int>",
+                   _extract_rtf_one)(payload)
 
 
 def rtf_write(

@@ -1514,8 +1514,8 @@ def kcenter_select(
     raises with guidance instead of silently running for days — the
     same explicit-regime-guard convention as
     ``curation.dsir_resample_tokens``: coreset selection at corpus
-    scale wants k-means-style assignment (``semdedup_ivf``), not a
-    sequential greedy.
+    scale wants k-means-style assignment
+    (:func:`semantic_dedup_ivf`), not a sequential greedy.
     """
     import numpy as np
 
@@ -1525,8 +1525,8 @@ def kcenter_select(
         raise ValueError(
             f"n={n:,} picks = {n:,} sequential Spark jobs (~1 s fixed "
             "overhead each) — beyond the greedy k-center regime; for "
-            "corpus-scale coreset selection use semdedup_ivf's k-means "
-            "clustering and sample per cluster, or raise max_picks "
+            "corpus-scale coreset selection use semantic_dedup_ivf's "
+            "k-means clustering and sample per cluster, or raise max_picks "
             "explicitly if the wall-clock is acceptable"
         )
     base = (

@@ -9,9 +9,11 @@ so a 100 TB documents table is one narrow projection pass.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf resolves string type hints here
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..functions.kernel import row_udf
 
 __all__ = [
     "tokenize", "token_count", "bpe_ish_token_count",
@@ -282,22 +284,16 @@ def hashing_embed(dim: int = 64, ngram: int = 1, seed: int = 42):
     sessions, and machines (Python's builtin ``hash`` is per-process
     salted and MUST NOT be used here).
     """
-    from pyspark.sql.functions import pandas_udf
-
     n = int(ngram)
     d = int(dim)
     salt_b = str(seed).encode()
     salt_s = str(seed * 31 + 7).encode()
 
-    @pandas_udf("array<double>")
-    def kernel(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            v = _hash_embed_one(t, n, d, salt_b, salt_s)
-            out.append(None if v is None else v.tolist())
-        return pd.Series(out, dtype=object)
+    def embed_one(t):
+        v = _hash_embed_one(t, n, d, salt_b, salt_s)
+        return None if v is None else v.tolist()
 
-    return kernel
+    return row_udf("array<double>", embed_one)
 
 
 def _hash_embed_one(t, n: int, d: int, salt_b: bytes, salt_s: bytes):
@@ -349,8 +345,6 @@ def hashing_logit(
     """
     import numpy as np
 
-    from pyspark.sql.functions import pandas_udf
-
     n = int(ngram)
     d = int(dim)
     salt_b = str(seed).encode()
@@ -362,19 +356,13 @@ def hashing_logit(
         )
     b = float(bias)
 
-    @pandas_udf("double")
-    def kernel(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            v = _hash_embed_one(t, n, d, salt_b, salt_s)
-            if v is None:
-                out.append(None)
-            else:
-                m = float(v @ w) + b
-                out.append(1.0 / (1.0 + np.exp(-m)))
-        return pd.Series(out, dtype="float64")
+    def logit_one(t):
+        v = _hash_embed_one(t, n, d, salt_b, salt_s)
+        if v is None:
+            return None
+        return 1.0 / (1.0 + np.exp(-(float(v @ w) + b)))
 
-    return kernel
+    return row_udf("double", logit_one)
 
 
 def embed_documents(

@@ -20,12 +20,12 @@ from __future__ import annotations
 
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..convert.cast import cast_col
 from ..convert.decorators import levels_table
+from ..functions.kernel import row_udf
 from ..functions.rounding import RULES, round_col
 from ..functions.strings import boolean_match, int_to_base
 from ..functions.temporal import epoch_ns, parse_timedelta_string
@@ -4729,23 +4729,19 @@ def x49(spark, sf_dir):
 
     d = _tw(spark, sf_dir, "documents")
 
-    @F.pandas_udf("binary")
-    def build(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            fold = _re.sub(r"[^ -~\n]", "?", t or "")
-            page = "Document %d" % i + ("\n" + fold if fold else "")
-            lines = page.split("\n")
-            modern = bool(i % 2)
-            out.append(pdf_write(
-                ["\n".join(lines[k:k + 20])
-                 for k in range(0, len(lines), 20)],
-                objstm=modern, predictor=modern))
-        return pd.Series(out)
+    def build(i, t):
+        fold = _re.sub(r"[^ -~\n]", "?", t or "")
+        page = "Document %d" % i + ("\n" + fold if fold else "")
+        lines = page.split("\n")
+        modern = bool(i % 2)
+        return pdf_write(
+            ["\n".join(lines[k:k + 20])
+             for k in range(0, len(lines), 20)],
+            objstm=modern, predictor=modern)
 
     return d.select(
         "doc_id",
-        extract_pdf_text(build("doc_id", "text"))["text"]
+        extract_pdf_text(row_udf("binary", build)("doc_id", "text"))["text"]
         .alias("extracted"),
     )
 
@@ -4778,30 +4774,25 @@ def x50(spark, sf_dir):
 
     d = _tw(spark, sf_dir, "documents")
 
-    @F.pandas_udf("struct<url: string, http_status: int, mime: string, "
-                  "charset: string, body: string>")
-    def roundtrip(ids: pd.Series, texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for i, t in zip(ids, texts):
-            rec = {"url": "http://corpus.example/%d" % i,
-                   "ts": "2026-01-01T00:00:00Z",
-                   "body": (t or "").encode("utf-8")}
-            if i % 3 == 0:
-                rec["charset"] = "utf-8"
-            blob = warc_write(
-                [rec,
-                 {"url": "http://corpus.example/%d/raw" % i, "ts": "t",
-                  "body": b"dropped", "http": False,
-                  "record_type": "resource"}],
-                gzip_members=bool(i % 2))
-            (url, _ts, _rt, mime, charset, status, body
-             ) = parse_warc(blob)[0]
-            rows.append((url, status, mime, charset,
-                         body.decode("utf-8")))
-        return pd.DataFrame(rows, columns=[
-            "url", "http_status", "mime", "charset", "body"])
+    def roundtrip(i, t):
+        rec = {"url": "http://corpus.example/%d" % i,
+               "ts": "2026-01-01T00:00:00Z",
+               "body": (t or "").encode("utf-8")}
+        if i % 3 == 0:
+            rec["charset"] = "utf-8"
+        blob = warc_write(
+            [rec,
+             {"url": "http://corpus.example/%d/raw" % i, "ts": "t",
+              "body": b"dropped", "http": False,
+              "record_type": "resource"}],
+            gzip_members=bool(i % 2))
+        (url, _ts, _rt, mime, charset, status, body
+         ) = parse_warc(blob)[0]
+        return (url, status, mime, charset, body.decode("utf-8"))
 
-    out = roundtrip("doc_id", "text")
+    out = row_udf("struct<url: string, http_status: int, mime: string, "
+                  "charset: string, body: string>", roundtrip)(
+        "doc_id", "text")
     return d.select(
         "doc_id", out["url"].alias("url"),
         out["http_status"].alias("http_status"),
@@ -4860,25 +4851,21 @@ def x51(spark, sf_dir):
     d = _tw(spark, sf_dir, "documents")
     bad = _re.compile(_X51_XMLBAD)
 
-    @F.pandas_udf("binary")
-    def build(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            fold = bad.sub("?", t or "")
-            page = "Document %d" % i + ("\n" + fold if fold else "")
-            lines = page.split("\n")
-            out.append(docx_write(
-                ["\n".join(lines[k:k + 3])
-                 for k in range(0, len(lines), 3)],
-                split_runs=(i % 2 == 0),
-                tabs_as_elements=(i % 3 == 0),
-                table_after_first=(i % 5 == 0),
-                strict_ns=(i % 7 == 0)))
-        return pd.Series(out)
+    def build(i, t):
+        fold = bad.sub("?", t or "")
+        page = "Document %d" % i + ("\n" + fold if fold else "")
+        lines = page.split("\n")
+        return docx_write(
+            ["\n".join(lines[k:k + 3])
+             for k in range(0, len(lines), 3)],
+            split_runs=(i % 2 == 0),
+            tabs_as_elements=(i % 3 == 0),
+            table_after_first=(i % 5 == 0),
+            strict_ns=(i % 7 == 0))
 
     return d.select(
         "doc_id",
-        extract_docx_text(build("doc_id", "text"))["text"]
+        extract_docx_text(row_udf("binary", build)("doc_id", "text"))["text"]
         .alias("extracted"),
     )
 
@@ -4915,22 +4902,18 @@ def x52(spark, sf_dir):
     d = _tw(spark, sf_dir, "documents")
     bad = _re.compile(_X51_XMLBAD)
 
-    @F.pandas_udf("binary")
-    def build(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            fold = bad.sub("?", t or "")
-            page = "Document %d" % i + ("\n" + fold if fold else "")
-            lines = page.split("\n")
-            paras = ["\n".join(lines[k:k + 2])
-                     for k in range(0, len(lines), 2)]
-            slides = [paras[k:k + 3] for k in range(0, len(paras), 3)]
-            out.append(pptx_write(slides, strict_ns=(i % 7 == 0)))
-        return pd.Series(out)
+    def build(i, t):
+        fold = bad.sub("?", t or "")
+        page = "Document %d" % i + ("\n" + fold if fold else "")
+        lines = page.split("\n")
+        paras = ["\n".join(lines[k:k + 2])
+                 for k in range(0, len(lines), 2)]
+        slides = [paras[k:k + 3] for k in range(0, len(paras), 3)]
+        return pptx_write(slides, strict_ns=(i % 7 == 0))
 
     return d.select(
         "doc_id",
-        extract_pptx_text(build("doc_id", "text"))["text"]
+        extract_pptx_text(row_udf("binary", build)("doc_id", "text"))["text"]
         .alias("extracted"),
     )
 
@@ -4979,21 +4962,17 @@ def x53(spark, sf_dir):
     d = _tw(spark, sf_dir, "documents")
     bad = _re.compile(_X51_XMLBAD)
 
-    @F.pandas_udf("binary")
-    def build(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            fold = bad.sub("?", t or "")
-            page = "Document %d" % i + ("\n" + fold if fold else "")
-            rows = [line.split("\t") for line in page.split("\n")]
-            rows[0] = rows[0] + [float(int(i) + 0.1), int(i) * 100]
-            sheets = [rows[k:k + 40] for k in range(0, len(rows), 40)]
-            out.append(xlsx_write(sheets, shared=(i % 2 == 0)))
-        return pd.Series(out)
+    def build(i, t):
+        fold = bad.sub("?", t or "")
+        page = "Document %d" % i + ("\n" + fold if fold else "")
+        rows = [line.split("\t") for line in page.split("\n")]
+        rows[0] = rows[0] + [float(int(i) + 0.1), int(i) * 100]
+        sheets = [rows[k:k + 40] for k in range(0, len(rows), 40)]
+        return xlsx_write(sheets, shared=(i % 2 == 0))
 
     return d.select(
         "doc_id",
-        extract_xlsx_text(build("doc_id", "text"))["text"]
+        extract_xlsx_text(row_udf("binary", build)("doc_id", "text"))["text"]
         .alias("extracted"),
     )
 
@@ -5033,22 +5012,18 @@ def x54(spark, sf_dir):
     d = _tw(spark, sf_dir, "documents")
     uniws = _re.compile(_X48_UNIWS)
 
-    @F.pandas_udf("binary")
-    def build(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            folded = uniws.sub(" ", t or "")
-            out.append(epub_write(
-                ["<p>Document %d</p>" % i,
-                 "<p>%s</p>" % _esc(folded)],
-                info={"title": "Document %d" % i},
-                reversed_manifest=bool(i % 2),
-                extra_items=(i % 3 == 0)))
-        return pd.Series(out)
+    def build(i, t):
+        folded = uniws.sub(" ", t or "")
+        return epub_write(
+            ["<p>Document %d</p>" % i,
+             "<p>%s</p>" % _esc(folded)],
+            info={"title": "Document %d" % i},
+            reversed_manifest=bool(i % 2),
+            extra_items=(i % 3 == 0))
 
     return d.select(
         "doc_id",
-        extract_epub_text(build("doc_id", "text"))["text"]
+        extract_epub_text(row_udf("binary", build)("doc_id", "text"))["text"]
         .alias("extracted"),
     )
 
@@ -5081,21 +5056,17 @@ def x55(spark, sf_dir):
 
     d = _tw(spark, sf_dir, "documents")
 
-    @F.pandas_udf("binary")
-    def build(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            t = t or ""
-            page = "Document %d" % i + ("\n" + t if t else "")
-            out.append(rtf_write(
-                page,
-                codepage_escapes=(i % 2 == 0),
-                table=(i % 5 == 0)))
-        return pd.Series(out)
+    def build(i, t):
+        t = t or ""
+        page = "Document %d" % i + ("\n" + t if t else "")
+        return rtf_write(
+            page,
+            codepage_escapes=(i % 2 == 0),
+            table=(i % 5 == 0))
 
     return d.select(
         "doc_id",
-        extract_rtf_text(build("doc_id", "text"))["text"]
+        extract_rtf_text(row_udf("binary", build)("doc_id", "text"))["text"]
         .alias("extracted"),
     )
 
@@ -5136,24 +5107,20 @@ def x56(spark, sf_dir):
     d = _tw(spark, sf_dir, "documents")
     bad = _re.compile(_X51_XMLBAD)
 
-    @F.pandas_udf("binary")
-    def build(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            fold = bad.sub("?", t or "")
-            page = "Document %d" % i + ("\n" + fold if fold else "")
-            lines = page.split("\n")
-            out.append(odt_write(
-                ["\n".join(lines[k:k + 3])
-                 for k in range(0, len(lines), 3)],
-                spans=(i % 2 == 0),
-                rle_spaces=(i % 3 == 0),
-                table_after_first=(i % 5 == 0)))
-        return pd.Series(out)
+    def build(i, t):
+        fold = bad.sub("?", t or "")
+        page = "Document %d" % i + ("\n" + fold if fold else "")
+        lines = page.split("\n")
+        return odt_write(
+            ["\n".join(lines[k:k + 3])
+             for k in range(0, len(lines), 3)],
+            spans=(i % 2 == 0),
+            rle_spaces=(i % 3 == 0),
+            table_after_first=(i % 5 == 0))
 
     return d.select(
         "doc_id",
-        extract_odt_text(build("doc_id", "text"))["text"]
+        extract_odt_text(row_udf("binary", build)("doc_id", "text"))["text"]
         .alias("extracted"),
     )
 
@@ -5225,60 +5192,56 @@ def x57(spark, sf_dir):
     d = _tw(spark, sf_dir, "documents")
     ascii_bad = _re.compile(r"[^ -~\n]")
 
-    @F.pandas_udf("binary")
-    def build(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            i = int(i)
-            fold = ascii_bad.sub("?", t or "")
-            page = "Document %d" % i + ("\n" + fold if fold else "")
-            lines = page.split("\n")
-            m = i % 11
-            if m == 0:
-                out.append(docx_write(
-                    ["\n".join(lines[k:k + 3])
-                     for k in range(0, len(lines), 3)]))
-            elif m == 1:
-                paras = ["\n".join(lines[k:k + 2])
-                         for k in range(0, len(lines), 2)]
-                out.append(pptx_write(
-                    [paras[k:k + 3] for k in range(0, len(paras), 3)]))
-            elif m == 2:
-                rows = [ln.split("\t") for ln in lines]
-                out.append(xlsx_write(
-                    [rows[k:k + 40] for k in range(0, len(rows), 40)]))
-            elif m == 3:
-                out.append(epub_write(
-                    ["<p>Document %d</p>" % i,
-                     "<p>%s</p>" % _esc(fold)]))
-            elif m == 4:
-                out.append(rtf_write(page))
-            elif m == 5:
-                out.append(odt_write(
-                    ["\n".join(lines[k:k + 3])
-                     for k in range(0, len(lines), 3)]))
-            elif m == 6:
-                out.append(pdf_write(
-                    ["\n".join(lines[k:k + 20])
-                     for k in range(0, len(lines), 20)]))
-            elif m == 7:
-                out.append((
-                    "<html><head><title>t</title></head><body>"
-                    "<h1>Document %d</h1><p>%s</p></body></html>"
-                    % (i, _esc(fold))).encode("utf-8"))
-            elif m == 8:
-                out.append(doc_write(page))
-            elif m == 9:
-                rows = [ln.split("\t") for ln in lines]
-                out.append(xls_write(
-                    [rows[k:k + 40] for k in range(0, len(rows), 40)]))
-            else:
-                out.append(ppt_write(
-                    ["\n".join(lines[k:k + 4])
-                     for k in range(0, len(lines), 4)]))
-        return pd.Series(out)
+    def build(i, t):
+        i = int(i)
+        fold = ascii_bad.sub("?", t or "")
+        page = "Document %d" % i + ("\n" + fold if fold else "")
+        lines = page.split("\n")
+        m = i % 11
+        if m == 0:
+            return docx_write(
+                ["\n".join(lines[k:k + 3])
+                 for k in range(0, len(lines), 3)])
+        elif m == 1:
+            paras = ["\n".join(lines[k:k + 2])
+                     for k in range(0, len(lines), 2)]
+            return pptx_write(
+                [paras[k:k + 3] for k in range(0, len(paras), 3)])
+        elif m == 2:
+            rows = [ln.split("\t") for ln in lines]
+            return xlsx_write(
+                [rows[k:k + 40] for k in range(0, len(rows), 40)])
+        elif m == 3:
+            return epub_write(
+                ["<p>Document %d</p>" % i,
+                 "<p>%s</p>" % _esc(fold)])
+        elif m == 4:
+            return rtf_write(page)
+        elif m == 5:
+            return odt_write(
+                ["\n".join(lines[k:k + 3])
+                 for k in range(0, len(lines), 3)])
+        elif m == 6:
+            return pdf_write(
+                ["\n".join(lines[k:k + 20])
+                 for k in range(0, len(lines), 20)])
+        elif m == 7:
+            return (
+                "<html><head><title>t</title></head><body>"
+                "<h1>Document %d</h1><p>%s</p></body></html>"
+                % (i, _esc(fold))).encode("utf-8")
+        elif m == 8:
+            return doc_write(page)
+        elif m == 9:
+            rows = [ln.split("\t") for ln in lines]
+            return xls_write(
+                [rows[k:k + 40] for k in range(0, len(rows), 40)])
+        else:
+            return ppt_write(
+                ["\n".join(lines[k:k + 4])
+                 for k in range(0, len(lines), 4)])
 
-    routed = extract_document_text(build("doc_id", "text"))
+    routed = extract_document_text(row_udf("binary", build)("doc_id", "text"))
     return d.select(
         "doc_id",
         routed["format"].alias("fmt"),
@@ -5327,24 +5290,20 @@ def x58(spark, sf_dir):
     d = _tw(spark, sf_dir, "documents")
     bad = _re.compile(_X51_XMLBAD)
 
-    @F.pandas_udf("binary")
-    def build(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            i = int(i)
-            fold = bad.sub("?", t or "")
-            page = "Document %d" % i + ("\n" + fold if fold else "")
-            out.append(doc_write(
-                page,
-                table1=bool(i % 2),
-                prc_blocks=(i % 3 == 0),
-                piece_cap=(11 if i % 5 == 0 else 0),
-                pad_word_stream=(i % 7 == 0)))
-        return pd.Series(out)
+    def build(i, t):
+        i = int(i)
+        fold = bad.sub("?", t or "")
+        page = "Document %d" % i + ("\n" + fold if fold else "")
+        return doc_write(
+            page,
+            table1=bool(i % 2),
+            prc_blocks=(i % 3 == 0),
+            piece_cap=(11 if i % 5 == 0 else 0),
+            pad_word_stream=(i % 7 == 0))
 
     return d.select(
         "doc_id",
-        extract_doc_text(build("doc_id", "text"))["text"]
+        extract_doc_text(row_udf("binary", build)("doc_id", "text"))["text"]
         .alias("extracted"),
     )
 
@@ -5384,25 +5343,21 @@ def x59(spark, sf_dir):
 
     d = _tw(spark, sf_dir, "documents")
 
-    @F.pandas_udf("binary")
-    def build(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            i = int(i)
-            page = "Document %d" % i + ("\n" + t if t else "")
-            rows = [ln.split("\t") for ln in page.split("\n")]
-            rows[0] = rows[0] + [float(i + 0.1), i * 100]
-            sheets = [rows[k:k + 40] for k in range(0, len(rows), 40)]
-            out.append(xls_write(
-                sheets,
-                shared=(i % 2 == 0),
-                continue_split=(16 if i % 5 == 0 else 0),
-                rk_numbers=(i % 3 == 0)))
-        return pd.Series(out)
+    def build(i, t):
+        i = int(i)
+        page = "Document %d" % i + ("\n" + t if t else "")
+        rows = [ln.split("\t") for ln in page.split("\n")]
+        rows[0] = rows[0] + [float(i + 0.1), i * 100]
+        sheets = [rows[k:k + 40] for k in range(0, len(rows), 40)]
+        return xls_write(
+            sheets,
+            shared=(i % 2 == 0),
+            continue_split=(16 if i % 5 == 0 else 0),
+            rk_numbers=(i % 3 == 0))
 
     return d.select(
         "doc_id",
-        extract_xls_text(build("doc_id", "text"))["text"]
+        extract_xls_text(row_udf("binary", build)("doc_id", "text"))["text"]
         .alias("extracted"),
     )
 
@@ -5443,23 +5398,19 @@ def x60(spark, sf_dir):
     d = _tw(spark, sf_dir, "documents")
     bad = _re.compile(_X51_XMLBAD)
 
-    @F.pandas_udf("binary")
-    def build(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            i = int(i)
-            fold = bad.sub("?", t or "")
-            page = "Document %d" % i + ("\n" + fold if fold else "")
-            lines = page.split("\n")
-            out.append(ppt_write(
-                ["\n".join(lines[k:k + 4])
-                 for k in range(0, len(lines), 4)],
-                force_chars=(i % 3 == 0)))
-        return pd.Series(out)
+    def build(i, t):
+        i = int(i)
+        fold = bad.sub("?", t or "")
+        page = "Document %d" % i + ("\n" + fold if fold else "")
+        lines = page.split("\n")
+        return ppt_write(
+            ["\n".join(lines[k:k + 4])
+             for k in range(0, len(lines), 4)],
+            force_chars=(i % 3 == 0))
 
     return d.select(
         "doc_id",
-        extract_ppt_text(build("doc_id", "text"))["text"]
+        extract_ppt_text(row_udf("binary", build)("doc_id", "text"))["text"]
         .alias("extracted"),
     )
 

@@ -896,13 +896,18 @@ class TestKcenterRegimeGuard:
     days; max_picks is an explicit opt-out."""
 
     def test_guard_raises_with_guidance(self, spark):
-        from bertrand_spark.pipeline.similarity import kcenter_select
+        from bertrand_spark.pipeline.similarity import (
+            kcenter_select,
+            semantic_dedup_ivf,
+        )
 
         df = spark.createDataFrame(
             [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
         )
-        with pytest.raises(ValueError, match="sequential Spark jobs"):
+        with pytest.raises(ValueError, match="sequential Spark jobs") as err:
             kcenter_select(df, 10_001)
+        # the guidance names an operator that exists
+        assert f"use {semantic_dedup_ivf.__name__}'s" in str(err.value)
         # explicit opt-out: a raised ceiling admits the same n
         out = kcenter_select(df, 1, max_picks=10)
         assert len(out) == 1

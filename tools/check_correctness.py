@@ -57,7 +57,8 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
 
 def main() -> int:
     patterns = sys.argv[1:]
-    sys.path.insert(0, "/root/repo")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
     import __spark_entry__ as entrymod
     from bertrand_spark.session import build_session
 

@@ -12,9 +12,11 @@ it's the plan you'd want") packaged so it is one command per query.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from bertrand_spark.plans.audit import audit_plan  # noqa: E402
 

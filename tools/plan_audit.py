@@ -13,13 +13,12 @@ Usage: python tools/plan_audit.py [name_substring ...]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-
-import sys as _sys
-
-_sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 from bertrand_spark.plans.audit import (  # noqa: E402,F401 — CLI + CI import surface
     audit_broadcast_hints,
     audit_plan,
@@ -28,7 +27,6 @@ from bertrand_spark.plans.audit import (  # noqa: E402,F401 — CLI + CI import 
 
 def main() -> int:
     patterns = sys.argv[1:]
-    sys.path.insert(0, "/root/repo")
     from bertrand_spark.session import build_session
 
     spark = build_session(8, "plan_audit")

@@ -99,10 +99,6 @@ def main() -> int:
         if explain_dir:
             os.makedirs(explain_dir, exist_ok=True)
             try:
-                plan = fn(spark, sf_dir)._sc  # noqa: SLF001 — placeholder
-            except Exception:
-                pass
-            try:
                 txt = fn(spark, sf_dir)._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                         "formatted"
