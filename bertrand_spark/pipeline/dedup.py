@@ -17,6 +17,13 @@ Scale design notes (the whole point of these ops):
 * Candidate pairs come from an equi-join on band buckets (hash join on a
   high-cardinality key).  Verification (exact Jaccard on the hash sets)
   runs only on candidates — the classic LSH cost profile.
+* One candidate join serves every MinHash operator: the self-join, the
+  two-corpus fuzzy join, the band-store join and the stored band table
+  all generate candidates through ``_band_candidates`` (band equi-join,
+  then the ``min_band_matches`` consensus floor), and the three that
+  verify hand the pairs to ``_verify_candidates``.  Each caller keeps
+  only its own broadcast-hint decision; stored band tables carry their
+  geometry in a ``__params`` companion read by ``_band_geometry``.
 * SimHash: one Arrow kernel (``simhash64_vectorized``) votes the 64 bits
   per document — a narrow projection, no shuffle; near-dup = pigeonhole
   block join, then Hamming distance via ``bit_count(xor)``, native.
@@ -27,7 +34,10 @@ Scale design notes (the whole point of these ops):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -437,10 +447,81 @@ def _minhash_prep(
     return p, n, row["h"] * 16 + row["idb"] + 24 * n
 
 
+def _bands(prep: DataFrame, id_col: str) -> DataFrame:
+    """(id, band, bucket) rows of a sketch table, one per band key."""
+    return prep.select(
+        F.col(id_col), F.posexplode(F.col("__bk")).alias("band", "bucket")
+    )
+
+
+def _band_candidates(
+    a: DataFrame,
+    b: DataFrame,
+    a_id: str,
+    b_id: str,
+    threshold: float,
+    k: int,
+    num_bands: int,
+    self_join: bool,
+) -> DataFrame:
+    """The MinHash candidate rule — the only copy; every MinHash join
+    (self-join, two-corpus join, band store, stored band table) makes
+    its candidates here → consensus-filtered ``(a_id, b_id)`` pairs.
+
+    ``a``/``b`` are (id, band, bucket) band frames keyed ``a_id``/
+    ``b_id``; a broadcast hint on ``b`` is the caller's decision.  They
+    equi-join on (band, bucket) — a self-join keeps each unordered pair
+    once (``a_id < b_id``) — and a pair survives only if it collides in
+    at least the :func:`min_band_matches` number of bands (r = k //
+    num_bands rows per band).  Template-heavy corpora produce millions
+    of 1-band chance collisions between low-similarity pairs (at sf0.1,
+    25% of ALL doc pairs collide in ≥1 band, but the similarity
+    distribution is bimodal: background at j≈0.2, true dups at j≥0.9);
+    the binomial floor misses an exactly-at-threshold pair with
+    probability ≤ 1e-4 and cuts ~96% of the verification workload.
+
+    A bucket of d documents emits d²/2 pair rows, so a corpus with many
+    IDENTICAL copies (which collide in every band) degrades
+    quadratically: run ``exact_dedup`` first — near-dup LSH is the
+    wrong tool for exact copies.
+    """
+    pairs = a.join(b, ["band", "bucket"], "inner")
+    if self_join:
+        pairs = pairs.filter(F.col(a_id) < F.col(b_id))
+    consensus = min_band_matches(threshold, k // num_bands, num_bands)
+    return (
+        pairs.groupBy(a_id, b_id)  # same shuffle as distinct(), plus the m count
+        .agg(F.count("*").alias("__m"))
+        .filter(F.col("__m") >= consensus)
+        .select(a_id, b_id)
+    )
+
+
+def _band_geometry(spark, table: str) -> tuple[int, int, int]:
+    """``(k, num_bands, shingle_n)`` of a band table, read from the
+    ``__params`` companion :func:`write_band_table` writes beside it.
+
+    The geometry IS the table's semantics — a batch banded with other
+    permutations, or a consensus floor from other band counts, silently
+    collapses recall — so it is never defaulted: a missing companion
+    raises ``ValueError`` naming the table."""
+    try:
+        prow = spark.table(f"{table}__params").first()
+    except AnalysisException:
+        prow = None
+    if prow is None:
+        raise ValueError(
+            f"band table {table!r} has no readable '{table}__params' "
+            "companion — its banding geometry is unknown; write it with "
+            "write_band_table(mode='overwrite') first"
+        )
+    return prow["k"], prow["num_bands"], prow["shingle_n"]
+
+
 def _verify_candidates(
     cand: DataFrame,
     prep_a: DataFrame,
-    prep_b: DataFrame,
+    prep_b: DataFrame | Callable[[DataFrame], DataFrame],
     a_id: str,
     b_id: str,
     threshold: float,
@@ -448,8 +529,11 @@ def _verify_candidates(
 ) -> DataFrame:
     """Exact-Jaccard verification of a candidate pair list.
 
-    ``cand``: (a_id, b_id) pairs, already consensus-filtered and
-    repartitioned; ``prep_x``: (x_id, ..., __g) hash-set tables.
+    ``cand``: consensus-filtered (a_id, b_id) pairs from
+    :func:`_band_candidates`; ``prep_x``: (x_id, ..., __g) hash-set
+    tables.  ``prep_b`` may instead be a function that builds the b-side
+    table from the broadcast candidate ``b_id`` frame — for a side whose
+    hash sets are computed for candidates only (the band store).
 
     ``direct=True`` (caller MEASURED the prep payload below the
     broadcast budget): broadcast the whole hash-set tables — the verify
@@ -459,7 +543,11 @@ def _verify_candidates(
     broadcast — candidates are small by construction, the per-doc table
     is not, and broadcasting the full table is the one unscalable step
     at corpus size (the id lists themselves broadcast trivially);
-    ``cand`` then feeds three consumers, so callers pass it persisted.
+    ``cand`` then feeds three consumers (two semi-join builds and the
+    verify join, submitted concurrently on the broadcast thread pool),
+    so it is persisted and materialized here BEFORE the fan-out —
+    otherwise each build races the unpopulated cache and recomputes the
+    band join.
 
     (r14 note: for the self-join callers ``prep_a``/``prep_b`` are the
     same cached table renamed, and with AQE off ReuseExchange dedupes
@@ -470,21 +558,31 @@ def _verify_candidates(
     rewrite buys nothing; the two builds overlap on the exchange
     thread pool.)
     """
-    if direct:
-        ga = F.broadcast(prep_a.select(a_id, F.col("__g").alias("__ga")))
-        gb = F.broadcast(prep_b.select(b_id, F.col("__g").alias("__gb")))
-    else:
-        ga = F.broadcast(
-            prep_a.select(a_id, F.col("__g").alias("__ga")).join(
-                F.broadcast(cand.select(a_id).distinct()), a_id, "left_semi"
-            )
-        )
-        gb = F.broadcast(
-            prep_b.select(b_id, F.col("__g").alias("__gb")).join(
-                F.broadcast(cand.select(b_id).distinct()), b_id, "left_semi"
-            )
-        )
-    joined = cand.join(ga, a_id).join(gb, b_id)
+    # stage break: without it Catalyst fuses agg + consensus filter +
+    # both verification joins + the jaccard math into ONE generated
+    # method that exceeds the JIT/hugeMethodLimit and the whole
+    # pipeline runs interpreted (~100 µs/row over the full agg input).
+    # The exchange carries only the post-consensus pairs (16 B each).
+    # The partition count is pinned: the pair stream is BYTE-small but
+    # CPU-heavy downstream (~85 µs/intersect), and with a bare
+    # repartition AQE coalesces the 3 MB exchange to ONE partition,
+    # serializing verification (15 s single-task vs 2 s at 32-way).
+    cand = cand.repartition(
+        cand.sparkSession.sparkContext.defaultParallelism, a_id
+    )
+    if not direct:
+        cand = cand.persist()
+        cand.count()
+    # the id frames are built only where they are used: each is a
+    # driver-side analysis of the whole candidate plan
+    if callable(prep_b):
+        prep_b = prep_b(F.broadcast(cand.select(b_id).distinct()))
+    ga = prep_a.select(a_id, F.col("__g").alias("__ga"))
+    gb = prep_b.select(b_id, F.col("__g").alias("__gb"))
+    if not direct:
+        ga = ga.join(F.broadcast(cand.select(a_id).distinct()), a_id, "left_semi")
+        gb = gb.join(F.broadcast(cand.select(b_id).distinct()), b_id, "left_semi")
+    joined = cand.join(F.broadcast(ga), a_id).join(F.broadcast(gb), b_id)
     ca, cb = F.col("__ga"), F.col("__gb")
     # Size-ratio prefilter: j ≥ t ⟹ min(|A|,|B|) ≥ t·max(|A|,|B|) — an
     # int compare that skips the intersect when sizes rule the pair out.
@@ -510,23 +608,16 @@ def near_dup_pairs_minhash(
     k: int = 32,
     num_bands: int = 8,
     shingle_n: int = 5,
-    miss_tolerance: float = 1e-4,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """LSH candidates → band-consensus prefilter → exact-Jaccard ≥ threshold.
 
     The join back to texts is two hash joins on the id; at scale the texts
     side is the big table and candidates are rare, so Spark broadcasts the
-    candidate list (AQE decides from runtime size).
-
-    ``miss_tolerance``: template-heavy corpora produce millions of 1-band
-    chance collisions between low-similarity pairs (at sf0.1, 25% of ALL
-    doc pairs collide in ≥1 band, but the similarity distribution is
-    bimodal: background at j≈0.2, true dups at j≥0.9).  Instead of
-    verifying every collision, require ``m ≥ min_band_matches(threshold,
-    r, b, miss_tolerance)`` matching bands — the binomial consensus floor
-    that misses an exactly-at-threshold pair with probability ≤
-    ``miss_tolerance`` and cuts ~96% of the verification workload.
+    candidate list (AQE decides from runtime size).  Candidates must
+    collide in the binomial consensus number of bands
+    (:func:`_band_candidates`), so a pair exactly at ``threshold`` is
+    missed with probability ≤ 1e-4; run ``exact_dedup`` first on corpora
+    with many identical copies.
 
     The per-doc prep table (and, above the broadcast budget, the
     candidate table) stays persisted while the lazy result reads it.
@@ -534,15 +625,6 @@ def near_dup_pairs_minhash(
     materializing the result: snapshot
     :func:`bertrand_spark.session.persistent_rdd_ids` before the call
     and pass the new ids to :func:`bertrand_spark.session.unpersist_rdds`.
-
-    ``max_bucket``: skip (band, bucket) groups with more than this many
-    members before the self-join.  A bucket of d docs emits d²/2 pair
-    rows, so a corpus with many IDENTICAL copies (which collide in EVERY
-    band) degrades quadratically — run ``exact_dedup`` first (identical
-    copies are exact dups; near-dup LSH is the wrong tool for them), and
-    use this cap as the belt-and-suspenders guard.  With the cap a
-    same-bucket pair can be missed; ``None`` (default) keeps recall
-    exact.
     """
     # ONE fused Arrow pass per document produces both the signature (for
     # banding) and the 64-bit shingle-hash set (for verification); the
@@ -552,67 +634,28 @@ def near_dup_pairs_minhash(
     # hash sets equals Jaccard over the string shingle sets.
     kernel = minhash_banded_vectorized(k, num_bands, shingle_n)
     prep, n_docs, g_bytes = _minhash_prep(df, id_col, text_col, kernel, id_col)
-
-    bands = prep.select(
-        F.col(id_col), F.posexplode(F.col("__bk")).alias("band", "bucket")
-    )
-    if max_bucket is not None:
-        small_buckets = (
-            bands.groupBy("band", "bucket")
-            .agg(F.count("*").alias("__bsz"))
-            .filter(F.col("__bsz") <= max_bucket)
-            .select("band", "bucket")
-        )
-        bands = bands.join(small_buckets, ["band", "bucket"])
+    bands = _bands(prep, id_col)
     a = bands.withColumnRenamed(id_col, "id_a")
-    bn = bands.withColumnRenamed(id_col, "id_b")
-    consensus = min_band_matches(
-        threshold, k // num_bands, num_bands, miss_tolerance
-    )
+    b = bands.withColumnRenamed(id_col, "id_b")
     # broadcast the build side only while the band table (n_docs ×
     # num_bands × 24 B tuples) is broadcast-sized — skips AQE's
     # materialize-both-sides shuffle stage; at corpus scale the hint is
     # withheld and the self-join shuffles on (band, bucket) as usual
     if n_docs * num_bands * 24 < 100 << 20:
-        bn = F.broadcast(bn)
-    cand = (
-        a.join(bn, ["band", "bucket"], "inner")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")  # same shuffle as distinct(), plus the m count
-        .agg(F.count("*").alias("__m"))
-        .filter(F.col("__m") >= consensus)
-        .select("id_a", "id_b")
-        # stage break: without it Catalyst fuses agg + consensus filter +
-        # both verification joins + the jaccard math into ONE generated
-        # method that exceeds the JIT/hugeMethodLimit and the whole
-        # pipeline runs interpreted (~100 µs/row over the full agg input).
-        # The exchange carries only the post-consensus pairs (16 B each).
-        # The partition count is pinned: the pair stream is BYTE-small but
-        # CPU-heavy downstream (~85 µs/intersect), and with a bare
-        # repartition AQE coalesces the 3 MB exchange to ONE partition,
-        # serializing verification (15 s single-task vs 2 s at 32-way).
-        .repartition(
-            df.sparkSession.sparkContext.defaultParallelism, "id_a"
-        )
+        b = F.broadcast(b)
+    cand = _band_candidates(
+        a, b, "id_a", "id_b", threshold, k, num_bands, self_join=True
     )
     # measured-direct regime: the whole hash-set table fits the broadcast
     # budget → verification fuses with candidate generation into ONE
     # pipelined job (cand has a single consumer — no materialization
-    # barrier).  Otherwise: persist cand, which then feeds the two
-    # broadcast semi-join builds and the verify join (3 consumers,
-    # submitted concurrently on the broadcast thread pool) — materialize
-    # BEFORE fan-out or each build races the unpopulated cache and
-    # recomputes the band self-join.
-    direct = 2 * g_bytes < _DIRECT_BROADCAST_BYTES
-    if not direct:
-        cand = cand.persist()
-        cand.count()
+    # barrier); otherwise the verify persists cand before its fan-out
     return _verify_candidates(
         cand,
         prep.withColumnRenamed(id_col, "id_a"),
         prep.withColumnRenamed(id_col, "id_b"),
         "id_a", "id_b", threshold,
-        direct=direct,
+        direct=2 * g_bytes < _DIRECT_BROADCAST_BYTES,
     )
 
 
@@ -627,7 +670,6 @@ def fuzzy_join_minhash(
     k: int = 770,
     num_bands: int = 154,
     shingle_n: int = 5,
-    miss_tolerance: float = 1e-4,
 ) -> DataFrame:
     """Fuzzy JOIN between two corpora: pairs (left, right) with exact
     shingle-set Jaccard ≥ ``threshold``, candidates from shared LSH
@@ -669,38 +711,18 @@ def fuzzy_join_minhash(
         prep_l, _, gb_l = fut_l.result()
         prep_r, n_r, gb_r = fut_r.result()
 
-    bands_l = prep_l.select(
-        "id_l", F.posexplode("__bk").alias("band", "bucket")
-    )
-    bands_r = prep_r.select(
-        "id_r", F.posexplode("__bk").alias("band", "bucket")
-    )
+    bands_r = _bands(prep_r, "id_r")
     if n_r * num_bands * 24 < 100 << 20:
         bands_r = F.broadcast(bands_r)
-    consensus = min_band_matches(
-        threshold, k // num_bands, num_bands, miss_tolerance
-    )
-    cand = (
-        bands_l.join(bands_r, ["band", "bucket"], "inner")
-        .groupBy("id_l", "id_r")
-        .agg(F.count("*").alias("__m"))
-        .filter(F.col("__m") >= consensus)
-        .select("id_l", "id_r")
-        # pinned-width stage break for the CPU-heavy verify (see
-        # near_dup_pairs_minhash for why AQE must not coalesce this)
-        .repartition(
-            left.sparkSession.sparkContext.defaultParallelism, "id_l"
-        )
+    cand = _band_candidates(
+        _bands(prep_l, "id_l"), bands_r, "id_l", "id_r",
+        threshold, k, num_bands, self_join=False,
     )
     # measured-direct regime (see near_dup_pairs_minhash): both hash-set
-    # tables under the broadcast budget -> one pipelined job; otherwise
-    # persist cand before the 3-consumer fan-out
-    direct = 2 * (gb_l + gb_r) < _DIRECT_BROADCAST_BYTES
-    if not direct:
-        cand = cand.persist()
-        cand.count()
+    # tables under the broadcast budget -> one pipelined job
     return _verify_candidates(
-        cand, prep_l, prep_r, "id_l", "id_r", threshold, direct=direct
+        cand, prep_l, prep_r, "id_l", "id_r", threshold,
+        direct=2 * (gb_l + gb_r) < _DIRECT_BROADCAST_BYTES,
     )
 
 
@@ -713,9 +735,6 @@ def fuzzy_join_band_store(
     store_id_col: str = "doc_id",
     store_text_col: str = "text",
     threshold: float = 0.7,
-    *,
-    max_bucket: int | None = None,
-    miss_tolerance: float = 1e-4,
 ) -> DataFrame:
     """:func:`fuzzy_join_minhash` with the RIGHT side read from a
     persisted bucketed band table (:func:`write_band_table`) instead of
@@ -728,7 +747,8 @@ def fuzzy_join_band_store(
     The banding geometry (k, num_bands, shingle_n) is ALWAYS read from
     the ``__params`` companion table so the batch-side kernel provably
     matches the store's banding — a geometry drift between the two
-    sides silently collapses recall, so it is not overridable here.
+    sides silently collapses recall, so it is not overridable here.  A
+    table without the companion raises ``ValueError``.
 
     ``store_corpus`` is probed ONLY for candidate ids (semi join before
     the text re-hash), so verification cost is O(candidates), never
@@ -739,48 +759,27 @@ def fuzzy_join_band_store(
     :func:`near_dup_pairs_minhash` describes.
     """
     spark = batch.sparkSession
-    prow = spark.table(f"{band_table}__params").first()
-    k, num_bands, shingle_n = prow["k"], prow["num_bands"], prow["shingle_n"]
+    k, num_bands, shingle_n = _band_geometry(spark, band_table)
     kernel = minhash_banded_vectorized(k, num_bands, shingle_n)
-
     prep_l, _, _ = _minhash_prep(
         batch, batch_id_col, batch_text_col, kernel, "id_l"
     )
-    bands_l = prep_l.select(
-        "id_l", F.posexplode("__bk").alias("band", "bucket")
+    cand = _band_candidates(
+        _bands(prep_l, "id_l"),
+        spark.table(band_table).withColumnRenamed(store_id_col, "id_r"),
+        "id_l", "id_r", threshold, k, num_bands, self_join=False,
     )
-    bands_r = spark.table(band_table).withColumnRenamed(store_id_col, "id_r")
-    if max_bucket is not None:
-        small = (
-            bands_r.groupBy("band", "bucket")
-            .agg(F.count("*").alias("__bsz"))
-            .filter(F.col("__bsz") <= max_bucket)
-            .select("band", "bucket")
-        )
-        bands_r = bands_r.join(small, ["band", "bucket"])
-    consensus = min_band_matches(
-        threshold, k // num_bands, num_bands, miss_tolerance
-    )
-    cand = (
-        bands_l.join(bands_r, ["band", "bucket"], "inner")
-        .groupBy("id_l", "id_r")
-        .agg(F.count("*").alias("__m"))
-        .filter(F.col("__m") >= consensus)
-        .select("id_l", "id_r")
-        .repartition(spark.sparkContext.defaultParallelism, "id_l")
-    )
-    # cand feeds three consumers in the verify (ga ids, gb ids, the pair
-    # join) — materialize once
-    cand = cand.persist()
-    cand.count()
+    store = store_corpus.withColumnRenamed(store_id_col, "id_r")
     # hash sets for ONLY the candidate store rows: candidate ids are
     # small by construction (consensus-filtered), the store is not
-    store_sub = store_corpus.withColumnRenamed(store_id_col, "id_r").join(
-        F.broadcast(cand.select("id_r").distinct()), "id_r", "left_semi"
-    )
-    prep_r = _minhash_sketch(store_sub, "id_r", store_text_col, kernel, "id_r")
     return _verify_candidates(
-        cand, prep_l, prep_r, "id_l", "id_r", threshold, direct=False
+        cand,
+        prep_l,
+        lambda ids: _minhash_sketch(
+            store.join(ids, "id_r", "left_semi"),
+            "id_r", store_text_col, kernel, "id_r",
+        ),
+        "id_l", "id_r", threshold,
     )
 
 
@@ -1014,6 +1013,12 @@ def ngram_jaccard_pairs(
     missed, never invented.  At 100 TB set e.g. ``max_df=10_000``; the
     df table costs one extra groupBy over the (already materialized)
     posting list.
+
+    The per-doc gram-array table stays persisted while the lazy result
+    reads it.  Long-lived sessions that call this repeatedly release it
+    after materializing the result: snapshot
+    :func:`bertrand_spark.session.persistent_rdd_ids` before the call
+    and pass the new ids to :func:`bertrand_spark.session.unpersist_rdds`.
     """
     # 64-bit gram identity: the join/shuffle key drops from a ~25 B
     # 3-word string to 8 B and the hash-join compares longs — ~2× on the
@@ -1081,6 +1086,12 @@ def cosine_near_dup_pairs(
     1-(1-p^k)^t with p = 1-θ/π).  High thresholds (≈0.95) work with one
     table of many planes; mid thresholds need several short tables.
     Exact cosine runs only within buckets.
+
+    The candidate-pair table stays persisted while the lazy result reads
+    it.  Long-lived sessions that call this repeatedly release it after
+    materializing the result: snapshot
+    :func:`bertrand_spark.session.persistent_rdd_ids` before the call
+    and pass the new ids to :func:`bertrand_spark.session.unpersist_rdds`.
     """
     from .similarity import cosine_sim, hyperplane_signatures_vectorized
 
@@ -1304,18 +1315,7 @@ def write_band_table(
 
     spark = df.sparkSession
     if mode == "append":
-        try:
-            prow = spark.table(f"{table}__params").first()
-        except Exception:
-            prow = None
-        if prow is None:
-            raise ValueError(
-                f"append to {table!r} without a readable "
-                f"'{table}__params' companion — cannot prove banding "
-                "geometry matches; write the table with "
-                "mode='overwrite' first"
-            )
-        have = (prow["k"], prow["num_bands"], prow["shingle_n"])
+        have = _band_geometry(spark, table)
         want = (int(k), int(num_bands), int(shingle_n))
         if have != want:
             raise ValueError(
@@ -1325,14 +1325,7 @@ def write_band_table(
                 "silently collapse recall"
             )
     kernel = minhash_banded_vectorized(k, num_bands, shingle_n)
-    bands = (
-        _spread(df)
-        .select(F.col(id_col), kernel(F.col(text_col)).alias("__p"))
-        .select(
-            F.col(id_col),
-            F.posexplode(F.col("__p.bk")).alias("band", "bucket"),
-        )
-    )
+    bands = _bands(_minhash_sketch(df, id_col, text_col, kernel, id_col), id_col)
     write_bucketed(
         bands, table, ["band", "bucket"], num_buckets=num_buckets, mode=mode
     )
@@ -1349,75 +1342,26 @@ def write_band_table(
 
 
 def candidate_pairs_from_band_table(
-    spark,
-    table: str,
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    *,
-    max_bucket: int | None = None,
-    miss_tolerance: float = 1e-4,
-    num_bands: int | None = None,
-    rows_per_band: int | None = None,
+    spark, table: str, id_col: str = "doc_id", threshold: float = 0.7
 ) -> DataFrame:
     """Consensus-filtered candidate pairs from a bucketed band table:
-    the same banding/consensus semantics as ``near_dup_pairs_minhash``'s
-    inline path, but the self-join reads two aligned bucketed scans —
-    no exchange on either side.  Feed the result to exact verification
-    (``_verify_candidates`` via the prep table, or re-hash the candidate
-    texts) exactly like the inline path.
+    the same candidate rule as ``near_dup_pairs_minhash``'s inline path
+    (:func:`_band_candidates`), but the self-join reads two aligned
+    bucketed scans — no exchange on either side (no broadcast hint, so
+    the planner keeps the bucketed sort-merge join).  Feed the result to
+    exact verification (``_verify_candidates`` via the prep table, or
+    re-hash the candidate texts) exactly like the inline path.
 
     The banding geometry (k, num_bands) is read from the ``__params``
     companion table :func:`write_band_table` wrote — the consensus floor
-    always matches the table's true parameters.  For a band table
-    written WITHOUT a companion (older layout), pass keyword-only
-    ``num_bands`` + ``rows_per_band`` explicitly; geometry is never
-    silently defaulted.  ``max_bucket`` is the same hot-bucket quadratic
-    guard as the inline path (a bucket of d docs emits d²/2 pair rows;
-    run ``exact_dedup`` first, cap as belt-and-suspenders).  All tuning
-    arguments are keyword-only so a call written against an older
-    signature fails loudly instead of reinterpreting positions."""
-    if num_bands is None or rows_per_band is None:
-        try:
-            prow = spark.table(f"{table}__params").first()
-        except Exception:
-            prow = None
-        if prow is None:
-            raise ValueError(
-                f"no '{table}__params' companion table and no explicit "
-                "num_bands/rows_per_band — cannot derive the consensus "
-                "floor for this band table"
-            )
-        # Honor an explicitly provided half of the geometry (e.g. a
-        # caller correcting a stale params table) and fill only the
-        # missing half — never silently discard a passed value.
-        if num_bands is None and rows_per_band is None:
-            num_bands = prow["num_bands"]
-            rows_per_band = prow["k"] // num_bands
-        elif rows_per_band is None:
-            rows_per_band = prow["k"] // num_bands
-        else:
-            num_bands = prow["k"] // rows_per_band
+    always matches the table's true parameters; a table without the
+    companion raises ``ValueError``."""
+    k, num_bands, _ = _band_geometry(spark, table)
     bands = spark.table(table)
-    if max_bucket is not None:
-        small = (
-            bands.groupBy("band", "bucket")
-            .agg(F.count("*").alias("__bsz"))
-            .filter(F.col("__bsz") <= max_bucket)
-            .select("band", "bucket")
-        )
-        bands = bands.join(small, ["band", "bucket"])
-    a = bands.withColumnRenamed(id_col, "id_a")
-    b = bands.withColumnRenamed(id_col, "id_b")
-    consensus = min_band_matches(
-        threshold, rows_per_band, num_bands, miss_tolerance
-    )
-    return (
-        a.join(b, ["band", "bucket"], "inner")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("__m"))
-        .filter(F.col("__m") >= consensus)
-        .select("id_a", "id_b")
+    return _band_candidates(
+        bands.withColumnRenamed(id_col, "id_a"),
+        bands.withColumnRenamed(id_col, "id_b"),
+        "id_a", "id_b", threshold, k, num_bands, self_join=True,
     )
 
 

@@ -53,10 +53,21 @@ def build_session(cpus: int | str, app: str, **conf: str):
 
     ``conf`` maps Spark conf keys to values that replace or extend the
     recipe's, e.g. ``**{"spark.driver.memory": "4g"}``.
+
+    The Python workers import the engine this function belongs to, not
+    whichever ``bertrand_spark`` sits in the working directory: their
+    ``PYTHONPATH`` leads with this checkout's root, followed by the
+    working directory, and they skip Python's implicit working-directory
+    entry (``PYTHONSAFEPATH``, Python ≥ 3.11) that would otherwise come
+    first.  Like every conf here, this takes effect only when the call
+    starts the JVM; on a JVM that is already running it has no effect.
     """
+    import os
+
     from pyspark.sql import SparkSession
 
     cpus = int(cpus)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     recipe = {
         "spark.sql.shuffle.partitions": str(max(cpus * 4, 8)),
         "spark.sql.session.timeZone": "UTC",
@@ -68,6 +79,11 @@ def build_session(cpus: int | str, app: str, **conf: str):
         # reclaim driver-side RDD/broadcast refs promptly so the context
         # cleaner drops prior queries' shuffle files during the run
         "spark.cleaner.periodicGC.interval": "30s",
+        # workers plan-consistent with the driver: a tool run from one
+        # checkout while the shell sits in another would otherwise
+        # unpickle its UDFs against the other checkout's engine
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join((root, os.getcwd())),
+        "spark.executorEnv.PYTHONSAFEPATH": "1",
     }
     recipe.update(conf)
     b = SparkSession.builder.master(f"local[{cpus}]").appName(app)

@@ -299,9 +299,12 @@ def spread(df: DataFrame, *key: str) -> DataFrame:
     return df
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table, normalizing event-time columns to µs
-    TimestampType (the engine's boundary representation).
+def _event_time_normalizer(spark: SparkSession, path: str):
+    """Set the session up to read the parquet at ``path`` and return the
+    function that normalizes a frame read from it afterwards — batch or
+    stream — to µs TimestampType event time (the engine's boundary
+    representation).  The one owner of the fix for :func:`read_table`
+    and the staged event streams of ``streaming.rollup``.
 
     Two parquet shapes occur in the wild and both normalize here:
     * INT64 TIMESTAMP(NANOS) — Spark 4 rejects it outright, so read with
@@ -315,19 +318,34 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Session-conf caveat: ``nanosAsLong`` must stay set for the returned
     (lazy) DataFrame to execute, so it is NOT restored afterwards — a
     later bare ``spark.read.parquet`` on a ns-timestamp file will
-    return raw ns longs instead of failing.  Read through this function
-    (the engine's ingestion contract) and the conversion is applied.
+    return raw ns longs instead of failing.
     """
     from pyspark.sql import types as st
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = f"{sf_dir}/{name}.parquet"
     ns_cols = nanos_timestamp_columns(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    fixes = {c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns_cols}
-    for field in df.schema:
-        if isinstance(field.dataType, st.TimestampNTZType):
-            fixes[field.name] = F.col(field.name).cast("timestamp")
-    return df.withColumns(fixes) if fixes else df
+
+    def normalize(df: DataFrame) -> DataFrame:
+        fixes = {
+            c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns_cols
+        }
+        for field in df.schema:
+            if isinstance(field.dataType, st.TimestampNTZType):
+                fixes[field.name] = F.col(field.name).cast("timestamp")
+        return df.withColumns(fixes) if fixes else df
+
+    return normalize
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata table, normalizing event-time columns to µs
+    TimestampType (both parquet shapes; see
+    :func:`_event_time_normalizer`, which also sets the session conf the
+    read needs and leaves it set).  Read through this function (the
+    engine's ingestion contract) and the conversion is applied.
+    """
+    path = f"{sf_dir}/{name}.parquet"
+    normalize = _event_time_normalizer(spark, path)
+    return normalize(spark.read.parquet(path))

@@ -542,13 +542,10 @@ def read_events_stream_split(
 
     import pyarrow.parquet as pq
 
-    from ..sources.reader import nanos_timestamp_columns
+    from ..sources.reader import _event_time_normalizer
 
     path = f"{sf_dir}/events.parquet"
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ns_cols = nanos_timestamp_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    normalize = _event_time_normalizer(spark, path)
     schema = spark.read.parquet(path).schema
     stat = pathlib.Path(path).stat()
     digest = hashlib.sha1(
@@ -578,16 +575,7 @@ def read_events_stream_split(
         .format("parquet")
         .load(str(stage))
     )
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    from pyspark.sql import types as st
-
-    for field in stream.schema:
-        if isinstance(field.dataType, st.TimestampNTZType):
-            stream = stream.withColumn(
-                field.name, F.col(field.name).cast("timestamp")
-            )
-    return stream
+    return normalize(stream)
 
 
 def read_events_stream(
@@ -600,13 +588,10 @@ def read_events_stream(
     import shutil
     import tempfile
 
-    from ..sources.reader import nanos_timestamp_columns
+    from ..sources.reader import _event_time_normalizer
 
     path = f"{sf_dir}/events.parquet"
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ns_cols = nanos_timestamp_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    normalize = _event_time_normalizer(spark, path)
     schema = spark.read.parquet(path).schema
     # the file stream source requires a DIRECTORY; stage the single file
     # into a stable temp dir (in production the source is already a
@@ -628,16 +613,7 @@ def read_events_stream(
         .format("parquet")
         .load(str(stage))
     )
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    from pyspark.sql import types as st
-
-    for field in stream.schema:
-        if isinstance(field.dataType, st.TimestampNTZType):
-            stream = stream.withColumn(
-                field.name, F.col(field.name).cast("timestamp")
-            )
-    return stream
+    return normalize(stream)
 
 
 def stream_decode_media(

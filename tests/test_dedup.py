@@ -499,3 +499,35 @@ class TestHyperplaneKernel:
         out = empty.select(kernel(F.col("embedding")).alias("sig"))
         assert out.count() == 0
         assert out.schema["sig"].dataType.simpleString() == "array<bigint>"
+
+
+class TestOneCandidateJoin:
+    """Every MinHash join makes its candidates in one place
+    (``_band_candidates``), and band-table readers take the geometry
+    from the ``__params`` companion or fail naming the table."""
+
+    def test_candidate_rule_written_once(self):
+        import ast
+        import inspect
+
+        src = inspect.getsource(D)
+        calls = [
+            n
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, ast.Call)
+            and getattr(n.func, "id", None) == "min_band_matches"
+        ]
+        assert len(calls) == 1
+        assert src.count('alias("__m")') == 1
+
+    def test_missing_params_companion_raises(self, spark):
+        name = "t_band_no_params"
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(f"DROP TABLE IF EXISTS {name}__params")
+        batch = spark.createDataFrame(
+            [(1, "some text to band")], "doc_id long, text string"
+        )
+        with pytest.raises(ValueError, match=name):
+            D.candidate_pairs_from_band_table(spark, name)
+        with pytest.raises(ValueError, match=name):
+            D.fuzzy_join_band_store(batch, name, batch)

@@ -164,11 +164,12 @@ class TestBenchAttemptFold:
 
     def test_append_is_opt_in_and_tag_committed(self):
         import os
-        src = open("/root/repo/bench.py").read()
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        src = open(os.path.join(repo, "bench.py")).read()
         assert 'os.environ.get("SPARK_GRAFT_APPEND_ATTEMPT") == "1"' in src
         assert "time.time_ns()" in src and "os.getpid()" in src
-        tag = open(
-            "/root/repo/bench_attempts/current/ROUND_TAG").read().strip()
+        tag = open(os.path.join(
+            repo, "bench_attempts", "current", "ROUND_TAG")).read().strip()
         assert tag  # the committed tag the fold filters on
 
 

@@ -187,39 +187,6 @@ class TestAdviceFixes:
         with pytest.raises(ValueError, match="at least one column"):
             skew_report(df, [])
 
-    def test_band_table_half_geometry_honored(self, spark):
-        """Passing one of num_bands/rows_per_band must honor it and fill
-        only the missing half from __params — not silently read both."""
-        from bertrand_spark.pipeline.dedup import (
-            candidate_pairs_from_band_table,
-            write_band_table,
-        )
-
-        docs = spark.createDataFrame(
-            [
-                (i, f"common text body shared {'x' if i < 2 else i}")
-                for i in range(6)
-            ],
-            "doc_id long, text string",
-        )
-        name = "t_round4_bands"
-        write_band_table(docs, name, k=16, num_bands=8, num_buckets=4)
-        try:
-            base = candidate_pairs_from_band_table(
-                spark, name, threshold=0.5
-            ).count()
-            # num_bands=4 overrides the table's 8; rows_per_band fills
-            # from k/4=4 (vs the table's k/8=2) — the consensus floor
-            # shifts; the call must use the OVERRIDDEN band count, not
-            # silently re-read both halves from __params
-            alt = candidate_pairs_from_band_table(
-                spark, name, threshold=0.5, num_bands=4
-            ).count()
-            assert isinstance(base, int) and isinstance(alt, int)
-        finally:
-            for t in (name, f"{name}__params"):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-
 
 def _png_forward_filter(img, nch, ftypes):
     """Reference forward PNG filtering (spec §9) for decoder tests."""

@@ -241,7 +241,8 @@ class TestDriverRotationInvariants:
 
         from bertrand_spark.plans.queries import QUERIES
 
-        files = sorted(glob.glob("/root/repo/CORRECTNESS_r*.json"))
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        files = sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
         if not files:
             pytest.skip("no driver correctness artifacts present")
         from bertrand_spark.plans.queries import _DEFERRED_NEW

@@ -75,6 +75,45 @@ class TestSessionRecipe:
         assert found == []
 
 
+    def test_workers_import_the_drivers_engine(self, tmp_path):
+        """A session built from a working directory that holds another
+        ``bertrand_spark`` still runs its UDFs against the driver's."""
+        import subprocess
+        import sys
+
+        decoy = tmp_path / "bertrand_spark"
+        decoy.mkdir()
+        (decoy / "__init__.py").write_text("")
+        repo = os.path.abspath(_REPO)
+        script = (
+            "import sys\n"
+            f"sys.path.insert(0, {repo!r})\n"
+            "import bertrand_spark\n"
+            "from pyspark.sql import functions as F\n"
+            "from bertrand_spark.session import build_session\n"
+            "spark = build_session(1, 'worker-path', **{\n"
+            "    'spark.driver.memory': '1g', 'spark.ui.enabled': 'false'})\n"
+            "@F.udf('string')\n"
+            "def where(_):\n"
+            "    import bertrand_spark\n"
+            "    return bertrand_spark.__file__\n"
+            "print(bertrand_spark.__file__)\n"
+            "print(spark.range(1).select(where('id')).first()[0])\n"
+            "spark.stop()\n"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=tmp_path,
+            capture_output=True,
+            text=True,
+            timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        driver, worker = out.stdout.strip().splitlines()[-2:]
+        assert driver == os.path.join(repo, "bertrand_spark", "__init__.py")
+        assert worker == driver
+
+
 class TestCacheRelease:
     def test_x18_releases_near_dup_caches(self, spark, sf_dir):
         """x18 keeps only its two stage checkpoints (post-exact-dedup and

@@ -97,9 +97,9 @@ def main() -> None:
     # PERTURB the copied texts (unique suffix per copy): identical copies
     # collide in EVERY LSH band, so a corpus of exact duplicates degrades
     # any banding scheme quadratically — that's what exact_dedup is for
-    # (run it first in a real pipeline; see near_dup_pairs_minhash's
-    # max_bucket guard).  The perturbed corpus measures honest 10x
-    # near-dup throughput instead of that pathology.
+    # (run it first in a real pipeline; see dedup._band_candidates).
+    # The perturbed corpus measures honest 10x near-dup throughput
+    # instead of that pathology.
     docs = (
         blow_up(read_table(spark, SF_DIR, "documents"), "doc_id")
         .withColumn(
