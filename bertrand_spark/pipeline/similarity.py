@@ -2,15 +2,19 @@
 
 North-star extension: ANN over ``array<float>`` embeddings.
 
-* Exact path: brute-force cosine top-k — a broadcast of the (small) query
-  set against the (huge) vector table; the dot product is a native
-  ``zip_with``+``aggregate`` expression (JVM, codegen) — no Python, no
-  shuffle except the final top-k, which is a ``TakeOrderedAndProject``
-  (per-partition heaps, no global sort).
+* Exact path: brute-force cosine top-k — the (small) query matrix rides
+  an Arrow ``mapInPandas`` kernel that scores every corpus batch with
+  one BLAS GEMM; the corpus is scanned once and only (query, candidate)
+  scores reach the per-query rank window (a hash-partitioned window,
+  never a global sort).
 * Scale path: IVF — k-means-style coarse centroids (trained on a sample via
   Spark ML), each vector assigned to its nearest centroid once (narrow
   projection persisted alongside the data); queries probe ``nprobe``
-  partitions → candidate set shrinks by ~ncells/nprobe.
+  partitions → candidate set shrinks by ~ncells/nprobe.  Brute force is
+  the one-cell case of the same probe scorer.
+* PQ path: asymmetric distances over product-quantization codes, by
+  lookup tables per query (per (query, probed cell) for residual
+  codes); ``pq_topk`` is its one-cell case.
 * LSH path: random-hyperplane signatures
   (``hyperplane_signatures_vectorized``, shared with dedup) for bucketed
   joins.
@@ -20,9 +24,12 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as st
+from pyspark.sql.functions import pandas_udf
 
 __all__ = [
     "dot", "l2_norm", "cosine_sim",
@@ -96,9 +103,6 @@ def hyperplane_signatures_vectorized(
     Returns a pandas_udf: ``array<bigint>`` of ``num_tables`` packed
     signatures for an ``array<double>`` input column.
     """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     # closure-level cache: the pure-Python Box–Muller plane generation
     # (tables × planes × dim iterations) runs once per worker process,
     # not once per Arrow batch
@@ -139,6 +143,62 @@ def hyperplane_signatures_vectorized(
     return kernel.asNondeterministic()
 
 
+def _unit_rows(M: np.ndarray) -> np.ndarray:
+    """Rows of ``M`` scaled to unit L2 norm.  An all-zero row keeps norm
+    1 and stays zero, so it scores cosine 0 against everything."""
+    norms = np.linalg.norm(M, axis=1)
+    norms[norms == 0] = 1.0
+    return M / norms[:, None]
+
+
+def _block_pair_tiles(
+    df: DataFrame, id_col: str, vec_col: str, num_blocks: int, tile, out_schema
+) -> DataFrame:
+    """Run ``tile((bi, bj), pdf)`` once per block pair ``bi <= bj`` over
+    the non-NULL vectors of ``df`` (``pdf`` carries ``id_col``, the
+    float64 vector ``__v`` and ``__side``).
+
+    Vectors shard into ``num_blocks`` blocks by id.  A vector in block k
+    meets every block m exactly once, in tile (min(k,m), max(k,m)): it is
+    the tile's LEFT side (``__side`` 0) when k ≤ m and the RIGHT side
+    otherwise, so a square tile carries its block once, on side 0.  One
+    shuffle of n·B rows, B(B+1)/2 independent tile tasks."""
+    from .curation import shard_expr
+
+    base = df.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+    ).withColumn("__b", shard_expr(df, id_col, num_blocks))
+    k = F.col("__b")
+    pairs = F.transform(
+        F.sequence(F.lit(0), F.lit(num_blocks - 1)),
+        lambda m: F.struct(
+            F.least(k, m).cast("int").alias("bi"),
+            F.greatest(k, m).cast("int").alias("bj"),
+            F.when(k <= m, F.lit(0)).otherwise(F.lit(1)).alias("__side"),
+        ),
+    )
+    fanned = base.select(id_col, "__v", F.explode(pairs).alias("p")).select(
+        id_col, "__v",
+        F.col("p.bi").alias("bi"), F.col("p.bj").alias("bj"),
+        F.col("p.__side").alias("__side"),
+    )
+    return fanned.groupBy("bi", "bj").applyInPandas(tile, out_schema)
+
+
+def _top_k(
+    scored: DataFrame, part_col: str, id_col: str, order: Column, k: int,
+    rank: str = "rank",
+) -> DataFrame:
+    """Keep each ``part_col`` group's first ``k`` rows by ``order`` and
+    then ``id_col`` ascending — a total order, so ties break the same way
+    on retries and in every engine — numbered 1..k in ``rank``.  One
+    window hash-partitioned by ``part_col``, never a global sort."""
+    w = Window.partitionBy(part_col).orderBy(order, F.col(id_col).asc())
+    return scored.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
+
+
 def cosine_all_pairs_blocked(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -170,25 +230,18 @@ def cosine_all_pairs_blocked(
     path for HIGH thresholds (≈0.9 near-duplicates), where banding
     prunes candidates by orders of magnitude.
     """
-    import numpy as np
-    from typing import Tuple
-
     out_schema = f"id_a long, id_b long, cosine double"
     thr = float(threshold)
 
-    def tile(key: Tuple[int, int], pdf: pd.DataFrame) -> pd.DataFrame:
+    def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         bi, bj = key
         a = pdf[pdf["__side"] == 0]
         b = pdf[pdf["__side"] == 1] if bi != bj else a
         if len(a) == 0 or len(b) == 0:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        A = np.stack(a["__v"].to_numpy())
-        Bm = np.stack(b["__v"].to_numpy())
-        na = np.linalg.norm(A, axis=1)
-        nb = np.linalg.norm(Bm, axis=1)
-        na[na == 0] = 1.0
-        nb[nb == 0] = 1.0
-        sims = (A / na[:, None]) @ (Bm / nb[:, None]).T
+        sims = _unit_rows(np.stack(a["__v"].to_numpy())) @ _unit_rows(
+            np.stack(b["__v"].to_numpy())
+        ).T
         ia = a[id_col].to_numpy()
         ib = b[id_col].to_numpy()
         ii, jj = np.nonzero(sims >= thr)
@@ -206,35 +259,7 @@ def cosine_all_pairs_blocked(
             id_a, id_b = lo, hi
         return pd.DataFrame({"id_a": id_a, "id_b": id_b, "cosine": cs})
 
-    from .curation import shard_expr
-
-    base = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-    ).withColumn("__b", shard_expr(df, id_col, num_blocks))
-    # block-pair fan-out: a vector in block k meets every block m exactly
-    # once, in tile (min(k,m), max(k,m)); it is the tile's LEFT side when
-    # k ≤ m and the RIGHT side otherwise — nb structs per row, no branches
-    k = F.col("__b")
-    pairs = F.transform(
-        F.sequence(F.lit(0), F.lit(num_blocks - 1)),
-        lambda m: F.struct(
-            F.least(k, m).cast("int").alias("bi"),
-            F.greatest(k, m).cast("int").alias("bj"),
-            F.when(k <= m, F.lit(0)).otherwise(F.lit(1)).alias("__side"),
-        ),
-    )
-    fanned = base.select(
-        id_col, "__v", F.explode(pairs).alias("p")
-    ).select(
-        id_col, "__v",
-        F.col("p.bi").alias("bi"), F.col("p.bj").alias("bj"),
-        F.col("p.__side").alias("__side"),
-    )
-    return (
-        fanned.groupBy("bi", "bj")
-        .applyInPandas(tile, out_schema)
-        .select("id_a", "id_b", "cosine")
-    )
+    return _block_pair_tiles(df, id_col, vec_col, num_blocks, tile, out_schema)
 
 
 def knn_graph(
@@ -264,15 +289,6 @@ def knn_graph(
     partitioned by src (never a global sort).  At 100 TB this is the
     exact-kNN baseline the ANN tiers (ivf_topk / ivf_pq_topk) are
     measured against."""
-    import numpy as np
-    from typing import Tuple
-
-    from pyspark.sql import Window
-
-    from .curation import shard_expr
-
-    from pyspark.sql import types as st
-
     kk = int(k)
     # id-typed output schema (string/long/... ids all work — same rule as
     # brute_force_topk/ivf_topk)
@@ -304,21 +320,15 @@ def knn_graph(
             {"src": src_ids[src_idx], "dst": dst_ids[dst_idx], "cosine": cs}
         )
 
-    def tile(key: Tuple[int, int], pdf: pd.DataFrame) -> pd.DataFrame:
+    def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         bi, bj = key
         pdf = pdf.sort_values(id_col, kind="mergesort")
         a = pdf[pdf["__side"] == 0]
         b = pdf[pdf["__side"] == 1] if bi != bj else a
         if len(a) == 0 or len(b) == 0:
             return pd.DataFrame({"src": [], "dst": [], "cosine": []})
-        A = np.stack(a["__v"].to_numpy())
-        Bm = np.stack(b["__v"].to_numpy())
-        na = np.linalg.norm(A, axis=1)
-        nb = np.linalg.norm(Bm, axis=1)
-        na[na == 0] = 1.0
-        nb[nb == 0] = 1.0
-        An = A / na[:, None]
-        Bn = Bm / nb[:, None]
+        An = _unit_rows(np.stack(a["__v"].to_numpy()))
+        Bn = _unit_rows(np.stack(b["__v"].to_numpy()))
         sims = An @ Bn.T
         ia = a[id_col].to_numpy()
         ib = b[id_col].to_numpy()
@@ -333,38 +343,12 @@ def knn_graph(
             ignore_index=True,
         )
 
-    base = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-        )
-        .withColumn("__b", shard_expr(df, id_col, num_blocks))
+    edges = _block_pair_tiles(
+        df, id_col, vec_col, num_blocks, tile, out_schema
     )
-    kcol = F.col("__b")
-    pairs = F.transform(
-        F.sequence(F.lit(0), F.lit(num_blocks - 1)),
-        lambda m: F.struct(
-            F.least(kcol, m).cast("int").alias("bi"),
-            F.greatest(kcol, m).cast("int").alias("bj"),
-            F.when(kcol <= m, F.lit(0)).otherwise(F.lit(1)).alias("__side"),
-        ),
-    )
-    fanned = base.select(id_col, "__v", F.explode(pairs).alias("p")).select(
-        id_col,
-        "__v",
-        F.col("p.bi").alias("bi"),
-        F.col("p.bj").alias("bj"),
-        F.col("p.__side").alias("__side"),
-    )
-    edges = fanned.groupBy("bi", "bj").applyInPandas(tile, out_schema)
-    w = Window.partitionBy("src").orderBy(
-        F.col("cosine").desc(), F.col("dst").asc()
-    )
-    return (
-        edges.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= kk)
-        .select("src", "dst", "cosine", F.col("rn").cast("int").alias("rn"))
-    )
+    return _top_k(
+        edges, "src", "dst", F.col("cosine").desc(), kk, "rn"
+    ).select("src", "dst", "cosine", F.col("rn").cast("int").alias("rn"))
 
 
 def ann_recall(
@@ -422,6 +406,136 @@ def ann_recall(
     )
 
 
+def _parse_query_vec(raw, dim: int):
+    """Driver-side query-vector validation: returns a float64 numpy
+    vector or None for anything unscoreable (null, empty, null elements,
+    non-numeric, wrong dimension when ``dim`` > 0).  The guard exists so
+    ONE malformed record in a streamed micro-batch cannot crash the
+    foreachBatch epoch into a checkpoint replay loop."""
+    if raw is None:
+        return None
+    try:
+        qv = np.asarray(list(raw), dtype=np.float64)
+    except (TypeError, ValueError):
+        return None
+    if qv.ndim != 1 or qv.size == 0 or not np.isfinite(qv).all():
+        return None
+    if dim and qv.size != dim:
+        return None
+    return qv
+
+
+def _probe_map(
+    queries: DataFrame, q_id_col: str, q_vec_col: str, dim: int,
+    centroids=None, nprobe: int = 1,
+):
+    """Collect and parse the query frame and plan its probes.
+
+    Queries are small by contract: a probe set or one streamed
+    micro-batch, so the caller's batch size bounds this collect.
+    Returns ``(ids, Q, probe)``: the ids and float64 vectors (rows of
+    ``Q``) of the queries :func:`_parse_query_vec` accepts (with ``dim``
+    0 the first valid vector fixes it), and ``probe``, which maps each
+    probed cell to the positions of the queries that probe it.  A query
+    probes its ``nprobe`` nearest ``centroids`` by squared L2, ties to
+    the lower cell; without centroids every query probes the one cell
+    0."""
+    ids, vecs = [], []
+    for r in queries.select(q_id_col, q_vec_col).collect():
+        qv = _parse_query_vec(r[1], dim)
+        if qv is None:
+            continue
+        dim = dim or qv.size
+        ids.append(r[0])
+        vecs.append(qv)
+    if not vecs:
+        return np.asarray(ids), np.empty((0, dim)), {}
+    Q = np.stack(vecs)
+    if centroids is None:
+        cells = np.zeros((len(Q), 1), dtype=np.int64)
+    else:
+        C = np.asarray(centroids, dtype=np.float64)
+        d = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        cells = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
+    probe = {
+        int(c): np.nonzero((cells == c).any(axis=1))[0]
+        for c in np.unique(cells)
+    }
+    return np.asarray(ids), Q, probe
+
+
+def _probe_topk(
+    corpus: DataFrame, col: str, dtype: str, cell: Column, queries: DataFrame,
+    ids, probe: dict, score, k: int, id_col: str, q_id_col: str,
+    metric: str, order: Column,
+) -> DataFrame:
+    """The one probe-and-rank search behind every top-k scorer here.
+
+    Rows of ``corpus`` whose ``cell`` is probed and whose ``col`` is not
+    NULL are read as (id, ``col`` cast to ``dtype``, cell) by one
+    ``mapInPandas`` kernel.  Per Arrow batch and cell,
+    ``score(cell, qi, X)`` returns the (rows, len(qi)) ``metric`` matrix
+    of the stacked payload ``X`` against the queries at positions ``qi``
+    that probe the cell, so a query is only ever scored against its own
+    cells.  Then :func:`_top_k` keeps each query's first ``k`` by
+    ``order``: (q_id, id, metric, rank), empty but typed when no query
+    probes anything."""
+    schema = st.StructType(
+        [
+            st.StructField(q_id_col, queries.schema[q_id_col].dataType),
+            st.StructField(id_col, corpus.schema[id_col].dataType),
+            st.StructField(metric, st.DoubleType()),
+        ]
+    )
+
+    def emit(batches):
+        for pdf in batches:
+            for c, grp in pdf.groupby("__cell"):
+                qi = probe.get(c)
+                if qi is None:
+                    continue
+                scores = score(c, qi, np.stack(grp["__x"].to_numpy()))
+                yield pd.DataFrame(
+                    {
+                        q_id_col: np.tile(ids[qi], len(grp)),
+                        id_col: np.repeat(grp[id_col].to_numpy(), len(qi)),
+                        metric: scores.ravel(),
+                    }
+                )
+
+    if probe:
+        scored = corpus.filter(
+            F.col(col).isNotNull() & cell.isin(list(probe))
+        ).select(
+            id_col, F.col(col).cast(dtype).alias("__x"), cell.alias("__cell")
+        ).mapInPandas(emit, schema)
+    else:
+        scored = corpus.sparkSession.createDataFrame([], schema)
+    return _top_k(scored, q_id_col, id_col, order, k)
+
+
+def _cosine_topk(
+    vectors: DataFrame, queries: DataFrame, k: int, id_col: str,
+    vec_col: str, q_id_col: str, q_vec_col: str, centroids=None,
+    nprobe: int = 1,
+) -> DataFrame:
+    """Exact cosine scorer: :func:`brute_force_topk` is its one-cell
+    case (no centroids), :func:`ivf_topk` probes ``nprobe`` cells.
+    Query vectors are normalized once on the driver and ride the kernel
+    closure; each corpus batch is normalized and scored with one GEMM."""
+    dim = len(centroids[0]) if centroids else 0
+    ids, Q, probe = _probe_map(
+        queries, q_id_col, q_vec_col, dim, centroids, nprobe
+    )
+    Qn = _unit_rows(Q)
+    return _probe_topk(
+        vectors, vec_col, "array<double>",
+        F.lit(0) if centroids is None else F.col("__cell"), queries, ids,
+        probe, lambda c, qi, M: _unit_rows(M) @ Qn[qi].T, k, id_col,
+        q_id_col, "cosine", F.col("cosine").desc(),
+    ).drop("rank")
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -439,64 +553,11 @@ def brute_force_topk(
     Arrow batch of corpus vectors scores against ALL queries with one
     BLAS GEMM — no cross join, no per-pair interpreted HOF, the corpus
     is scanned exactly once.  The rank window shuffles only (q_id,
-    candidate) pairs.
+    candidate) pairs.  It is :func:`ivf_topk` with one cell that every
+    query probes; NULL or malformed query vectors are skipped.
     """
-    import numpy as np
-
-    from pyspark.sql import types as st
-
-    parsed = []
-    dim = 0
-    for r in queries.collect():
-        qv = _parse_query_vec(r[q_vec_col], dim)
-        if qv is None:
-            continue
-        dim = dim or qv.size  # first valid vector fixes the dimension
-        parsed.append((r[q_id_col], qv))
-    out_schema = st.StructType(
-        [
-            st.StructField(q_id_col, queries.schema[q_id_col].dataType),
-            st.StructField(id_col, vectors.schema[id_col].dataType),
-            st.StructField("cosine", st.DoubleType()),
-        ]
-    )
-    if not parsed:
-        return vectors.sparkSession.createDataFrame([], out_schema)
-    qids = np.asarray([qid for qid, _ in parsed])
-    Q = np.stack([qv for _, qv in parsed])
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0] = 1.0
-    Qn = Q / qn[:, None]
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack(pdf[vec_col].to_numpy())
-            norms = np.linalg.norm(M, axis=1)
-            norms[norms == 0] = 1.0
-            sims = (M / norms[:, None]) @ Qn.T  # (rows, nq)
-            n_rows, n_q = sims.shape
-            yield pd.DataFrame(
-                {
-                    q_id_col: np.tile(qids, n_rows),
-                    id_col: np.repeat(pdf[id_col].to_numpy(), n_q),
-                    "cosine": sims.ravel(),
-                }
-            )
-
-    scored = (
-        vectors.filter(F.col(vec_col).isNotNull())
-        .select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col))
-        .mapInPandas(score, out_schema)
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
+    return _cosine_topk(
+        vectors, queries, k, id_col, vec_col, q_id_col, q_vec_col
     )
 
 
@@ -557,9 +618,6 @@ def ivf_assign(
     ncells = len(centroids)
     dim = len(centroids[0]) if ncells else 0
     if ncells * dim >= _ASSIGN_VECTORIZE_FLOPS:
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
-
         C = np.asarray(centroids, dtype=np.float64)  # (cells, dim)
         c2 = (C * C).sum(axis=1)  # (cells,)
 
@@ -601,27 +659,6 @@ def ivf_assign(
     return vectors.withColumn("__cell", F.array_min(dists)["cell"])
 
 
-def _parse_query_vec(raw, dim: int):
-    """Driver-side query-vector validation: returns a float64 numpy
-    vector or None for anything unscoreable (null, empty, null elements,
-    non-numeric, wrong dimension when ``dim`` > 0).  The guard exists so
-    ONE malformed record in a streamed micro-batch cannot crash the
-    foreachBatch epoch into a checkpoint replay loop."""
-    import numpy as np
-
-    if raw is None:
-        return None
-    try:
-        qv = np.asarray(list(raw), dtype=np.float64)
-    except (TypeError, ValueError):
-        return None
-    if qv.ndim != 1 or qv.size == 0 or not np.isfinite(qv).all():
-        return None
-    if dim and qv.size != dim:
-        return None
-    return qv
-
-
 def ivf_topk(
     assigned: DataFrame,
     centroids: list[list[float]],
@@ -635,93 +672,16 @@ def ivf_topk(
 ) -> DataFrame:
     """Probe the ``nprobe`` nearest cells per query, exact cosine inside.
 
-    The (query, cell) probe list is tiny → broadcast; the big table is
-    filtered by cell (partition pruning when stored partitioned by cell)
-    before any scoring.
+    Result: (q_id, vec_id, cosine), each query's top k among the rows of
+    the cells it probed.  The big table is filtered by cell before any
+    scoring (partition pruning when it is stored partitioned by cell,
+    :func:`ivf_write`); each (Arrow batch, probed cell) is one BLAS GEMM
+    against that cell's queries.  A query vector that is NULL,
+    malformed or of the wrong dimension is skipped.
     """
-    import numpy as np
-
-    # per-cell probe map, built driver-side (queries are small by
-    # contract — the micro-batch/probe-set regime; the knob bounding this
-    # is the caller's batch size).  Query vectors are normalized HERE so
-    # the executor-side work is one GEMM per Arrow batch.
-    dim = len(centroids[0]) if centroids else 0
-    cell_qids: dict[int, list] = {}
-    cell_qvecs: dict[int, list] = {}
-    for q in queries.collect():
-        # malformed record ≠ wedged stream: skip anything that cannot
-        # score (null / empty / null-element / wrong-dimension vectors) —
-        # one bad streamed row must not crash the foreachBatch epoch
-        qv = _parse_query_vec(q[q_vec_col], dim)
-        if qv is None:
-            continue
-        d = [
-            (float(((qv - np.asarray(c)) ** 2).sum()), i)
-            for i, c in enumerate(centroids)
-        ]
-        d.sort()
-        nq = float(np.linalg.norm(qv))
-        qn = qv / nq if nq > 0 else qv
-        for _, cell in d[:nprobe]:
-            cell_qids.setdefault(cell, []).append(q[q_id_col])
-            cell_qvecs.setdefault(cell, []).append(qn)
-    probe_map = {
-        c: (cell_qids[c], np.stack(cell_qvecs[c])) for c in cell_qids
-    }
-    probed_cells = sorted(probe_map)
-
-    spark = assigned.sparkSession
-    from pyspark.sql import types as st
-
-    out_schema = st.StructType(
-        [
-            st.StructField(q_id_col, queries.schema[q_id_col].dataType),
-            st.StructField(id_col, assigned.schema[id_col].dataType),
-            st.StructField("cosine", st.DoubleType()),
-        ]
-    )
-    if not probed_cells:  # empty query batch → empty result, same schema
-        return spark.createDataFrame([], out_schema)
-
-    # scoring = one BLAS GEMM per (Arrow batch, probed cell): no join, no
-    # per-pair interpreted HOF, and the query matrix rides the closure —
-    # candidate vectors never pair-replicate.  The `isin(probed_cells)`
-    # filter is what partition pruning keys on when `assigned` comes from
-    # an ivf_write store partitioned by __cell.
-    def score(batches):
-        for pdf in batches:
-            for cell, grp in pdf.groupby("__cell"):
-                entry = probe_map.get(cell)
-                if entry is None or len(grp) == 0:
-                    continue
-                qids, Q = entry
-                M = np.stack(grp[vec_col].to_numpy())
-                norms = np.linalg.norm(M, axis=1)
-                norms[norms == 0] = 1.0
-                sims = (M / norms[:, None]) @ Q.T  # (rows, nq)
-                n_rows, n_q = sims.shape
-                yield pd.DataFrame(
-                    {
-                        q_id_col: np.tile(np.asarray(qids), n_rows),
-                        id_col: np.repeat(grp[id_col].to_numpy(), n_q),
-                        "cosine": sims.ravel(),
-                    }
-                )
-
-    scored = (
-        assigned.filter(
-            F.col("__cell").isin(probed_cells) & F.col(vec_col).isNotNull()
-        )
-        .select(id_col, vec_col, "__cell")
-        .mapInPandas(score, out_schema)
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
+    return _cosine_topk(
+        assigned, queries, k, id_col, vec_col, q_id_col, q_vec_col,
+        centroids, nprobe,
     )
 
 
@@ -729,9 +689,6 @@ def _ivf_cell_stats(assigned: DataFrame, centroids, vec_col: str) -> DataFrame:
     """Per-cell (count, mean L2 distance to own centroid) — one Arrow
     kernel + one ≤n_cells-group aggregate; the shared measurement
     behind build-time stats and :func:`ivf_drift_report`."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     C = np.asarray(centroids, dtype=np.float64)
 
     @pandas_udf("double")
@@ -947,8 +904,6 @@ def ivf_read(spark, path: str):
 def _pq_kmeans(X, m: int, nbits: int, seed: int, iters: int):
     """Per-subspace Lloyd k-means over a driver-side sample matrix —
     the shared trainer behind raw and residual codebooks."""
-    import numpy as np
-
     n, d = X.shape
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -996,11 +951,11 @@ def pq_train(
     ``v − centroid(cell(v))`` instead of ``v``.  Residuals concentrate
     around the origin with strictly less variance than the raw vectors
     (the coarse quantizer has already absorbed the cell-level spread),
-    so the same (m, nbits) budget quantizes tighter and recall rises at
-    identical cost.  ``vectors`` must then carry ``cell_col``.
+    so the same (m, nbits) budget quantizes tighter at identical cost
+    (SCALE.md: recall@10 +0.010–0.033 on isotropic 64-d vectors, no
+    gain on 256-d text embeddings).  ``vectors`` must then carry
+    ``cell_col``.
     """
-    import numpy as np
-
     # NULL vectors — and, in residual mode, NULL cells (a row whose
     # embedding was NULL at ivf_build time gets a NULL cell) — are
     # droppable for TRAINING (pq_encode's kernel already null-guards
@@ -1046,9 +1001,6 @@ def pq_encode(
     (IVFADC — pair with residual-trained codebooks and
     ``ivf_pq_topk(..., residual=True)``); ``df`` must carry
     ``cell_col``."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     cb = [np.array(c, dtype=np.float64) for c in codebooks]
     cb_sq = [(c * c).sum(axis=1) for c in cb]  # ||c||² per centroid, once
     m = len(cb)
@@ -1110,6 +1062,58 @@ def pq_encode(
     return df.withColumn("__pq", res_kernel(F.col(vec_col), F.col(cell_col)))
 
 
+def _adc_topk(
+    encoded: DataFrame, queries: DataFrame, codebooks, k: int, id_col: str,
+    q_id_col: str, q_vec_col: str, centroids=None, nprobe: int = 1,
+    residual: bool = False,
+) -> DataFrame:
+    """ADC scorer keyed by (query, cell): :func:`pq_topk` is its one-cell
+    case (no centroids), :func:`ivf_pq_topk` probes ``nprobe`` cells.
+
+    A lookup table (LUT) holds, per subspace j, the squared L2 from the
+    query's j-th subvector to each of the subspace's centroids; a code
+    word's distance is the sum of its m entries, so vectors are never
+    reconstructed.  Without ``residual`` a query's LUT is one array that
+    all its cells share, so driver memory does not grow with
+    ``nprobe``.  With ``residual`` (IVFADC) the LUT of (query, cell) is
+    built from the query residual ``q − centroid(cell)``, to match codes
+    that encode ``v − centroid(cell(v))``."""
+    cb = [np.asarray(c, dtype=np.float64) for c in codebooks]
+    m, dsub = len(cb), cb[0].shape[1]
+    ids, Q, probe = _probe_map(
+        queries, q_id_col, q_vec_col, m * dsub, centroids, nprobe
+    )
+
+    def luts(X):  # (queries, m, ksub)
+        subs = [X[:, None, j * dsub:(j + 1) * dsub] for j in range(m)]
+        return np.stack(
+            [((x - c[None]) ** 2).sum(axis=2) for x, c in zip(subs, cb)],
+            axis=1,
+        )
+
+    if residual:
+        C = np.asarray(centroids, dtype=np.float64)
+        tables = {
+            c: (luts(Q[qi] - C[c]), slice(None)) for c, qi in probe.items()
+        }
+    else:
+        shared = luts(Q)
+        tables = {c: (shared, qi) for c, qi in probe.items()}
+
+    def adc(c, qi, codes):
+        table, rows = tables[c]
+        dist = np.zeros((len(codes), len(qi)))
+        for j in range(m):
+            dist += table[rows, j][:, codes[:, j]].T
+        return dist
+
+    return _probe_topk(
+        encoded, "__pq", "array<int>",
+        F.lit(0) if centroids is None else F.col("__cell"), queries, ids,
+        probe, adc, k, id_col, q_id_col, "adc_dist", F.col("adc_dist").asc(),
+    )
+
+
 def pq_topk(
     encoded: DataFrame,
     queries: DataFrame,
@@ -1123,51 +1127,12 @@ def pq_topk(
     LUT of subspace squared distances, score every code word as m LUT
     lookups (never reconstructing vectors), window top-k per query.
 
-    Queries are small by contract (broadcast); the corpus side reads only
-    (id, codes).  Returns (q_id, vec_id, adc_dist, rank).
+    Queries are small by contract (they ride the kernel closure); the
+    corpus side reads only (id, codes).  NULL or malformed query vectors
+    and NULL codes are skipped.  Returns (q_id, vec_id, adc_dist, rank).
     """
-    import numpy as np
-    from pyspark.sql import Window
-    from pyspark.sql.functions import pandas_udf
-
-    cb = [np.array(c, dtype=np.float64) for c in codebooks]
-    m = len(cb)
-    dsub = cb[0].shape[1]
-    q_rows = queries.select(q_id_col, q_vec_col).collect()
-    luts = {}
-    for r in q_rows:
-        q = np.asarray(r[q_vec_col], dtype=np.float64)
-        luts[r[q_id_col]] = np.stack(
-            [((q[j * dsub:(j + 1) * dsub][None, :] - cb[j]) ** 2).sum(axis=1) for j in range(m)]
-        )  # [m, ksub]
-
-    q_ids = sorted(luts)
-
-    @pandas_udf("array<double>")
-    def score(codes: pd.Series) -> pd.Series:
-        out = []
-        idx = np.arange(m)
-        for c in codes:
-            if c is None:
-                out.append(None)
-                continue
-            cc = np.asarray(c, dtype=np.int64)
-            out.append([float(luts[q][idx, cc].sum()) for q in q_ids])
-        return pd.Series(out)
-
-    scored = encoded.select(
-        id_col, F.posexplode(score(F.col("__pq"))).alias("__qi", "adc_dist")
-    ).select(
-        F.element_at(
-            F.array(*[F.lit(q) for q in q_ids]), F.col("__qi") + 1
-        ).alias(q_id_col),
-        id_col,
-        "adc_dist",
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _adc_topk(
+        encoded, queries, codebooks, k, id_col, q_id_col, q_vec_col
     )
 
 
@@ -1188,9 +1153,11 @@ def ivf_pq_topk(
     shape: IVF cuts the scan fan-out, PQ cuts the bytes per scanned row.
 
     ``assigned`` must carry ``__cell`` (from :func:`ivf_build`) and
-    ``__pq`` (from :func:`pq_encode`).  Recall is bounded by both the
-    probe coverage and the quantization error; raise ``nprobe``/``m`` to
-    trade cost for recall.  Returns (q_id, vec_id, adc_dist, rank).
+    ``__pq`` (from :func:`pq_encode`).  Each query's top k is taken over
+    the rows of the cells IT probed, whatever other queries share the
+    batch.  Recall is bounded by both the probe coverage and the
+    quantization error; raise ``nprobe``/``m`` to trade cost for recall.
+    Returns (q_id, vec_id, adc_dist, rank).
 
     ``residual=True`` selects the IVFADC scoring path for codes produced
     by residual :func:`pq_train`/:func:`pq_encode`: the ADC lookup table
@@ -1200,123 +1167,9 @@ def ivf_pq_topk(
     driver-side table of ``nprobe × m × ksub`` doubles per query riding
     the closure, and scoring is still m lookups per code word.
     """
-    probe_cells: dict = {}
-    q_vecs: dict = {}
-    for q in queries.collect():  # queries small by contract
-        qv = list(q[q_vec_col])
-        d = sorted(
-            (sum((a - b) ** 2 for a, b in zip(qv, c)), i)
-            for i, c in enumerate(centroids)
-        )
-        probe_cells[q[q_id_col]] = [cell for _, cell in d[:nprobe]]
-        q_vecs[q[q_id_col]] = qv
-    cells = sorted({c for cs in probe_cells.values() for c in cs})
-    pruned = assigned.filter(F.col("__cell").isin(cells))
-    if residual:
-        return _ivf_pq_topk_residual(
-            pruned, centroids, codebooks, probe_cells, q_vecs,
-            k=k, id_col=id_col, q_id_col=q_id_col,
-        )
-    out = pq_topk(
-        pruned, queries, codebooks, k=k, id_col=id_col,
-        q_id_col=q_id_col, q_vec_col=q_vec_col,
-    )
-    # drop (query, row) scores from cells the query did not probe: the
-    # shared pruned frame is the UNION of all queries' cells
-    probe_df = out.sparkSession.createDataFrame(
-        [(q, c) for q, cs in probe_cells.items() for c in cs],
-        schema=queries.select(q_id_col).schema.add("__cell", "integer"),
-    )
-    cell_of = assigned.select(id_col, "__cell")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.col("adc_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        out.drop("rank")
-        .join(cell_of, id_col)
-        .join(F.broadcast(probe_df), [q_id_col, "__cell"], "left_semi")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("__cell")
-    )
-
-
-def _ivf_pq_topk_residual(
-    pruned: DataFrame,
-    centroids,
-    codebooks,
-    probe_cells: dict,
-    q_vecs: dict,
-    k: int,
-    id_col: str,
-    q_id_col: str,
-) -> DataFrame:
-    """IVFADC scoring: per (query, probed cell) LUT over the QUERY
-    RESIDUAL, applied to rows of that cell only.  A (query, cell) pair
-    the query did not probe scores NULL and is filtered — no
-    post-hoc semi-join cleanup needed (the LUT table itself encodes the
-    probe set)."""
-    import numpy as np
-    from pyspark.sql import Window
-    from pyspark.sql.functions import pandas_udf
-
-    cb = [np.array(c, dtype=np.float64) for c in codebooks]
-    m = len(cb)
-    dsub = cb[0].shape[1]
-    Cm = np.array(centroids, dtype=np.float64)
-    q_ids = sorted(probe_cells)
-    luts = {}  # (query position, cell) -> [m, ksub] subspace distances
-    for qi, q in enumerate(q_ids):
-        qv = np.asarray(q_vecs[q], dtype=np.float64)
-        for cell in probe_cells[q]:
-            r = qv - Cm[cell]
-            luts[(qi, cell)] = np.stack(
-                [
-                    ((r[j * dsub:(j + 1) * dsub][None, :] - cb[j]) ** 2).sum(axis=1)
-                    for j in range(m)
-                ]
-            )
-
-    @pandas_udf("array<double>")
-    def score(codes: pd.Series, cells: pd.Series) -> pd.Series:
-        idx = np.arange(m)
-        out = []
-        for c, cell in zip(codes, cells):
-            if c is None or cell is None:
-                out.append(None)
-                continue
-            cc = np.asarray(c, dtype=np.int64)
-            cell = int(cell)
-            out.append(
-                [
-                    float(luts[(qi, cell)][idx, cc].sum())
-                    if (qi, cell) in luts
-                    else None
-                    for qi in range(len(q_ids))
-                ]
-            )
-        return pd.Series(out)
-
-    scored = pruned.select(
-        id_col,
-        F.posexplode(score(F.col("__pq"), F.col("__cell"))).alias(
-            "__qi", "adc_dist"
-        ),
-    ).filter(F.col("adc_dist").isNotNull()).select(
-        F.element_at(
-            F.array(*[F.lit(q) for q in q_ids]), F.col("__qi") + 1
-        ).alias(q_id_col),
-        id_col,
-        "adc_dist",
-    )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.col("adc_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _adc_topk(
+        assigned, queries, codebooks, k, id_col, q_id_col, q_vec_col,
+        centroids, nprobe, residual,
     )
 
 
@@ -1391,8 +1244,6 @@ def _keep_dominant_per_bucket(
     The output id field inherits the INPUT's id type (string ids sort
     lexicographically — the keep rule only needs a total order), so
     any id column the public API accepts works here too."""
-    import numpy as np
-
     id_field = bucketed.schema[id_col].dataType.simpleString()
     out_schema = f"{id_col} {id_field}, bucket int"
 
@@ -1400,10 +1251,7 @@ def _keep_dominant_per_bucket(
         ids = pdf[id_col].to_numpy()
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
-        X = np.stack(pdf["__v"].to_numpy()[order])
-        n = np.linalg.norm(X, axis=1)
-        n[n == 0] = 1.0
-        Xn = X / n[:, None]
+        Xn = _unit_rows(np.stack(pdf["__v"].to_numpy()[order]))
         sims = Xn @ Xn.T
         # dominated ⇔ some STRICTLY-lower-id row scores ≥ thr: with ids
         # sorted ascending that is any above-threshold entry strictly
@@ -1517,8 +1365,6 @@ def kcenter_select(
     scale wants k-means-style assignment
     (:func:`semantic_dedup_ivf`), not a sequential greedy.
     """
-    import numpy as np
-
     if n <= 0:
         return []
     if n > max_picks:

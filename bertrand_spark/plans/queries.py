@@ -170,11 +170,15 @@ def q02(spark, sf_dir):
     SELECT l_orderkey, l_linenumber,
            CAST(l_quantity AS BIGINT) AS q,
            CAST(l_returnflag = 'R' AS INT) AS r
-    FROM lineitem ORDER BY l_orderkey, l_linenumber LIMIT 1000
+    FROM lineitem ORDER BY l_orderkey, l_linenumber, q, r LIMIT 1000
     """,
 )
 def q03(spark, sf_dir):
-    """Generic cast matrix (C3): float→int (trunc) + bool→int."""
+    """Generic cast matrix (C3): float→int (trunc) + bool→int.
+
+    ``(l_orderkey, l_linenumber)`` is not unique in the testdata, so the
+    sort also takes both outputs: rows tied on the whole key are
+    identical, and the 1000 kept rows are the same in every engine."""
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.select(
@@ -184,7 +188,7 @@ def q03(spark, sf_dir):
                      rounding="down", errors="coerce").alias("q"),
             (F.col("l_returnflag") == "R").cast("int").alias("r"),
         )
-        .orderBy("l_orderkey", "l_linenumber")
+        .orderBy("l_orderkey", "l_linenumber", "q", "r")
         .limit(1000)
     )
 
@@ -1035,8 +1039,8 @@ def x07(spark, sf_dir):
     """IVF top-k, probed exhaustively so the result is provably the exact
     brute-force top-k (the oracle): with ``nprobe == num_cells`` every
     cell is scanned and only the IVF machinery (KMeans centroids, cell
-    assignment, probe-list broadcast, per-cell pruning joins, windowed
-    top-k with deterministic ties) is under test.  The production scale
+    assignment, the per-cell probe map, cell pruning, windowed top-k
+    with deterministic ties) is under test.  The production scale
     path lowers ``nprobe`` — a recall/cost trade (x07 at nprobe=3 was
     the round-2 rows-only shape); at 100 TB the assigned table is
     written partitioned by ``__cell`` so low nprobe prunes files."""

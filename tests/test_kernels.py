@@ -90,7 +90,7 @@ def test_null_payload_gives_all_null_struct(spark):
 
 _PANDAS_UDF = re.compile(r"@(F\.)?pandas_udf|pandas_udf\(")
 # the sketch and numpy kernels that stay hand-written Arrow kernels
-_KEPT = {"pipeline/dedup.py": 3, "pipeline/similarity.py": 7}
+_KEPT = {"pipeline/dedup.py": 3, "pipeline/similarity.py": 5}
 
 
 def test_pandas_udf_only_in_helper_and_kept_kernels():

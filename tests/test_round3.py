@@ -615,59 +615,3 @@ def _group(rows, key):
         out.setdefault(r[key], []).append(r)
     return out
 
-
-class TestIvfPq:
-    def test_composition_recall(self, spark, sf_dir):
-        from bertrand_spark.pipeline.similarity import (
-            ivf_build, ivf_pq_topk, pq_encode, pq_train,
-        )
-
-        e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        assigned, centroids = ivf_build(e, num_cells=4, seed=5)
-        cb = pq_train(e, "embedding", m=8, nbits=6, seed=5)
-        enc = pq_encode(assigned, cb).select("vec_id", "__cell", "__pq").persist()
-        enc.count()
-        queries = (
-            e.filter(F.col("vec_id") < 3)
-            .select(F.col("vec_id").alias("q_id"), "embedding")
-        )
-        # exhaustive probe (nprobe = all cells) ≈ flat pq_topk ranking
-        out = ivf_pq_topk(enc, centroids, cb, queries, k=5, nprobe=4)
-        rows = out.collect()
-        by_q = {}
-        for r in rows:
-            by_q.setdefault(r["q_id"], []).append(r)
-        assert set(by_q) == {0, 1, 2}
-        for q, rs in by_q.items():
-            assert len(rs) == 5
-            assert [r["rank"] for r in sorted(rs, key=lambda r: r["adc_dist"])] == [1, 2, 3, 4, 5]
-            # the query vector itself must be its own nearest code word
-            assert min(rs, key=lambda r: r["adc_dist"])["vec_id"] == q
-
-    def test_pruning_restricts_cells(self, spark, sf_dir):
-        from bertrand_spark.pipeline.similarity import (
-            ivf_build, ivf_pq_topk, pq_encode, pq_train,
-        )
-
-        e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        assigned, centroids = ivf_build(e, num_cells=4, seed=5)
-        cb = pq_train(e, "embedding", m=4, nbits=4, seed=5)
-        enc = pq_encode(assigned, cb)
-        queries = (
-            e.filter(F.col("vec_id") == 0)
-            .select(F.col("vec_id").alias("q_id"), "embedding")
-        )
-        out = ivf_pq_topk(enc, centroids, cb, queries, k=50, nprobe=1)
-        # with nprobe=1 every result must come from the query's own cell
-        got_ids = {r["vec_id"] for r in out.collect()}
-        qv = e.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-        d = sorted(
-            (sum((a - b) ** 2 for a, b in zip(qv, c)), i)
-            for i, c in enumerate(centroids)
-        )
-        own_cell = d[0][1]
-        cell_ids = {
-            r["vec_id"]
-            for r in enc.filter(F.col("__cell") == own_cell).collect()
-        }
-        assert got_ids <= cell_ids and got_ids

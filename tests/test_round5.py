@@ -206,130 +206,6 @@ class TestBucketedFingerprintStore:
         assert got == want
 
 
-class TestResidualPq:
-    """IVFADC residual encoding (Jégou et al. 2011 §III): quantizing
-    ``v − centroid(cell)`` must lift recall over raw-vector PQ at
-    identical (m, nbits, nprobe) — the round-4 VERDICT action item.
-    Margins measured at sf0.001 (seeded, deterministic): ~+0.07–0.10
-    recall@10; the gate uses half that as a jitter allowance."""
-
-    @pytest.fixture(scope="class")
-    def stack(self, spark, sf_dir):
-        from bertrand_spark.pipeline.similarity import (
-            ann_recall, brute_force_topk, ivf_build,
-        )
-
-        e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").persist()
-        e.count()
-        assigned, centroids = ivf_build(e, num_cells=8, seed=42)
-        assigned = assigned.persist()
-        assigned.count()
-        queries = e.limit(60).select(F.col("vec_id").alias("q_id"), "embedding")
-        exact = brute_force_topk(
-            e, queries.withColumnRenamed("embedding", "q_vec"), k=10
-        ).persist()
-        exact.count()
-
-        def recall(approx):
-            return ann_recall(
-                exact, approx, query_col="q_id", id_col="vec_id"
-            ).collect()[0]["micro_recall"]
-
-        yield e, assigned, centroids, queries, recall
-        e.unpersist()
-        assigned.unpersist()
-        exact.unpersist()
-
-    @pytest.mark.parametrize("m,nprobe", [(16, 2), (8, 2)])
-    def test_residual_beats_raw_at_identical_budget(self, stack, m, nprobe):
-        from bertrand_spark.pipeline.similarity import (
-            ivf_pq_topk, pq_encode, pq_train,
-        )
-
-        e, assigned, centroids, queries, recall = stack
-        cb_raw = pq_train(e, "embedding", m=m, nbits=6, seed=42)
-        enc_raw = pq_encode(assigned, cb_raw).select("vec_id", "__cell", "__pq")
-        cb_res = pq_train(
-            assigned, "embedding", m=m, nbits=6, seed=42, centroids=centroids
-        )
-        enc_res = pq_encode(assigned, cb_res, centroids=centroids).select(
-            "vec_id", "__cell", "__pq"
-        )
-        raw = recall(
-            ivf_pq_topk(enc_raw, centroids, cb_raw, queries, k=10, nprobe=nprobe)
-        )
-        res = recall(
-            ivf_pq_topk(
-                enc_res, centroids, cb_res, queries, k=10, nprobe=nprobe,
-                residual=True,
-            )
-        )
-        assert res >= raw + 0.03
-
-    def test_null_vec_and_cell_rows_excluded_from_training(self, spark, stack):
-        """Round-6 (r5 ADVICE): rows whose embedding was NULL at
-        ivf_build time carry a NULL __cell; pq_train must skip them in
-        the training sample (pq_encode already null-guards) instead of
-        crashing with an opaque numpy TypeError, and an all-null input
-        must raise a clear ValueError naming the column."""
-        from pyspark.sql import types as T
-
-        from bertrand_spark.pipeline.similarity import pq_train
-
-        e, assigned, centroids, _, _ = stack
-        null_row = spark.createDataFrame(
-            [(10**9, None, None)],
-            T.StructType(
-                [
-                    T.StructField("vec_id", T.LongType()),
-                    T.StructField(
-                        "embedding", T.ArrayType(T.DoubleType())
-                    ),
-                    T.StructField("__cell", T.IntegerType()),
-                ]
-            ),
-        )
-        with_nulls = assigned.select(
-            "vec_id", "embedding", "__cell"
-        ).unionByName(null_row)
-        cb = pq_train(
-            with_nulls, "embedding", m=4, nbits=4, seed=3,
-            centroids=centroids,
-        )
-        assert len(cb) == 4
-        all_null = null_row.union(null_row)
-        with pytest.raises(ValueError, match="embedding"):
-            pq_train(
-                all_null, "embedding", m=4, nbits=4, seed=3,
-                centroids=centroids,
-            )
-
-    def test_residual_ranks_well_formed(self, stack):
-        from bertrand_spark.pipeline.similarity import (
-            ivf_pq_topk, pq_encode, pq_train,
-        )
-
-        e, assigned, centroids, queries, _ = stack
-        cb = pq_train(
-            assigned, "embedding", m=8, nbits=6, seed=7, centroids=centroids
-        )
-        enc = pq_encode(assigned, cb, centroids=centroids).select(
-            "vec_id", "__cell", "__pq"
-        )
-        q3 = queries.limit(3)
-        out = ivf_pq_topk(
-            enc, centroids, cb, q3, k=5, nprobe=8, residual=True
-        ).collect()
-        by_q = {}
-        for r in out:
-            by_q.setdefault(r["q_id"], []).append(r)
-        assert len(by_q) == 3
-        for q, rs in by_q.items():
-            assert sorted(r["rank"] for r in rs) == [1, 2, 3, 4, 5]
-            # exhaustive probes: the query must be its own nearest code
-            assert min(rs, key=lambda r: r["adc_dist"])["vec_id"] == q
-
-
 class TestDecodeFormatReport:
     def test_fallback_blind_spot_is_visible(self, spark):
         """Without PIL, PNG decodes and JPEG yields NULL rows — the
