@@ -19,7 +19,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from .convert.cast import cast as _cast_impl
+from .convert.cast import CastArgs, cast as _cast_impl
 from .convert.downcast import downcast as _downcast_impl
 from .types.detect import detect as _detect_impl, typecheck as _typecheck_impl
 from .decorators import attachable, extension_func
@@ -35,36 +35,16 @@ def _cast_ext(df: DataFrame, spec: Any = None, cols: Any = None, **kwargs: Any):
     return _cast_impl(df, spec, cols=cols, **kwargs)
 
 
-@_cast_ext.argument(default=1e-6)
-def tol(val: Any) -> float:
-    out = float(val)
-    if out < 0:
-        raise ValueError(f"tol must be >= 0, got {val!r}")
-    return out
+# managed kwargs: ``CastArgs`` owns each check, so the attached verb and a
+# direct ``cast()`` accept and reject the same values
+def _checked(name: str):
+    return lambda val: getattr(CastArgs(**{name: val}), name)
 
 
-@_cast_ext.argument(default=None)
-def rounding(val: Any):
-    from .functions.rounding import RULES
-    if val is not None and val not in RULES:
-        raise ValueError(f"rounding must be one of {sorted(RULES)}, got {val!r}")
-    return val
-
-
-@_cast_ext.argument(default="ns")
-def unit(val: Any) -> str:
-    from .functions.temporal import AS_NS
-    if val not in AS_NS and val not in ("M", "Y"):
-        raise ValueError(f"unrecognized unit {val!r}")
-    return val
-
-
-@_cast_ext.argument(default="raise")
-def errors(val: Any) -> str:
-    if val not in ("raise", "ignore", "coerce"):
-        raise ValueError(f"errors must be raise|ignore|coerce, got {val!r}")
-    return val
-
+for _name, _default in (
+    ("tol", 1e-6), ("rounding", None), ("unit", "ns"), ("errors", "raise")
+):
+    _cast_ext.argument(default=_default, name=_name)(_checked(_name))
 
 cast_ = _cast_ext
 

@@ -12,21 +12,24 @@ construction on the driver** — validate kwargs → resolve types → look up t
 (src-family, dst-family) overload → emit a native ``Column`` expression →
 ``withColumn``.  No UDF appears anywhere in the matrix below; every rule is
 whole-stage-codegen-able, so a cast over 100 TB is one narrow projection with
-zero shuffle.  ``errors='raise'`` adds one validation aggregate (count of
-violations) — the only action — which Catalyst evaluates with pushed-down
-predicates.
+zero shuffle.  Two aggregates are the only actions, each one job over all
+columns: ``errors='raise'`` (and ``'ignore'``, to pick the casts it
+reverts) adds one validation aggregate (count of new NULLs), which
+Catalyst evaluates with pushed-down predicates; the anonymous cast
+(``spec=None``) first runs one inference aggregate (a set of type tags per
+candidate column, struct leaf or array).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Callable, Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 import pyspark.sql.types as st
 
-from ..functions.rounding import round_col, snap_round, within_tol
+from ..functions.rounding import RULES, round_col, round_div, snap_round
 from ..functions.strings import (
     FALSE_TOKENS,
     TRUE_TOKENS,
@@ -37,12 +40,18 @@ from ..functions.strings import (
 )
 from ..functions.temporal import (
     AS_NS,
-    epoch_ns,
+    convert_unit,
+    fuzzy_parse_datetime,
+    interval_to_ns,
+    ns_per_unit,
+    ns_to_interval,
     ns_to_timestamp,
     parse_timedelta_string,
+    td_ns_to_string,
     timestamp_to_ns,
 )
 from ..types.core import AnyType, DecoratedType, ScalarType, StructuredType, UnionType
+from ..types.detect import TAG_TO_TYPE, python_type_tag, tag_census, type_tag_column
 from ..types.resolve import resolve
 
 __all__ = ["cast", "cast_col", "CastError", "cast_overload", "CastArgs"]
@@ -80,6 +89,13 @@ class CastArgs:
     def __post_init__(self) -> None:
         if self.errors not in ("raise", "ignore", "coerce"):
             raise ValueError(f"errors must be raise|ignore|coerce, got {self.errors!r}")
+        if float(self.tol) < 0:
+            raise ValueError(f"tol must be >= 0, got {self.tol!r}")
+        self.tol = float(self.tol)
+        if self.rounding is not None and self.rounding not in RULES:
+            raise ValueError(
+                f"rounding must be one of {sorted(RULES)}, got {self.rounding!r}"
+            )
         if self.unit not in AS_NS and self.unit not in ("M", "Y"):
             raise ValueError(f"unrecognized unit {self.unit!r}")
         if not 0 <= self.base <= 36 or self.base == 1:
@@ -296,7 +312,6 @@ def _datetime_to_int(col, src, dst, a: CastArgs):
     div = AS_NS[a.unit] * a.step_size
     if div == 1:
         return ns
-    from ..functions.rounding import round_div
     return round_div(ns, F.lit(div), a.rounding or "down").cast("long")
 
 
@@ -304,16 +319,13 @@ def _datetime_to_int(col, src, dst, a: CastArgs):
 def _int_to_timedelta(col, src, dst, a: CastArgs):
     # ns LongType internal currency (SURVEY §7.4); M/Y use epoch-free
     # calendar means (ref unit.pyx:231-430 round_months_to_ns)
-    from ..functions.temporal import convert_unit
     return convert_unit(col.cast("long") * F.lit(a.step_size), a.unit, "ns")
 
 
 @_rule("timedelta", "int")
 def _timedelta_to_int(col, src, dst, a: CastArgs):
-    from ..functions.temporal import convert_unit
     out = convert_unit(col.cast("long"), "ns", a.unit, a.rounding or "down")
     if a.step_size != 1:
-        from ..functions.rounding import round_div
         out = round_div(out, F.lit(a.step_size), a.rounding or "down")
     return out.cast("long")
 
@@ -353,7 +365,6 @@ def _float_to_datetime(col, src, dst, a: CastArgs):
 @_rule("decimal", "timedelta")
 def _float_to_timedelta(col, src, dst, a: CastArgs):
     # ref convert/float.py:260 / decimal.py:208
-    from ..functions.temporal import ns_per_unit
     per = float(ns_per_unit(a.unit) * a.step_size)
     return F.round(col.cast("double") * F.lit(per)).cast("long")
 
@@ -405,7 +416,6 @@ def _dt_to_str(col, src, dst, a: CastArgs):
 @_rule("datetime", "float")
 @_rule("datetime", "decimal")
 def _dt_to_float(col, src, dst, a: CastArgs):
-    from ..functions.temporal import ns_per_unit
     ns = timestamp_to_ns(col.cast("timestamp"), a.since, a.tz)
     per = float(ns_per_unit(a.unit) * a.step_size)
     return (ns.cast("double") / F.lit(per)).cast(dst.spark_type)
@@ -415,7 +425,6 @@ def _dt_to_float(col, src, dst, a: CastArgs):
 @_rule("timedelta", "decimal")
 def _td_to_float(col, src, dst, a: CastArgs):
     # ref convert/timedelta.py:140
-    from ..functions.temporal import ns_per_unit
     per = float(ns_per_unit(a.unit) * a.step_size)
     return (col.cast("double") / F.lit(per)).cast(dst.spark_type)
 
@@ -426,14 +435,9 @@ def _temporal_to_complex(col, src, dst, a: CastArgs):
     # ref convert/datetime.py:183 — unit count as the real part
     fam = _family(src)
     re = (_dt_to_float if fam == "datetime" else _td_to_float)(
-        col, src, resolve_float64(), a
+        col, src, resolve("float64"), a
     )
     return F.struct(re.cast("double").alias("re"), F.lit(0.0).alias("im"))
-
-
-def resolve_float64():
-    from ..types.resolve import resolve as _r
-    return _r("float64")
 
 
 # --- string sources (the parsing layer) ------------------------------------
@@ -500,7 +504,6 @@ def _str_to_datetime(col, src, dst, a: CastArgs):
     if a.fuzzy:
         # dateutil fuzzy=True semantics (datetime.pyx:292): Arrow-batched
         # kernel, only consulted where the native paths returned NULL
-        from ..functions.temporal import fuzzy_parse_datetime
         out = F.coalesce(out, fuzzy_parse_datetime(s, a.day_first, a.year_first))
     if a.tz:
         out = F.from_utc_timestamp(out, a.tz)
@@ -547,7 +550,6 @@ def _complex_to_str(col, src, dst, a: CastArgs):
 
 @_rule("timedelta", "string")
 def _td_to_str(col, src, dst, a: CastArgs):
-    from ..functions.temporal import td_ns_to_string
     return td_ns_to_string(col.cast("long"))
 
 
@@ -559,36 +561,43 @@ def _quoted_key(name: str, parts: tuple) -> str:
     return key
 
 
-def _struct_string_leaves(name: str, dtype, prefix: tuple = ()) -> list:
-    """(display_key, parts, is_array) for every STRING and
-    ARRAY<STRING> leaf under a struct column — the nested candidates of
-    the anonymous cast (round 9: the XML source's nested elements
-    arrive as all-string structs; round 10: its *repeated* elements
-    arrive as ``array<string>`` and promote element-wise).  ``parts``
-    is the field-name PATH AS A LIST (never re-split, so field names
-    containing literal dots — legal in XML and ubiquitous as JSON keys
-    — resolve correctly); the display key is the fully backtick-quoted
-    dotted path (``[]``-suffixed for arrays), which also cannot collide
-    with any top-level column's raw name — top-level candidates with a
-    backtick in the name are skipped from candidacy, mirroring this
-    skip.  Names containing a backtick are skipped (unquotable in
-    withField).  Arrays of structs stay as-is (Spark's XML source emits
-    them for repeated complex elements; promoting inside them would
-    need transform-over-struct rebuilds with no reference precedent)."""
-    out = []
-    for f in dtype.fields:
-        if "`" in f.name:
-            continue
-        parts = prefix + (f.name,)
-        if isinstance(f.dataType, st.StringType):
-            out.append((_quoted_key(name, parts), parts, False))
-        elif isinstance(f.dataType, st.ArrayType) and isinstance(
-            f.dataType.elementType, st.StringType
-        ):
-            out.append((_quoted_key(name, parts) + "[]", parts, True))
-        elif isinstance(f.dataType, st.StructType):
-            out.extend(_struct_string_leaves(name, f.dataType, parts))
-    return out
+def _walk(top: str, parts: tuple, dtype: st.DataType):
+    """(key, (top, parts, kind)) for every candidate at or under one field;
+    see ``_candidates``."""
+    if isinstance(dtype, st.StructType):
+        for f in dtype.fields:
+            if "`" not in f.name:  # unquotable in withField
+                yield from _walk(top, parts + (f.name,), f.dataType)
+    elif isinstance(dtype, st.ArrayType) and isinstance(dtype.elementType, st.StringType):
+        yield _quoted_key(top, parts) + "[]", (top, parts, "array")
+    elif isinstance(dtype, st.StringType):
+        yield (_quoted_key(top, parts) if parts else top), (top, parts, "scalar")
+    elif isinstance(dtype, st.BinaryType) and not parts:
+        yield top, (top, parts, "object")
+
+
+def _candidates(df: DataFrame, cols: list[str] | None = None) -> dict:
+    """The anonymous cast's candidates: ``{key: (top, parts, kind)}``.
+
+    ``kind`` is ``scalar`` (a string), ``array`` (an ``array<string>``,
+    promoted element-wise: XML's *repeated* elements) or ``object`` (a
+    pickled binary column).  Top-level strings and objects are keyed by
+    their raw name with ``parts == ()``.  Struct leaves (XML's nested
+    all-string elements) are keyed by their fully backtick-quoted dotted
+    path and arrays by that path plus ``[]``, so no key collides with a
+    raw top-level name.  ``parts`` is the field-name path as a tuple,
+    never re-split, so field names holding literal dots (legal in XML,
+    common as JSON keys) resolve.  Names holding a backtick are skipped at
+    every level; arrays of structs stay as they are (promoting inside them
+    would need transform-over-struct rebuilds with no reference
+    precedent).
+    """
+    return {
+        key: path
+        for f in df.schema.fields
+        if "`" not in f.name and (cols is None or f.name in cols)
+        for key, path in _walk(f.name, (), f.dataType)
+    }
 
 
 def _field_expr(top: str, parts: tuple) -> Column:
@@ -598,226 +607,65 @@ def _field_expr(top: str, parts: tuple) -> Column:
     return col
 
 
-def _nested_candidate_paths(df: DataFrame) -> dict:
-    """{display_key: (top_column, parts, is_array)} over every struct
-    string/array<string> leaf and top-level array<string> column — the
-    deterministic inverse of the keys infer_best_types emits.  A
-    top-level array column has ``parts == ()`` (its rebuild replaces
-    the column outright, no withField)."""
-    out = {}
-    for f in df.schema.fields:
-        if "`" in f.name:
-            continue
-        if isinstance(f.dataType, st.StructType):
-            for key, parts, is_arr in _struct_string_leaves(
-                f.name, f.dataType
-            ):
-                out[key] = (f.name, parts, is_arr)
-        elif isinstance(f.dataType, st.ArrayType) and isinstance(
-            f.dataType.elementType, st.StringType
-        ):
-            out[_quoted_key(f.name, ()) + "[]"] = (f.name, (), True)
-    return out
+def _object_tag(col: Column) -> Column:
+    from .objects import apply_with_errors
+
+    return apply_with_errors(col, python_type_tag, "coerce", "string", unpickle=True)
 
 
 def infer_best_types(df: DataFrame, cols: list[str] | None = None) -> dict[str, str]:
-    """Dominant parseable type per string/object column — ONE aggregate job
-    over all candidate columns (reference anonymous cast,
-    ``convert/base.py:156-163``: ``cast(df)`` detects then converts).
+    """Dominant parseable type per candidate — ONE aggregate job over all
+    candidates (reference anonymous cast, ``convert/base.py:156-163``:
+    ``cast(df)`` detects then converts).
 
-    A column is promoted only when EVERY non-missing element parses as the
-    target family: all-bool → bool, all-int → int64, int/float mix →
-    float64, all-ISO-datetime → datetime; anything else stays put.
-    Object (pickled binary) columns tag via the Arrow kernel first.
-    STRING LEAVES INSIDE STRUCT COLUMNS are candidates too (round 9),
-    keyed by their dotted path (``doc.meta.qty``) — the same one-
-    aggregate convention, so XML's nested all-string structs promote
-    exactly like its top-level elements.  ARRAY<STRING> columns and
-    struct leaves (round 10: XML's *repeated* elements) are candidates
-    too, keyed with a ``[]`` suffix: every element across every row is
-    tagged inside the SAME aggregate (per-tag ``size(filter(...))``
-    sums — higher-order functions are CodegenFallback, but this is the
-    one inference scan, not a per-row hot path) and the column promotes
-    only when every non-null element agrees, exactly like a scalar
-    column.  Top-level candidates with a backtick in the name are
-    skipped (they could collide with a quoted nested display key).
+    Candidates (``_candidates``) are top-level string and pickled-object
+    columns, string leaves of struct columns (keyed by their quoted path)
+    and ``array<string>`` columns and leaves (keyed with a ``[]`` suffix).
+    The job holds one set-valued census per candidate
+    (``types.detect.tag_census``): the distinct type tags of its values,
+    or of every element across every row of an array.  A candidate is
+    promoted only when EVERY non-missing value tags as one family:
+    all-bool → bool, all-int → int64, int/float mix → float64,
+    all-ISO-datetime → datetime; object columns also reach decimal,
+    complex, timedelta and (all-``str``) string.  Anything else stays put.
     """
-    from ..types.detect import type_tag_column
-
-    candidates: dict[str, Column] = {}
-    array_candidates: dict[str, Column] = {}
-    for f in df.schema.fields:
-        if cols is not None and f.name not in cols:
-            continue
-        if "`" in f.name:
-            continue
-        if isinstance(f.dataType, st.StringType):
-            candidates[f.name] = type_tag_column(F.col(f.name))
-        elif isinstance(f.dataType, st.ArrayType) and isinstance(
-            f.dataType.elementType, st.StringType
-        ):
-            array_candidates[_quoted_key(f.name, ()) + "[]"] = F.col(f.name)
-        elif isinstance(f.dataType, st.StructType):
-            for key, parts, is_arr in _struct_string_leaves(
-                f.name, f.dataType
-            ):
-                expr = _field_expr(f.name, parts)
-                if is_arr:
-                    array_candidates[key] = expr
-                else:
-                    candidates[key] = type_tag_column(expr)
-        elif isinstance(f.dataType, st.BinaryType):
-            from .objects import apply_with_errors
-
-            def _pytag(v: Any) -> str:
-                import datetime as _dt
-                import decimal as _decimal
-                if isinstance(v, bool):
-                    return "bool"
-                if isinstance(v, int):
-                    return "int"
-                if isinstance(v, float):
-                    return "float"
-                if isinstance(v, complex):
-                    return "complex"
-                if isinstance(v, _decimal.Decimal):
-                    return "decimal"
-                if isinstance(v, _dt.datetime):
-                    return "datetime"
-                if isinstance(v, _dt.timedelta):
-                    return "timedelta"
-                if isinstance(v, str):
-                    return "str"
-                return "object"
-
-            candidates[f.name] = F.coalesce(
-                apply_with_errors(
-                    F.col(f.name), _pytag, "coerce", "string", unpickle=True
-                ),
-                F.lit("missing"),
-            )
-    if not candidates and not array_candidates:
+    paths = _candidates(df, cols)
+    if not paths:
         return {}
-
-    tags = ("missing", "bool", "int", "float", "complex", "decimal",
-            "datetime", "timedelta", "str", "object")
-    aggs = [
-        F.count(F.when(tag_expr == t, 1)).alias(f"{name}\tc{i}")
-        for name, tag_expr in candidates.items()
-        for i, t in enumerate(tags)
-    ]
-    # array candidates: per-tag element counts (NULL/empty arrays and
-    # NULL elements contribute nothing to the non-missing present set).
-    # NB: the predicate must be a ONE-parameter lambda — F.filter reads
-    # a second parameter as the element-index binding.
-    def _tag_eq(t: str):
-        return lambda x: type_tag_column(x) == t
-
-    aggs += [
-        # outer coalesce: F.sum over ZERO rows is SQL NULL (the same
-        # empty-input trap rollup.py's counters guard against), and
-        # the plan loop below compares counts with `> 0`
-        F.coalesce(
-            F.sum(F.coalesce(
-                F.size(F.filter(arr, _tag_eq(t))), F.lit(0),
-            )),
-            F.lit(0),
-        ).alias(f"{name}\tc{i}")
-        for name, arr in array_candidates.items()
-        for i, t in enumerate(tags)
-    ]
-    row = df.select(*aggs).collect()[0]
+    row = df.select(*[
+        tag_census(
+            _field_expr(top, parts),
+            array=kind == "array",
+            tagger=_object_tag if kind == "object" else type_tag_column,
+        ).alias(key)
+        for key, (top, parts, kind) in paths.items()
+    ]).collect()[0]
 
     plan: dict[str, str] = {}
-    for name in list(candidates) + list(array_candidates):
-        counts = {t: row[f"{name}\tc{i}"] for i, t in enumerate(tags)}
-        present = {t for t, n in counts.items() if n > 0 and t != "missing"}
-        if not present:
-            continue
-        target = None
-        if present == {"bool"}:
-            target = "bool"
-        elif present == {"int"}:
-            target = "int64"
-        elif present <= {"int", "float"}:
-            target = "float64"
-        elif present == {"decimal"}:
-            target = "decimal"
-        elif present == {"complex"}:
-            target = "complex"
-        elif present == {"datetime"}:
-            target = "datetime"
-        elif present == {"timedelta"}:
-            target = "timedelta"
-        elif present == {"str"} and name in {
-            f.name for f in df.schema.fields
-        } and isinstance(df.schema[name].dataType, st.BinaryType):
-            target = "string"
-        if target is not None:
-            plan[name] = target
+    for key, (_, _, kind) in paths.items():
+        tags = set(row[key]) - {"missing"}
+        if tags == {"int", "float"}:
+            tags = {"float"}  # an int/float mix widens to float64
+        # `str` names a type only for a pickled-object column
+        if len(tags) == 1 and (tags != {"str"} or kind == "object"):
+            target = TAG_TO_TYPE.get(tags.pop())
+            if target is not None:
+                plan[key] = target
     return plan
 
 
-def _struct_leaf_casts(
-    df: DataFrame, nested: dict, a: "CastArgs", kwargs: dict
-):
-    """Build the anonymous cast's struct-leaf promotion expressions:
-    {display_key: cast expr} plus the validation triples.  Validation
-    itself is DEFERRED to cast()'s single aggregate, so a frame with
-    both struct leaves and top-level promotions still costs one
-    validation scan (the module's one-scan convention)."""
-    paths = _nested_candidate_paths(df)
-    build_kwargs = (
-        {**kwargs, "errors": "coerce"} if a.errors == "ignore" else kwargs
-    )
-    exprs: dict[str, Column] = {}
-    validations: list[tuple[str, Column]] = []
-    for key, dst in nested.items():
-        top, parts, is_arr = paths[key]
-        before = _field_expr(top, parts)
-        try:
-            if is_arr:
-                # element-wise promotion: transform over the array; the
-                # violation count is element-level (a non-null element
-                # whose cast nulled), summed inside the same aggregate
-                expr = F.transform(
-                    before,
-                    lambda x: cast_col(x, "string", dst, **build_kwargs),
-                )
-            else:
-                expr = cast_col(before, "string", dst, **build_kwargs)
-        except CastError:
-            if a.errors == "ignore":
-                continue
-            raise
-        exprs[key] = expr
-        if a.errors in ("raise", "ignore"):
-            if is_arr:
-                validations.append((key, _array_violation_agg(
-                    key, before,
-                    lambda x: cast_col(x, "string", dst, **build_kwargs),
-                )))
-            else:
-                validations.append(
-                    (key, _violation_agg(key, before, expr))
-                )
-    return exprs, validations, paths
-
-
-def _struct_rebuild_columns(exprs: dict, paths: dict) -> dict:
-    """Fold the surviving leaf casts into per-struct-column rebuild
-    expressions (chained withField over backtick-quoted literal field
-    names; NULL structs stay NULL).  A top-level array promotion
-    (``parts == ()``) replaces its column outright."""
+def _struct_rebuild_columns(casts: dict) -> dict:
+    """Fold ``{key: (top, parts, expr)}`` into one expression per top-level
+    column: leaf casts chain ``withField`` over backtick-quoted literal
+    field names (NULL structs stay NULL); ``parts == ()`` replaces the
+    column outright."""
     per_top: dict[str, Column] = {}
-    for key, expr in exprs.items():
-        top, parts, _ = paths[key]
+    for top, parts, expr in casts.values():
         if not parts:
             per_top[top] = expr
             continue
         field = ".".join(f"`{p}`" for p in parts)
-        col = per_top.get(top, F.col(top))
-        per_top[top] = col.withField(field, expr)
+        per_top[top] = per_top.get(top, F.col(top)).withField(field, expr)
     return per_top
 
 
@@ -837,23 +685,20 @@ def cast_col(
         raise CastError(f"no conversion registered for {key[0]} → {key[1]}")
     out = fn(col, s, d, a)
     if a.as_interval and key[1] == "timedelta":
-        from ..functions.temporal import ns_to_interval
-
         out = ns_to_interval(out)  # C13: typed interval at the boundary
     return out
 
 
-def _violation_agg(name: str, before: Column, after: Column) -> Column:
-    """New-NULL count for one scalar cast column."""
-    return F.count(F.when(before.isNotNull() & after.isNull(), 1)).alias(name)
-
-
-def _array_violation_agg(name: str, arr: Column, cast_fn) -> Column:
-    """Element-level new-NULL count for one array<string> promotion: a
-    non-null element whose cast nulled is a violation; NULL arrays
-    contribute nothing (size(NULL) → NULL → coalesce 0)."""
-    bad = F.filter(arr, lambda x: x.isNotNull() & cast_fn(x).isNull())
-    return F.sum(F.coalesce(F.size(bad), F.lit(0))).alias(name)
+def _violation_agg(
+    key: str, before: Column, after: Column | Callable, elementwise: bool
+) -> Column:
+    """New-NULL count of one planned cast: a non-null value whose cast is
+    NULL.  ``elementwise``: ``after`` is the per-element cast of an array
+    promotion and each such element counts (NULL arrays count 0)."""
+    if elementwise:
+        bad = F.filter(before, lambda x: x.isNotNull() & after(x).isNull())
+        return F.sum(F.coalesce(F.size(bad), F.lit(0))).alias(key)
+    return F.count(F.when(before.isNotNull() & after.isNull(), 1)).alias(key)
 
 
 def _violation_counts(
@@ -897,9 +742,6 @@ def cast(
     a = CastArgs(**kwargs)
     observed = {f.name: resolve(f.dataType) for f in df.schema.fields}
 
-    nested_exprs: dict[str, Column] = {}
-    nested_validations: list[tuple[str, Column]] = []
-    nested_paths: dict = {}
     if spec is None:
         spec = infer_best_types(
             df, [cols] if isinstance(cols, str) else cols
@@ -907,27 +749,14 @@ def cast(
         if not spec:
             return df
 
+    paths: dict = {}
     if isinstance(spec, Mapping):
-        # quoted-path keys are struct-leaf promotions (round 9) and
-        # array<string> element promotions (round 10, ``[]``-suffixed):
-        # their casts rebuild the struct columns via withField (or
-        # replace the array column), validated in the SAME single
-        # aggregate as the top-level plan below.  Routing is by nested-
-        # candidate membership, NOT by absence from the schema — a
-        # (contrived) top-level column literally named ``\`s\`.\`t\```
-        # can therefore never shadow a nested promotion; such names are
-        # also skipped from candidacy, so the quoted key is unambiguous.
-        # Explicit mappings address nested candidates by the same keys;
-        # genuinely unknown names fall to the plan loop's error.
-        known = _nested_candidate_paths(df)
-        nested = {k: v for k, v in spec.items() if k in known}
-        if nested:
-            spec = {k: v for k, v in spec.items() if k not in nested}
-            nested_exprs, nested_validations, nested_paths = (
-                _struct_leaf_casts(df, nested, a, kwargs)
-            )
-
-    if isinstance(spec, Mapping):
+        # a mapping addresses struct leaves and array elements by the
+        # candidate keys ``infer_best_types`` emits.  Candidates are looked
+        # up before raw names, so a (contrived) top-level column literally
+        # named ``\`s\`.\`t\``` can never shadow a leaf; such names are
+        # not candidates either, so the quoted key is unambiguous.
+        paths = _candidates(df)
         plan = {k: resolve(v) for k, v in spec.items()}
     else:
         target = resolve(spec)
@@ -937,12 +766,20 @@ def cast(
             names = [cols] if isinstance(cols, str) else (cols or list(observed))
             plan = {n: target for n in names}
 
-    out_cols: dict[str, Column] = {}
+    # reference 'ignore' semantics (convert/base.py catch_errors): a
+    # failing conversion keeps the INPUT column (or leaf) unchanged.
+    # Build the expression in coerce mode so the job can't crash, then
+    # one validation aggregate decides which casts to revert.
+    build_kwargs = {**kwargs, "errors": "coerce"} if a.errors == "ignore" else kwargs
+    casts: dict[str, tuple] = {}
     validations: list[tuple[str, Column]] = []
-    for name, dst in plan.items():
-        if name not in observed:
-            raise CastError(f"no such column: {name!r}")
-        src = observed[name]
+    for key, dst in plan.items():
+        top, parts, kind = paths.get(key, (key, (), "scalar"))
+        if top not in observed:
+            raise CastError(f"no such column: {key!r}")
+        elementwise = kind == "array"
+        # leaves and array elements are strings; a column has its own type
+        src = resolve("string") if parts or elementwise else observed[top]
         if isinstance(dst, DecoratedType):
             dst = dst.wrapped  # decorator unwrap (convert/base.py:183-198)
         # trivial-cast short-circuit (reference base.py:304-306)
@@ -950,43 +787,36 @@ def cast(
             src is dst or src.unparametrized is dst.unparametrized
         ) and not a.downcast:
             continue
-        # reference 'ignore' semantics (convert/base.py catch_errors): a
-        # failing conversion keeps the INPUT column unchanged.  Build the
-        # expression in coerce mode so the job can't crash, then one
-        # validation aggregate decides which columns to revert.
-        build_kwargs = (
-            {**kwargs, "errors": "coerce"} if a.errors == "ignore" else kwargs
-        )
+        before = _field_expr(top, parts)
         # C13: a real DayTimeIntervalType column enters the matrix as ns
         # (a bare CAST(interval AS BIGINT) would truncate to whole
         # seconds inside the timedelta rules)
-        in_col = F.col(name)
-        if isinstance(df.schema[name].dataType, st.DayTimeIntervalType):
-            from ..functions.temporal import interval_to_ns
+        in_col = before
+        if isinstance(df.schema[top].dataType, st.DayTimeIntervalType):
+            in_col = interval_to_ns(before)
 
-            in_col = interval_to_ns(in_col)
+        def cast_one(x: Column) -> Column:
+            return cast_col(x, src, dst, **build_kwargs)
+
         try:
-            expr = cast_col(in_col, src, dst, **build_kwargs)
+            expr = F.transform(in_col, cast_one) if elementwise else cast_one(in_col)
         except CastError:
             if a.errors == "ignore":
                 continue
             raise
-        out_cols[name] = expr
+        casts[key] = (top, parts, expr)
         if a.errors in ("raise", "ignore"):
-            validations.append((name, _violation_agg(name, F.col(name), expr)))
+            validations.append((key, _violation_agg(
+                key, before, cast_one if elementwise else expr, elementwise
+            )))
 
     if a.errors == "raise":
-        _validate(df, nested_validations + validations)
+        _validate(df, validations)
     elif a.errors == "ignore":
-        for name in _violation_counts(
-            df, nested_validations + validations
-        ):
-            out_cols.pop(name, None)  # keep the input column
-            nested_exprs.pop(name, None)  # keep the input leaf
+        for key in _violation_counts(df, validations):
+            del casts[key]  # keep the input column or leaf
 
-    if nested_exprs:
-        out_cols.update(_struct_rebuild_columns(nested_exprs, nested_paths))
-    result = df.withColumns(out_cols) if out_cols else df
+    result = df.withColumns(_struct_rebuild_columns(casts)) if casts else df
     if a.downcast:
         from .downcast import downcast as _dc
         result = _dc(result, list(plan.keys()))

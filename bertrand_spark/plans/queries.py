@@ -519,7 +519,7 @@ def q16(spark, sf_dir):
            CASE WHEN l_discount > 0.05
                 THEN l_extendedprice * (1 - l_discount)
                 ELSE l_extendedprice END AS price
-    FROM lineitem ORDER BY l_orderkey, l_linenumber LIMIT 1000
+    FROM lineitem ORDER BY l_orderkey, l_linenumber, price LIMIT 1000
     """,
 )
 def q17(spark, sf_dir):
@@ -532,7 +532,10 @@ def q17(spark, sf_dir):
     )
     return (
         li.select("l_orderkey", "l_linenumber", price.alias("price"))
-        .orderBy("l_orderkey", "l_linenumber")
+        # (l_orderkey, l_linenumber) is not unique in the testdata: with
+        # price the key is total up to identical rows, so the LIMIT cut
+        # cannot fall inside a tie
+        .orderBy("l_orderkey", "l_linenumber", "price")
         .limit(1000)
     )
 
@@ -666,7 +669,8 @@ def q22(spark, sf_dir):
     SELECT l_returnflag,
            CAST(min(rn) AS BIGINT) AS first_idx
     FROM (SELECT l_returnflag,
-                 row_number() OVER (ORDER BY l_orderkey, l_linenumber) - 1 AS rn
+                 row_number() OVER (ORDER BY l_orderkey, l_linenumber,
+                                    l_returnflag) - 1 AS rn
           FROM lineitem)
     GROUP BY 1 ORDER BY 2
     """,
@@ -674,7 +678,10 @@ def q22(spark, sf_dir):
 def q23(spark, sf_dir):
     """first-seen-order dedup (L5, LinkedSet semantics)."""
     li = _t(spark, sf_dir, "lineitem")
-    idx = R.enumerate_rows(li, ["l_orderkey", "l_linenumber"])
+    # l_returnflag breaks the ties of the non-unique (l_orderkey,
+    # l_linenumber), so each flag's first index does not depend on how
+    # the engine orders a tie group
+    idx = R.enumerate_rows(li, ["l_orderkey", "l_linenumber", "l_returnflag"])
     return (
         idx.groupBy("l_returnflag")
         .agg(F.min("idx").cast("long").alias("first_idx"))

@@ -18,6 +18,8 @@ Spark mapping (SURVEY.md §2.1 R2-R4):
 
 from __future__ import annotations
 
+import datetime as _dt
+import decimal as _decimal
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -36,9 +38,6 @@ _BOOL_RE = r"(?i)^\s*(true|false|t|f|yes|no|y|n|on|off)\s*$"
 _ISO_DT_RE = (
     r"^\s*\d{4}-\d{2}-\d{2}([ T]\d{2}:\d{2}(:\d{2}(\.\d+)?)?([+-]\d{2}:?\d{2}|Z)?)?\s*$"
 )
-
-_TAG_ORDER = ("missing", "bool", "int", "float", "datetime", "str")
-
 
 _BOOL_STRINGS = ("true", "false", "t", "f", "yes", "no", "y", "n", "on", "off")
 
@@ -83,14 +82,57 @@ def type_tag_column(col: Column, na_strings: set[str] | None = None) -> Column:
     )
 
 
-_TAG_TO_TYPE = {
+# the tag vocabulary: every tag a tagger can emit → the type it names.
+# ``type_tag_column`` emits the first six; ``python_type_tag`` (pickled
+# object columns) also emits decimal, complex, timedelta and ``object``,
+# which names no type.
+TAG_TO_TYPE = {
     "missing": "missing",
     "bool": "bool",
     "int": "int64",
     "float": "float64",
+    "decimal": "decimal",
+    "complex": "complex",
     "datetime": "datetime",
+    "timedelta": "timedelta",
     "str": "string",
 }
+
+
+def python_type_tag(value: Any) -> str:
+    """Tag of one Python value (an unpickled object-column element)."""
+    if isinstance(value, bool):  # before int: bool subclasses int
+        return "bool"
+    if isinstance(value, int):
+        return "int"
+    if isinstance(value, float):
+        return "float"
+    if isinstance(value, complex):
+        return "complex"
+    if isinstance(value, _decimal.Decimal):
+        return "decimal"
+    if isinstance(value, _dt.datetime):
+        return "datetime"
+    if isinstance(value, _dt.timedelta):
+        return "timedelta"
+    if isinstance(value, str):
+        return "str"
+    return "object"
+
+
+def tag_census(col: Column, array: bool = False, tagger=type_tag_column) -> Column:
+    """One set-valued aggregate: every distinct tag ``tagger`` gives the
+    values of ``col`` (``array<string>``: of its elements), as an array.
+
+    The array case collects each row's sorted distinct element tags, so
+    its state is bounded by the subsets of the tag vocabulary; NULL and
+    empty arrays contribute no tag.  A census over zero rows is empty.
+    """
+    if array:
+        # one-parameter lambda: F.transform binds a second one to the index
+        per_row = F.array_sort(F.array_distinct(F.transform(col, lambda x: tagger(x))))
+        return F.flatten(F.collect_set(per_row))
+    return F.collect_set(tagger(col))
 
 
 def detect_elementwise(df: DataFrame, column: str) -> UnionType:
@@ -111,7 +153,7 @@ def detect_elementwise(df: DataFrame, column: str) -> UnionType:
         .collect()
     )
     types = [
-        resolve(_TAG_TO_TYPE[r["__tag"]]) for r in rows if r["__tag"] != "missing"
+        resolve(TAG_TO_TYPE[r["__tag"]]) for r in rows if r["__tag"] != "missing"
     ]
     if not types:
         types = [resolve("missing")]

@@ -1,11 +1,7 @@
 """Round-10 regression gates.
 
-1. Anonymous-cast array promotion (C31 extension, VERDICT r9 item 3):
-   ``array<string>`` columns and struct leaves whose elements all parse
-   as one family promote element-wise (XML's repeated elements — the
-   most common XML shape); a mixed array stays string; the raise /
-   ignore / coerce protocol covers element-level violations inside the
-   same single validation aggregate.
+1. Anonymous-cast array promotion: its tests live in ``test_cast.py``
+   (``TestArrayLeafPromotion``).
 2. base_to_int overflow hygiene: under ANSI mode (Spark 4's default)
    ``F.conv`` raises ARITHMETIC_OVERFLOW past 2^64-1, so a 20+-digit
    numeric string crashed even a coerce-mode cast.  The guarded conv
@@ -22,112 +18,8 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from bertrand_spark.convert.cast import CastError, cast, infer_best_types  # noqa: E402
+from bertrand_spark.convert.cast import cast  # noqa: E402
 from bertrand_spark.functions.strings import base_to_int  # noqa: E402
-
-
-class TestArrayLeafPromotion:
-    @pytest.fixture()
-    def frame(self, spark):
-        return spark.createDataFrame(
-            [
-                (1, ["1", "2", "3"], ["1", "x"], ("7", ["1.5", "2"]), []),
-                (2, ["4", None], ["2", "y"], ("8", ["3.25"]), None),
-            ],
-            "id long, nums array<string>, mixed array<string>, "
-            "s struct<tag: string, vals: array<string>>, "
-            "empty array<string>",
-        )
-
-    def test_infer_emits_array_keys(self, frame):
-        plan = infer_best_types(frame)
-        assert plan["`nums`[]"] == "int64"
-        assert plan["`s`.`vals`[]"] == "float64"
-        assert plan["`s`.`tag`"] == "int64"
-        # mixed elements (int + str) and all-empty arrays never promote
-        assert "`mixed`[]" not in plan
-        assert "`empty`[]" not in plan
-
-    def test_anonymous_cast_promotes_elementwise(self, frame):
-        out = cast(frame)
-        schema = {f.name: f.dataType.simpleString() for f in out.schema.fields}
-        assert schema["nums"] == "array<bigint>"
-        assert schema["mixed"] == "array<string>"
-        assert schema["empty"] == "array<string>"
-        assert schema["s"] == "struct<tag:bigint,vals:array<double>>"
-        rows = {r.id: r for r in out.collect()}
-        assert rows[1].nums == [1, 2, 3]
-        assert rows[2].nums == [4, None]  # NULL element preserved
-        assert rows[1].s.vals == [1.5, 2.0]
-        assert rows[1].empty == [] and rows[2].empty is None
-
-    def test_explicit_quoted_spec_routes_arrays(self, spark):
-        df = spark.createDataFrame(
-            [(("1", ["2", "3"]),)], "s struct<t: string, v: array<string>>"
-        )
-        out = cast(df, {"`s`.`t`": "int64", "`s`.`v`[]": "float64"},
-                   errors="raise")
-        assert out.schema["s"].dataType.simpleString() == (
-            "struct<t:bigint,v:array<double>>"
-        )
-        # a quoted key naming no candidate still errors
-        with pytest.raises(CastError, match="no such column"):
-            cast(df, {"`zzz`[]": "int64"})
-
-    def test_element_violation_protocol(self, spark):
-        df = spark.createDataFrame(
-            [(["1", "2"],), (["3", "oops"],)], "a array<string>"
-        )
-        with pytest.raises(CastError, match="errors='raise'"):
-            cast(df, {"`a`[]": "int64"}, errors="raise").collect()
-        kept = cast(df, {"`a`[]": "int64"}, errors="ignore")
-        assert kept.schema["a"].dataType.simpleString() == "array<string>"
-        coerced = cast(df, {"`a`[]": "int64"}, errors="coerce")
-        vals = sorted(r.a for r in coerced.collect())
-        assert vals == [[1, 2], [3, None]]
-        # a clean frame passes errors='raise'
-        clean = spark.createDataFrame([(["1"],)], "a array<string>")
-        assert cast(clean, {"`a`[]": "int64"}, errors="raise").schema[
-            "a"
-        ].dataType.simpleString() == "array<bigint>"
-
-    def test_xml_repeated_elements_promote(self, spark, tmp_path):
-        xml = (
-            "<root>"
-            "<row><name>a</name><qty>1</qty><qty>2</qty></row>"
-            "<row><name>b</name><qty>3</qty></row>"
-            "<row><name>c</name><tag>x</tag><tag>1</tag></row>"
-            "</root>"
-        )
-        (tmp_path / "t.xml").write_text(xml)
-        from bertrand_spark.sources.reader import read_xml_inferred
-
-        out = read_xml_inferred(spark, str(tmp_path), row_tag="row")
-        schema = {f.name: f.dataType.simpleString() for f in out.schema.fields}
-        assert schema["qty"] == "array<bigint>"  # repeated numeric element
-        assert schema["tag"] == "array<string>"  # mixed stays string
-        byname = {r.name: r for r in out.collect()}
-        assert byname["a"].qty == [1, 2]
-
-    def test_backtick_toplevel_name_not_a_candidate(self, spark):
-        """Round-9 ADVICE: a top-level string column whose raw name
-        contains backticks could collide with a quoted nested display
-        key; such names are skipped from candidacy (mirroring the
-        struct-side skip) so the nested promotion wins unshadowed."""
-        from pyspark.sql import types as st
-
-        schema = st.StructType([
-            st.StructField("`s`.`t`", st.StringType()),
-            st.StructField(
-                "s", st.StructType([st.StructField("t", st.StringType())])
-            ),
-        ])
-        df = spark.createDataFrame([("1", ("2",))], schema)
-        plan = infer_best_types(df)
-        assert plan == {"`s`.`t`": "int64"}
-        out = cast(df)
-        assert out.schema["s"].dataType.simpleString() == "struct<t:bigint>"
-        assert out.schema["`s`.`t`"].dataType.simpleString() == "string"
 
 
 class TestBaseToIntOverflow:
@@ -1407,13 +1299,6 @@ class TestMp3ProbeTagShortcut:
 class TestRound10ReviewFixes:
     """Confirmed findings from the round-10 code review, each with a
     pinned regression."""
-
-    def test_empty_frame_with_array_candidate_is_a_noop(self, spark):
-        df = spark.createDataFrame([], "a array<string>, b string")
-        assert infer_best_types(df) == {}
-        out = cast(df)
-        assert out.schema["a"].dataType.simpleString() == "array<string>"
-        assert out.count() == 0
 
     def test_mpeg25_8k_mixed_gap_lines_carry_gain(self):
         """Lines [36,72) of an 8 kHz mixed block sit in long sfbs 3-5

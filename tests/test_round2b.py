@@ -1,5 +1,5 @@
-"""Round-2 batch B: anonymous cast (C31), map ops (L10/L11), strict twins
-(R9), comparison edges (R7), runtime aliases (R5), fuzzy datetime (C25)."""
+"""Round-2 batch B: map ops (L10/L11), strict twins (R9), comparison edges
+(R7), runtime aliases (R5), fuzzy datetime (C25)."""
 
 import datetime as dt
 
@@ -7,36 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 import bertrand_spark as b
-from bertrand_spark.convert.cast import cast, cast_col, infer_best_types
+from bertrand_spark.convert.cast import cast_col
 from bertrand_spark.operators import maps as M
 
 
 def one(df):
     return df.collect()[0]
-
-
-class TestAnonymousCast:
-    def test_infer_string_columns(self, spark):
-        df = spark.createDataFrame(
-            [("1", "1.5", "true", "2020-01-02", "word"),
-             ("2", "7", "no", "2021-03-04", "x"),
-             (None, "3.25", "yes", None, "y")],
-            "a string, b string, c string, d string, e string",
-        )
-        plan = infer_best_types(df)
-        assert plan == {"a": "int64", "b": "float64", "c": "bool", "d": "datetime"}
-        out = cast(df, errors="coerce")
-        kinds = {f.name: f.dataType.simpleString() for f in out.schema.fields}
-        assert kinds == {
-            "a": "bigint", "b": "double", "c": "boolean",
-            "d": "timestamp", "e": "string",
-        }
-        rows = out.orderBy("a").collect()
-        assert rows[-1]["a"] == 2 and rows[-1]["c"] is False
-
-    def test_noop_when_nothing_to_infer(self, spark):
-        df = spark.range(3)
-        assert cast(df) is df
 
 
 class TestFuzzyDatetime:

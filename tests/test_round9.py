@@ -582,147 +582,6 @@ class TestMkvEbmlProbe:
         assert out[4]["container"] is None
 
 
-class TestNestedStructPromotion:
-    """Anonymous-cast recursion into struct string leaves (round-9
-    VERDICT item 5): XML's nested all-string structs promote under the
-    same one-aggregate convention as top-level columns."""
-
-    def _frame(self, spark):
-        return spark.createDataFrame(
-            [
-                ("1", ("7", "true", ("3.5", "2021-01-02T03:04:05", "hi"))),
-                ("2", ("9", "false", ("4.25", "2022-06-07T08:09:10", "yo"))),
-                ("3", (None, "true", (None, None, "x"))),
-            ],
-            "id string, s struct<qty:string, flag:string, "
-            "inner:struct<price:string, ts:string, label:string>>",
-        )
-
-    def test_two_level_promotion(self, spark):
-        import datetime
-
-        from bertrand_spark.convert.cast import cast
-
-        out = cast(self._frame(spark), errors="coerce")
-        s = out.schema["s"].dataType
-        assert s["qty"].dataType.simpleString() == "bigint"
-        assert s["flag"].dataType.simpleString() == "boolean"
-        inner = s["inner"].dataType
-        assert inner["price"].dataType.simpleString() == "double"
-        assert inner["ts"].dataType.simpleString() == "timestamp"
-        assert inner["label"].dataType.simpleString() == "string"
-        r = out.filter(F.col("id") == 1).collect()[0]
-        assert r["s"]["qty"] == 7 and r["s"]["inner"]["price"] == 3.5
-        assert r["s"]["inner"]["ts"] == datetime.datetime(2021, 1, 2, 3, 4, 5)
-        # NULL leaves stay NULL, whole-NULL structs unharmed
-        r3 = out.filter(F.col("id") == 3).collect()[0]
-        assert r3["s"]["qty"] is None and r3["s"]["inner"]["price"] is None
-
-    def test_mixed_leaf_stays_string(self, spark):
-        from bertrand_spark.convert.cast import cast
-
-        df = spark.createDataFrame(
-            [("1", ("7",)), ("2", ("seven",))],
-            "id string, s struct<qty:string>",
-        )
-        out = cast(df, errors="coerce")
-        assert out.schema["s"].dataType["qty"].dataType.simpleString() == (
-            "string"
-        )
-
-    def test_xml_end_to_end(self, spark, tmp_path):
-        from bertrand_spark.sources.reader import read_xml_inferred
-
-        xml = (
-            "<root>"
-            "<row><id>1</id><meta><qty>7</qty><note>a</note>"
-            "<deep><score>1.5</score></deep></meta></row>"
-            "<row><id>2</id><meta><qty>8</qty><note>b</note>"
-            "<deep><score>2.5</score></deep></meta></row>"
-            "</root>"
-        )
-        (tmp_path / "t.xml").write_text(xml)
-        x = read_xml_inferred(spark, str(tmp_path), row_tag="row")
-        meta = x.schema["meta"].dataType
-        assert meta["qty"].dataType.simpleString() == "bigint"
-        assert meta["note"].dataType.simpleString() == "string"
-        assert meta["deep"].dataType["score"].dataType.simpleString() == (
-            "double"
-        )
-        got = {r["id"]: r for r in x.collect()}
-        assert got[1]["meta"]["qty"] == 7
-        assert got[2]["meta"]["deep"]["score"] == 2.5
-
-    def test_top_level_plan_still_runs_alongside(self, spark):
-        from bertrand_spark.convert.cast import cast
-
-        out = cast(self._frame(spark), errors="coerce")
-        assert out.schema["id"].dataType.simpleString() == "bigint"
-
-
-class TestNestedPromotionReviewFindings:
-    """Round-9 review closures on the struct-leaf promotion."""
-
-    def test_literal_dot_field_names(self, spark):
-        """Field names containing literal dots (legal XML element
-        names, ubiquitous JSON keys) must resolve as ONE field, not be
-        re-split into a phantom nested path (review repro: this
-        crashed with FIELD_NOT_FOUND)."""
-        from bertrand_spark.convert.cast import cast
-
-        df = spark.createDataFrame(
-            [("1", ("7", "x"))], "id string, s struct<`a.b`:string, c:string>"
-        )
-        out = cast(df, errors="coerce")
-        assert out.schema["s"].dataType["a.b"].dataType.simpleString() == (
-            "bigint"
-        )
-        assert out.collect()[0]["s"]["a.b"] == 7
-
-    def test_top_level_name_cannot_collide_with_leaf_key(self, spark):
-        """A top-level column literally named 's.qty' and the struct
-        leaf s.qty are distinct candidates (quoted display keys)."""
-        from bertrand_spark.convert.cast import cast
-
-        df = spark.createDataFrame(
-            [("5", ("7",))], "`s.qty` string, s struct<qty:string>"
-        )
-        out = cast(df, errors="coerce")
-        assert out.schema["s.qty"].dataType.simpleString() == "bigint"
-        assert out.schema["s"].dataType["qty"].dataType.simpleString() == (
-            "bigint"
-        )
-        r = out.collect()[0]
-        assert r["s.qty"] == 7 and r["s"]["qty"] == 7
-
-    def test_raise_names_the_leaf(self, spark):
-        """A leaf that TAGS as a family but fails the real cast (e.g. a
-        datetime-shaped string with impossible fields) raises with the
-        leaf's quoted path under errors='raise'."""
-        from bertrand_spark.convert.cast import CastError, cast
-
-        df = spark.createDataFrame(
-            [("1", ("7", "2021-13-45")), ("2", ("8", "2021-01-01"))],
-            "id string, s struct<qty:string, d:string>",
-        )
-        with pytest.raises(CastError, match=r"`s`\.`d`"):
-            cast(df, errors="raise")
-
-    def test_ignore_reverts_only_the_bad_leaf(self, spark):
-        from bertrand_spark.convert.cast import cast
-
-        df = spark.createDataFrame(
-            [("1", ("7", "2021-13-45")), ("2", ("8", "2021-01-01"))],
-            "id string, s struct<qty:string, d:string>",
-        )
-        out = cast(df, errors="ignore")
-        s = out.schema["s"].dataType
-        assert s["qty"].dataType.simpleString() == "bigint"
-        assert s["d"].dataType.simpleString() == "string"  # reverted
-        vals = {r["id"]: r["s"]["d"] for r in out.collect()}
-        assert vals[1] == "2021-13-45"  # id itself promoted to bigint
-
-
 class TestHypothesisRound9Parsers:
     """Hypothesis random-blob + prefixed-blob fuzz extended to the
     round-9 parsers: the FLAC decoder and the EBML probe — the same
