@@ -601,7 +601,8 @@ def _candidates(df: DataFrame, cols: list[str] | None = None) -> dict:
 
 
 def _field_expr(top: str, parts: tuple) -> Column:
-    col = F.col(top)
+    # quoted: a top-level ``s.qty`` must not resolve to the leaf `s`.`qty`
+    col = F.col(_quoted_key(top, ()))
     for part in parts:
         col = col.getField(part)
     return col
@@ -665,7 +666,7 @@ def _struct_rebuild_columns(casts: dict) -> dict:
             per_top[top] = expr
             continue
         field = ".".join(f"`{p}`" for p in parts)
-        per_top[top] = per_top.get(top, F.col(top)).withField(field, expr)
+        per_top[top] = per_top.get(top, _field_expr(top, ())).withField(field, expr)
     return per_top
 
 

@@ -1197,7 +1197,7 @@ def x19(spark, sf_dir):
 
     from ..streaming.rollup import read_events_stream, windowed_rollup
 
-    stream = read_events_stream(spark, sf_dir, max_files_per_trigger=1)
+    stream = read_events_stream(spark, sf_dir)
     rolled = windowed_rollup(
         stream,
         "ts",
@@ -1970,7 +1970,7 @@ def x25(spark, sf_dir):
 
     from ..streaming.rollup import read_events_stream, stream_dedup
 
-    stream = read_events_stream(spark, sf_dir, max_files_per_trigger=1)
+    stream = read_events_stream(spark, sf_dir)
     deduped = stream_dedup(
         stream.select("user_id", "event_type", "ts"),
         ["user_id", "event_type"],
@@ -2018,7 +2018,7 @@ def x26(spark, sf_dir):
 
     from ..streaming.rollup import read_events_stream, sessionize
 
-    stream = read_events_stream(spark, sf_dir, max_files_per_trigger=1)
+    stream = read_events_stream(spark, sf_dir)
     sess = sessionize(
         stream.select("user_id", "ts"),
         "ts",
@@ -2312,15 +2312,15 @@ def x28(spark, sf_dir):
     batch 0 pairing a purchase in batch 2)."""
     import uuid
 
-    from ..streaming.rollup import read_events_stream_split, stream_stream_join
+    from ..streaming.rollup import read_events_stream, stream_stream_join
 
     clicks = (
-        read_events_stream_split(spark, sf_dir, n_files=4, order_by="ts")
+        read_events_stream(spark, sf_dir, n_files=4, order_by="ts")
         .filter(F.col("event_type") == "click")
         .select("user_id", F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id"))
     )
     purchases = (
-        read_events_stream_split(spark, sf_dir, n_files=4, order_by="ts")
+        read_events_stream(spark, sf_dir, n_files=4, order_by="ts")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user_id"),
@@ -2377,16 +2377,13 @@ def x29(spark, sf_dir):
     import tempfile
     import uuid
 
-    from ..streaming.rollup import (
-        foreach_batch_parquet_sink,
-        read_events_stream_split,
-    )
+    from ..streaming.rollup import foreach_batch_parquet_sink, read_events_stream
 
     run = uuid.uuid4().hex[:8]
     out = f"{tempfile.gettempdir()}/bspark_x29_{run}/sink"
     ckpt = f"{tempfile.gettempdir()}/bspark_x29_{run}/ckpt"
     stream = (
-        read_events_stream_split(spark, sf_dir, n_files=4)
+        read_events_stream(spark, sf_dir, n_files=4)
         .filter(F.col("event_type").isin("purchase", "click") & (F.col("value") > 10))
         .select("event_id", "user_id", "event_type", "value")
     )

@@ -1,90 +1,74 @@
-"""Parquet ingestion that survives TIMESTAMP(NANOS) columns.
+"""Parquet ingestion: one resolution per parquet file version.
 
-Spark 4 rejects parquet INT64 TIMESTAMP(NANOS,*) outright
-(``PARQUET_TYPE_ILLEGAL``) unless ``spark.sql.legacy.parquet.nanosAsLong``
-is set, in which case the column arrives as a raw ns LongType.  That raw
-ns count is exactly this engine's internal temporal currency (SURVEY §7.4,
-functions/temporal.py), so the ingestion layer:
+What a parquet input looks like is worked out once per file version by
+the private :func:`_resolve`, and both parquet loads of the engine's
+ingestion contract read from it: :func:`read_table` (batch) and
+``streaming.rollup.read_events_stream`` (the staged event stream).  A
+resolution holds
 
-1. reads the parquet footer (driver-side metadata only — one footer fetch,
-   no data IO, scale-independent) to find timestamp[ns] columns;
-2. reads with ``nanosAsLong=true``;
-3. converts each ns column to Spark's µs TimestampType by truncating
-   division — matching DuckDB, which also truncates ns→µs on read, so
-   oracle comparisons line up bit-for-bit.
+* the top-level INT64 TIMESTAMP(NANOS) columns, from the parquet footers
+  (driver-side metadata, no data IO);
+* the Spark schema, inferred once with ``nanosAsLong`` set when there
+  are ns columns (Spark 4 otherwise rejects them, ``PARQUET_TYPE_ILLEGAL``;
+  with it they arrive as raw ns LongType);
+* from that schema the TIMESTAMP_NTZ columns, and one ``withColumns`` of
+  fixes that turns both kinds into µs TimestampType.
+
+A load reads with the resolved schema, so Spark infers nothing and starts
+no job, and applies the fixes.
+
+**Key.** A file is keyed by ``(path, mtime_ns, size)``; a directory by
+that triple for each of its data files (names starting with ``_`` or
+``.`` are not data, for Spark and pyarrow alike), so rewriting one member
+re-resolves it.  A path that cannot be stat'ed, such as a remote URI
+(``s3://``, ``file://``), is resolved afresh on every call: nothing local
+tells its versions apart.
 
 Reference parity: the reference engine stores datetimes as ns-since-epoch
-int64 end-to-end (bertrand convert/datetime.py:67-121); Spark's µs
-TimestampType is the boundary representation here.
+int64 end-to-end (bertrand convert/datetime.py:67-121), this engine's
+internal temporal currency too (SURVEY §7.4).  Spark's µs TimestampType
+is the boundary representation, reached by truncating ns→µs division as
+DuckDB does on read, so oracle comparisons line up bit-for-bit.
 """
 
 from __future__ import annotations
 
+import os
 from functools import lru_cache
+from stat import S_ISDIR
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-# Footer-sample width for mixed-writer directories: a table whose
-# sampled fragments are all INT96 but carries an INT64-NANOS file
-# elsewhere is out of contract (tables the engine writes are
-# single-writer); sampling the FIRST k AND LAST k fragments (appended
-# files typically enumerate last) bounds metadata reads while catching
-# both the original files and the realistic append case.  When a
-# directory has more fragments than 2k, a debug log records the
-# sampling so a silently-missed mixed-writer file is diagnosable
-# (round-5 ADVICE).
+# Footer-sample width for mixed-writer directories (INT96 files plus
+# INT64-NANOS files appended later; tables the engine writes are
+# single-writer): the FIRST k AND LAST k fragments are probed, as
+# appended files typically enumerate last, and a debug log records the
+# sampling when a directory has more than 2k (round-5 ADVICE).
 _NANOS_SAMPLE_FRAGMENTS = 8
 
 
-def nanos_timestamp_columns(path: str) -> tuple[str, ...]:
-    """Names of timestamp[ns] columns in a parquet file/directory footer.
-
-    Cached on (path, mtime, size) so a file regenerated in place gets a
-    fresh footer read instead of a stale column list.
-    """
-    import os
-
-    try:
-        stat = os.stat(path)
-        key = (path, stat.st_mtime_ns, stat.st_size)
-    except OSError:
-        key = (path, 0, 0)
-    return _nanos_timestamp_columns_cached(key)
+def _quote(name: str) -> str:
+    """``name`` as one backtick-quoted column reference, so a top-level
+    name holding a dot never resolves to a struct field."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-@lru_cache(maxsize=256)
-def _nanos_timestamp_columns_cached(key: tuple) -> tuple[str, ...]:
+def _footer_nanos_columns(path: str) -> tuple[str, ...]:
     """INT64 TIMESTAMP(NANOS) columns only — read from the PARQUET
     schema, not the Arrow view of it: pyarrow maps legacy INT96
     timestamps (Spark's default output type) to ``timestamp[ns]`` too,
     but Spark reads INT96 back as µs TimestampType natively, and
     flagging it would apply a bogus ns→µs division to an already-µs
     column (this bit any re-written table, e.g. scale_smoke's
-    multiplied parquet)."""
-    import json
-
+    multiplied parquet).  The flagged sets of the sampled footers are
+    UNIONed."""
     import pyarrow.dataset as ds
 
-    path = key[0]
     # ds.dataset resolves the filesystem from the URI (local, s3://,
-    # hdfs://, ...) and enumerates data fragments, skipping _SUCCESS
-    # etc.  The PARQUET footer metadata (not the Arrow view)
-    # distinguishes INT64-NANOS from legacy INT96.  Footer schemas are
-    # ALMOST always uniform per table, but a directory with mixed
-    # writers (INT96 files plus INT64-NANOS files appended later) would
-    # break that; sample up to ``_NANOS_SAMPLE_FRAGMENTS`` footers and
-    # UNION the flagged column sets so a later-appended ns file still
-    # gets its normalization.  Footer reads are metadata-only
-    # (kilobytes), so the extra probes cost ~nothing relative to a
-    # table load.
+    # hdfs://, ...) and enumerates data fragments, skipping _SUCCESS etc.
     dset = ds.dataset(path, format="parquet")
-    out: list[str] = []
-    # fragment enumeration is a file listing (no footer IO yet); the
-    # order is filesystem-dependent, so take both ends of the listing —
-    # appended files usually sort last, and "first k" alone would miss
-    # them entirely.
     frags = list(dset.get_fragments())
     k = _NANOS_SAMPLE_FRAGMENTS
     if len(frags) > 2 * k:
@@ -98,36 +82,93 @@ def _nanos_timestamp_columns_cached(key: tuple) -> tuple[str, ...]:
             "writers)",
             path, len(frags), k, k,
         )
-        sample = frags[:k] + frags[-k:]
-    else:
-        sample = frags
-    for frag in sample:
+        frags = frags[:k] + frags[-k:]
+    names = set()
+    for frag in frags:
         schema = frag.metadata.schema  # parquet schema, not arrow
         for i in range(len(schema)):
             col = schema.column(i)
-            # TOP-LEVEL leaves only: parquet flattens nested paths, and
-            # a nested ns leaf whose LEAF name matches a top-level
-            # column would otherwise falsely flag that column (the
-            # div-1000 fix — and the arrow-era behavior — applies to
-            # top-level columns only).  For a top-level leaf
-            # path == name; nested paths are dotted.
-            if "." in col.path:
-                continue
             lt = col.logical_type
-            if col.physical_type != "INT64" or lt is None or lt.type != "TIMESTAMP":
-                continue
-            try:
-                unit = json.loads(lt.to_json()).get("timeUnit")
-            except Exception:
-                unit = "nanoseconds" if "nanoseconds" in str(lt) else None
-            if unit == "nanoseconds" and col.name not in out:
-                out.append(col.name)
-    if not out:
-        return ()
-    # preserve top-level column order/names as the arrow schema exposes
-    # them (parquet flattens nested paths; timestamps here are top-level)
-    names = set(out)
+            # a leaf is top-level exactly when its path is its name: the
+            # nested leaf `a`.`ns` has path ``a.ns`` and name ``ns``, the
+            # top-level column ``a.ns`` has both ``a.ns``
+            if (col.path == col.name and col.physical_type == "INT64"
+                    and lt.type == "TIMESTAMP"
+                    and "timeUnit=nanoseconds" in str(lt)):
+                names.add(col.name)
     return tuple(f.name for f in dset.schema if f.name in names)
+
+
+class _Resolution:
+    """What one version of the parquet file or directory at ``path``
+    looks like.  The footer scan runs at construction; the Spark schema
+    and the fixes are inferred on the first :meth:`load`, so the footer
+    view (:func:`nanos_timestamp_columns`) needs no session."""
+
+    def __init__(self, path: str):
+        self.path = path
+        self.ns_cols = _footer_nanos_columns(path)
+        self._read: tuple | None = None  # (schema, fixes)
+
+    def load(self, spark: SparkSession, reader) -> DataFrame:
+        """Load ``path`` through ``reader`` (``spark.read`` or
+        ``spark.readStream``, options set) with the resolved schema and
+        fixes, after the conf writes :func:`read_table` documents."""
+        from pyspark.sql import types as st
+
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        if self.ns_cols:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        if self._read is None:
+            schema = spark.read.parquet(self.path).schema
+            fixes = {
+                c: F.timestamp_micros(F.expr(f"{_quote(c)} div 1000"))
+                for c in self.ns_cols
+            }
+            for f in schema.fields:
+                if isinstance(f.dataType, st.TimestampNTZType):
+                    fixes[f.name] = F.col(_quote(f.name)).cast("timestamp")
+            self._read = (schema, fixes)
+        schema, fixes = self._read
+        df = reader.schema(schema).parquet(self.path)
+        return df.withColumns(fixes) if fixes else df
+
+
+def _version(path: str) -> tuple | None:
+    """The key of ``path``'s current version (module docstring), or None
+    when it cannot be stat'ed."""
+    try:
+        st = os.stat(path)
+        if not S_ISDIR(st.st_mode):
+            return (path, st.st_mtime_ns, st.st_size)
+        members = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for name in files:
+                if not name.startswith(("_", ".")):
+                    st = os.stat(os.path.join(root, name))
+                    members.append((root, name, st.st_mtime_ns, st.st_size))
+        return (path, tuple(sorted(members)))
+    except OSError:
+        return None
+
+
+@lru_cache(maxsize=256)
+def _resolved(key: tuple) -> _Resolution:
+    return _Resolution(key[0])
+
+
+def _resolve(path: str) -> _Resolution:
+    """The resolution of ``path``'s current version; a fresh one on every
+    call when the version has no key."""
+    key = _version(path)
+    return _Resolution(path) if key is None else _resolved(key)
+
+
+def nanos_timestamp_columns(path: str) -> tuple[str, ...]:
+    """Names of the top-level INT64 TIMESTAMP(NANOS) columns of a parquet
+    file or directory: the footer view of its resolution."""
+    return _resolve(path).ns_cols
 
 
 def read_csv_inferred(
@@ -299,53 +340,23 @@ def spread(df: DataFrame, *key: str) -> DataFrame:
     return df
 
 
-def _event_time_normalizer(spark: SparkSession, path: str):
-    """Set the session up to read the parquet at ``path`` and return the
-    function that normalizes a frame read from it afterwards — batch or
-    stream — to µs TimestampType event time (the engine's boundary
-    representation).  The one owner of the fix for :func:`read_table`
-    and the staged event streams of ``streaming.rollup``.
-
-    Two parquet shapes occur in the wild and both normalize here:
-    * INT64 TIMESTAMP(NANOS) — Spark 4 rejects it outright, so read with
-      ``nanosAsLong`` and truncate ns→µs (positive epochs: div == floor),
-      same as DuckDB's read;
-    * TIMESTAMP_NTZ (isAdjustedToUTC=false) — valid but rejected by
-      instant-typed functions (``unix_micros``, watermarks).  With the
-      session timezone pinned UTC the cast to TimestampType is a pure
-      reinterpretation: no value shift vs. DuckDB's naive TIMESTAMP.
-
-    Session-conf caveat: ``nanosAsLong`` must stay set for the returned
-    (lazy) DataFrame to execute, so it is NOT restored afterwards — a
-    later bare ``spark.read.parquet`` on a ns-timestamp file will
-    return raw ns longs instead of failing.
-    """
-    from pyspark.sql import types as st
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ns_cols = nanos_timestamp_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-    def normalize(df: DataFrame) -> DataFrame:
-        fixes = {
-            c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns_cols
-        }
-        for field in df.schema:
-            if isinstance(field.dataType, st.TimestampNTZType):
-                fixes[field.name] = F.col(field.name).cast("timestamp")
-        return df.withColumns(fixes) if fixes else df
-
-    return normalize
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table, normalizing event-time columns to µs
-    TimestampType (both parquet shapes; see
-    :func:`_event_time_normalizer`, which also sets the session conf the
-    read needs and leaves it set).  Read through this function (the
-    engine's ingestion contract) and the conversion is applied.
+    """Read one testdata table through its resolution (module
+    docstring): the resolved schema, so no inference job, then one
+    ``withColumns`` that turns INT64 TIMESTAMP(NANOS) columns (truncating
+    ns→µs, as DuckDB does) and TIMESTAMP_NTZ columns (a pure
+    reinterpretation with the session time zone pinned to UTC, no value
+    shift against DuckDB's naive TIMESTAMP) into µs TimestampType, which
+    instant-typed functions (``unix_micros``, watermarks) accept.
+
+    Conf contract: every call sets ``spark.sql.session.timeZone`` to UTC,
+    and ``spark.sql.legacy.parquet.nanosAsLong`` to true when the table
+    has ns columns, and leaves both set: the lazy frame needs them when
+    it runs, so a later bare ``spark.read.parquet`` of a ns file returns
+    raw ns longs instead of failing.  The two writes start no job.  They
+    stay per call rather than in ``session.RECOMMENDED_RUNTIME_CONF``
+    because ``read_table`` must be right on any session, tuned or not,
+    and ``nanosAsLong`` on every session would turn that failure into
+    silent raw longs for reads that do not come through here.
     """
-    path = f"{sf_dir}/{name}.parquet"
-    normalize = _event_time_normalizer(spark, path)
-    return normalize(spark.read.parquet(path))
+    return _resolve(f"{sf_dir}/{name}.parquet").load(spark, spark.read)

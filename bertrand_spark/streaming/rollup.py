@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "windowed_rollup", "sessionize", "stream_dedup", "running_totals",
-    "read_events_stream", "read_events_stream_split", "stream_stream_join",
+    "read_events_stream", "stream_stream_join",
     "foreach_batch_parquet_sink", "stream_dedup_against_store",
     "stream_dedup_against_fingerprint_store",
     "stream_curation_pipeline", "stream_ann_enrich", "stream_fuzzy_dedup",
@@ -519,101 +519,61 @@ def stream_fuzzy_dedup(
     return dedup
 
 
-def read_events_stream_split(
-    spark, sf_dir: str, n_files: int = 4, order_by: str | None = None
+def read_events_stream(
+    spark, sf_dir: str, n_files: int = 1, order_by: str | None = None
 ) -> DataFrame:
-    """events.parquet staged as ``n_files`` row-sliced parquet files so a
-    ``maxFilesPerTrigger=1`` file-source stream runs a REAL multi-batch
-    incremental query (one micro-batch per slice) — exercising state
-    carry-over between batches, which the single-file stager cannot.
-    Slices are contiguous row ranges of the source order (driver-side
-    pyarrow slice, test-data plumbing only; production inputs already
-    arrive as many files).
+    """events.parquet as a file-source stream of ``n_files``
+    micro-batches, its event time normalized as by
+    :func:`~bertrand_spark.sources.reader.read_table`.
 
-    ``order_by``: sort the rows by this column before slicing, so batches
-    arrive in event-time order — the arrival model watermarks assume.  A
-    stream-stream join consumer needs this: with random-time slices the
-    watermark after batch 0 would leap to near max(ts) and evict join
-    state that batch 1 still matches (that is bona-fide LATE DATA, which
-    watermark semantics drop by design, not a bug)."""
-    import hashlib
-    import pathlib
+    The file source needs a directory, so the table is staged into a
+    temp directory as ``n_files`` contiguous row slices (driver-side
+    pyarrow) and read one file per trigger: with ``n_files > 1`` the
+    query carries state across real micro-batches.  ``order_by`` sorts
+    the rows before slicing, so batches arrive in event-time order, the
+    arrival model watermarks assume: a stream-stream join needs it, as
+    with random-time slices the watermark after batch 0 would leap to
+    near max(ts) and evict join state that batch 1 still matches (late
+    data, which watermarks drop by design).
+
+    The stage is named by the source file's version (device, inode,
+    mtime, size) and the slicing, so a regenerated source re-stages; it
+    is written under a temporary name and renamed into place, so no
+    reader sees a partial stage.  Its schema and normalization come from
+    resolving the staged directory itself, so a parquet type the pyarrow
+    rewrite changed is normalized too.  Test-data plumbing: a production
+    source is already a directory of arriving files."""
+    import os
+    import shutil
     import tempfile
 
     import pyarrow.parquet as pq
 
-    from ..sources.reader import _event_time_normalizer
+    from ..sources.reader import _resolve
 
     path = f"{sf_dir}/events.parquet"
-    normalize = _event_time_normalizer(spark, path)
-    schema = spark.read.parquet(path).schema
-    stat = pathlib.Path(path).stat()
-    digest = hashlib.sha1(
-        f"{path}|{stat.st_mtime_ns}|{stat.st_size}|{n_files}|{order_by}".encode()
-    ).hexdigest()[:12]
-    stage = pathlib.Path(tempfile.gettempdir()) / f"bspark_streamN_{digest}"
-    if not stage.exists():
-        tmp = stage.with_suffix(".tmp")
-        if tmp.exists():
-            import shutil
-
-            shutil.rmtree(tmp)
-        tmp.mkdir(parents=True)
+    st = os.stat(path)
+    stage = os.path.join(
+        tempfile.gettempdir(),
+        f"bspark_stream_{st.st_dev}_{st.st_ino}_{st.st_mtime_ns}_{st.st_size}"
+        f"_{n_files}_{order_by}",
+    )
+    if not os.path.isdir(stage):
+        tmp = tempfile.mkdtemp(prefix=os.path.basename(stage) + ".tmp")
         table = pq.read_table(path)
         if order_by is not None:
             table = table.sort_by(order_by)
-        n = table.num_rows
-        step = max(1, -(-n // n_files))
+        step = max(1, -(-table.num_rows // n_files))
         for i in range(n_files):
             sl = table.slice(i * step, step)
-            if sl.num_rows:
-                pq.write_table(sl, tmp / f"part-{i:05d}.parquet")
-        tmp.rename(stage)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(str(stage))
-    )
-    return normalize(stream)
-
-
-def read_events_stream(
-    spark, sf_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """events.parquet as a file-source stream (ns timestamps normalized),
-    for end-to-end streaming tests against the batch oracle."""
-    import hashlib
-    import pathlib
-    import shutil
-    import tempfile
-
-    from ..sources.reader import _event_time_normalizer
-
-    path = f"{sf_dir}/events.parquet"
-    normalize = _event_time_normalizer(spark, path)
-    schema = spark.read.parquet(path).schema
-    # the file stream source requires a DIRECTORY; stage the single file
-    # into a stable temp dir (in production the source is already a
-    # directory of arriving files — this shim is test-data plumbing only)
-    # key the staged copy on (path, mtime, size) so a regenerated file at
-    # the same path re-stages instead of replaying stale data
-    stat = pathlib.Path(path).stat()
-    digest = hashlib.sha1(
-        f"{path}|{stat.st_mtime_ns}|{stat.st_size}".encode()
-    ).hexdigest()[:12]
-    stage = pathlib.Path(tempfile.gettempdir()) / f"bspark_stream_{digest}"
-    stage.mkdir(exist_ok=True)
-    target = stage / "part-00000.parquet"
-    if not target.exists():
-        shutil.copyfile(path, target)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format("parquet")
-        .load(str(stage))
-    )
-    return normalize(stream)
+            if sl.num_rows or i == 0:
+                pq.write_table(sl, os.path.join(tmp, f"part-{i:05d}.parquet"))
+        try:
+            os.rename(tmp, stage)
+        except OSError:  # another process staged it first
+            shutil.rmtree(tmp)
+    reader = spark.readStream.option("maxFilesPerTrigger", 1)
+    return _resolve(stage).load(spark, reader)
 
 
 def stream_decode_media(

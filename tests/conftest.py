@@ -21,6 +21,8 @@ def spark():
         },
     )
     yield s
+    # every test stops the streaming queries it starts
+    assert not s.streams.active, [q.name for q in s.streams.active]
     s.stop()
 
 

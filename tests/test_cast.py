@@ -341,7 +341,23 @@ class TestNestedPromotionReviewFindings:
             "bigint"
         )
         r = out.collect()[0]
-        assert r["s.qty"] == 7 and r["s"]["qty"] == 7
+        assert r["s.qty"] == 5 and r["s"]["qty"] == 7
+
+    def test_explicit_top_level_dotted_name_casts_the_column(self, spark):
+        """The explicit ``{"s.qty": ...}`` form addresses the top-level
+        column too, never the leaf `s`.`qty`."""
+        from bertrand_spark.convert.cast import cast
+
+        df = spark.createDataFrame(
+            [("5", ("7",))], "`s.qty` string, s struct<qty:string>"
+        )
+        out = cast(df, {"s.qty": "int64"})
+        assert out.schema["s.qty"].dataType.simpleString() == "bigint"
+        assert out.schema["s"].dataType["qty"].dataType.simpleString() == (
+            "string"
+        )
+        r = out.collect()[0]
+        assert r["s.qty"] == 5 and r["s"]["qty"] == "7"
 
     def test_raise_names_the_leaf(self, spark):
         """A leaf that TAGS as a family but fails the real cast (e.g. a

@@ -1,5 +1,6 @@
 """Round-4 regression tests.  The Unicode-whitespace parity tests of the
-near-dup sketch kernels live in ``test_dedup.py``.
+near-dup sketch kernels live in ``test_dedup.py``, the
+parquet ns-detection tests in ``test_sources.py``.
 """
 
 from __future__ import annotations
@@ -329,56 +330,6 @@ class TestStdlibPngCodec:
         assert out["pixels"] == want.tobytes()
 
 
-class TestNanosDetectionShapes:
-    """read_table's ns-normalization must fire ONLY for INT64
-    TIMESTAMP(NANOS): pyarrow's arrow-level schema reports legacy INT96
-    timestamps (Spark's default parquet output) as timestamp[ns] too,
-    and flagging those applied a bogus ns->us division to an already-us
-    column (bit any re-written table, e.g. scale_smoke's multiplied
-    parquet)."""
-
-    def test_int64_nanos_flagged(self, tmp_path):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from bertrand_spark.sources.reader import nanos_timestamp_columns
-
-        p = str(tmp_path / "ns.parquet")
-        pq.write_table(
-            pa.table({"ts": pa.array(np.array([1, 2], dtype="datetime64[ns]"))}),
-            p,
-        )
-        assert nanos_timestamp_columns(p) == ("ts",)
-
-    def test_spark_written_int96_not_flagged(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from bertrand_spark.sources.reader import nanos_timestamp_columns, read_table
-
-        p = str(tmp_path / "t96.parquet")
-        spark.range(3).select(
-            F.timestamp_micros(F.col("id") * 1000000).alias("ts")
-        ).write.mode("overwrite").parquet(p)
-        assert nanos_timestamp_columns(p) == ()
-        # and the full read path round-trips without the bogus division
-        df = read_table(spark, str(tmp_path), "t96")
-        assert df.schema["ts"].dataType.typeName() == "timestamp"
-        assert df.count() == 3
-
-    def test_testdata_shapes_unchanged(self):
-        from bertrand_spark.sources.reader import nanos_timestamp_columns
-
-        # current-generation testdata is NTZ (handled by the cast path),
-        # not INT64-nanos — detection must stay silent
-        assert nanos_timestamp_columns(
-            "/root/testdata/sf0.001/lineitem.parquet"
-        ) == ()
-        assert nanos_timestamp_columns(
-            "/root/testdata/sf0.001/events.parquet"
-        ) == ()
-
-
 class TestPngCodecProperties:
     """Property round-trips: arbitrary sizes/channels/filter mixes."""
 
@@ -631,27 +582,6 @@ class TestPlatformAliasSurface:
 
 
 class TestSecondReviewRegressions:
-    def test_nested_ns_leaf_does_not_flag_toplevel(self, tmp_path):
-        """A nested ns-timestamp leaf whose LEAF name matches a
-        top-level us column must not trigger the ns->us division on the
-        top-level column (parquet flattens paths; match on full path)."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from bertrand_spark.sources.reader import nanos_timestamp_columns
-
-        p = str(tmp_path / "nested.parquet")
-        t = pa.table({
-            "a": pa.array(
-                [{"ts": np.datetime64(1, "ns")}],
-                type=pa.struct([("ts", pa.timestamp("ns"))]),
-            ),
-            "ts": pa.array(np.array([1], dtype="datetime64[us]")),
-        })
-        pq.write_table(t, p)
-        assert nanos_timestamp_columns(p) == ()
-
     def test_mix_corpus_binding_source_keeps_all(self, spark):
         """Non-binary weights (30/70): floor(buckets * w*T/n) would give
         9999 for the binding source via float round-down; the clamp must

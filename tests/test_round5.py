@@ -5,13 +5,13 @@ Covers the round-4 ADVICE items:
    pixel buffers) — a bad fixture must fail loudly, never emit a
    corrupt-but-CRC-valid PNG that the decoder then rejects as all-None.
 2. ``mix_corpus`` reserved-column collision guard (``__src``/``__thr``).
-3. ``nanos_timestamp_columns`` multi-fragment sampling: a mixed-writer
-   directory whose FIRST fragment is not ns must still flag a column
-   that a later fragment stores as INT64 TIMESTAMP(NANOS).
-4. ``q49``'s NOT-IN / anti-join equivalence is explicit: both the plan
+3. ``q49``'s NOT-IN / anti-join equivalence is explicit: both the plan
    and the oracle filter NULL keys out of the exclusion set, so the
    plan stays correct on nullable keys (not just on null-free TPC-H
    data).
+
+The multi-fragment ``nanos_timestamp_columns`` tests live in
+``test_sources.py``.
 """
 
 from __future__ import annotations
@@ -52,69 +52,6 @@ class TestMixCorpusReservedColumns:
         )
         with pytest.raises(ValueError, match="reserved column"):
             mix_corpus(df, {"web": 1.0})
-
-
-class TestNanosMixedWriterDirectory:
-    def test_union_over_fragments(self, tmp_path):
-        """First fragment µs, second ns — the ns column must be flagged
-        (pre-fix, only the first footer was read and the ns file's
-        column silently skipped its ns→µs normalization)."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from bertrand_spark.sources.reader import nanos_timestamp_columns
-
-        d = tmp_path / "mixed.parquet"
-        d.mkdir()
-        us = pa.table(
-            {"ts": pa.array(np.array([1, 2], dtype="datetime64[us]"))}
-        )
-        ns = pa.table(
-            {"ts": pa.array(np.array([1, 2], dtype="datetime64[ns]"))}
-        )
-        # fragment enumeration is name-ordered: the µs file sorts first
-        pq.write_table(us, str(d / "part-a.parquet"))
-        pq.write_table(ns, str(d / "part-b.parquet"))
-        assert nanos_timestamp_columns(str(d)) == ("ts",)
-
-    def test_uniform_us_stays_silent(self, tmp_path):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from bertrand_spark.sources.reader import nanos_timestamp_columns
-
-        d = tmp_path / "us.parquet"
-        d.mkdir()
-        t = pa.table({"ts": pa.array(np.array([1], dtype="datetime64[us]"))})
-        pq.write_table(t, str(d / "part-a.parquet"))
-        pq.write_table(t, str(d / "part-b.parquet"))
-        assert nanos_timestamp_columns(str(d)) == ()
-
-    def test_appended_ns_beyond_sample_width(self, tmp_path):
-        """Round-6 (r5 ADVICE): a ns file appended as the LAST of 20
-        fragments — beyond the old first-8 sample — must still be
-        flagged, because the sampler now probes both ends of the
-        fragment listing (appends typically sort last)."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from bertrand_spark.sources.reader import nanos_timestamp_columns
-
-        d = tmp_path / "appended.parquet"
-        d.mkdir()
-        us = pa.table(
-            {"ts": pa.array(np.array([1, 2], dtype="datetime64[us]"))}
-        )
-        ns = pa.table(
-            {"ts": pa.array(np.array([1, 2], dtype="datetime64[ns]"))}
-        )
-        for i in range(19):
-            pq.write_table(us, str(d / f"part-{i:03d}.parquet"))
-        pq.write_table(ns, str(d / "part-019.parquet"))  # sorts last
-        assert nanos_timestamp_columns(str(d)) == ("ts",)
 
 
 def _walk_jplan(node):

@@ -29,7 +29,12 @@ def run_stream_to_memory(stream_df, mode="append"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # wait for the data, not the clock: a stateful query with a
+    # processing-time timeout keeps running after its last batch
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     return name
 
 
@@ -93,7 +98,15 @@ class TestRunningTotals:
         stream = read_events_stream(spark, sf_dir)
         expected = running_totals(batch, "user_id", "value")
         streamed = running_totals(stream, "user_id", "value")
-        name = run_stream_to_memory(streamed, mode="update")
+        # the processing-time timeout asks for a no-data batch after every
+        # batch, so with those on the query never drains (the timeout's
+        # eviction is not what this test checks)
+        conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+        spark.conf.set(conf, "false")
+        try:
+            name = run_stream_to_memory(streamed, mode="update")
+        finally:
+            spark.conf.unset(conf)
         # update mode: last emission per key is the final running total
         got = spark.sql(
             f"select user_id, max(n) as n, max(total) as total "
