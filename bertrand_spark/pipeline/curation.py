@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import word_ngrams
+from .text import py_tokenize, token_count, tokenize, word_ngrams
 
 __all__ = [
     "benchmark_ngrams", "decontaminate",
@@ -71,7 +71,6 @@ def benchmark_ngrams(
     word_gram_hashes_vectorized``) — the corpus side uses the same
     kernel, so build and probe identities agree by construction.
     """
-    from .text import token_count
     from .dedup import word_gram_hashes_vectorized
 
     kernel = word_gram_hashes_vectorized(n)
@@ -85,8 +84,6 @@ def benchmark_ngrams(
 def _norm_tokens_str(text: Column) -> Column:
     """Lowercased, whitespace-normalized token string (the exact string
     ``word_ngrams`` grams are substrings of)."""
-    from .text import tokenize
-
     return F.array_join(tokenize(text), " ")
 
 
@@ -101,8 +98,6 @@ def _short_bench_grams(
     token-boundary containment instead; the table is tiny by contract
     (a subset of an already-small eval set) and broadcasts.
     """
-    from .text import token_count
-
     k = token_count(F.col(text_col))
     return (
         bench.filter((k > 0) & (k < n))
@@ -220,7 +215,6 @@ def contamination_report(
     odds ~2^-64 per pair) — the same trade the dedup family documents.
     """
     from .dedup import word_gram_hashes_vectorized
-    from .text import token_count
 
     kernel = word_gram_hashes_vectorized(n)
     b = (
@@ -883,9 +877,7 @@ def _dsir_features(text: Column) -> Column:
     Bigrams come from zip_with against the array shifted by one —
     zip_with pads the shorter side with NULL, so the dangling last
     pair drops in the filter."""
-    toks = F.filter(
-        F.split(F.lower(F.trim(text)), r"\s+"), lambda w: w != ""
-    )
+    toks = tokenize(text)
     bigrams = F.filter(
         F.zip_with(
             toks,
@@ -928,10 +920,8 @@ def _dsir_hist(
       :func:`_dsir_profile` aggregates, so training never re-explodes
       the documents.
 
-    Tokenization is pinned to :func:`_dsir_features` (the native
-    reference, parity-gated on tab/newline/NBSP text): trim = ASCII
-    space only (Spark ``trim``), lowercase, split on ASCII ``\\s+`` (Java
-    regex ``\\s`` is ASCII-only), unigrams then bigrams; the bucket is
+    Features are :func:`_dsir_features`' (the native reference):
+    ``text.py_tokenize``'s words, unigrams then bigrams; the bucket is
     :func:`_dsir_bucket`'s md5 prefix.  ``flag`` is evaluated in the JVM
     and coalesced to false (filter semantics: a NULL predicate counts
     toward raw only).  Documents with NULL text or no tokens emit
@@ -946,13 +936,11 @@ def _dsir_hist(
     def hist(batches):
         import hashlib
         import itertools
-        import re as _re
         from collections import Counter
 
         import numpy as np
         import pandas as pd
 
-        split = _re.compile(r"\s+", _re.ASCII).split
         # feature→bucket memo: natural-language corpora are Zipfian, so
         # a task's working vocabulary is far smaller than its feature
         # stream (md5 per occurrence was 70% of kernel CPU at sf0.1 —
@@ -972,7 +960,7 @@ def _dsir_hist(
             ):
                 if text is None:
                     continue
-                toks = [w for w in split(text.strip(" ").lower()) if w]
+                toks = py_tokenize(text)
                 feats = toks + [
                     a + " " + b for a, b in zip(toks, toks[1:])
                 ]
@@ -1593,12 +1581,7 @@ def dsir_resample_tokens(
     if token_col is None:
         toks = df.select(
             F.col(id_col),
-            F.size(
-                F.filter(
-                    F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda w: w != "",
-                )
-            ).cast("long").alias("__ntok"),
+            token_count(F.col(text_col)).cast("long").alias("__ntok"),
         )
     else:
         toks = df.select(F.col(id_col), F.col(token_col).cast("long").alias("__ntok"))

@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.reader import spread as _spread
-from .text import fingerprint
+from .text import fingerprint, py_collapse_ws, py_tokenize
 
 __all__ = [
     "exact_dedup", "exact_dedup_incremental", "exact_dup_groups",
@@ -64,22 +64,17 @@ _FNV = 0x100000001B3
 def _np_shingle_hashes(t: str, shingle_n: int):
     """Distinct 64-bit shingle hashes of one document, fully vectorized.
 
-    Mirrors ``text.char_ngrams`` normalization (lower + whitespace
-    collapse), then hashes every char n-gram with a polynomial rolling
-    hash over code points + splitmix64 finalizer — sliding-window numpy,
-    no per-gram Python loop (the old crc32-per-gram path was ~20M
+    Normalizes like ``text.char_ngrams`` (``text.py_collapse_ws``),
+    then hashes every char n-gram with a polynomial rolling hash over
+    code points + splitmix64 finalizer — sliding-window numpy, no
+    per-gram Python loop (the old crc32-per-gram path was ~20M
     interpreter iterations per 5k docs).  The hash IS the shingle
     identity: Jaccard over these sets equals Jaccard over the string
     sets up to 64-bit collisions (~|A||B|/2^64 per pair).
     """
-    import re
-
     import numpy as np
 
-    # ASCII-pinned whitespace: Java's \s (text.char_ngrams) and RE2's \s
-    # (DuckDB oracles) are ASCII-only; Python's \s also matches NBSP,
-    # U+0085, ... and would silently diverge on non-ASCII-whitespace text.
-    s = re.sub(r"[ \t\n\x0b\f\r]+", " ", t.lower())
+    s = py_collapse_ws(t)
     cp = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
     if len(cp) < shingle_n:  # short doc → the whole string is the one gram
         win = cp[None, :]
@@ -197,7 +192,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", keep_by: str | None = Non
     ``keep_by``: column whose minimum decides the survivor (deterministic);
     default keeps the row with the smallest ``keep_by``/first key.
     """
-    fp = fingerprint(F.col(text_col)).alias("__fp")
     with_fp = df.withColumn("__fp", fingerprint(F.col(text_col)))
     if keep_by is None:
         keep_by = df.columns[0]
@@ -794,13 +788,12 @@ def simhash64_vectorized(
 
     Token hash = first 16 hex chars of md5 (portable: DuckDB's
     ``CAST('0x'||substr(md5(t),1,16) AS UBIGINT)`` reproduces it exactly,
-    so SimHash results are oracle-checkable).  Tokenization mirrors
-    ``text.tokenize``: lower, trim, split on whitespace.  Documents with
-    no tokens yield NULL (the oracle's token-less docs vanish in its
-    explode, so both sides exclude them from the pair universe).
+    so SimHash results are oracle-checkable).  Tokens are
+    ``text.py_tokenize``'s.  Documents with no tokens yield NULL (the
+    oracle's token-less docs vanish in its explode, so both sides
+    exclude them from the pair universe).
     """
     import hashlib
-    import re
 
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -813,15 +806,7 @@ def simhash64_vectorized(
             if t is None:
                 out.append(None)
                 continue
-            # ASCII-pinned: match text.tokenize (Java \s) and the DuckDB
-            # oracle (RE2 \s), both ASCII-only — not Python's \s.
-            toks = [
-                w
-                for w in re.split(
-                    r"[ \t\n\x0b\f\r]+", t.lower().strip(" \t\n\x0b\f\r")
-                )
-                if w
-            ]
+            toks = py_tokenize(t)
             if not toks:
                 out.append(None)
                 continue
@@ -935,22 +920,12 @@ def word_gram_hashes_vectorized(n: int = 3):
     tokenizes and hashes each batch in Python with a fixed 64-bit
     blake2b gram identity (stable across processes, unlike ``hash()``).
     Token/gram semantics mirror ``text.tokenize``/``word_ngrams``
-    exactly: lowercase, trim, split on whitespace, drop empties; texts
-    with fewer than n tokens contribute their whole token string as the
-    single gram.  "Whitespace" is pinned to the ASCII class
-    ``[ \\t\\n\\x0b\\f\\r]`` — Java's ``\\s`` (``text.tokenize``) and
-    RE2's ``\\s`` (the DuckDB oracles) are ASCII-only, while Python's
-    ``\\s``/``str.strip()`` also match NBSP, U+0085, etc.; without the
-    pin, Unicode-whitespace text silently diverges from both the oracle
-    and ``decontaminate``'s own short-text containment path.
+    exactly (tokens are ``text.py_tokenize``'s); texts with fewer than n
+    tokens contribute their whole token string as the single gram.
     """
     import hashlib
-    import re
 
     from pyspark.sql.functions import pandas_udf
-
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-    ascii_ws = " \t\n\x0b\f\r"
 
     @pandas_udf("array<bigint>")
     def kernel(texts: pd.Series) -> pd.Series:
@@ -959,7 +934,7 @@ def word_gram_hashes_vectorized(n: int = 3):
             if t is None:
                 out.append(None)
                 continue
-            toks = [w for w in ws.split(t.strip(ascii_ws).lower()) if w]
+            toks = py_tokenize(t)
             if not toks:
                 out.append([])
                 continue

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import persistent_rdd_ids, unpersist_rdds
+from ..session import unpersist_rdds
 
 __all__ = ["connected_components", "cluster_labels", "dedup_keep_canonical"]
 
@@ -128,30 +128,18 @@ def connected_components(
             [(n, find(n)) for n in sorted(nodes)], schema
         )
 
-    def _ckpt(df, prev_ids, track=True):
-        """localCheckpoint df; free the superseded round's blocks (safe:
-        nothing references them once the new checkpoint is materialized).
-
-        Ownership is claimed ONLY when exactly one new persistent RDD
-        appeared during the (eager) checkpoint call — if the job also
-        materialized caller caches (possible on the FIRST action, when
-        upstream persists are still unpopulated) or a concurrent thread
-        persisted something, the diff is ambiguous and we free nothing
-        (a bounded leak beats unpersisting someone else's blocks).
-        """
-        before = persistent_rdd_ids(spark) if track else set()
+    def _ckpt(df, prev_ids):
+        """localCheckpoint df and free the superseded round's blocks
+        (safe: nothing references them once the new checkpoint is
+        materialized).  The checkpoint's plan is a ``LogicalRDD`` over
+        the one RDD it persisted, so its id is that RDD's: no snapshot
+        of the persistent set, and never someone else's blocks."""
         out = df.localCheckpoint()
-        mine = list(persistent_rdd_ids(spark) - before) if track else []
-        if len(mine) != 1:
-            mine = []
+        rdd_id = out._jdf.queryExecution().analyzed().rdd().id()
         unpersist_rdds(spark, prev_ids)
-        return out, mine
+        return out, [rdd_id]
 
-    # round 0 is the first action on the input lineage: upstream caches
-    # (e.g. a near-dup pipeline's prep/cand persists) materialize inside
-    # it, so ownership of new RDD ids is unknowable — don't track (the
-    # one initial checkpoint leaks; every later round is cleaned)
-    canon, ckpt_ids = _ckpt(_canonical(edges, src, dst), [], track=False)
+    canon, ckpt_ids = _ckpt(_canonical(edges, src, dst), [])
 
     def _fingerprint(e: DataFrame):
         # bit_xor, not sum: order-insensitive AND overflow-free under ANSI

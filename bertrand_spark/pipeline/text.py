@@ -9,6 +9,8 @@ so a 100 TB documents table is one narrow projection pass.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -18,8 +20,7 @@ from ..functions.kernel import row_udf
 __all__ = [
     "tokenize", "token_count", "bpe_ish_token_count",
     "BpeModel", "train_bpe", "bpe_tokenize", "bpe_token_count",
-    "ByteBpeModel", "train_bpe_bytes", "bpe_tokenize_bytes",
-    "bpe_token_count_bytes",
+    "ByteBpeModel", "train_bpe_bytes",
     "char_ngrams", "word_ngrams",
     "quality_features", "quality_score", "gopher_quality_flags",
     "language_scores", "detect_language",
@@ -28,19 +29,45 @@ __all__ = [
     "CharLM", "train_char_lm",
 ]
 
-# --- tokenization ----------------------------------------------------------
-_WORD_SPLIT = r"\s+"
+# --- the word rule (see tokenize's docstring) ------------------------------
+_WS = r"\s+"
+_PY_WS = re.compile(_WS, re.ASCII)
 # GPT-2-style pre-tokenizer shape: word pieces, numbers, punctuation runs
 _BPE_ISH = r"'(?:s|t|re|ve|m|ll|d)|[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]+"
 
 
 def tokenize(text: Column) -> Column:
-    """Whitespace tokens, lowercased, empty-safe."""
-    return F.filter(F.split(F.lower(F.trim(text)), _WORD_SPLIT), lambda t: t != "")
+    """The engine's word rule: lowercase, split on whitespace, drop empty
+    pieces (``array<string>``, empty-safe).
+
+    "Whitespace" is the ASCII class `` \\t\\n\\x0b\\f\\r``: Java's
+    ``\\s`` (Spark) and RE2's ``\\s`` (the DuckDB oracles) match exactly
+    that, while Python's ``\\s`` and ``str.split()`` also match NBSP,
+    U+0085, U+2028, U+3000 and more.  Python kernels therefore never split
+    text themselves: :func:`py_tokenize` is this rule's Python twin, and
+    :func:`collapse_ws` / :func:`py_collapse_ws` are the pair for the
+    whitespace-collapsed form that character shingles read."""
+    return F.filter(F.split(F.lower(F.trim(text)), _WS), lambda t: t != "")
+
+
+def py_tokenize(text: str) -> list[str]:
+    """:func:`tokenize` for one Python string, inside Arrow kernels."""
+    return [w for w in _PY_WS.split(text.lower()) if w]
+
+
+def collapse_ws(text: Column) -> Column:
+    """``text`` lowercased, each whitespace run (ASCII, as in
+    :func:`tokenize`) replaced by one space."""
+    return F.lower(F.regexp_replace(text, _WS, " "))
+
+
+def py_collapse_ws(text: str) -> str:
+    """:func:`collapse_ws` for one Python string."""
+    return _PY_WS.sub(" ", text).lower()
 
 
 def token_count(text: Column) -> Column:
-    """Whitespace token count."""
+    """Word count under :func:`tokenize`'s rule."""
     return F.size(tokenize(text))
 
 
@@ -65,7 +92,7 @@ def _bind(expr: Column, fn) -> Column:
 def char_ngrams(text: Column, n: int = 5) -> Column:
     """Character n-gram shingles (array<string>), native ``transform`` over an
     index ``sequence`` — no explode, no shuffle, O(len) per document."""
-    s = F.lower(F.regexp_replace(text, r"\s+", " "))
+    s = collapse_ws(text)
 
     def build(t: Column) -> Column:
         return F.when(F.length(t) < n, F.array(t)).otherwise(
@@ -239,7 +266,7 @@ def detect_language(text: Column) -> Column:
 def fingerprint(text: Column) -> Column:
     """Whole-document fingerprint: xxhash64 of whitespace-normalized,
     lowercased text — the exact-dedup key."""
-    return F.xxhash64(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
+    return F.xxhash64(collapse_ws(F.trim(text)))
 
 
 def rolling_fingerprints(
@@ -302,14 +329,13 @@ def _hash_embed_one(t, n: int, d: int, salt_b: bytes, salt_s: bytes):
     execute, so a model trained on one can never be scored with a
     drifted variant of the other.  Returns an l2-normalized float64
     vector, or None for a NULL document."""
-    import re
     import zlib
 
     import numpy as np
 
     if t is None:
         return None
-    toks = [w for w in re.split(r"\s+", t.lower().strip()) if w]
+    toks = py_tokenize(t)
     if n > 1:
         toks = [
             " ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)
@@ -392,7 +418,7 @@ class CharLM:
     The model is two bounded count tables (n-grams and their (n−1)-char
     contexts, both capped at ``top_k`` rows ≈ a few MB) that broadcast
     at scoring time; scoring is a fully NATIVE plan — per-doc n-gram
-    array (`char_ngrams`-shaped transform), explode, two broadcast
+    array (`char_ngrams`, short documents dropped), explode, two broadcast
     joins, one map-side-combined groupBy — no Python anywhere, so a
     100 TB corpus scores as one pass.  Probabilities are add-alpha
     smoothed MLE: ``p(c|ctx) = (cnt(ctx·c) + α) / (cnt(ctx) + α·V)``
@@ -409,13 +435,8 @@ class CharLM:
 
     @staticmethod
     def _grams_expr(text: Column, n: int) -> Column:
-        s = F.lower(F.regexp_replace(text, r"\s+", " "))
-        return F.when(F.length(s) < n, F.array().cast("array<string>")).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), F.length(s) - F.lit(n - 1)),
-                lambda i: s.substr(i, F.lit(n)),
-            )
-        )
+        """:func:`char_ngrams` without its one short-document gram."""
+        return F.filter(char_ngrams(text, n), lambda g: F.length(g) == n)
 
     def perplexity(
         self,
@@ -529,7 +550,7 @@ def train_char_lm(
     return CharLM(ng, cx, n, alpha, vocab)
 
 
-# --- BPE subword tokenizer (round 7) -----------------------------------------
+# --- BPE subword tokenizers (round 7: word-level; round 8: byte-level) ------
 # A REAL learned subword tokenizer (Sennrich et al. 2016, the HF
 # `BPE`/wordpiece-family trainer design), upgrading the suite's
 # token-counting from the whitespace + `bpe_ish` regex heuristics to a
@@ -540,20 +561,116 @@ def train_char_lm(
 # driver-side on that table (pair statistics over ≤max_words rows,
 # never over the corpus).  Encoding ships the learned merge ranks in
 # an Arrow-kernel closure: one corpus pass, no shuffle, no join.
+#
+# The two models differ only in their pre-tokenizer (`_pieces`) and in a
+# pre-token's starting symbols (`_symbols`).  The merge loop and the
+# Arrow kernel are `_Bpe`'s; the bounded word table and the merge
+# trainer are `_bpe_fit`'s.
 
 
-class BpeModel:
-    """Learned BPE merges + the encode kernel.  ``merges`` is an
-    ordered list of (left, right) string pairs; rank = list position.
+class _Bpe:
+    """Learned BPE merges + the encode kernel shared by
+    :class:`BpeModel` and :class:`ByteBpeModel`.  ``merges`` is an
+    ordered list of (left, right) string pairs; rank = list position."""
+
+    def __init__(self, merges: "list[tuple[str, str]]"):
+        self.merges = list(merges)
+        self._ranks = {pair: i for i, pair in enumerate(self.merges)}
+
+    def _encode(self, piece: str) -> "list[str]":
+        """Greedy lowest-rank-first merge of one pre-token — the
+        canonical BPE encode, merging EVERY occurrence of the best pair
+        left to right."""
+        if not piece:
+            return []
+        syms = self._symbols(piece)
+        ranks = self._ranks
+        while len(syms) > 1:
+            best = None
+            best_rank = None
+            for i in range(len(syms) - 1):
+                r = ranks.get((syms[i], syms[i + 1]))
+                if r is not None and (best_rank is None or r < best_rank):
+                    best, best_rank = i, r
+            if best is None:
+                break
+            pair = (syms[best], syms[best + 1])
+            out = []
+            i = 0
+            while i < len(syms):
+                if i < len(syms) - 1 and (syms[i], syms[i + 1]) == pair:
+                    out.append(syms[i] + syms[i + 1])
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            syms = out
+        return syms
+
+    def _tokens(self, text: str, encode) -> "list[str]":
+        """``text``'s tokens: each pre-token through ``encode``, special
+        tokens verbatim."""
+        toks: list = []
+        for piece, special in self._pieces(text):
+            if special:
+                toks.append(piece)
+            else:
+                toks.extend(encode(piece))
+        return toks
+
+    def tokenize_kernel(self, text_col: str, out_col: str, counts_only: bool):
+        """mapInPandas kernel factory: merges ride the closure (a few
+        hundred KB at 50k merges)."""
+        model = self
+        # per-TASK pre-token→tokens cache (closure state lives for one
+        # task, not the worker's lifetime): corpora are Zipfian, so
+        # within a partition the greedy merge runs once per DISTINCT
+        # pre-token — the measured 8× warm rate applies inside each task
+        # after its first batches, i.e. big-partition jobs (the 100 TB
+        # default of 128 MB+ splits) run mostly warm while
+        # many-tiny-partition jobs stay near the cold rate.  Bounded by
+        # entry count AND cached characters (absurd pieces never
+        # cached), so an adversarial all-unique long-word corpus
+        # degrades to the cold rate instead of growing the worker heap.
+        cache: dict = {}
+        cache_chars = [0]
+
+        def encode(piece):
+            enc = cache.get(piece)
+            if enc is None:
+                enc = model._encode(piece)
+                if (
+                    len(piece) <= 64
+                    and len(cache) < 500_000
+                    and cache_chars[0] < 16_000_000
+                ):
+                    cache[piece] = enc
+                    cache_chars[0] += len(piece)
+            return enc
+
+        def run(batches):
+            for pdf in batches:
+                out = []
+                for text in pdf[text_col]:
+                    if text is None:
+                        out.append(None)
+                        continue
+                    toks = model._tokens(text, encode)
+                    out.append(len(toks) if counts_only else toks)
+                res = pdf.drop(columns=[text_col])
+                res[out_col] = out
+                yield res
+
+        return run
+
+
+class BpeModel(_Bpe):
+    """Word-level BPE: :func:`tokenize`'s words are the pre-tokens.
     Tokens are characters plus the end-of-word marker ``</w>`` fused
     into the final character (the paper's formulation), so encoding is
     reversible per word."""
 
     END = "</w>"
-
-    def __init__(self, merges: "list[tuple[str, str]]"):
-        self.merges = list(merges)
-        self._ranks = {pair: i for i, pair in enumerate(self.merges)}
 
     # -- persistence (same JSON-alongside convention as DsirModel) --
     def save(self, spark, path: str) -> None:
@@ -570,90 +687,37 @@ class BpeModel:
         raw = json.loads(spark.read.json(path).collect()[0]["merges"])
         return cls([tuple(p) for p in raw])
 
+    @staticmethod
+    def _pieces(text: str) -> list:
+        return [(w, False) for w in py_tokenize(text)]
+
+    @staticmethod
+    def _symbols(word: str) -> list:
+        return list(word[:-1]) + [word[-1] + BpeModel.END]
+
     def encode_word(self, word: str) -> "list[str]":
-        """Greedy lowest-rank-first merge of one word — the canonical
-        BPE encode; pure Python, used inside the Arrow kernel and
-        directly by tests."""
-        if not word:
-            return []
-        syms = list(word[:-1]) + [word[-1] + self.END]
-        ranks = self._ranks
-        while len(syms) > 1:
-            best = None
-            best_rank = None
-            for i in range(len(syms) - 1):
-                r = ranks.get((syms[i], syms[i + 1]))
-                if r is not None and (best_rank is None or r < best_rank):
-                    best, best_rank = i, r
-            if best is None:
-                break
-            # merge EVERY occurrence of the best pair left-to-right
-            pair = (syms[best], syms[best + 1])
-            out = []
-            i = 0
-            while i < len(syms):
-                if (
-                    i < len(syms) - 1
-                    and (syms[i], syms[i + 1]) == pair
-                ):
-                    out.append(syms[i] + syms[i + 1])
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
+        """One word's subword tokens, the last ending in ``</w>``."""
+        return self._encode(word)
 
-    def tokenize_kernel(self, text_col: str, out_col: str, counts_only: bool):
-        """mapInPandas kernel factory: merges ride the closure (a few
-        hundred KB at 50k merges), tokenization is the same ASCII-\\s+
-        lowercase convention as the DSIR/quality kernels."""
-        import re as _re
 
-        model = self
-        split = _re.compile(r"\s+", _re.ASCII).split
-        # per-TASK word→tokens cache (closure state lives for one task,
-        # not the worker's lifetime): corpora are Zipfian, so within a
-        # partition the greedy merge runs once per DISTINCT word — the
-        # measured 8× warm rate applies inside each task after its
-        # first batches, i.e. big-partition jobs (the 100 TB default of
-        # 128 MB+ splits) run mostly warm while many-tiny-partition
-        # jobs stay near the cold rate.  Bounded by entry count AND
-        # cached characters (absurd words never cached), so an
-        # adversarial all-unique long-word corpus degrades to the cold
-        # rate instead of growing the worker heap.
-        cache: dict = {}
-        cache_chars = [0]
-
-        def run(batches):
-            encode = model.encode_word
-            for pdf in batches:
-                out = []
-                for text in pdf[text_col]:
-                    if text is None:
-                        out.append(None)
-                        continue
-                    toks: list = []
-                    for w in split(text.strip(" ").lower()):
-                        if not w:
-                            continue
-                        enc = cache.get(w)
-                        if enc is None:
-                            enc = encode(w)
-                            if (
-                                len(w) <= 64
-                                and len(cache) < 500_000
-                                and cache_chars[0] < 16_000_000
-                            ):
-                                cache[w] = enc
-                                cache_chars[0] += len(w)
-                        toks.extend(enc)
-                    out.append(len(toks) if counts_only else toks)
-                res = pdf.drop(columns=[text_col])
-                res[out_col] = out
-                yield res
-
-        return run
+def _bpe_fit(pieces, symbols, num_merges: int, min_freq: int,
+             max_words: int) -> list:
+    """Both trainers' merges from ``pieces``, a (w string, n long) frame
+    of partial pre-token counts: sum per pre-token, keep those with
+    count ≥ ``min_freq``, the ``max_words`` most frequent (ties by
+    word — a TakeOrdered, so the driver table is bounded by
+    construction and the cap is deterministic), then
+    :func:`_bpe_merge_loop` over ``symbols(word)``."""
+    rows = (
+        pieces.groupBy("w")
+        .agg(F.sum("n").alias("count"))
+        .filter(F.col("count") >= int(min_freq))
+        .orderBy(F.col("count").desc(), "w")
+        .limit(int(max_words))
+        .collect()
+    )
+    words = [(symbols(r["w"]), r["count"]) for r in rows]
+    return _bpe_merge_loop(words, num_merges)
 
 
 def train_bpe(
@@ -664,12 +728,10 @@ def train_bpe(
     max_words: int = 1_000_000,
 ) -> BpeModel:
     """Fit BPE merges from a corpus: one distributed pass to the
-    (word, count) table (``max_words`` most frequent, ties by word —
-    a TakeOrdered, so the driver table is bounded by construction and
-    the cap is deterministic), then the classic merge loop over pair
-    statistics.  Deterministic throughout: the best pair is
-    (max count, then lexicographically smallest pair), so two runs —
-    or two engines — learn identical merges.
+    bounded (word, count) table (:func:`_bpe_fit`), then the classic
+    merge loop over pair statistics.  Deterministic throughout: the
+    best pair is (max count, then lexicographically smallest pair), so
+    two runs — or two engines — learn identical merges.
 
     100 TB shape: the corpus pass is a tokenize→explode→groupBy with
     map-side combine (word keys); everything after runs on ≤max_words
@@ -682,23 +744,13 @@ def train_bpe(
     rescan — num_merges=50k over a million-word table is feasible,
     not days of driver time.
     """
-    from pyspark.sql import functions as F
-
-    rows = (
-        df.select(F.explode(tokenize(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .count()
-        .filter(F.col("count") >= int(min_freq))
-        .orderBy(F.col("count").desc(), "w")
-        .limit(int(max_words))
-        .collect()
+    pieces = df.select(
+        F.explode(tokenize(F.col(text_col))).alias("w"),
+        F.lit(1).alias("n"),
     )
-    # word id -> (symbol list, count); end marker fused into last char
-    words: list = []
-    for r in rows:
-        w = r["w"]
-        words.append((list(w[:-1]) + [w[-1] + BpeModel.END], r["count"]))
-    return BpeModel(_bpe_merge_loop(words, num_merges))
+    return BpeModel(
+        _bpe_fit(pieces, BpeModel._symbols, num_merges, min_freq, max_words)
+    )
 
 
 def _bpe_merge_loop(words: list, num_merges: int) -> list:
@@ -790,20 +842,23 @@ def _bpe_out_schema(df, text_col: str, out_col: str, out_type: str) -> str:
     return f"{fields}, {tail}" if fields else tail
 
 
-def bpe_tokenize(df, model: BpeModel, text_col: str = "text",
+def bpe_tokenize(df, model: "BpeModel | ByteBpeModel", text_col: str = "text",
                  out_col: str = "bpe_tokens"):
     """(all other columns, array<string> subword tokens) per row — one
-    Arrow pass, merges in the closure, no shuffle."""
+    Arrow pass, merges in the closure, no shuffle.  ``model`` is either
+    a word-level or a byte-level model."""
     schema = _bpe_out_schema(df, text_col, out_col, "array<string>")
     return df.mapInPandas(
         model.tokenize_kernel(text_col, out_col, counts_only=False), schema
     )
 
 
-def bpe_token_count(df, model: BpeModel, text_col: str = "text",
+def bpe_token_count(df, model: "BpeModel | ByteBpeModel", text_col: str = "text",
                     out_col: str = "bpe_n_tokens"):
     """(all other columns, subword token count) per row — the learned
-    upgrade of :func:`token_count` / :func:`bpe_ish_token_count`."""
+    upgrade of :func:`token_count` / :func:`bpe_ish_token_count`; with a
+    byte-level model, the production-comparable budget feed for
+    ``curation.dsir_resample_tokens``."""
     schema = _bpe_out_schema(df, text_col, out_col, "long")
     return df.mapInPandas(
         model.tokenize_kernel(text_col, out_col, counts_only=True), schema
@@ -815,8 +870,8 @@ def bpe_token_count(df, model: BpeModel, text_col: str = "text",
 # pattern, map each UTF-8 byte to a printable stand-in character, learn
 # merges over that byte alphabet — so EVERY input round-trips exactly
 # (no unknown symbols, no lossy lowercase/END-marker convention), and
-# bpe_token_count_bytes feeds dsir_resample_tokens with budgets
-# comparable to production tokenizers.  Reserved special tokens (e.g.
+# bpe_token_count with a byte-level model feeds dsir_resample_tokens
+# with budgets comparable to production tokenizers.  Reserved special tokens (e.g.
 # "<|endoftext|>") are atomic: never split, never merged across.
 
 
@@ -916,17 +971,17 @@ def _byte_syms(piece: str) -> list:
     ]
 
 
-class ByteBpeModel:
+class ByteBpeModel(_Bpe):
     """Byte-level BPE: merges over the 256-symbol byte alphabet, GPT-2
     pre-tokenization, atomic special tokens.  Tokens are byte-unicode
     strings (the familiar "Ġword" form); ``decode_tokens`` inverts
-    ``encode_text`` EXACTLY for any input string."""
+    ``encode_text`` EXACTLY for any input string.  No END marker: the
+    pre-tokenizer owns the word boundary."""
 
     def __init__(self, merges: "list[tuple[str, str]]",
                  special_tokens: "tuple[str, ...]" = ()):
-        self.merges = list(merges)
+        super().__init__(merges)
         self.special_tokens = tuple(special_tokens)
-        self._ranks = {pair: i for i, pair in enumerate(self.merges)}
 
     def save(self, spark, path: str) -> None:
         import json
@@ -946,43 +1001,17 @@ class ByteBpeModel:
             tuple(json.loads(row["specials"])),
         )
 
+    def _pieces(self, text: str) -> list:
+        return _byte_pre_tokenize(text, self.special_tokens)
+
+    _symbols = staticmethod(_byte_syms)
+
     def encode_piece(self, piece: str) -> list:
-        """Greedy lowest-rank-first merges over one pre-token's bytes —
-        identical control flow to BpeModel.encode_word, minus the END
-        marker (byte-level BPE needs none: the pre-tokenizer owns the
-        word boundary)."""
-        syms = _byte_syms(piece)
-        ranks = self._ranks
-        while len(syms) > 1:
-            best = None
-            best_rank = None
-            for i in range(len(syms) - 1):
-                r = ranks.get((syms[i], syms[i + 1]))
-                if r is not None and (best_rank is None or r < best_rank):
-                    best, best_rank = i, r
-            if best is None:
-                break
-            pair = (syms[best], syms[best + 1])
-            out = []
-            i = 0
-            while i < len(syms):
-                if i < len(syms) - 1 and (syms[i], syms[i + 1]) == pair:
-                    out.append(syms[i] + syms[i + 1])
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
+        """One pre-token's byte-level subword tokens."""
+        return self._encode(piece)
 
     def encode_text(self, text: str) -> list:
-        toks: list = []
-        for piece, special in _byte_pre_tokenize(text, self.special_tokens):
-            if special:
-                toks.append(piece)
-            else:
-                toks.extend(self.encode_piece(piece))
-        return toks
+        return self._tokens(text, self._encode)
 
     def decode_tokens(self, tokens) -> str:
         specials = set(self.special_tokens)
@@ -1002,46 +1031,6 @@ class ByteBpeModel:
             out.append(bytes(buf).decode("utf-8", errors="surrogatepass"))
         return "".join(out)
 
-    def tokenize_kernel(self, text_col: str, out_col: str,
-                        counts_only: bool):
-        """mapInPandas kernel, same per-TASK Zipf cache bounds as the
-        word-level model (keyed by pre-token piece)."""
-        model = self
-        cache: dict = {}
-        cache_chars = [0]
-
-        def run(batches):
-            encode = model.encode_piece
-            specials = model.special_tokens
-            for pdf in batches:
-                out = []
-                for text in pdf[text_col]:
-                    if text is None:
-                        out.append(None)
-                        continue
-                    toks: list = []
-                    for piece, sp in _byte_pre_tokenize(text, specials):
-                        if sp:
-                            toks.append(piece)
-                            continue
-                        enc = cache.get(piece)
-                        if enc is None:
-                            enc = encode(piece)
-                            if (
-                                len(piece) <= 64
-                                and len(cache) < 500_000
-                                and cache_chars[0] < 16_000_000
-                            ):
-                                cache[piece] = enc
-                                cache_chars[0] += len(piece)
-                        toks.extend(enc)
-                    out.append(len(toks) if counts_only else toks)
-                res = pdf.drop(columns=[text_col])
-                res[out_col] = out
-                yield res
-
-        return run
-
 
 def train_bpe_bytes(
     df,
@@ -1055,13 +1044,10 @@ def train_bpe_bytes(
     per-task (pre-token, partial count) rows — the pre-tokenizer is
     Python regex, so unlike :func:`train_bpe` the word profile cannot
     be a native explode; the kernel pre-aggregates per batch so the
-    shuffle carries distinct pieces, not occurrences — then groupBy,
-    the same bounded TakeOrdered word table, and the shared incremental
-    merge loop (:func:`_bpe_merge_loop`).  Special tokens are atomic
-    and excluded from merge statistics, matching every production
-    trainer."""
-    from pyspark.sql import functions as F
-
+    shuffle carries distinct pieces, not occurrences — then the same
+    bounded word table and incremental merge loop (:func:`_bpe_fit`).
+    Special tokens are atomic and excluded from merge statistics,
+    matching every production trainer."""
     specials = tuple(special_tokens)
 
     def count_pieces(batches):
@@ -1079,34 +1065,8 @@ def train_bpe_bytes(
                 {"w": list(c.keys()), "n": list(c.values())}
             )
 
-    rows = (
-        df.select(text_col)
-        .mapInPandas(count_pieces, "w string, n long")
-        .groupBy("w")
-        .agg(F.sum("n").alias("count"))
-        .filter(F.col("count") >= int(min_freq))
-        .orderBy(F.col("count").desc(), "w")
-        .limit(int(max_words))
-        .collect()
-    )
-    words = [(_byte_syms(r["w"]), r["count"]) for r in rows]
-    return ByteBpeModel(_bpe_merge_loop(words, num_merges), specials)
-
-
-def bpe_tokenize_bytes(df, model: ByteBpeModel, text_col: str = "text",
-                       out_col: str = "bpe_tokens"):
-    """(all other columns, array<string> byte-level subword tokens)."""
-    schema = _bpe_out_schema(df, text_col, out_col, "array<string>")
-    return df.mapInPandas(
-        model.tokenize_kernel(text_col, out_col, counts_only=False), schema
-    )
-
-
-def bpe_token_count_bytes(df, model: ByteBpeModel, text_col: str = "text",
-                          out_col: str = "bpe_n_tokens"):
-    """(all other columns, byte-level subword token count) — the
-    production-comparable budget feed for dsir_resample_tokens."""
-    schema = _bpe_out_schema(df, text_col, out_col, "long")
-    return df.mapInPandas(
-        model.tokenize_kernel(text_col, out_col, counts_only=True), schema
+    pieces = df.select(text_col).mapInPandas(count_pieces, "w string, n long")
+    return ByteBpeModel(
+        _bpe_fit(pieces, _byte_syms, num_merges, min_freq, max_words),
+        specials,
     )

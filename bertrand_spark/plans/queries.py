@@ -2373,33 +2373,40 @@ def x29(spark, sf_dir):
     instead of duplicating), then the sink directory is read back and
     aggregated; the batch SQL oracle is the same filter+aggregate straight
     off the source table, so the gate proves the sink delivered every row
-    exactly once."""
+    exactly once.  The per-user result is collected before the run's
+    sink and checkpoint directory is removed, so no run leaves it
+    behind."""
+    import shutil
     import tempfile
-    import uuid
 
     from ..streaming.rollup import foreach_batch_parquet_sink, read_events_stream
 
-    run = uuid.uuid4().hex[:8]
-    out = f"{tempfile.gettempdir()}/bspark_x29_{run}/sink"
-    ckpt = f"{tempfile.gettempdir()}/bspark_x29_{run}/ckpt"
-    stream = (
-        read_events_stream(spark, sf_dir, n_files=4)
-        .filter(F.col("event_type").isin("purchase", "click") & (F.col("value") > 10))
-        .select("event_id", "user_id", "event_type", "value")
-    )
-    q = (
-        stream.writeStream.foreachBatch(foreach_batch_parquet_sink(out))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    landed = spark.read.parquet(f"{out}/ingest_batch=*")
-    return (
-        landed.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").cast("double").alias("total"))
-        .orderBy("user_id")
-    )
+    run = tempfile.mkdtemp(prefix="bspark_x29_")
+    try:
+        stream = (
+            read_events_stream(spark, sf_dir, n_files=4)
+            .filter(F.col("event_type").isin("purchase", "click") & (F.col("value") > 10))
+            .select("event_id", "user_id", "event_type", "value")
+        )
+        q = (
+            stream.writeStream.foreachBatch(foreach_batch_parquet_sink(f"{run}/sink"))
+            .option("checkpointLocation", f"{run}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination(180)
+        finally:
+            q.stop()
+        totals = (
+            spark.read.parquet(f"{run}/sink/ingest_batch=*")
+            .groupBy("user_id")
+            .agg(F.count("*").alias("n"), F.sum("value").cast("double").alias("total"))
+            .orderBy("user_id")
+        )
+        return spark.createDataFrame(totals.collect(), totals.schema)
+    finally:
+        shutil.rmtree(run, ignore_errors=True)
 
 
 # --- x30/x31: near-dup clustering (pairs → components → canonical keep) -----

@@ -41,11 +41,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-# Footer-sample width for mixed-writer directories (INT96 files plus
-# INT64-NANOS files appended later; tables the engine writes are
+# Footer-sample width for mixed-writer directories (µs or INT96 files
+# plus INT64-NANOS files appended later; tables the engine writes are
 # single-writer): the FIRST k AND LAST k fragments are probed, as
 # appended files typically enumerate last, and a debug log records the
-# sampling when a directory has more than 2k (round-5 ADVICE).
+# sampling when a directory has more than 2k (round-5 ADVICE).  Files
+# that disagree on a column's unit cannot be scanned together, so a
+# load of such a directory raises (``_Resolution.load``).
 _NANOS_SAMPLE_FRAGMENTS = 8
 
 
@@ -55,7 +57,7 @@ def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _footer_nanos_columns(path: str) -> tuple[str, ...]:
+def _footer_nanos_columns(path: str) -> tuple[tuple[str, ...], dict]:
     """INT64 TIMESTAMP(NANOS) columns only — read from the PARQUET
     schema, not the Arrow view of it: pyarrow maps legacy INT96
     timestamps (Spark's default output type) to ``timestamp[ns]`` too,
@@ -63,7 +65,8 @@ def _footer_nanos_columns(path: str) -> tuple[str, ...]:
     flagging it would apply a bogus ns→µs division to an already-µs
     column (this bit any re-written table, e.g. scale_smoke's
     multiplied parquet).  The flagged sets of the sampled footers are
-    UNIONed."""
+    UNIONed.  Also returns the columns the sampled files disagree on,
+    ``{name: (files where ns, files where another type)}``."""
     import pyarrow.dataset as ds
 
     # ds.dataset resolves the filesystem from the URI (local, s3://,
@@ -83,20 +86,25 @@ def _footer_nanos_columns(path: str) -> tuple[str, ...]:
             path, len(frags), k, k,
         )
         frags = frags[:k] + frags[-k:]
-    names = set()
+    ns_in: dict = {}  # column -> files where it is ns
+    other_in: dict = {}  # column -> files where it is another leaf type
     for frag in frags:
         schema = frag.metadata.schema  # parquet schema, not arrow
         for i in range(len(schema)):
             col = schema.column(i)
-            lt = col.logical_type
             # a leaf is top-level exactly when its path is its name: the
             # nested leaf `a`.`ns` has path ``a.ns`` and name ``ns``, the
             # top-level column ``a.ns`` has both ``a.ns``
-            if (col.path == col.name and col.physical_type == "INT64"
-                    and lt.type == "TIMESTAMP"
-                    and "timeUnit=nanoseconds" in str(lt)):
-                names.add(col.name)
-    return tuple(f.name for f in dset.schema if f.name in names)
+            if col.path != col.name:
+                continue
+            lt = col.logical_type
+            ns = (col.physical_type == "INT64" and lt.type == "TIMESTAMP"
+                  and "timeUnit=nanoseconds" in str(lt))
+            (ns_in if ns else other_in).setdefault(col.name, []).append(
+                frag.path
+            )
+    mixed = {c: (ns_in[c], other_in[c]) for c in ns_in if c in other_in}
+    return tuple(f.name for f in dset.schema if f.name in ns_in), mixed
 
 
 class _Resolution:
@@ -107,14 +115,29 @@ class _Resolution:
 
     def __init__(self, path: str):
         self.path = path
-        self.ns_cols = _footer_nanos_columns(path)
+        self.ns_cols, self.mixed = _footer_nanos_columns(path)
         self._read: tuple | None = None  # (schema, fixes)
 
     def load(self, spark: SparkSession, reader) -> DataFrame:
         """Load ``path`` through ``reader`` (``spark.read`` or
         ``spark.readStream``, options set) with the resolved schema and
-        fixes, after the conf writes :func:`read_table` documents."""
+        fixes, after the conf writes :func:`read_table` documents.
+
+        Raises ``ValueError``, before any Spark job, when the sampled
+        files disagree on whether a column is INT64 TIMESTAMP(NANOS): a
+        Spark scan reads one physical type per column, so such a
+        directory fails mid-job (``PARQUET_COLUMN_DATA_TYPE_MISMATCH``)."""
         from pyspark.sql import types as st
+
+        if self.mixed:
+            raise ValueError(
+                f"{self.path}: files disagree on the timestamp unit of "
+                + "; ".join(
+                    f"column {c!r} (ns in {ns}; another type in {other})"
+                    for c, (ns, other) in self.mixed.items()
+                )
+                + ". Rewrite the files with one unit per column."
+            )
 
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         if self.ns_cols:
@@ -358,5 +381,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     because ``read_table`` must be right on any session, tuned or not,
     and ``nanosAsLong`` on every session would turn that failure into
     silent raw longs for reads that do not come through here.
+
+    A directory whose files disagree on a column's timestamp unit (one
+    writer µs or INT96, another INT64 ns) raises ``ValueError`` naming
+    the column and the files, before any Spark job.
     """
     return _resolve(f"{sf_dir}/{name}.parquet").load(spark, spark.read)

@@ -233,6 +233,17 @@ def running_totals(
 ) -> DataFrame:
     """Custom stateful operator: per-key running (count, sum) emitted on
     every micro-batch — ``applyInPandasWithState`` (Arrow-batched state).
+    A key with no update for ``timeout_s`` seconds of processing time is
+    evicted and emits nothing; if it comes back it starts from zero.
+
+    A streaming query over this operator does not end by itself, not
+    even under ``trigger(availableNow=True)``: to evict idle keys, a
+    processing-time timeout makes Spark run a no-data micro-batch after
+    every batch, so the query never drains and ``processAllAvailable()``
+    never returns.  Stop the query once its data is in.  A query that
+    must end on its own can be started with
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false``; idle keys
+    are then evicted only by batches that carry data.
 
     Batch inputs fall back to a groupBy (same result, no state store).
     """

@@ -531,3 +531,25 @@ class TestOneCandidateJoin:
             D.candidate_pairs_from_band_table(spark, name)
         with pytest.raises(ValueError, match=name):
             D.fuzzy_join_band_store(batch, name, batch)
+
+
+# --- connected components: checkpoint ownership -------------------------------
+class TestConnectedComponentsCheckpoints:
+    def test_each_checkpoint_freed_by_its_own_id(self, spark):
+        """Every round's ``localCheckpoint`` is freed by its own RDD id:
+        the local finish (x30's path) leaves no persisted RDD behind, and
+        the distributed path keeps only the checkpoint its result reads."""
+        from bertrand_spark.pipeline.graph import connected_components
+        from bertrand_spark.session import persistent_rdd_ids
+
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (5, 6), (7, 7), (9, 8)], "id_a long, id_b long"
+        )
+        want = {(1, 1), (2, 1), (3, 1), (5, 5), (6, 5), (8, 8), (9, 8)}
+        before = persistent_rdd_ids(spark)
+        got = {tuple(r) for r in connected_components(edges).collect()}
+        assert got == want
+        assert persistent_rdd_ids(spark) == before
+        out = connected_components(edges, local_threshold=0)
+        assert {tuple(r) for r in out.collect()} == want
+        assert len(persistent_rdd_ids(spark) - before) == 1

@@ -807,7 +807,7 @@ class TestByteBpe:
 
     def test_spark_kernels_and_repartition_stability(self, spark, sf_dir):
         from bertrand_spark.pipeline.text import (
-            bpe_token_count_bytes, bpe_tokenize_bytes, train_bpe_bytes,
+            bpe_token_count, bpe_tokenize, train_bpe_bytes,
         )
         from bertrand_spark.sources import read_table
 
@@ -817,11 +817,11 @@ class TestByteBpe:
         model = train_bpe_bytes(d, num_merges=80, min_freq=2)
         toks = {
             r["doc_id"]: r["bpe_tokens"]
-            for r in bpe_tokenize_bytes(d, model).collect()
+            for r in bpe_tokenize(d, model).collect()
         }
         counts = {
             r["doc_id"]: r["bpe_n_tokens"]
-            for r in bpe_token_count_bytes(d, model).collect()
+            for r in bpe_token_count(d, model).collect()
         }
         assert counts == {k: len(v) for k, v in toks.items()}
         texts = {r["doc_id"]: r["text"] for r in d.collect()}
@@ -829,7 +829,7 @@ class TestByteBpe:
             assert model.decode_tokens(toks[did]) == t
         toks2 = {
             r["doc_id"]: r["bpe_tokens"]
-            for r in bpe_tokenize_bytes(d.repartition(13), model).collect()
+            for r in bpe_tokenize(d.repartition(13), model).collect()
         }
         assert toks2 == toks
         # training is repartition-stable too
@@ -843,7 +843,7 @@ class TestByteBpe:
         next doc in Gumbel order would overflow it."""
         from bertrand_spark.pipeline import curation as CU
         from bertrand_spark.pipeline.text import (
-            bpe_token_count_bytes, train_bpe_bytes,
+            bpe_token_count, train_bpe_bytes,
         )
         from bertrand_spark.sources import read_table
 
@@ -854,7 +854,7 @@ class TestByteBpe:
         # the count kernel drops text_col; join the counts back (DSIR
         # scoring still needs the text)
         counted = d.join(
-            bpe_token_count_bytes(d, bpe).select("doc_id", "bpe_n_tokens"),
+            bpe_token_count(d, bpe).select("doc_id", "bpe_n_tokens"),
             "doc_id",
         )
         model = CU.train_dsir(

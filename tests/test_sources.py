@@ -426,6 +426,31 @@ class TestNanosMixedWriterDirectory:
         pq.write_table(ns, str(d / "part-b.parquet"))
         assert nanos_timestamp_columns(str(d)) == ("ts",)
 
+    def test_read_table_names_column_and_files(self, spark, tmp_path):
+        """Reading the same µs + ns directory through ``read_table``:
+        Spark cannot scan one column as two physical types, so the load
+        raises a ValueError naming the column and both files, before
+        any Spark job starts (it used to fail inside ``collect()`` with
+        ``PARQUET_COLUMN_DATA_TYPE_MISMATCH``)."""
+        import pytest
+
+        from bertrand_spark.sources.reader import read_table
+
+        d = tmp_path / "mixed.parquet"
+        d.mkdir()
+        for name, unit in (("part-a", "us"), ("part-b", "ns")):
+            pq.write_table(pa.table({
+                "id": [1, 2],
+                "ts": pa.array(np.array([1, 2], dtype=f"datetime64[{unit}]")),
+            }), str(d / f"{name}.parquet"))
+        j0 = _jobs(spark)
+        with pytest.raises(ValueError) as err:
+            read_table(spark, str(tmp_path), "mixed").collect()
+        assert _jobs(spark) == j0
+        msg = str(err.value)
+        assert "'ts'" in msg and "part-a" in msg and "part-b" in msg
+        assert "'id'" not in msg
+
     def test_uniform_us_stays_silent(self, tmp_path):
         from bertrand_spark.sources.reader import nanos_timestamp_columns
 

@@ -116,6 +116,67 @@ class TestRunningTotals:
         g = {r["user_id"]: (r["n"], round(r["total"], 6)) for r in got.collect()}
         assert e == g
 
+    def test_available_now_query_ends_only_when_asked(self, spark, sf_dir):
+        """The documented contract: the processing-time timeout runs a
+        no-data micro-batch after every batch, so an availableNow query
+        is still running after its data is in, until stopped; with
+        no-data batches off the same query ends by itself.  Waits on
+        query events, never on the clock (the bounds only stop a broken
+        run from hanging)."""
+        import threading
+
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        idle_batch = threading.Event()
+
+        class OnIdleBatch(StreamingQueryListener):
+            def onQueryStarted(self, event):
+                pass
+
+            def onQueryProgress(self, event):
+                p = event.progress
+                if p.batchId > 0 and p.numInputRows == 0:
+                    idle_batch.set()
+
+            def onQueryIdle(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                pass
+
+        def start():
+            totals = running_totals(
+                read_events_stream(spark, sf_dir), "user_id", "value"
+            )
+            return (
+                totals.writeStream.format("memory")
+                .queryName("mem_" + uuid.uuid4().hex[:8])
+                .outputMode("update")
+                .trigger(availableNow=True)
+                .start()
+            )
+
+        listener = OnIdleBatch()
+        spark.streams.addListener(listener)
+        q = start()
+        try:
+            assert idle_batch.wait(120)
+            assert q.isActive
+        finally:
+            q.stop()
+            spark.streams.removeListener(listener)
+        conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+        spark.conf.set(conf, "false")
+        try:
+            q = start()
+        finally:
+            spark.conf.unset(conf)
+        try:
+            assert q.awaitTermination(120)
+            assert q.exception() is None
+        finally:
+            q.stop()
+
 
 class TestStreamDedupAgainstStore:
     def test_stream_static_anti_join_matches_batch(self, spark, sf_dir, tmp_path):
