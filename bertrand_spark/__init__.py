@@ -13,6 +13,15 @@ large-scale pipeline extensions (:mod:`bertrand_spark.pipeline`: dedup,
 similarity search, text analysis, multimodal columns).
 """
 
+import sys as _sys
+
+if "pyspark.worker" in _sys.modules:
+    # a Python worker re-reads pyspark.zip's directory at every task
+    # unless guarded (see bertrand_spark.session)
+    from .session import guard_zip_rereads
+
+    guard_zip_rereads()
+
 from .types.core import (
     DecoratedType,
     ScalarType,

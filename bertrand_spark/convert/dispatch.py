@@ -22,6 +22,7 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..types.core import AnyType, ScalarType, UnionType
 from ..types.detect import type_tag_column
 from ..types.resolve import resolve
@@ -125,14 +126,14 @@ class DispatchFunc:
 
             if isinstance(data, _pd.Series):
                 pdf = data.rename("value").to_frame()
-                return spark.createDataFrame(pdf), ("value",)
+                return local_frame(spark, pdf, None), ("value",)
         except ImportError:
             pass
         if hasattr(data, "tolist"):
             data = data.tolist()
         if isinstance(data, (list, tuple)):
             return (
-                spark.createDataFrame([(v,) for v in data], ["value"]),
+                local_frame(spark, [(v,) for v in data], ["value"]),
                 ("value",),
             )
         raise TypeError(f"cannot normalize {type(data).__name__} into a DataFrame")
@@ -189,7 +190,7 @@ class DispatchFunc:
                 )
             return df.withColumn(cols[0], result)
         spark = df.sparkSession
-        return spark.createDataFrame([(result,)], [self.name])
+        return local_frame(spark, [(result,)], [self.name])
 
 
 def _matches(declared: AnyType, observed: AnyType) -> bool:

@@ -41,11 +41,20 @@ def row_udf(ddl: str, fn: Callable[..., Any]):
     dtype = None if isinstance(rtype, TimestampType) else object
 
     def kernel(*cols: pd.Series) -> pd.DataFrame:
-        rows = [fn(*row) for row in zip(*cols)]
-        if names is None:
-            return pd.Series(rows, dtype=dtype)
-        return pd.DataFrame(rows, columns=names)
+        return _apply(fn, names, dtype, cols)
 
     # plans and the UI show the row function's name, not "kernel"
     kernel.__name__ = fn.__name__
     return pandas_udf(kernel, rtype)
+
+
+def _apply(fn, names, dtype, cols):
+    """One batch through ``fn``, packed for ``row_udf``'s return type.
+
+    Module-level, so a pickled kernel refers to it by name: unpickling
+    any kernel imports ``bertrand_spark`` in the Python worker, which
+    installs the worker's one-time set-up (see ``bertrand_spark.session``)."""
+    rows = [fn(*row) for row in zip(*cols)]
+    if names is None:
+        return pd.Series(rows, dtype=dtype)
+    return pd.DataFrame(rows, columns=names)

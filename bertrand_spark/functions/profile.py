@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
 
+from ..session import local_frame
+
 __all__ = ["profile_table"]
 
 _NUMERIC = (
@@ -40,7 +42,8 @@ def profile_table(
     """
     cols = list(columns) if columns is not None else df.columns
     if not cols:  # explicit empty selection → empty profile, no job
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [],
             "column string, n_rows long, n_nulls long, n_distinct long, "
             "min_str string, max_str string, mean double",

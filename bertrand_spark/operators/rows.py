@@ -22,6 +22,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "ROW_ID", "with_row_id", "iota", "enumerate_rows", "zip_rows",
     "slice_rows", "reverse_rows", "rotate_rows", "concat_rows",
@@ -531,5 +533,5 @@ def at_positions(df: DataFrame, positions: Sequence[int], order_by: Sequence[str
     """Fancy row indexing (I20; ``range.h:7056``): broadcast-join positions."""
     idx = enumerate_rows(df, list(order_by))
     spark = df.sparkSession
-    pos = spark.createDataFrame([(p,) for p in positions], ["idx"])
+    pos = local_frame(spark, [(p,) for p in positions], ["idx"])
     return idx.join(F.broadcast(pos), "idx", "inner").orderBy("idx").drop("idx")

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .text import py_tokenize, token_count, tokenize, word_ngrams
 
 __all__ = [
@@ -577,8 +578,8 @@ def temperature_resample(
         ratio = float(n_min) / float(r["__n"])
         rate = math.sqrt(ratio) if alpha == 0.5 else ratio ** (1.0 - alpha)
         rows.append((r[source_col], int(math.floor(rate * buckets))))
-    rates = df.sparkSession.createDataFrame(
-        rows, schema=df.select(source_col).schema.add("__thr", "long")
+    rates = local_frame(
+        df.sparkSession, rows, df.select(source_col).schema.add("__thr", "long")
     )
     key = F.concat(
         F.coalesce(F.col(source_col).cast("string"), F.lit("")),
@@ -683,8 +684,8 @@ def mix_corpus(
         return int(math.floor(buckets * ((weights[s] / total_w) * T / counts[s])))
 
     rows = [(s, _thr(s)) for s in sorted(weights)]
-    thr = df.sparkSession.createDataFrame(
-        rows, schema=df.select(source_col).schema.add("__thr", "long")
+    thr = local_frame(
+        df.sparkSession, rows, df.select(source_col).schema.add("__thr", "long")
     ).withColumnRenamed(source_col, "__src")
     key = F.concat(
         F.col(source_col).cast("string"), F.lit("|"), F.col(id_col).cast("string")
@@ -801,7 +802,7 @@ class QualityClassifier:
             from pyspark.sql import SparkSession
 
             spark = SparkSession.getActiveSession()
-        spark.createDataFrame([(params,)], "params string").coalesce(
+        local_frame(spark, [(params,)], "params string").coalesce(
             1
         ).write.mode("overwrite").json(f"{path}/featurizer")
 
@@ -1114,7 +1115,8 @@ class DsirModel:
 
         self.lam.write.mode("overwrite").parquet(f"{path}/lam")
         spark = self.lam.sparkSession
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(json.dumps({"buckets": self.buckets, "alpha": self.alpha}),)],
             "params string",
         ).coalesce(1).write.mode("overwrite").json(f"{path}/params")
@@ -1193,7 +1195,7 @@ def _model_from_counts(
         )
         for b in range(B)
     ]
-    lam = spark.createDataFrame(lam_rows, "bucket int, lam double")
+    lam = local_frame(spark, lam_rows, "bucket int, lam double")
     return DsirModel(lam, B, alpha)
 
 
@@ -1630,7 +1632,8 @@ def dsir_resample_tokens(
     if not selected:
         return keyed.limit(0).withColumnRenamed("__ntok", "n_tokens")
     spark = df.sparkSession
-    ids = spark.createDataFrame(
+    ids = local_frame(
+        spark,
         [(r[id_col],) for r in selected],
         f"{id_col} {keyed.schema[id_col].dataType.simpleString()}",
     )
@@ -1714,7 +1717,8 @@ def cascade_report(
             )
         )
         reaching -= failed
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "stage int, rule string, n_reaching long, n_failed long, "
         "drop_frac double, cum_keep_frac double",

@@ -41,6 +41,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.reader import spread as _spread
 from .text import fingerprint, py_collapse_ws, py_tokenize
 
@@ -1310,7 +1311,8 @@ def write_band_table(
     # so readers derive the consensus floor from the TRUE parameters
     # instead of trusting call-site defaults (a k/num_bands mismatch
     # silently collapses recall otherwise)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(k), int(num_bands), int(shingle_n))],
         "k int, num_bands int, shingle_n int",
     ).write.mode("overwrite").saveAsTable(f"{table}__params")

@@ -238,9 +238,16 @@ def extract_document_text(
     magic-sniff dispatch over every extractor the engine ships.  One
     Arrow-batched map pass — no shuffle; a NULL payload gives a
     non-NULL struct whose fields are all NULL; one hostile document
-    can never kill the task."""
+    can never kill the task.
+
+    With neither hint given the router takes the payload alone, so a
+    payload built by another Python kernel chains with it: Spark runs
+    both in one Arrow pass and one Python worker per task."""
+    route = row_udf("struct<text: string, status: string, format: string>",
+                    _route_one)
+    if mime is None and charset is None:
+        return route(payload)
     mime = F.lit(None).cast("string") if mime is None else mime
     charset = (F.lit(None).cast("string") if charset is None
                else charset)
-    return row_udf("struct<text: string, status: string, format: string>",
-                   _route_one)(payload, mime, charset)
+    return route(payload, mime, charset)

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import unpersist_rdds
+from ..session import local_frame, unpersist_rdds
 
 __all__ = ["connected_components", "cluster_labels", "dedup_keep_canonical"]
 
@@ -124,8 +124,8 @@ def connected_components(
         schema = StructType(
             [StructField("id", dtype), StructField("component", dtype)]
         )
-        return spark.createDataFrame(
-            [(n, find(n)) for n in sorted(nodes)], schema
+        return local_frame(
+            spark, [(n, find(n)) for n in sorted(nodes)], schema
         )
 
     def _ckpt(df, prev_ids):

@@ -26,11 +26,13 @@ kernels, like :mod:`.multimodal`'s codecs), one narrow map pass at any
 corpus size — no shuffle, no driver collection, scale-safe at 100 TB.
 
 Pipeline ORDER matters: ``decode_html_bytes`` → ``fix_mojibake`` →
-``extract_html_text``.  Mojibake repair must run BEFORE extraction —
-the extractor's (deliberate, Unicode-aware) whitespace normalization
-folds U+00A0, a common mojibake continuation character, into plain
-spaces, destroying the byte pattern the repair detects (pinned in the
-round-11 composition test).
+``extract_html_text``.  Mojibake repair runs BEFORE extraction, on the
+page as decoded (the seam order the round-11 composition test pins).
+
+Whitespace is HTML's: the extractor collapses and trims only ASCII
+whitespace (TAB, LF, FF, CR, SPACE — the set RE2's ``\\s`` matches), so
+``&nbsp;``, U+2028 and the other Unicode spaces stay in the text, where
+the engine's word rule (:mod:`.text`) also keeps them inside a word.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..functions.kernel import row_udf
+from .text import _bind, py_tokenize  # _bind: evaluated-once column rebuilds
 
 __all__ = ["extract_html_text", "extract_html_metadata",
            "decode_html_bytes", "fix_mojibake",
@@ -69,7 +72,9 @@ _BLOCK_TAGS = frozenset({
     "tbody", "td", "tfoot", "th", "thead", "tr", "ul",
 })
 
-_WS = re.compile(r"\s+")
+# HTML's ASCII whitespace (WHATWG), not Python's Unicode \s
+_HTML_WS = "\t\n\f\r "
+_WS = re.compile("[%s]+" % _HTML_WS)
 _TAG_STRIP = re.compile(r"<[^>]*>")
 
 
@@ -90,7 +95,7 @@ class _HtmlTextParser(HTMLParser):
         self._a_depth = 0
 
     def _flush(self):
-        text = _WS.sub(" ", "".join(self._buf)).strip()
+        text = _WS.sub(" ", "".join(self._buf)).strip(_HTML_WS)
         if text:
             self.blocks.append((text, self._raw, self._link))
         self._buf.clear()
@@ -132,7 +137,7 @@ class _HtmlTextParser(HTMLParser):
         if self._drop or not data:
             return
         self._buf.append(data)
-        n = len(data.strip())
+        n = len(data.strip(_HTML_WS))
         self._raw += n
         if self._a_depth:
             self._link += n
@@ -166,13 +171,13 @@ def _extract_one(
         # the stdlib parser does not raise on malformed markup; this
         # guards the impossible case so a crawl task can never die on
         # one document — degrade to a flat regex strip
-        return _WS.sub(" ", _TAG_STRIP.sub(" ", html)).strip()
+        return _WS.sub(" ", _TAG_STRIP.sub(" ", html)).strip(_HTML_WS)
     kept = []
     for text, raw, link in blocks:
         density = link / raw if raw else 0.0
         if density > hard_link_density:
             continue
-        if density > max_link_density and len(text.split()) < min_words:
+        if density > max_link_density and len(py_tokenize(text)) < min_words:
             continue
         kept.append(text)
     return "\n".join(kept)
@@ -272,7 +277,7 @@ def _page_meta_one(html):
     out = p.out
     title = out.get("title")
     if title is not None:
-        title = _WS.sub(" ", title).strip() or None
+        title = _WS.sub(" ", title).strip(_HTML_WS) or None
     return (title, out.get("description"), out.get("keywords"),
             out.get("lang"), out.get("canonical"),
             out.get("og_title"), out.get("og_description"))
@@ -374,8 +379,6 @@ _TRACKING_PARAMS = (
     "igshid", "si", "ref_src", "ref_url",
 )
 
-
-from .text import _bind  # evaluated-once binding for column rebuilds
 
 
 def url_parts(url: Column) -> Column:

@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as st
 from pyspark.sql.functions import pandas_udf
 
+from ..session import local_frame
+
 __all__ = [
     "dot", "l2_norm", "cosine_sim",
     "hyperplane_signatures_vectorized",
@@ -510,7 +512,7 @@ def _probe_topk(
             id_col, F.col(col).cast(dtype).alias("__x"), cell.alias("__cell")
         ).mapInPandas(emit, schema)
     else:
-        scored = corpus.sparkSession.createDataFrame([], schema)
+        scored = local_frame(corpus.sparkSession, [], schema)
     return _top_k(scored, q_id_col, id_col, order, k)
 
 
@@ -747,8 +749,8 @@ def ivf_write(
 
     assigned.write.mode(mode).partitionBy("__cell").parquet(f"{path}/vectors")
     spark = assigned.sparkSession
-    spark.createDataFrame(
-        [(json.dumps(centroids),)], "centroids string"
+    local_frame(
+        spark, [(json.dumps(centroids),)], "centroids string"
     ).coalesce(1).write.mode(mode).json(f"{path}/centroids")
     if mode != "overwrite":
         return

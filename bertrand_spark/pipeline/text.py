@@ -16,6 +16,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..functions.kernel import row_udf
+from ..session import local_frame
 
 __all__ = [
     "tokenize", "token_count", "bpe_ish_token_count",
@@ -476,7 +477,8 @@ class CharLM:
         self.ngrams.write.mode("overwrite").parquet(f"{path}/ngrams")
         self.ctxs.write.mode("overwrite").parquet(f"{path}/ctxs")
         spark = self.ngrams.sparkSession
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(json.dumps({"n": self.n, "alpha": self.alpha, "vocab": self.vocab}),)],
             "params string",
         ).coalesce(1).write.mode("overwrite").json(f"{path}/params")
@@ -531,10 +533,8 @@ def train_char_lm(
             w = counts.orderBy(
                 F.col("cnt" if key == "g" else "ctx_cnt").desc(), key
             ).limit(top_k)
-            out = spark.createDataFrame(
-                w.collect(), schema=w.schema
-            )  # driver-bounded by top_k; detaches from the input plan
-            return out
+            # driver-bounded by top_k; detaches from the input plan
+            return local_frame(spark, w.collect(), w.schema)
 
         ng = top(
             grams.groupBy("g").agg(F.count("*").alias("cnt")), "g"
@@ -676,8 +676,8 @@ class BpeModel(_Bpe):
     def save(self, spark, path: str) -> None:
         import json
 
-        spark.createDataFrame(
-            [(json.dumps(self.merges),)], "merges string"
+        local_frame(
+            spark, [(json.dumps(self.merges),)], "merges string"
         ).coalesce(1).write.mode("overwrite").json(path)
 
     @classmethod
@@ -986,7 +986,8 @@ class ByteBpeModel(_Bpe):
     def save(self, spark, path: str) -> None:
         import json
 
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(json.dumps(self.merges), json.dumps(list(self.special_tokens)))],
             "merges string, specials string",
         ).coalesce(1).write.mode("overwrite").json(path)

@@ -34,7 +34,12 @@ from ..pipeline import curation as CU
 from ..pipeline import dedup as D
 from ..pipeline import similarity as S
 from ..pipeline import text as T
-from ..session import persistent_rdd_ids, tune_session, unpersist_rdds
+from ..session import (
+    local_frame,
+    persistent_rdd_ids,
+    tune_session,
+    unpersist_rdds,
+)
 from ..types.core import registry
 from ..types.detect import type_tag_column
 from ..types.resolve import resolve
@@ -2404,7 +2409,7 @@ def x29(spark, sf_dir):
             .agg(F.count("*").alias("n"), F.sum("value").cast("double").alias("total"))
             .orderBy("user_id")
         )
-        return spark.createDataFrame(totals.collect(), totals.schema)
+        return local_frame(spark, totals.collect(), totals.schema)
     finally:
         shutil.rmtree(run, ignore_errors=True)
 
@@ -4639,29 +4644,17 @@ def q60(spark, sf_dir):
     )
 
 
-# The characters Python's Unicode-aware \s (the extractor kernel's
-# whitespace model) matches but RE2's ASCII \s (the oracle engine's)
-# does not: folding them to a plain space on BOTH sides before the
-# \s+ normalization makes the two whitespace models provably agree —
-# the oracle/engine parity is pinned, not dependent on the documents
-# table happening to be ASCII-whitespace-only.
-_X48_UNIWS = ("[\u000b\u001c-\u001f\u0085\u00a0\u1680"
-              "\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]")
-
-
 @query(
     "x48_html_extract",
     """
     SELECT doc_id,
-           CASE WHEN trim(regexp_replace(regexp_replace(
-                       text, '%(ws)s', ' ', 'g'), '\\s+', ' ', 'g')) = ''
+           CASE WHEN trim(regexp_replace(text, '\\s+', ' ', 'g'), ' ') = ''
                 THEN 'Document ' || doc_id || ' & friends'
                 ELSE 'Document ' || doc_id || ' & friends' || chr(10)
-                     || trim(regexp_replace(regexp_replace(
-                          text, '%(ws)s', ' ', 'g'), '\\s+', ' ', 'g'))
+                     || trim(regexp_replace(text, '\\s+', ' ', 'g'), ' ')
            END AS extracted
     FROM documents
-    """ % {"ws": _X48_UNIWS},
+    """,
 )
 def x48(spark, sf_dir):
     """HTML→text extraction (round 11): each document is wrapped in a
@@ -4681,13 +4674,14 @@ def x48(spark, sf_dir):
     from ..pipeline.htmltext import extract_html_text
 
     d = _tw(spark, sf_dir, "documents")
-    # fold the Python-\s-only whitespace BEFORE wrapping (mirrored in
-    # the oracle SQL) so the extractor's Unicode \s and the oracle
-    # engine's ASCII \s provably agree — see _X48_UNIWS
-    folded = F.regexp_replace(F.col("text"), _X48_UNIWS, " ")
+    # the extractor collapses and strips HTML's ASCII whitespace,
+    # exactly the set the oracle's RE2 \s matches (its trim is told
+    # to strip only ' ', the one such character left after the
+    # collapse), so Unicode spaces in a document (U+00A0, U+2028, ...)
+    # survive on both sides alike
     esc = F.regexp_replace(
         F.regexp_replace(
-            F.regexp_replace(folded, "&", "&amp;"),
+            F.regexp_replace(F.col("text"), "&", "&amp;"),
             "<", "&lt;"),
         ">", "&gt;")
     html = F.concat(
@@ -4996,15 +4990,13 @@ def x53(spark, sf_dir):
     "x54_epub_extract",
     """
     SELECT doc_id,
-           CASE WHEN trim(regexp_replace(regexp_replace(
-                       text, '%(ws)s', ' ', 'g'), '\\s+', ' ', 'g')) = ''
+           CASE WHEN trim(regexp_replace(text, '\\s+', ' ', 'g'), ' ') = ''
                 THEN 'Document ' || doc_id
                 ELSE 'Document ' || doc_id || chr(10)
-                     || trim(regexp_replace(regexp_replace(
-                          text, '%(ws)s', ' ', 'g'), '\\s+', ' ', 'g'))
+                     || trim(regexp_replace(text, '\\s+', ' ', 'g'), ' ')
            END AS extracted
     FROM documents
-    """ % {"ws": _X48_UNIWS},
+    """,
 )
 def x54(spark, sf_dir):
     """EPUB→text extraction (round 13): each document is bound into a
@@ -5017,21 +5009,17 @@ def x54(spark, sf_dir):
     :func:`~bertrand_spark.pipeline.epubtext.extract_epub_text` must
     recover EXACTLY title+newline+whitespace-normalized body.  The
     per-chapter kernel IS the x48 HTML extractor, so the oracle is
-    x48's exact whitespace algebra (pre-fold the Python-\\s-minus-
-    RE2-\\s set on both sides, collapse, trim)."""
-    import re as _re
+    x48's exact whitespace algebra (collapse RE2's ASCII \\s, trim)."""
     from xml.sax.saxutils import escape as _esc
 
     from ..pipeline.epubtext import epub_write, extract_epub_text
 
     d = _tw(spark, sf_dir, "documents")
-    uniws = _re.compile(_X48_UNIWS)
 
     def build(i, t):
-        folded = uniws.sub(" ", t or "")
         return epub_write(
             ["<p>Document %d</p>" % i,
-             "<p>%s</p>" % _esc(folded)],
+             "<p>%s</p>" % _esc(t or "")],
             info={"title": "Document %d" % i},
             reversed_manifest=bool(i % 2),
             extra_items=(i % 3 == 0))

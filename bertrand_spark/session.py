@@ -20,6 +20,21 @@ and releases ``persistent_rdd_ids(spark) - before`` once the result has
 been written or materialized.  The diff claims every RDD persisted in
 between, so it assumes nothing else persists in the SparkContext
 concurrently.
+
+Driver-side tables: :func:`local_frame` is the engine's one way to turn
+rows (or a pandas frame) held on the driver into a DataFrame.  It
+builds a ``pyarrow.Table`` in the driver and hands it to the JVM, so no
+Python task runs; ``spark.createDataFrame`` over a Python list would
+parallelize a PythonRDD and start a second Python daemon and worker pool
+just to decode the rows.
+
+Python workers: PySpark calls ``importlib.invalidate_caches()`` at the
+start of every task, and CPython's ``zipimporter.invalidate_caches``
+re-reads its archive's central directory on every call: a reused worker
+re-read ``pyspark.zip`` (1,328 entries) once per zip importer, 16 times
+per task.  Importing ``bertrand_spark`` inside a worker installs
+:func:`guard_zip_rereads`, so each importer re-reads its archive only
+when the file changed since its last read.  The driver is untouched.
 """
 
 from __future__ import annotations
@@ -93,6 +108,68 @@ def build_session(cpus: int | str, app: str, **conf: str):
     tune_session(spark)
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def local_frame(spark, data, schema):
+    """A DataFrame over ``data`` (a list of rows — tuples, ``Row`` objects
+    or dicts — or a pandas DataFrame) built through Arrow on the driver.
+
+    ``schema`` is a ``StructType``, a DDL string, or a list of column
+    names whose types are inferred from the rows exactly as
+    ``createDataFrame`` infers them.  Values convert as
+    ``createDataFrame`` converts them: a naive ``datetime`` (or a naive
+    pandas timestamp) for a ``timestamp`` column is a wall-clock time in
+    the driver's local time zone (``TZ``), not in the session's.  The
+    table reaches the JVM as Arrow batches; no Python worker starts."""
+    import pandas as pd
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if isinstance(data, pd.DataFrame):  # Spark's own pandas-to-rows step
+        schema = schema or [str(c) for c in data.columns]
+        tz = spark._jconf.sessionLocalTimeZone()
+        data = spark._convert_from_pandas(data, schema, tz)
+    rows = list(data)
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    elif not isinstance(schema, StructType):
+        schema = spark._inferSchemaFromList(rows, names=list(schema))
+    if rows:
+        table = LocalDataToArrowConversion.convert(rows, schema, False)
+    else:
+        table = to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema)
+
+
+def guard_zip_rereads() -> None:
+    """Make ``zipimport.zipimporter.invalidate_caches`` re-read an
+    archive's directory only when the archive's ``(st_mtime_ns,
+    st_size)`` differs from what that importer last read (idempotent).
+
+    A changed or rewritten zip is still re-read, so a module added to
+    it imports; an importer whose archive cannot be stat'ed re-reads as
+    before."""
+    import os
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "guarded", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_read_stamp", None):
+            reread(self)
+            self._read_stamp = stamp
+
+    invalidate_caches.guarded = True
+    invalidate_caches.__doc__ = reread.__doc__
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def persistent_rdd_ids(spark) -> set[int]:

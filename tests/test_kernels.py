@@ -111,3 +111,16 @@ def test_udf_named_after_row_function(spark):
         return v
 
     assert row_udf("string", build).__name__ == "build"
+
+
+def test_x57_builds_and_routes_in_one_arrow_pass(spark, sf_dir):
+    """x57's payload-building kernel chains with the router: one Python
+    eval node in the executed plan, so each task holds one Python
+    worker, not two."""
+    from bertrand_spark.plans.queries import QUERIES
+
+    df = QUERIES["x57_document_router"](spark, sf_dir)
+    assert df.count() > 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+

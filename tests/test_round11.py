@@ -1102,10 +1102,8 @@ class TestCrawlPipelineComposition:
              "ts": "2026-01-01T00:00:01Z", "body": body_b},
         ]))
         recs = read_warc(spark, str(f))
-        # order matters: repair BEFORE extraction — the extractor's
-        # whitespace normalization folds U+00A0 (a mojibake
-        # continuation char) into plain spaces, destroying the byte
-        # pattern the repair needs (pinned by this test)
+        # the seam order: repair BEFORE extraction, on the page as
+        # decoded (pinned by this test)
         docs = recs.select(
             normalize_url("url").alias("url"),
             F.col("warc_ts"),

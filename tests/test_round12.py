@@ -354,12 +354,10 @@ class TestStreamWarcMojibakeSeam:
 
 
 class TestX48UnicodeWhitespaceParity:
-    """ADVICE r11: the x48 oracle's RE2 '\\s' is ASCII-only while the
-    extractor kernel's Python '\\s' is Unicode-aware — both sides now
-    pre-fold the exact difference set (_X48_UNIWS), so a document
-    containing U+00A0 / U+2028 / U+3000 ... hashes identically through
-    Spark and the oracle engine (previously a latent mismatch the
-    testdata just never triggered)."""
+    """ADVICE r11: the x48 oracle's RE2 '\\s' is ASCII-only, and so is
+    the extractor's whitespace (HTML's TAB, LF, FF, CR, SPACE): with no
+    pre-fold on either side, a document containing U+00A0 / U+2028 /
+    U+3000 ... hashes identically through Spark and the oracle engine."""
 
     def test_unicode_ws_doc_matches_oracle(self, spark, tmp_path):
         import duckdb

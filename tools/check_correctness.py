@@ -4,7 +4,13 @@ Runs every ``queries()`` entry at sf0.01 and compares against
 ``oracle_sql()`` via DuckDB: row count + sorted-column value comparison
 (order-insensitive).  Usage::
 
-    python tools/check_correctness.py [name_substring ...]
+    python tools/check_correctness.py [--permute SEED] [name_substring ...]
+
+``--permute SEED`` runs the same check on a row-permuted copy of the
+input: every table is rewritten, rows in a seeded random order, to a
+temporary directory that both engines then read.  A query whose result
+depends on its input's row order (a LIMIT or window over ties) fails
+there while it may pass on the original files.
 
 Env: ``SPARK_GRAFT_CHECK_SF_DIR`` overrides the scale factor (e.g.
 ``/root/testdata/sf0.1`` for a 10x replay of the gate).
@@ -12,8 +18,11 @@ Env: ``SPARK_GRAFT_CHECK_SF_DIR`` overrides the scale factor (e.g.
 
 from __future__ import annotations
 
+import argparse
 import math
+import shutil
 import sys
+import tempfile
 import time
 import traceback
 
@@ -27,6 +36,26 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
+
+
+def permuted_copy(src: str, dst: str, seed: int) -> None:
+    """Write each of ``TABLES`` from ``src`` to ``dst`` with its rows in
+    a random order drawn from ``seed``.  ``Table.take`` keeps every
+    column's Arrow type, and the copy is written at the source file's
+    Parquet format version with its Arrow schema, so every column reads
+    back with the type it had."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    for t in TABLES:
+        f = pq.ParquetFile(f"{src}/{t}.parquet")
+        table = f.read()
+        pq.write_table(
+            table.take(rng.permutation(table.num_rows)),
+            f"{dst}/{t}.parquet",
+            version=f.metadata.format_version,
+        )
 
 
 def _norm(df: pd.DataFrame) -> pd.DataFrame:
@@ -56,7 +85,25 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main() -> int:
-    patterns = sys.argv[1:]
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("patterns", nargs="*", help="query name substrings")
+    ap.add_argument("--permute", type=int, metavar="SEED",
+                    help="check over a row-permuted copy of the input")
+    args = ap.parse_args()
+    if args.permute is None:
+        return check(SF_DIR, args.patterns)
+    tmp = tempfile.mkdtemp(prefix="check_permuted_")
+    try:
+        permuted_copy(SF_DIR, tmp, args.permute)
+        print(f"input: {SF_DIR} rows permuted with seed {args.permute}")
+        return check(tmp, args.patterns)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def check(sf_dir: str, patterns: list[str]) -> int:
+    """Run every query matching ``patterns`` (all if empty) over the
+    tables in ``sf_dir`` and compare each with its oracle."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
     import __spark_entry__ as entrymod
@@ -67,7 +114,7 @@ def main() -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
     qs = entrymod.queries()
@@ -78,7 +125,7 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = fn(spark, sf_dir)
             actual = sdf.toPandas()
         except Exception:
             print(f"FAIL {name}: spark error\n{traceback.format_exc()}")
